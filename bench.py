@@ -205,7 +205,10 @@ def main() -> None:
     # forced. Three rules keep the printed line maximally useful:
     #   (a) printed timings round to 2 decimals (full precision stays in
     #       the sidecar), fitting more entries per byte;
-    #   (b) host_canary/reran are sidecar-only (diagnostics, not results);
+    #   (b) reran and the full host_canary dict are sidecar-only
+    #       (diagnostics, not results); the canary prints only as the
+    #       compact "hc":[jvm_sec, py_sec], so a host-wide slowdown can be
+    #       told from a regression from the printed line alone;
     #   (c) the kept set is ordered by PINNED baseline cost, not current
     #       cost: pins are frozen, so the same queries print every round
     #       and the driver's line-over-line per-query diff sees zero
@@ -218,6 +221,7 @@ def main() -> None:
         for k, v in out.items()
         if k not in ("vs_pin", "host_canary", "reran")
     }
+    line["hc"] = [round(jvm_canary, 2), round(py_canary, 2)]
     stable_cost = pins if pins else timings
     by_pin = sorted(
         timings, key=lambda n: -stable_cost.get(n, float("inf"))

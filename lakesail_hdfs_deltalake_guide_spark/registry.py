@@ -27,7 +27,6 @@ _TIER_MODULES = (
     "operators.olap",
     "operators.sampling",
     "operators.sessions",
-    "sources.versioned",
     "operators.modern_sql",
     "sources.bucketed",
     "sources.layout",

@@ -22,7 +22,7 @@ Scale posture (same as Delta's own design):
   generation in ONE atomic commit file — readers of version N-1 are
   untouched (MVCC time travel for free);
 - commit atomicity comes from the filesystem's fail-on-existing rename
-  (HDFSLogStore semantics), matching sources/versioned.py.
+  (HDFSLogStore semantics).
 
 File ops route through the Hadoop FileSystem API via the JVM gateway,
 so ``file://`` and ``hdfs://`` behave identically.
@@ -557,7 +557,7 @@ def _write_commit(spark: SparkSession, path: str, version: int, actions) -> None
     fs.mkdirs(log)
     # no .json suffix: a temp file surviving a mid-commit crash must never
     # match the version-file pattern (or every later log listing would
-    # crash on int-parsing it — versioned.py's .tmp convention)
+    # crash on int-parsing it)
     tmp = jvm.org.apache.hadoop.fs.Path(
         f"{_log_dir(path)}/.tmp-{uuid.uuid4().hex}"
     )
@@ -1286,6 +1286,11 @@ def _fold_range(
     if not versions:
         return None, None, 0
     target = versions[-1] if version is None else version
+    if target > versions[-1]:
+        raise ValueError(
+            f"version {target} of {path} does not exist "
+            f"(latest is {versions[-1]})"
+        )
     ckpts = [c for c in _list_checkpoints(spark, path) if c <= target]
     ck = ckpts[-1] if ckpts else None
     start = ck + 1 if ck is not None else 0
@@ -9972,6 +9977,134 @@ def delta_native_restore_timestamp(
     )
 
 
+# --- customer upsert lifecycle (MERGE / DELETE / CDC on the native log) ----
+def _customer_upsert_table(spark: SparkSession, sf_dir: str, prefix: str) -> str:
+    """Seed a table with customer (v0), then MERGE (v1) the shared upsert
+    source: BUILDING balances +1000 update in place, and five synthetic
+    NEWSEG rows (custkeys < 5, shifted by 1e6) insert. Returns the path."""
+    import tempfile
+
+    from ..tables import load_table
+
+    cust = load_table(spark, sf_dir, "customer").select(
+        "c_custkey", "c_mktsegment", "c_acctbal"
+    )
+    path = tempfile.mkdtemp(prefix=prefix)
+    delta_write(cust, path)
+    updated = cust.where(F.col("c_mktsegment") == "BUILDING").select(
+        "c_custkey", "c_mktsegment", (F.col("c_acctbal") + 1000).alias("c_acctbal")
+    )
+    inserted = cust.where(F.col("c_custkey") < 5).select(
+        (F.col("c_custkey") + 1_000_000).alias("c_custkey"),
+        F.lit("NEWSEG").alias("c_mktsegment"),
+        F.lit(0.0).alias("c_acctbal"),
+    )
+    delta_merge(spark, path, updated.unionByName(inserted), on=["c_custkey"])
+    return path
+
+
+def _segment_summary(df: DataFrame) -> DataFrame:
+    return df.groupBy("c_mktsegment").agg(
+        F.count(F.lit(1)).alias("n_rows"),
+        F.sum(F.round(F.col("c_acctbal") * 100, 0).cast("long")).alias(
+            "sum_acctbal_cents"
+        ),
+    )
+
+
+def versioned_merge_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Full DML lifecycle: seed with customer, MERGE (update BUILDING
+    balances, insert 5 synthetic rows), DELETE the MACHINERY segment,
+    then report per-segment stats from the final snapshot. The oracle
+    replays the same algebra over the source table directly — proving
+    merge/delete semantics, not just plumbing."""
+    path = _customer_upsert_table(spark, sf_dir, "ls_versioned_merge_")
+    delta_delete(spark, path, "c_mktsegment = 'MACHINERY'")
+    return _segment_summary(delta_read(spark, path)).orderBy("c_mktsegment")
+
+
+def versioned_snapshot_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Time travel: overwrite then append, then read BOTH snapshots by
+    version — append isolation means v0's count is unchanged."""
+    import tempfile
+
+    from ..tables import load_table
+
+    cust = load_table(spark, sf_dir, "customer")
+    path = tempfile.mkdtemp(prefix="ls_versioned_tt_")
+    delta_write(cust, path)
+    delta_write(cust.where(F.col("c_mktsegment") == "BUILDING"), path, mode="append")
+    return (
+        delta_read(spark, path, version=0)
+        .agg(
+            F.lit(0).cast("bigint").alias("version"),
+            F.count(F.lit(1)).alias("n_rows"),
+        )
+        .unionByName(
+            delta_read(spark, path, version=1).agg(
+                F.lit(1).cast("bigint").alias("version"),
+                F.count(F.lit(1)).alias("n_rows"),
+            )
+        )
+        .orderBy("version")
+    )
+
+
+def _upsert_versions(spark: SparkSession, sf_dir: str, prefix: str):
+    """(added, removed, v0) of the customer upsert: the row-level diff of
+    version 1 against version 0 via two ``exceptAll`` passes — an updated
+    row surfaces as one removed + one added."""
+    path = _customer_upsert_table(spark, sf_dir, prefix)
+    v0 = delta_read(spark, path, version=0)
+    v1 = delta_read(spark, path, version=1)
+    return v1.exceptAll(v0), v0.exceptAll(v1), v0
+
+
+def versioned_changes(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """CDC between snapshots (Delta's ``table_changes`` analogue): the
+    value-level diff of version 0 vs version 1, counted per change type."""
+    added, removed, v0 = _upsert_versions(spark, sf_dir, "ls_versioned_cdc_")
+    n_removed = removed.count()
+    return spark.createDataFrame(
+        [
+            ("added", added.count()),
+            ("removed", n_removed),
+            ("unchanged", v0.count() - n_removed),
+        ],
+        "change_type string, n_rows bigint",
+    ).orderBy("change_type")
+
+
+def versioned_incremental_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Incremental view maintenance from CDC: a per-segment summary
+    (count + acctbal cents) is maintained by applying the version-0→1
+    row deltas as signed contributions (+1 for added, -1 for removed) to
+    the version-0 summary — never rescanning the base table. The oracle
+    recomputes it from scratch on the post-merge state, so any drift in
+    the delta algebra is a hash mismatch. The refresh cost is
+    O(changed rows), not O(table)."""
+    added, removed, v0 = _upsert_versions(spark, sf_dir, "ls_versioned_ivm_")
+    cents = F.round(F.col("c_acctbal") * 100, 0).cast("long")
+    deltas = added.withColumn("w", F.lit(1)).unionByName(
+        removed.withColumn("w", F.lit(-1))
+    )
+    delta_agg = deltas.groupBy("c_mktsegment").agg(
+        F.sum("w").cast("bigint").alias("n_rows"),
+        F.sum(F.col("w") * cents).alias("sum_acctbal_cents"),
+    )
+    return (
+        _segment_summary(v0)
+        .unionByName(delta_agg)
+        .groupBy("c_mktsegment")
+        .agg(
+            F.sum("n_rows").cast("bigint").alias("n_rows"),
+            F.sum("sum_acctbal_cents").cast("bigint").alias("sum_acctbal_cents"),
+        )
+        .where(F.col("n_rows") > 0)
+        .orderBy("c_mktsegment")
+    )
+
+
 QUERIES: list[QueryDef] = [
     QueryDef(
         "delta_native_version_checksum",
@@ -11055,5 +11188,91 @@ QUERIES: list[QueryDef] = [
         description="RESTORE TO TIMESTAMP through in-commit timestamps: "
         "at-or-before resolution picks the middle generation; the "
         "pre-restore state stays time-travelable history.",
+    ),
+    QueryDef(
+        "versioned_merge_upsert",
+        versioned_merge_upsert,
+        """
+        WITH src AS (
+          SELECT c_custkey, c_mktsegment, c_acctbal + 1000 AS c_acctbal
+          FROM customer WHERE c_mktsegment = 'BUILDING'
+          UNION ALL
+          SELECT c_custkey + 1000000, 'NEWSEG', 0.0
+          FROM customer WHERE c_custkey < 5),
+        merged AS (
+          SELECT c.c_custkey, c.c_mktsegment, c.c_acctbal
+          FROM customer c
+          WHERE NOT EXISTS (SELECT 1 FROM src WHERE src.c_custkey = c.c_custkey)
+          UNION ALL
+          SELECT * FROM src),
+        final AS (SELECT * FROM merged WHERE c_mktsegment <> 'MACHINERY')
+        SELECT c_mktsegment, COUNT(*) AS n_rows,
+               CAST(SUM(CAST(round(c_acctbal * 100) AS BIGINT)) AS BIGINT)
+                 AS sum_acctbal_cents
+        FROM final GROUP BY c_mktsegment ORDER BY c_mktsegment
+        """,
+        tags=("extension", "io", "delta", "dml"),
+        description="MERGE upsert + DELETE on a native Delta table.",
+    ),
+    QueryDef(
+        "versioned_snapshot_counts",
+        versioned_snapshot_counts,
+        """
+        SELECT CAST(0 AS BIGINT) AS version, COUNT(*) AS n_rows FROM customer
+        UNION ALL
+        SELECT CAST(1 AS BIGINT),
+               COUNT(*) + (SELECT COUNT(*) FROM customer
+                           WHERE c_mktsegment = 'BUILDING')
+        FROM customer
+        ORDER BY version
+        """,
+        tags=("extension", "io", "delta", "timetravel"),
+        description="Snapshot isolation: per-version counts via time travel.",
+    ),
+    QueryDef(
+        "versioned_incremental_agg",
+        versioned_incremental_agg,
+        """
+        WITH final AS (
+          SELECT c_custkey, c_mktsegment,
+                 CASE WHEN c_mktsegment = 'BUILDING'
+                      THEN c_acctbal + 1000 ELSE c_acctbal END AS c_acctbal
+          FROM customer
+          UNION ALL
+          SELECT c_custkey + 1000000, 'NEWSEG', 0.0
+          FROM customer WHERE c_custkey < 5)
+        SELECT c_mktsegment, COUNT(*) AS n_rows,
+               CAST(SUM(CAST(round(c_acctbal * 100) AS BIGINT)) AS BIGINT)
+                 AS sum_acctbal_cents
+        FROM final GROUP BY c_mktsegment ORDER BY c_mktsegment
+        """,
+        tags=("extension", "io", "delta", "dml", "cdc"),
+        description="Incremental view maintenance: CDC deltas applied as "
+        "signed contributions to a materialized summary.",
+    ),
+    QueryDef(
+        "versioned_changes",
+        versioned_changes,
+        """
+        WITH src AS (
+          SELECT c_custkey, c_mktsegment, c_acctbal + 1000 AS c_acctbal
+          FROM customer WHERE c_mktsegment = 'BUILDING'
+          UNION ALL
+          SELECT c_custkey + 1000000, 'NEWSEG', 0.0
+          FROM customer WHERE c_custkey < 5),
+        n_upd AS (SELECT COUNT(*) AS u FROM customer
+                  WHERE c_mktsegment = 'BUILDING'),
+        n_ins AS (SELECT COUNT(*) AS i FROM customer WHERE c_custkey < 5),
+        n_all AS (SELECT COUNT(*) AS t FROM customer)
+        SELECT 'added' AS change_type, CAST(u + i AS BIGINT) AS n_rows
+          FROM n_upd, n_ins
+        UNION ALL
+        SELECT 'removed', CAST(u AS BIGINT) FROM n_upd
+        UNION ALL
+        SELECT 'unchanged', CAST(t - u AS BIGINT) FROM n_all, n_upd
+        ORDER BY change_type
+        """,
+        tags=("extension", "io", "delta", "dml", "cdc"),
+        description="CDC: row-level snapshot diff (table_changes analogue).",
     ),
 ]

@@ -215,8 +215,8 @@ class AuditJsonlWriter(DataSourceWriter):
         prior = 0
         if self.overwrite:
             # retract previously published parts before exposing the new
-            # generation (the one non-atomic window; a log-pointer design
-            # like sources/versioned.py closes it — out of scope here)
+            # generation (the one non-atomic window; a transaction log
+            # like sources/delta_log.py closes it — out of scope here)
             for info in filesystem.get_file_info(
                 pafs.FileSelector(root, allow_not_found=True)
             ):

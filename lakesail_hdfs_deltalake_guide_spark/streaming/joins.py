@@ -169,24 +169,21 @@ def streaming_interval_join_click_error(
 
 def streaming_upsert_versioned(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming MERGE sink: per-micro-batch hourly rollups merged into
-    a versioned table via ``foreachBatch`` — the lakehouse "streaming
-    upsert" pattern (Delta's streaming MERGE), on the engine's own ACID
-    layer. The merge is ADDITIVE (matched keys accumulate counts), so an
-    hour split across micro-batches still totals correctly — proven with
-    a two-batch source in tests/test_streaming_joins.py."""
-    import tempfile as _tempfile
+    a native Delta table via ``foreachBatch`` — the lakehouse "streaming
+    upsert" pattern (Delta's streaming MERGE). The merge is ADDITIVE
+    (matched keys accumulate counts), so an hour split across
+    micro-batches still totals correctly — proven with a two-batch source
+    in tests/test_streaming_joins.py."""
+    from ..sources.delta_log import delta_read
 
-    table = _tempfile.mkdtemp(prefix="ls_stream_upsert_")
+    table = tempfile.mkdtemp(prefix="ls_stream_upsert_")
     run_upsert_stream(
         events_stream(spark, sf_dir),
         table,
         source_paths=(f"{sf_dir}/events.parquet",),
     )
-
-    from ..sources.versioned import read_version
-
     return (
-        read_version(spark, table)
+        delta_read(spark, table)
         .groupBy("event_type")
         .agg(
             F.sum("n_events").alias("total_events"),
@@ -197,33 +194,36 @@ def streaming_upsert_versioned(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+UPSERT_APP_ID = "ls_stream_upsert"
+
+
 def run_upsert_stream(
     ev: DataFrame, table: str, source_paths: tuple[str, ...] = ()
 ) -> None:
-    """Drain an events stream into a versioned table with additive merges.
+    """Drain an events stream into a native Delta table with additive
+    merges.
 
-    Idempotent under foreachBatch's at-least-once replay: the applied
-    ``batch_id`` rides INSIDE the merge's log entry (``commit(metadata=)``),
-    so recording is atomic with the data — a batch replayed after a
-    crash-between-commit-and-checkpoint is skipped, never double-counted.
-    This is Delta's ``txnAppId``/``txnVersion`` streaming-MERGE dedup."""
-    import tempfile as _tempfile
-
-    from ..sources.versioned import (
-        commit,
-        latest_metadata,
-        merge_upsert,
-        read_version,
+    Exactly-once under foreachBatch's at-least-once replay: each merge
+    commits the protocol's ``txn`` action (``UPSERT_APP_ID``, batch_id)
+    atomically with its data, and a batch id at or below
+    ``delta_last_txn`` is skipped — a batch replayed after a
+    crash-between-commit-and-checkpoint is never double-counted."""
+    from ..sources.delta_log import (
+        delta_last_txn,
+        delta_merge,
+        delta_read,
+        delta_write,
     )
 
     spark = ev.sparkSession
     empty = spark.createDataFrame(
         [], "hour_us bigint, event_type string, n_events bigint, sum_cents bigint"
     )
-    commit(empty, table, mode="overwrite", metadata={"batch_id": -1})
+    delta_write(empty, table)
 
     def upsert_batch(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_id <= latest_metadata(table).get("batch_id", -1):
+        last = delta_last_txn(spark, table, UPSERT_APP_ID)
+        if last is not None and batch_id <= last:
             return  # replayed batch — its merge already committed
         hourly = (
             batch_df.groupBy(
@@ -238,7 +238,7 @@ def run_upsert_stream(
         )
         # Additive merge: fold existing totals for matched keys into the
         # batch rows, then upsert the summed rows.
-        target = read_version(spark, table).select(
+        target = delta_read(spark, table).select(
             "hour_us",
             "event_type",
             F.col("n_events").alias("old_n"),
@@ -257,12 +257,12 @@ def run_upsert_stream(
                 ),
             )
         )
-        merge_upsert(
+        delta_merge(
             spark,
             table,
             summed,
-            ["hour_us", "event_type"],
-            metadata={"batch_id": batch_id},
+            on=["hour_us", "event_type"],
+            txn=(UPSERT_APP_ID, batch_id),
         )
 
     with sized_state_shuffle(spark, *source_paths):
@@ -271,7 +271,7 @@ def run_upsert_stream(
             .trigger(availableNow=True)
             .option(
                 "checkpointLocation",
-                _tempfile.mkdtemp(prefix="ls_ckpt_upsert_"),
+                tempfile.mkdtemp(prefix="ls_ckpt_upsert_"),
             )
             .start()
         )
@@ -717,8 +717,8 @@ QUERIES: list[QueryDef] = [
         FROM hourly GROUP BY event_type ORDER BY event_type
         """,
         tags=("extension", "streaming", "delta", "dml"),
-        description="Streaming upsert sink: foreachBatch MERGE into the "
-        "versioned table.",
+        description="Streaming upsert sink: foreachBatch MERGE into a "
+        "native Delta table, exactly-once via the txn action.",
     ),
     QueryDef(
         "streaming_static_enrich",

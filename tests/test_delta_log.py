@@ -1886,6 +1886,8 @@ def test_history_and_timestamp_travel(spark, sf_smoke):
         delta_read(spark, path, timestamp=stamps[0] - 10_000)
     with pytest.raises(ValueError, match="not both"):
         delta_read(spark, path, version=1, timestamp=stamps[1])
+    with pytest.raises(ValueError, match="does not exist"):
+        delta_read(spark, path, version=99)
 
 
 # ---------------------------------------------------------------------------

@@ -1,5 +1,5 @@
-"""Hadoop-FS scheme generality: the delta_log and versioned transaction
-logs must behave identically on any configured FileSystem, not just
+"""Hadoop-FS scheme generality: the delta_log transaction log and its
+DML must behave identically on any configured FileSystem, not just
 ``file://`` (the reference deploys on Kerberized ``hdfs://``,
 ``/root/reference/hadoop-kerberos/config/core-site.xml:6-8``; no live
 cluster exists in-sandbox).
@@ -22,9 +22,10 @@ import uuid
 import pytest
 from pyspark.sql import functions as F
 
-from lakesail_hdfs_deltalake_guide_spark.sources import versioned
 from lakesail_hdfs_deltalake_guide_spark.sources.delta_log import (
+    delta_delete,
     delta_live_adds,
+    delta_merge,
     delta_read,
     delta_write,
 )
@@ -61,6 +62,19 @@ def test_delta_log_lifecycle_on_scheme(spark, sf_smoke, scheme):
     # MVCC time travel across the overwrite
     assert delta_read(spark, path, version=1).count() == 2 * n.count()
     assert delta_read(spark, path, version=0).count() == n.count()
+    # MERGE (region 0 rows updated, region 1 rows inserted), then DELETE
+    region0 = n.where(F.col("n_regionkey") == 0).count()
+    src = n.where(F.col("n_regionkey") <= 1).withColumn(
+        "n_name", F.concat(F.lit("M-"), F.col("n_name"))
+    )
+    assert delta_merge(spark, path, src, on=["n_nationkey"]) == 3
+    merged = delta_read(spark, path)
+    assert merged.count() == src.count()
+    assert merged.where(~F.col("n_name").startswith("M-")).count() == 0
+    assert delta_delete(spark, path, "n_regionkey = 0") == 4
+    assert delta_read(spark, path).count() == src.count() - region0
+    # the pre-DML snapshot is untouched
+    assert delta_read(spark, path, version=2).count() == region0
 
 
 @pytest.mark.parametrize("scheme", SCHEMES)
@@ -96,17 +110,6 @@ def test_delta_checkpoint_crosses_interval_on_scheme(spark, sf_smoke, scheme):
         delta_read(spark, path, version=CHECKPOINT_INTERVAL).count()
         == n.count() + CHECKPOINT_INTERVAL * one.count()
     )
-
-
-@pytest.mark.parametrize("scheme", SCHEMES)
-def test_versioned_log_lifecycle_on_scheme(spark, sf_smoke, scheme):
-    s = load_table(spark, sf_smoke, "supplier").select("s_suppkey", "s_name")
-    path = _table_path(spark, scheme, f"ver_{scheme}")
-    assert versioned.commit(s, path, mode="overwrite") == 0
-    assert versioned.commit(s, path, mode="append") == 1
-    assert versioned.read_version(spark, path).count() == 2 * s.count()
-    assert versioned.read_version(spark, path, version_as_of=0).count() == s.count()
-    assert versioned.list_versions(path) == [0, 1]
 
 
 @pytest.mark.parametrize("scheme", SCHEMES)

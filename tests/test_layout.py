@@ -1,4 +1,4 @@
-"""Layout-optimization contracts: Z-order locality and compaction."""
+"""Layout-optimization contracts: Z-order locality."""
 
 from __future__ import annotations
 
@@ -62,29 +62,3 @@ def test_zorder_files_are_local_in_both_dimensions(spark, sf_smoke, tmp_path):
     # average (which is what a sort on the other key alone would give).
     assert sum(r["span_a"] for r in spans) / len(spans) < 0.8 * g
     assert sum(r["span_b"] for r in spans) / len(spans) < 0.8 * g
-
-
-def test_compaction_preserves_data_and_history(spark, sf_smoke, tmp_path):
-    from lakesail_hdfs_deltalake_guide_spark.sources.versioned import (
-        commit,
-        compact,
-        read_version,
-        _read_log,
-        list_versions,
-    )
-
-    cust = load_table(spark, sf_smoke, "customer")
-    path = str(tmp_path / "t")
-    commit(cust.where(F.col("c_custkey") % 3 == 0), path)
-    commit(cust.where(F.col("c_custkey") % 3 == 1), path, mode="append")
-    commit(cust.where(F.col("c_custkey") % 3 == 2), path, mode="append")
-    n = cust.count()
-    pre_dirs = len(_read_log(path, list_versions(path)[-1])["data_dirs"])
-    assert pre_dirs == 3
-
-    v = compact(spark, path, num_files=1)
-    post = _read_log(path, v)
-    assert len(post["data_dirs"]) == 1
-    assert read_version(spark, path).count() == n
-    # time travel to the pre-compaction snapshot still works
-    assert read_version(spark, path, version_as_of=v - 1).count() == n

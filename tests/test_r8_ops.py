@@ -263,7 +263,7 @@ def test_bench_headline_plans_have_no_cartesian_product(spark, sf_smoke):
     from lakesail_hdfs_deltalake_guide_spark.registry import build_registry
 
     reg = build_registry()
-    skip_tags = {"delta", "streaming", "versioned"}
+    skip_tags = {"delta", "streaming"}
     checked = 0
     for name, q in reg.defs.items():
         if "bench" not in q.tags or (skip_tags & set(q.tags)):

@@ -39,8 +39,14 @@ def test_upsert_sink_accumulates_across_batches(spark, tmp_path):
     across micro-batches must still total correctly (additive merge)."""
     import os
 
-    from lakesail_hdfs_deltalake_guide_spark.sources.versioned import read_version
-    from lakesail_hdfs_deltalake_guide_spark.streaming.joins import run_upsert_stream
+    from lakesail_hdfs_deltalake_guide_spark.sources.delta_log import (
+        delta_last_txn,
+        delta_read,
+    )
+    from lakesail_hdfs_deltalake_guide_spark.streaming.joins import (
+        UPSERT_APP_ID,
+        run_upsert_stream,
+    )
     from lakesail_hdfs_deltalake_guide_spark.tables import _postprocess
 
     t0 = 1_700_000_000_000_000_000  # epoch NANOS, same hour for all rows
@@ -67,7 +73,9 @@ def test_upsert_sink_accumulates_across_batches(spark, tmp_path):
     table = str(tmp_path / "t")
     run_upsert_stream(stream, table)
 
-    rows = read_version(spark, table).collect()
+    rows = delta_read(spark, table).collect()
     assert len(rows) == 1
     assert rows[0]["n_events"] == 3
     assert rows[0]["sum_cents"] == 700
+    # the last micro-batch id committed with its merge (txn action)
+    assert delta_last_txn(spark, table, UPSERT_APP_ID) == 1
