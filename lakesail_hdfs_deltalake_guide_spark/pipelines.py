@@ -21,8 +21,9 @@ batches no-ops.
 from __future__ import annotations
 
 import tempfile
+from typing import Callable
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from .querydef import QueryDef
@@ -40,6 +41,23 @@ MIN_CHARS = 50  # silver quality gate
 # tune. Row-level results are unaffected (these tables' queries report
 # rows/ledgers, never file counts).
 _OPTWRITE = {"delta.autoOptimize.optimizeWrite": "true"}
+
+
+def _rows_frame(
+    spark: SparkSession, rows: list[tuple], schema: str
+) -> DataFrame:
+    """A pipeline's driver-side result rows as a DataFrame, shipped
+    through Arrow: ``createDataFrame`` of a list builds a Python RDD,
+    whose first action starts Python workers; the JVM reads an Arrow
+    table directly."""
+    import pyarrow as pa
+    from pyspark.sql.types import DataType
+
+    struct = DataType.fromDDL(schema)
+    columns = list(zip(*rows)) or [()] * len(struct.names)
+    return spark.createDataFrame(
+        pa.table([list(c) for c in columns], names=struct.names), struct
+    )
 
 
 def pipeline_medallion_incremental(
@@ -391,7 +409,8 @@ def pipeline_incremental_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
                 size_after,
             )
         )
-    return spark.createDataFrame(
+    return _rows_frame(
+        spark,
         out_rows,
         "batch string, n_input long, n_unique_in_batch long, "
         "n_novel long, state_size_after long",
@@ -516,7 +535,8 @@ def pipeline_incremental_minhash(
                 new_state_rows,
             )
         )
-    return spark.createDataFrame(
+    return _rows_frame(
+        spark,
         out_rows,
         "batch string, n_input long, n_dup_vs_history long, "
         "n_dup_in_batch long, n_kept long, state_rows_after long",
@@ -892,10 +912,29 @@ CURATION_SHINGLE_K = 5  # 3-token shingles collide corpus-wide on the
 CURATION_MIX_NUM, CURATION_MIX_DEN = 3, 5  # token budget = 60% of s4
 
 
-def _curation_quality_ids(spark: SparkSession, raw: DataFrame) -> DataFrame:
-    """Stage-1 survivors (doc_id frame): Gopher repetition rules +
-    hashed-classifier gate — per-document and stateless, so the SAME
-    helper serves the batch capstone and any increment of it."""
+def _let(value: Column, body: Callable[[Column], Column]) -> Column:
+    """``body(value)`` with ``value`` evaluated once per row. Catalyst
+    does not share subexpressions inside lambdas, and a filter over a
+    projected column is pushed below the projection with the column's
+    expression inlined; a lambda variable is bound once either way."""
+    return F.transform(F.array(value), body)[0]
+
+
+def _curation_quality_ok(text: Column) -> Column:
+    """Stage-1 predicate — Gopher repetition rules + hashed-classifier
+    gate — over one ``split(text, ' ')`` token array. Per row, no
+    shuffle, O(n log n) per document:
+
+      - top2_chars: count × chars of the most frequent bigram, ties to
+        the smallest (w1, w2): a fold over the sorted bigram structs
+        keeping the first longest run;
+      - dup3_chars: chars over all trigrams − chars over distinct
+        trigrams. The distinct keys on the space-joined trigram string
+        (tokens hold no space, so it is unique per trigram): a string
+        array_distinct hashes, a struct one compares every pair;
+      - score_milli: mean hashed-bucket weight, truncated; a bucket's
+        weight is a pure function of the bucket, computed inline."""
+    from .functions.hashing import md5_prefix_int
     from .operators.cleaning import (
         CLS_BUCKETS,
         CLS_WEIGHT_SPAN,
@@ -903,118 +942,87 @@ def _curation_quality_ids(spark: SparkSession, raw: DataFrame) -> DataFrame:
         GOPHER_TOP2_MAX_PPM,
     )
 
-    base = raw.select(
-        "doc_id",
-        F.split("text", " ").alias("t"),
-        F.expr(
-            "aggregate(split(text, ' '), 0L, (a, w) -> a + length(w))"
-        ).alias("n_chars"),
-    )
-    bi = base.select(
-        "doc_id",
-        F.explode(
-            F.expr(
-                "transform(filter(sequence(1, size(t)), i -> i < size(t)),"
-                " i -> struct(element_at(t, i) AS w1,"
-                "             element_at(t, i + 1) AS w2))"
-            )
-        ).alias("g"),
-    ).select("doc_id", "g.w1", "g.w2")
-    wtop = Window.partitionBy("doc_id").orderBy(
-        F.desc("cnt"), F.asc("w1"), F.asc("w2")
-    )
-    top2 = (
-        bi.groupBy("doc_id", "w1", "w2")
-        .agg(F.count(F.lit(1)).alias("cnt"))
-        .withColumn("rn", F.row_number().over(wtop))
-        .where(F.col("rn") == 1)
-        .select(
-            "doc_id",
-            (F.col("cnt") * (F.length("w1") + F.length("w2")))
-            .cast("long")
-            .alias("top2_chars"),
+    zero = F.lit(0).cast("long")
+
+    def div(a: Column, b: Column) -> Column:
+        return F.call_function("div", a, b)
+
+    def chars(words: Column, seps: int = 0) -> Column:
+        return F.aggregate(words, zero, lambda a, w: a + F.length(w) - seps)
+
+    def top2_step(acc: Column, g: Column) -> Column:
+        run = F.when(g == acc["g"], acc["run"] + 1).otherwise(F.lit(1))
+        longer = run > acc["best"]
+        return F.struct(
+            g.alias("g"),
+            run.alias("run"),
+            F.when(longer, run).otherwise(acc["best"]).alias("best"),
+            F.when(longer, F.length(g["w1"]) + F.length(g["w2"]))
+            .otherwise(acc["chars"])
+            .alias("chars"),
         )
-    )
-    tri = base.select(
-        "doc_id",
-        F.explode(
-            F.expr(
-                "transform(filter(sequence(1, size(t)), i -> i < size(t) - 1),"
-                " i -> struct(element_at(t, i) AS w1,"
-                "             element_at(t, i + 1) AS w2,"
-                "             element_at(t, i + 2) AS w3))"
-            )
-        ).alias("g"),
-    ).select("doc_id", "g.w1", "g.w2", "g.w3")
-    dup3 = (
-        tri.groupBy("doc_id", "w1", "w2", "w3")
-        .agg(F.count(F.lit(1)).alias("cnt"))
-        .where(F.col("cnt") >= 2)
-        .groupBy("doc_id")
-        .agg(
-            F.sum(
-                (F.col("cnt") - 1)
-                * (F.length("w1") + F.length("w2") + F.length("w3"))
-            ).alias("dup3_chars")
+
+    def top2_chars(t: Column) -> Column:
+        bigrams = F.transform(
+            F.slice(t, 2, F.size(t) - 1),
+            lambda w, i: F.struct(t[i].alias("w1"), w.alias("w2")),
         )
-    )
-    weights = spark.range(CLS_BUCKETS).select(
-        F.col("id").alias("bucket"),
-        (
-            F.conv(
-                F.substring(
-                    F.md5(F.concat(F.lit("w:"), F.col("id").cast("string"))),
-                    1,
-                    8,
-                ),
-                16,
-                10,
-            ).cast("long")
-            % CLS_WEIGHT_SPAN
-            - (CLS_WEIGHT_SPAN - 1) // 2
-        ).alias("w_milli"),
-    )
-    bucket = (
-        F.conv(
-            F.substring(F.md5(F.concat(F.lit("q:"), F.col("token"))), 1, 8),
-            16,
-            10,
-        ).cast("long")
-        % CLS_BUCKETS
-    )
-    score = (
-        raw.select("doc_id", F.explode(F.split("text", " ")).alias("token"))
-        .select("doc_id", bucket.alias("bucket"))
-        .join(F.broadcast(weights), "bucket")
-        .groupBy("doc_id")
-        .agg(
-            F.count(F.lit(1)).alias("n_tok"),
-            F.sum("w_milli").alias("w_sum"),
+        init = F.struct(
+            F.lit(None).cast("struct<w1:string,w2:string>").alias("g"),
+            zero.alias("run"),
+            zero.alias("best"),
+            zero.alias("chars"),
         )
-        .select("doc_id", F.expr("w_sum DIV n_tok").alias("score_milli"))
-    )
-    return (
-        base.select("doc_id", "n_chars")
-        .join(top2, "doc_id", "left")
-        .join(dup3, "doc_id", "left")
-        .join(score, "doc_id")
-        .where(
-            (
-                F.expr("coalesce(top2_chars, 0) * 1000000 DIV n_chars")
-                <= GOPHER_TOP2_MAX_PPM
-            )
-            & (
-                F.expr("coalesce(dup3_chars, 0) * 1000000 DIV n_chars")
-                <= GOPHER_DUP3_MAX_PPM
-            )
-            & (F.col("score_milli") >= 0)
+        return F.aggregate(
+            F.array_sort(bigrams),
+            init,
+            top2_step,
+            lambda acc: acc["best"] * acc["chars"],
         )
-        .select("doc_id")
-    )
+
+    def dup3_chars(t: Column) -> Column:
+        trigrams = F.transform(
+            F.slice(t, 3, F.greatest(F.size(t) - 2, F.lit(0))),
+            lambda w, i: F.concat_ws(" ", t[i], t[i + 1], w),
+        )
+        return _let(
+            trigrams,
+            lambda g: chars(g, 2) - chars(F.array_distinct(g), 2),
+        )
+
+    def weight(token: Column) -> Column:
+        bucket = md5_prefix_int(F.concat(F.lit("q:"), token)) % CLS_BUCKETS
+        w = md5_prefix_int(F.concat(F.lit("w:"), bucket.cast("string")))
+        return w % CLS_WEIGHT_SPAN - (CLS_WEIGHT_SPAN - 1) // 2
+
+    def gate(t: Column) -> Column:
+        features = F.struct(
+            top2_chars(t).alias("top2"),
+            dup3_chars(t).alias("dup3"),
+            chars(t).alias("chars"),
+            F.aggregate(t, zero, lambda a, w: a + weight(w)).alias("w_sum"),
+        )
+        return _let(
+            features,
+            lambda f: (
+                div(f["top2"] * 1_000_000, f["chars"]) <= GOPHER_TOP2_MAX_PPM
+            )
+            & (div(f["dup3"] * 1_000_000, f["chars"]) <= GOPHER_DUP3_MAX_PPM)
+            & (div(f["w_sum"], F.size(t)) >= 0),
+        )
+
+    return _let(F.split(text, " "), gate)
 
 
-def _curation_sigs(s2: DataFrame) -> DataFrame:
-    """MinHash signatures over 5-token shingles for stage-3 LSH."""
+def _curation_quality_ids(raw: DataFrame) -> DataFrame:
+    """Stage-1 survivors (doc_id frame) — per-document and stateless, so
+    the SAME predicate serves the batch capstone and any increment of
+    it."""
+    return raw.where(_curation_quality_ok(F.col("text"))).select("doc_id")
+
+
+def _curation_sig() -> Column:
+    """MinHash signature of ``text`` over 5-token shingles (stage-3 LSH)."""
     from .functions.hashing import (
         minhash_signature,
         shingle_hashes,
@@ -1023,25 +1031,33 @@ def _curation_sigs(s2: DataFrame) -> DataFrame:
     )
     from .operators.dedup import NUM_PERM
 
-    return s2.select(
-        "doc_id",
-        minhash_signature(
-            shingle_hashes(shingles(tokens("text"), CURATION_SHINGLE_K)),
-            NUM_PERM,
-        ).alias("sig"),
+    return minhash_signature(
+        shingle_hashes(shingles(tokens("text"), CURATION_SHINGLE_K)),
+        NUM_PERM,
     )
 
 
-def _curation_bands(sigs: DataFrame) -> DataFrame:
+def _curation_band_keys() -> Column:
+    """The (band_id, band_hash) array of ``sig``."""
     from .functions.hashing import band_keys
     from .operators.dedup import NUM_BANDS, ROWS_PER_BAND
 
-    return sigs.select(
-        "doc_id",
-        F.explode(band_keys(F.col("sig"), NUM_BANDS, ROWS_PER_BAND)).alias(
-            "band"
-        ),
-    ).select("doc_id", "band.band_id", "band.band_hash")
+    return band_keys(F.col("sig"), NUM_BANDS, ROWS_PER_BAND)
+
+
+def _curation_sigs(s2: DataFrame) -> DataFrame:
+    return s2.select("doc_id", _curation_sig().alias("sig"))
+
+
+def _curation_bands(sigs: DataFrame) -> DataFrame:
+    return _curation_band_rows(sigs.withColumn("bands", _curation_band_keys()))
+
+
+def _curation_band_rows(df: DataFrame) -> DataFrame:
+    """(doc_id, band_id, band_hash) rows of a frame's ``bands`` column."""
+    return df.select("doc_id", F.explode("bands").alias("band")).select(
+        "doc_id", "band.band_id", "band.band_hash"
+    )
 
 
 def _curation_near_drop(
@@ -1094,9 +1110,9 @@ def _curation_near_drop(
     )
 
 
-def _curation_contaminated(d: DataFrame, s3: DataFrame) -> DataFrame:
-    """Doc ids of s3 sharing any token 13-gram with the benchmark set
-    (docs below CURATION_BENCH_DOCS in the raw table)."""
+def _curation_grams(docs: DataFrame) -> DataFrame:
+    """(doc_id, gram): the distinct token 13-grams of each doc of at
+    least 13 tokens."""
     from .operators.dedup import CONTAM_K
 
     toks = F.split(F.col("text"), " ")
@@ -1104,15 +1120,26 @@ def _curation_contaminated(d: DataFrame, s3: DataFrame) -> DataFrame:
         F.sequence(F.lit(0), F.size(toks) - CONTAM_K),
         lambda i: F.array_join(F.slice(toks, i + 1, CONTAM_K), " "),
     )
-    long_enough = F.size(toks) >= CONTAM_K
-    bench = (
-        d.where((F.col("doc_id") < CURATION_BENCH_DOCS) & long_enough)
-        .select(F.explode(F.array_distinct(grams)).alias("gram"))
+    return docs.where(F.size(toks) >= CONTAM_K).select(
+        "doc_id", F.explode(F.array_distinct(grams)).alias("gram")
+    )
+
+
+def _curation_bench_grams(d: DataFrame) -> DataFrame:
+    """The benchmark gram set: 13-grams of the docs below
+    CURATION_BENCH_DOCS in the raw table."""
+    return (
+        _curation_grams(d.where(F.col("doc_id") < CURATION_BENCH_DOCS))
+        .select("gram")
         .distinct()
     )
+
+
+def _curation_contaminated(bench: DataFrame, s3: DataFrame) -> DataFrame:
+    """Doc ids of s3 sharing any token 13-gram with the benchmark gram
+    set (broadcast semi-join)."""
     return (
-        s3.where(long_enough)
-        .select("doc_id", F.explode(F.array_distinct(grams)).alias("gram"))
+        _curation_grams(s3)
         .join(F.broadcast(bench), "gram", "left_semi")
         .select("doc_id")
         .distinct()
@@ -1186,8 +1213,9 @@ def pipeline_curation_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle reproduces the whole ledger bit-for-bit.
 
     Scale shape (each stage inherits its standalone operator's posture):
-    the gates shuffle per-(doc, gram) counts or 16-byte digests, never
-    text; the classifier weight table broadcasts; LSH candidates are
+    the quality gate is a per-row predicate (O(n log n) per document,
+    no shuffle, the classifier weight computed inline); exact dedup
+    shuffles 16-byte digests, never text; LSH candidates are
     band-bounded; the benchmark gram set broadcasts; mixing collapses
     to |sources| rows before its windows; the packing report is one
     aggregate. Stage survivors materialize as (doc_id, source, text,
@@ -1230,7 +1258,7 @@ def pipeline_curation_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     # ---- stage 1: quality gate (gopher repetition + classifier) ----
     s1 = raw.join(
-        _curation_quality_ids(spark, raw), "doc_id", "left_semi"
+        _curation_quality_ids(raw), "doc_id", "left_semi"
     ).localCheckpoint(eager=True)
 
     # ---- stage 2: exact dedup (keep-first per md5 digest) ----
@@ -1250,7 +1278,7 @@ def pipeline_curation_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     # ---- stage 4: 13-gram benchmark decontamination ----
-    contaminated = _curation_contaminated(d, s3)
+    contaminated = _curation_contaminated(_curation_bench_grams(d), s3)
     s4 = s3.join(contaminated, "doc_id", "left_anti").localCheckpoint(
         eager=True
     )
@@ -1377,24 +1405,26 @@ def pipeline_curation_incremental(
     a green row certifies increment-driven output ≡ full recompute
     (the X85 "maintenance never changes answers" bar).
 
-    Scale: per increment the work is (new docs) × (stage cost) plus a
-    banded join against state signatures — state TEXT is never re-read;
-    at 100 TB the band keys of the state would persist alongside the
-    signatures (one more column family) to skip even the state-side
-    band recompute; the per-increment ledger counters are 1-row
-    aggregates.
+    Scale: per increment the work is one per-document pass over the new
+    docs (the stage-1 gate is a per-row predicate, O(n log n) per
+    document, no shuffle) plus a banded join against the state's band
+    keys — state TEXT is never re-read; the benchmark gram set is built
+    once per query and broadcasts; the per-increment ledger is one
+    conditional aggregate.
 
-    Stage frames cut lineage with eager ``localCheckpoint`` instead of
-    ``persist`` (r15): the per-increment chain (CDF read → quality →
-    digest anti-join → LSH → decontam) re-analyzed under every one of
-    the ~15 actions an increment runs (3 state writes, ledger, next
-    stage), and the driver's analyzer/optimizer time dominated the run
-    — event-log measured 13.3 s of inter-job driver gaps vs 11.5 s of
-    stage time; checkpointing the stage boundaries cut the query from
-    23.3 s to 14.3 s steady-state at sf0.1 with identical stage work
-    (guide §3.3/§5)."""
-    import tempfile
-
+    Each increment is one feature pass: the change feed's insert images
+    with the stage-1 flag ``q`` are checkpointed once, and every later
+    stage is a flag or filter over three more checkpoints — keep-first
+    digests, then the stage-2 survivors carrying ``sig``, ``bands``,
+    ``n_tokens`` and a contamination flag, then those survivors with
+    the near-drop flag (s3 and s4 are filters). Eager
+    ``localCheckpoint`` rather than ``persist``: a persisted frame keeps
+    its logical plan, so every action re-analyzes the whole upstream
+    chain, and the driver's analyzer time dominated the run (guide
+    §3.3/§5). The per-increment cost is mostly fixed per-job
+    overhead, so the pass is shaped to run few jobs: no shuffle in the
+    gate, one ledger action, and a result frame shipped through Arrow
+    instead of a Python RDD that starts Python workers."""
     from .operators.chunking import PACK_WINDOW
     from .sources.delta_log import (
         delta_read,
@@ -1426,153 +1456,168 @@ def pipeline_curation_incremental(
         ]
         + [bnds["hi"]]
     )
-    root = tempfile.mkdtemp(prefix="ls_cur_incr_")
-    bronze = f"{root}/bronze"
-    digest_p = f"{root}/state_digests"
-    sigs_p = f"{root}/state_sigs"
-    surv_p = f"{root}/state_survivors"
-    counts: list[list[int]] = []  # per increment: [(docs, toks) x 5]
-    first_round = True
-    for lo, hi in zip(cuts, cuts[1:]):
-        batch = corpus.where(
-            (F.col("doc_id") > lo) & (F.col("doc_id") <= hi)
-        )
-        v = delta_write(
-            batch,
-            bronze,
-            mode="overwrite" if first_round else "append",
-            configuration={
-                **_OPTWRITE,
-                "delta.enableChangeDataFeed": "true",
-            },
-        )
-        # the increment IS the change feed of this commit
-        raw_i = (
-            delta_read_cdf(spark, bronze, v, v)
-            .where("_change_type = 'insert'")
-            .select("doc_id", "source", "text", "n_tokens")
-            .localCheckpoint(eager=True)
-        )
-        s1_i = raw_i.join(
-            _curation_quality_ids(spark, raw_i), "doc_id", "left_semi"
-        ).localCheckpoint(eager=True)
-        # stage 2: in-increment keep-first AND not seen in any earlier
-        # crawl (id-ordered ingest makes this global keep-first)
-        with_h = s1_i.select("doc_id", F.md5("text").alias("h"))
-        if not first_round:
-            seen = delta_read(spark, digest_p)
-            with_h = with_h.join(seen, "h", "left_anti")
-        new_first = with_h.groupBy("h").agg(
-            F.min("doc_id").alias("doc_id")
-        ).localCheckpoint(eager=True)
-        s2_i = s1_i.join(
-            new_first.select("doc_id"), "doc_id", "left_semi"
-        ).localCheckpoint(eager=True)
-        delta_write(
-            new_first.select("h"),
-            digest_p,
-            mode="overwrite" if first_round else "append",
-            configuration=_OPTWRITE,
-        )
-        # stage 3: new-vs-(state ∪ new) banded candidates only. The
-        # signature state persists its BAND KEYS alongside the
-        # signatures (one more column family): an increment reads the
-        # history's bands straight off the state scan instead of
-        # re-hashing every historical signature through band_keys —
-        # at 100 TB the md5 band fold over the whole state was the one
-        # remaining O(history) compute per increment (guide §6: layout
-        # the state for its reader).
-        from .functions.hashing import band_keys
-        from .operators.dedup import NUM_BANDS, ROWS_PER_BAND
-
-        sigs_i = (
-            _curation_sigs(s2_i)
-            .withColumn(
-                "bands", band_keys(F.col("sig"), NUM_BANDS, ROWS_PER_BAND)
+    # built once per query, shared by every increment
+    quality_ok = _curation_quality_ok(F.col("text"))
+    sig, band_keys = _curation_sig(), _curation_band_keys()
+    bench = _curation_bench_grams(d).localCheckpoint(eager=True)
+    counts: list[list[tuple[int, int]]] = []  # per increment: 5 stages
+    with tempfile.TemporaryDirectory(prefix="ls_cur_incr_") as root:
+        bronze = f"{root}/bronze"
+        digest_p = f"{root}/state_digests"
+        sigs_p = f"{root}/state_sigs"
+        surv_p = f"{root}/state_survivors"
+        for k, (lo, hi) in enumerate(zip(cuts, cuts[1:])):
+            mode = "append" if k else "overwrite"
+            v = delta_write(
+                corpus.where(
+                    (F.col("doc_id") > lo) & (F.col("doc_id") <= hi)
+                ),
+                bronze,
+                mode=mode,
+                configuration={
+                    **_OPTWRITE,
+                    "delta.enableChangeDataFeed": "true",
+                },
             )
-            .localCheckpoint(eager=True)
-        )
-        bands_i = sigs_i.select(
-            "doc_id", F.explode("bands").alias("band")
-        ).select("doc_id", "band.band_id", "band.band_hash")
-        if first_round:
+            # the increment IS the change feed of this commit; stage 1
+            # is a per-row flag on it
+            feat = (
+                delta_read_cdf(spark, bronze, v, v)
+                .where("_change_type = 'insert'")
+                .select(
+                    "doc_id",
+                    "source",
+                    "text",
+                    "n_tokens",
+                    quality_ok.alias("q"),
+                )
+                .localCheckpoint(eager=True)
+            )
+            s1 = feat.where("q")
+            # stage 2: in-increment keep-first AND not seen in any earlier
+            # crawl (id-ordered ingest makes this global keep-first)
+            with_h = s1.select("doc_id", F.md5("text").alias("h"))
+            if k:
+                seen = delta_read(spark, digest_p)
+                with_h = with_h.join(seen, "h", "left_anti")
+            new_first = (
+                with_h.groupBy("h")
+                .agg(F.min("doc_id").alias("doc_id"))
+                .localCheckpoint(eager=True)
+            )
+            s2_docs = s1.join(
+                new_first.select("doc_id"), "doc_id", "left_semi"
+            )
+            # stage-2 survivors with everything later stages read: the
+            # signature and its band keys (the signature state persists
+            # its BAND KEYS, so an increment reads the history's bands
+            # off the state scan instead of re-hashing every historical
+            # signature — guide §6: layout the state for its reader) and
+            # the stage-4 contamination flag
+            s2 = (
+                s2_docs.select(
+                    "doc_id", "source", "n_tokens", sig.alias("sig")
+                )
+                .withColumn("bands", band_keys)
+                .join(
+                    _curation_contaminated(bench, s2_docs).withColumn(
+                        "contam", F.lit(True)
+                    ),
+                    "doc_id",
+                    "left",
+                )
+                .na.fill(False, ["contam"])
+                .localCheckpoint(eager=True)
+            )
+            # stage 3: new-vs-(state ∪ new) banded candidates only
+            sigs_i = s2.select("doc_id", "sig")
+            bands_i = _curation_band_rows(s2)
             sigs_all, bands_all = sigs_i, bands_i
-        else:
-            state = delta_read(spark, sigs_p)
-            sigs_all = state.select("doc_id", "sig").unionByName(
-                sigs_i.select("doc_id", "sig")
+            if k:
+                state = delta_read(spark, sigs_p)
+                sigs_all = state.select("doc_id", "sig").unionByName(sigs_i)
+                bands_all = _curation_band_rows(state).unionByName(bands_i)
+            near = _curation_near_drop(bands_all, bands_i, sigs_all, sigs_i)
+            flagged = (
+                s2.select("doc_id", "source", "n_tokens", "contam")
+                .join(near.withColumn("near", F.lit(True)), "doc_id", "left")
+                .na.fill(False, ["near"])
+                .localCheckpoint(eager=True)
             )
-            bands_all = (
-                state.select("doc_id", F.explode("bands").alias("band"))
-                .select("doc_id", "band.band_id", "band.band_hash")
-                .unionByName(bands_i)
+            s3 = ~F.col("near")
+            s4 = s3 & ~F.col("contam")
+            delta_write(
+                new_first.select("h"),
+                digest_p,
+                mode=mode,
+                configuration=_OPTWRITE,
             )
-        near = _curation_near_drop(bands_all, bands_i, sigs_all, sigs_i)
-        s3_i = s2_i.join(near, "doc_id", "left_anti").localCheckpoint(
-            eager=True
+            delta_write(
+                s2.select("doc_id", "sig", "bands"),
+                sigs_p,
+                mode=mode,
+                stats_cols=["doc_id"],
+                configuration=_OPTWRITE,
+            )
+            delta_write(
+                flagged.where(s4).select("doc_id", "source", "n_tokens"),
+                surv_p,
+                mode=mode,
+                configuration=_OPTWRITE,
+            )
+            # ONE action for the increment's 5 ledger rows: conditional
+            # counts and token sums over the two flagged frames (the
+            # feature pass holds stages 0-1, the survivors stages 2-4)
+            no, yes = F.lit(False), F.lit(True)
+            in_stage = F.col("in_stage")
+            tally = (
+                feat.select(
+                    "n_tokens",
+                    F.array(yes, F.col("q"), no, no, no).alias("in_stage"),
+                )
+                .unionByName(
+                    flagged.select(
+                        "n_tokens",
+                        F.array(no, no, yes, s3, s4).alias("in_stage"),
+                    )
+                )
+                .agg(
+                    *(
+                        F.struct(
+                            F.count_if(in_stage[i]).alias("n"),
+                            F.sum(F.when(in_stage[i], F.col("n_tokens"))),
+                        )
+                        for i in range(5)
+                    )
+                )
+                .first()
+            )
+            counts.append([(n, t or 0) for n, t in tally])
+            # every per-increment frame is fully consumed above (state
+            # writes + ledger counts); later increments read state from
+            # the Delta tables, never from these frames. Their checkpoint
+            # blocks are reclaimed by the ContextCleaner once the Python
+            # references drop (the session's 1-minute periodic GC bounds
+            # the lag), so a long-lived session does not accumulate one
+            # corpus copy per stage per increment (guide §5).
+        # global stages over the survivor state
+        s4_all = delta_read(spark, surv_p)
+        alloc = _curation_alloc(s4_all)
+        ranked = s4_all.withColumn(
+            "rkd",
+            F.row_number().over(
+                Window.partitionBy("source").orderBy("doc_id")
+            ),
         )
-        # stage 4: static benchmark gram set
-        cont = _curation_contaminated(d, s3_i)
-        s4_i = s3_i.join(cont, "doc_id", "left_anti").localCheckpoint(
-            eager=True
-        )
-        delta_write(
-            sigs_i,
-            sigs_p,
-            mode="overwrite" if first_round else "append",
-            stats_cols=["doc_id"],
-            configuration=_OPTWRITE,
-        )
-        delta_write(
-            s4_i.select("doc_id", "source", "n_tokens"),
-            surv_p,
-            mode="overwrite" if first_round else "append",
-            configuration=_OPTWRITE,
-        )
-        # ONE union-aggregate job for the increment's 5 ledger rows
-        # (was one collect per stage — 4 extra fixed-overhead jobs per
-        # increment; the stage frames are already persisted by the
-        # writes above, so each branch is a metadata-cheap agg)
-        ledger_i = None
-        for sid, df in enumerate((raw_i, s1_i, s2_i, s3_i, s4_i)):
-            a = df.agg(
+        s5 = (
+            ranked.join(alloc, "source")
+            .where(F.col("rkd") <= F.col("alloc"))
+            .agg(
                 F.count(F.lit(1)).alias("n"),
                 F.coalesce(F.sum("n_tokens"), F.lit(0)).alias("t"),
-            ).select(F.lit(sid).alias("sid"), "n", "t")
-            ledger_i = a if ledger_i is None else ledger_i.unionByName(a)
-        by_sid = {int(r["sid"]): r for r in ledger_i.collect()}
-        counts.append(
-            [
-                (int(by_sid[i]["n"]), int(by_sid[i]["t"]))
-                for i in range(5)
-            ]
+            )
+            .collect()[0]
         )
-        # every per-increment frame is fully consumed above (state
-        # writes + ledger counts); later increments read state from the
-        # Delta tables, never from these frames. Their checkpoint
-        # blocks are reclaimed by the ContextCleaner once the Python
-        # references drop (the session's 1-minute periodic GC bounds
-        # the lag), so a long-lived session does not accumulate one
-        # corpus copy per stage per increment (guide §5).
-        first_round = False
-    # global stages over the survivor state
-    s4_all = delta_read(spark, surv_p)
-    alloc = _curation_alloc(s4_all)
-    ranked = s4_all.withColumn(
-        "rkd",
-        F.row_number().over(
-            Window.partitionBy("source").orderBy("doc_id")
-        ),
-    )
-    s5 = (
-        ranked.join(alloc, "source")
-        .where(F.col("rkd") <= F.col("alloc"))
-        .agg(
-            F.count(F.lit(1)).alias("n"),
-            F.coalesce(F.sum("n_tokens"), F.lit(0)).alias("t"),
-        )
-        .collect()[0]
-    )
     names = (
         "raw",
         "quality_gate",
@@ -1611,7 +1656,8 @@ def pipeline_curation_incremental(
             t5 * 1_000_000 // (packs * PACK_WINDOW) if t5 else 0,
         )
     )
-    return spark.createDataFrame(
+    return _rows_frame(
+        spark,
         rows,
         "stage_id long, stage string, n_docs long, n_tokens long,"
         " dropped_docs long, dropped_tokens long, kept_ppm long",

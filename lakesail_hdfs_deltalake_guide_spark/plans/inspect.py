@@ -86,7 +86,14 @@ def read_schema_columns(df: DataFrame) -> list[str]:
         if line.startswith("ReadSchema:"):
             schema = line[len("ReadSchema:") :].strip()
             inner = schema[schema.find("<") + 1 : schema.rfind(">")]
-            return [f.split(":")[0] for f in inner.split(",") if f]
+            fields, depth = [""], 0  # split on top-level commas only
+            for ch in inner:
+                depth += (ch == "<") - (ch == ">")
+                if ch == "," and depth == 0:
+                    fields.append("")
+                else:
+                    fields[-1] += ch
+            return [f.split(":")[0] for f in fields if f]
     return []
 
 

@@ -57,6 +57,42 @@ def _shingles(toks: list[str], k: int) -> list[str]:
     return [" ".join(toks[i : i + k]) for i in range(len(toks) - k + 1)]
 
 
+_WEIGHTS = [
+    _md5_prefix(f"w:{b}", 8) % CLS_WEIGHT_SPAN - (CLS_WEIGHT_SPAN - 1) // 2
+    for b in range(CLS_BUCKETS)
+]
+
+
+def _weight(token: str) -> int:
+    return _WEIGHTS[_md5_prefix("q:" + token, 8) % CLS_BUCKETS]
+
+
+def _reference_quality_ok(text: str) -> bool:
+    """Stage 1: gopher repetition rules + hashed classifier."""
+    t = text.split(" ")
+    n_chars = sum(len(w) for w in t)
+    bi = Counter(zip(t, t[1:]))
+    if bi:
+        (w1, w2), cnt = min(
+            bi.items(), key=lambda kv: (-kv[1], kv[0][0], kv[0][1])
+        )
+        top2 = cnt * (len(w1) + len(w2))
+    else:
+        top2 = 0
+    tri = Counter(zip(t, t[1:], t[2:]))
+    dup3 = sum(
+        (c - 1) * (len(a) + len(b) + len(g))
+        for (a, b, g), c in tri.items()
+        if c >= 2
+    )
+    w_sum = sum(_weight(w) for w in t)
+    return (
+        top2 * 1_000_000 // n_chars <= GOPHER_TOP2_MAX_PPM
+        and dup3 * 1_000_000 // n_chars <= GOPHER_DUP3_MAX_PPM
+        and _tdiv(w_sum, len(t)) >= 0
+    )
+
+
 def _reference_ledger(sf_dir: str) -> list[tuple]:
     docs = sorted(
         pq.read_table(f"{sf_dir}/documents.parquet").to_pylist(),
@@ -68,35 +104,7 @@ def _reference_ledger(sf_dir: str) -> list[tuple]:
     ntok = {d["doc_id"]: len(toks[d["doc_id"]]) for d in docs}
 
     # stage 1: gopher repetition + classifier
-    weights = [
-        _md5_prefix(f"w:{b}", 8) % CLS_WEIGHT_SPAN - (CLS_WEIGHT_SPAN - 1) // 2
-        for b in range(CLS_BUCKETS)
-    ]
-    s1 = []
-    for d in corpus:
-        t = toks[d["doc_id"]]
-        n_chars = sum(len(w) for w in t)
-        bi = Counter(zip(t, t[1:]))
-        if bi:
-            (w1, w2), cnt = min(
-                bi.items(), key=lambda kv: (-kv[1], kv[0][0], kv[0][1])
-            )
-            top2 = cnt * (len(w1) + len(w2))
-        else:
-            top2 = 0
-        tri = Counter(zip(t, t[1:], t[2:]))
-        dup3 = sum(
-            (c - 1) * (len(a) + len(b) + len(g))
-            for (a, b, g), c in tri.items()
-            if c >= 2
-        )
-        w_sum = sum(weights[_md5_prefix("q:" + w, 8) % CLS_BUCKETS] for w in t)
-        if (
-            top2 * 1_000_000 // n_chars <= GOPHER_TOP2_MAX_PPM
-            and dup3 * 1_000_000 // n_chars <= GOPHER_DUP3_MAX_PPM
-            and _tdiv(w_sum, len(t)) >= 0
-        ):
-            s1.append(d)
+    s1 = [d for d in corpus if _reference_quality_ok(d["text"])]
 
     # stage 2: exact keep-first per md5(text)
     first: dict[str, int] = {}
@@ -234,3 +242,65 @@ def test_curation_ledger_matches_python_reference(spark, sf_smoke):
         for r in pipeline_curation_e2e(spark, sf_smoke).collect()
     ]
     assert got == _reference_ledger(sf_smoke)
+
+
+def _tokens_by_sign(sign: int, n: int, skip: int = 0) -> list[str]:
+    """``n`` distinct 3-char tokens whose classifier weight has ``sign``."""
+    words = [w for w in (f"t{i}" for i in range(10, 100)) if sign * _weight(w) > 0]
+    assert len(words) >= skip + n
+    return words[skip : skip + n]
+
+
+def _interleave(grams: list[list[str]], fillers: list[str]) -> str:
+    """Each gram preceded by its own filler, the rest of the fillers after."""
+    out: list[str] = []
+    for g, f in zip(grams, fillers):
+        out += [f, *g]
+    return " ".join(out + fillers[len(grams) :])
+
+
+def test_quality_gate_matches_reference_on_edge_cases(spark):
+    """The per-row stage-1 predicate against the sequential reference on
+    documents built to sit on one side of each rule's edge."""
+    from lakesail_hdfs_deltalake_guide_spark.pipelines import _curation_quality_ids
+
+    pos = _tokens_by_sign(1, 40)
+    neg = _tokens_by_sign(-1, 12)
+    long_bi, short_bi = ["a", "yyyyyyyy"], ["a\tb", "x"]
+    docs = {
+        # no bigram at all: only the classifier decides
+        "one_token": (pos[0], True),
+        "one_negative_token": (neg[0], False),
+        # the only bigram holds every char
+        "two_tokens": (f"{pos[0]} {pos[1]}", False),
+        # two bigrams tied at count 2: the tie goes to the smaller
+        # (w1, w2), and "a" sorts before "a\tb" as a struct field; a
+        # space-joined string key would sort "a\tb x" first ('\t' < ' ')
+        "tie_long_first": (
+            _interleave([long_bi] * 2 + [short_bi] * 2, pos[3:13]),
+            False,
+        ),
+        "tie_short_first": (
+            _interleave([["a", "x"]] * 2 + [["a\tb", "yyyyyyyy"]] * 2, pos[3:13]),
+            True,
+        ),
+        # a trigram three times: 18 re-spent chars; 93 chars fail the
+        # 15% rule, 120 chars sit exactly on it and pass
+        "dup3_over": (_interleave([pos[:3]] * 3, pos[3:25]), False),
+        "dup3_on_edge": (_interleave([pos[:3]] * 3, pos[3:34]), True),
+        "negative_score": (" ".join(neg), False),
+        # w_sum = -3 over 12 tokens: DIV truncates to 0, which passes
+        "score_truncates_to_zero": (
+            "t28 t90 t76 t98 t27 t29 t59 t89 t68 t99 t70 t69",
+            True,
+        ),
+    }
+    for name, (text, expected) in docs.items():
+        assert _reference_quality_ok(text) is expected, name
+    names = sorted(docs)
+    frame = spark.createDataFrame(
+        [(i, docs[n][0]) for i, n in enumerate(names)],
+        "doc_id long, text string",
+    )
+    got = {names[r["doc_id"]] for r in _curation_quality_ids(frame).collect()}
+    assert got == {n for n in names if docs[n][1]}

@@ -755,3 +755,33 @@ def test_wedge_selfjoin_reuses_leg_exchange(spark, sf_smoke):
         plan = df._jdf.queryExecution().executedPlan().toString()
         assert "ReusedExchange" in plan, fn.__name__
         assert "ShuffledHashJoin" in plan, fn.__name__
+
+
+def test_curation_gate_is_per_row_and_band_scan_reads_band_keys(
+    spark, sf_smoke, tmp_path
+):
+    """The curation stage-1 gate is a per-row predicate (no shuffle),
+    and the incremental pipeline's band-side state scan reads only
+    doc_id and the persisted band keys, never the signatures."""
+    from lakesail_hdfs_deltalake_guide_spark.pipelines import (
+        _curation_band_keys,
+        _curation_band_rows,
+        _curation_quality_ids,
+        _curation_sigs,
+    )
+    from lakesail_hdfs_deltalake_guide_spark.sources.delta_log import (
+        delta_read,
+        delta_write,
+    )
+
+    docs = load_table(spark, sf_smoke, "documents")
+    assert shuffle_count(_curation_quality_ids(docs)) == 0
+    state = str(tmp_path / "state_sigs")
+    delta_write(
+        _curation_sigs(docs.where(F.col("doc_id") < 40)).withColumn(
+            "bands", _curation_band_keys()
+        ),
+        state,
+    )
+    band_side = _curation_band_rows(delta_read(spark, state))
+    assert read_schema_columns(band_side) == ["doc_id", "bands"]

@@ -533,6 +533,31 @@ def test_curation_incremental_equals_batch(spark, sf_smoke):
     assert batch == incr3
 
 
+def test_curation_incremental_removes_its_temp_root(
+    spark, sf_smoke, tmp_path, monkeypatch
+):
+    """The bronze and state tables live under one temp root, which the
+    query removes once the ledger rows are in Python."""
+    import tempfile
+
+    from lakesail_hdfs_deltalake_guide_spark.pipelines import (
+        pipeline_curation_incremental,
+    )
+
+    made = []
+    mkdtemp = tempfile.mkdtemp
+
+    def spy(*args, **kwargs):
+        made.append(mkdtemp(*args, **kwargs))
+        return made[-1]
+
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
+    monkeypatch.setattr(tempfile, "mkdtemp", spy)
+    pipeline_curation_incremental(spark, sf_smoke).collect()
+    assert any("ls_cur_incr_" in p for p in made)
+    assert not list(tmp_path.glob("ls_cur_incr_*"))
+
+
 def test_sq_perdim_recall_and_reconstruction(spark, sf_smoke):
     """Per-dim SQ8: recall@5 vs exact brute force must clear the floor
     an 8-bit/dim code promises (it should be near-lossless), and a
