@@ -16,6 +16,7 @@ keeps every column materialized, matching what a real consumer pays).
 
 from __future__ import annotations
 
+import glob
 import json
 import os
 import sys
@@ -43,37 +44,7 @@ def main() -> None:
     reg = get_registry()
     bench_defs = {n: q for n, q in reg.defs.items() if "bench" in q.tags}
 
-    # Warmup: spin up executor threads, JIT the codegen paths once, and
-    # prime the shared InMemoryFileIndex / parquet-footer caches for every
-    # fixture table. Without the listing warmup, whichever query touches a
-    # table first pays its one-time listing cost, so per-query numbers
-    # depend on dict order (the r3 `session_stats` "drift" was exactly
-    # this: 0.94 s first-in-order vs 0.61 s order-controlled).
-    spark.range(1_000_000).selectExpr("sum(id) as s").collect()
-    # JIT the codegen-heavy hash paths too: md5/xxhash64 + HOF
-    # (transform/aggregate) expression codegen and the shuffle-join
-    # machinery the dedup/minhash/ANN family leans on. A first-in-session
-    # dedup_minhash_lsh otherwise pays a one-time ~18 s JIT cliff
-    # (measured 19.8 s cold vs 1.6 s steady) that reads as a 3-12x flag.
-    warm = spark.range(100_000).selectExpr(
-        "id",
-        "md5(cast(id as string)) as h",
-        "transform(sequence(0, 15), s -> "
-        " xxhash64(concat(md5(cast(id % 977 as string)),"
-        "          cast(s as string)))) as sig",
-    )
-    warm.selectExpr(
-        # XOR fold: sum would ARITHMETIC_OVERFLOW under ANSI mode
-        "aggregate(sig, cast(0 as bigint), (a, x) -> a ^ x) as s", "h"
-    ).join(
-        warm.selectExpr("h", "id as rid"), "h"
-    ).write.format("noop").mode("overwrite").save()
-    # derived from the fixture dir, not a hard-coded name list: a missing
-    # or renamed table can't crash the warmup or silently skip priming
-    import glob
-
-    for pq in sorted(glob.glob(os.path.join(sf_dir, "*.parquet"))):
-        spark.read.parquet(pq).count()
+    warmup(spark, sf_dir)
 
     timings: dict[str, float] = {}
     for name, qdef in bench_defs.items():
@@ -243,6 +214,39 @@ def main() -> None:
         line["queries_omitted"] = len(by_pin)
     print(json.dumps(line, separators=(",", ":")))
     spark.stop()
+
+
+def warmup(spark, sf_dir: str) -> None:
+    """Untimed warmup shared by the query harnesses: spin up executor
+    threads, JIT the codegen paths once, and prime the shared
+    InMemoryFileIndex / parquet-footer caches for every fixture table
+    under ``sf_dir``. Without the listing warmup, whichever query
+    touches a table first pays its one-time listing cost, so per-query
+    numbers depend on dict order (the r3 `session_stats` "drift" was
+    exactly this: 0.94 s first-in-order vs 0.61 s order-controlled)."""
+    spark.range(1_000_000).selectExpr("sum(id) as s").collect()
+    # JIT the codegen-heavy hash paths too: md5/xxhash64 + HOF
+    # (transform/aggregate) expression codegen and the shuffle-join
+    # machinery the dedup/minhash/ANN family leans on. A first-in-session
+    # dedup_minhash_lsh otherwise pays a one-time ~18 s JIT cliff
+    # (measured 19.8 s cold vs 1.6 s steady) that reads as a 3-12x flag.
+    warm = spark.range(100_000).selectExpr(
+        "id",
+        "md5(cast(id as string)) as h",
+        "transform(sequence(0, 15), s -> "
+        " xxhash64(concat(md5(cast(id % 977 as string)),"
+        "          cast(s as string)))) as sig",
+    )
+    warm.selectExpr(
+        # XOR fold: sum would ARITHMETIC_OVERFLOW under ANSI mode
+        "aggregate(sig, cast(0 as bigint), (a, x) -> a ^ x) as s", "h"
+    ).join(
+        warm.selectExpr("h", "id as rid"), "h"
+    ).write.format("noop").mode("overwrite").save()
+    # derived from the fixture dir, not a hard-coded name list: a missing
+    # or renamed table can't crash the warmup or silently skip priming
+    for pq in sorted(glob.glob(os.path.join(sf_dir, "*.parquet"))):
+        spark.read.parquet(pq).count()
 
 
 if __name__ == "__main__":

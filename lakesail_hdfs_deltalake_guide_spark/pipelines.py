@@ -362,53 +362,53 @@ def pipeline_incremental_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load_table(spark, sf_dir, "documents")
     fp = F.md5(F.lower(F.regexp_replace(F.col("text"), r"\s+", " ")))
     docs = d.select("doc_id", fp.alias("fp"))
-    state_path = tempfile.mkdtemp(prefix="ls_dedup_state_")
-    # v0: empty state with the right schema
-    delta_write(
-        spark.createDataFrame([], "fp string, first_doc long"),
-        state_path,
-        configuration=_OPTWRITE,
-    )
-    out_rows = []
-    batches = (("batch_1", (0, 1)), ("batch_2", (1, 2)))
-    for name, mods in batches:
-        batch = docs.where((F.col("doc_id") % 3).isin(*mods))
-        # keep the per-fp batch multiplicity so the whole batch-side
-        # ledger (n_input, n_unique) folds from ONE metadata-sized scan
-        # of this lazily-checkpointed aggregate after the write action
-        # materializes it — 2 actions per batch total (was 4: the
-        # same fuse-from-log treatment the minhash twin got in r8)
-        in_batch = (
-            batch.groupBy("fp")
-            .agg(
-                F.min("doc_id").alias("first_doc"),
-                F.count(F.lit(1)).alias("n_docs"),
-            )
-            .localCheckpoint(eager=False)
+    with tempfile.TemporaryDirectory(prefix="ls_dedup_state_") as state_path:
+        # v0: empty state with the right schema
+        delta_write(
+            spark.createDataFrame([], "fp string, first_doc long"),
+            state_path,
+            configuration=_OPTWRITE,
         )
-        state = delta_read(spark, state_path)
-        novel = in_batch.join(
-            state.select("fp"), "fp", "left_anti"
-        ).select("fp", "first_doc")
-        size_before = delta_row_count_from_stats(spark, state_path)
-        delta_write(novel, state_path, mode="append")  # action 1
-        # ledger sizes from the log's add-action numRecords — a metadata
-        # fold, never a rescan of the (crawl-history-sized) state table;
-        # the novel count is the append's numRecords delta
-        size_after = delta_row_count_from_stats(spark, state_path)
-        ledger = in_batch.agg(
-            F.sum("n_docs").alias("n_input"),
-            F.count(F.lit(1)).alias("n_uniq"),
-        ).head()  # action 2 (reads the checkpointed aggregate)
-        out_rows.append(
-            (
-                name,
-                ledger["n_input"],
-                ledger["n_uniq"],
-                size_after - size_before,
-                size_after,
+        out_rows = []
+        batches = (("batch_1", (0, 1)), ("batch_2", (1, 2)))
+        for name, mods in batches:
+            batch = docs.where((F.col("doc_id") % 3).isin(*mods))
+            # keep the per-fp batch multiplicity so the whole batch-side
+            # ledger (n_input, n_unique) folds from ONE metadata-sized scan
+            # of this lazily-checkpointed aggregate after the write action
+            # materializes it — 2 actions per batch total (was 4: the
+            # same fuse-from-log treatment the minhash twin got in r8)
+            in_batch = (
+                batch.groupBy("fp")
+                .agg(
+                    F.min("doc_id").alias("first_doc"),
+                    F.count(F.lit(1)).alias("n_docs"),
+                )
+                .localCheckpoint(eager=False)
             )
-        )
+            state = delta_read(spark, state_path)
+            novel = in_batch.join(
+                state.select("fp"), "fp", "left_anti"
+            ).select("fp", "first_doc")
+            size_before = delta_row_count_from_stats(spark, state_path)
+            delta_write(novel, state_path, mode="append")  # action 1
+            # ledger sizes from the log's add-action numRecords — a metadata
+            # fold, never a rescan of the (crawl-history-sized) state table;
+            # the novel count is the append's numRecords delta
+            size_after = delta_row_count_from_stats(spark, state_path)
+            ledger = in_batch.agg(
+                F.sum("n_docs").alias("n_input"),
+                F.count(F.lit(1)).alias("n_uniq"),
+            ).head()  # action 2 (reads the checkpointed aggregate)
+            out_rows.append(
+                (
+                    name,
+                    ledger["n_input"],
+                    ledger["n_uniq"],
+                    size_after - size_before,
+                    size_after,
+                )
+            )
     return _rows_frame(
         spark,
         out_rows,
@@ -472,69 +472,69 @@ def pipeline_incremental_minhash(
         .select("doc_id", "band.band_id", "band.band_hash")
         .localCheckpoint(eager=True)  # one sketch pass feeds both batches
     )
-    state_path = tempfile.mkdtemp(prefix="ls_minhash_state_")
-    # v0: empty state carved from the band stream itself, so the state
-    # schema (incl. nullability) matches every future append exactly
-    delta_write(bands_all.limit(0), state_path, configuration=_OPTWRITE)
-    out_rows = []
-    batches = (
-        ("batch_1", F.col("doc_id") < PLANT_OFFSET),
-        (
-            "batch_2",
-            (F.col("doc_id") >= PLANT_OFFSET)
-            | (F.col("doc_id") % 10 == 0),
-        ),
-    )
-    state_rows = 0
-    for name, cond in batches:
-        b = bands_all.where(cond)
-        state = delta_read(spark, state_path)
-        hist_dup = (
-            b.join(
-                state.select("band_id", "band_hash"),
-                ["band_id", "band_hash"],
-            )
-            .select("doc_id")
-            .distinct()
-        )
-        # the history band-join runs exactly ONCE: fresh is frozen here,
-        # so the self-join, the write, and the ledger all reuse it
-        fresh = b.join(hist_dup, "doc_id", "left_anti").localCheckpoint(
-            eager=True
-        )
-        x, y = fresh.alias("a"), fresh.alias("b")
-        batch_dup = (
-            x.join(
-                y,
-                (F.col("a.band_id") == F.col("b.band_id"))
-                & (F.col("a.band_hash") == F.col("b.band_hash"))
-                & (F.col("a.doc_id") < F.col("b.doc_id")),
-            )
-            .select(F.col("b.doc_id").alias("doc_id"))
-            .distinct()
-        )
-        keep = fresh.join(batch_dup, "doc_id", "left_anti")
-        delta_write(keep, state_path, mode="append")
-        # Ledger WITHOUT re-running any join: every doc carries exactly
-        # NUM_BANDS band rows (band_keys always emits the full band
-        # vector), so doc counts fold from band-row counts — b and
-        # fresh are checkpointed (near-free counts) and the state size
-        # is the log's add-action numRecords (a metadata fold).
-        n_input = b.count() // NUM_BANDS
-        n_fresh = fresh.count() // NUM_BANDS
-        new_state_rows = delta_row_count_from_stats(spark, state_path)
-        n_kept = (new_state_rows - state_rows) // NUM_BANDS
-        state_rows = new_state_rows
-        out_rows.append(
+    with tempfile.TemporaryDirectory(prefix="ls_minhash_state_") as state_path:
+        # v0: empty state carved from the band stream itself, so the state
+        # schema (incl. nullability) matches every future append exactly
+        delta_write(bands_all.limit(0), state_path, configuration=_OPTWRITE)
+        out_rows = []
+        batches = (
+            ("batch_1", F.col("doc_id") < PLANT_OFFSET),
             (
-                name,
-                n_input,
-                n_input - n_fresh,
-                n_fresh - n_kept,
-                n_kept,
-                new_state_rows,
-            )
+                "batch_2",
+                (F.col("doc_id") >= PLANT_OFFSET)
+                | (F.col("doc_id") % 10 == 0),
+            ),
         )
+        state_rows = 0
+        for name, cond in batches:
+            b = bands_all.where(cond)
+            state = delta_read(spark, state_path)
+            hist_dup = (
+                b.join(
+                    state.select("band_id", "band_hash"),
+                    ["band_id", "band_hash"],
+                )
+                .select("doc_id")
+                .distinct()
+            )
+            # the history band-join runs exactly ONCE: fresh is frozen here,
+            # so the self-join, the write, and the ledger all reuse it
+            fresh = b.join(hist_dup, "doc_id", "left_anti").localCheckpoint(
+                eager=True
+            )
+            x, y = fresh.alias("a"), fresh.alias("b")
+            batch_dup = (
+                x.join(
+                    y,
+                    (F.col("a.band_id") == F.col("b.band_id"))
+                    & (F.col("a.band_hash") == F.col("b.band_hash"))
+                    & (F.col("a.doc_id") < F.col("b.doc_id")),
+                )
+                .select(F.col("b.doc_id").alias("doc_id"))
+                .distinct()
+            )
+            keep = fresh.join(batch_dup, "doc_id", "left_anti")
+            delta_write(keep, state_path, mode="append")
+            # Ledger WITHOUT re-running any join: every doc carries exactly
+            # NUM_BANDS band rows (band_keys always emits the full band
+            # vector), so doc counts fold from band-row counts — b and
+            # fresh are checkpointed (near-free counts) and the state size
+            # is the log's add-action numRecords (a metadata fold).
+            n_input = b.count() // NUM_BANDS
+            n_fresh = fresh.count() // NUM_BANDS
+            new_state_rows = delta_row_count_from_stats(spark, state_path)
+            n_kept = (new_state_rows - state_rows) // NUM_BANDS
+            state_rows = new_state_rows
+            out_rows.append(
+                (
+                    name,
+                    n_input,
+                    n_input - n_fresh,
+                    n_fresh - n_kept,
+                    n_kept,
+                    new_state_rows,
+                )
+            )
     return _rows_frame(
         spark,
         out_rows,

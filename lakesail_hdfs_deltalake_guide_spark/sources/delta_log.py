@@ -224,20 +224,73 @@ def _checkpoint_part_file(
     )
 
 
+# The two storage moves the log needs — write an object once, publish a
+# log record atomically — each live behind ONE helper: every log, crc,
+# manifest and DV byte write is _write_bytes, every log-file publish is
+# _publish_log_file, every staged parquet publish (data, change, sidecar
+# and checkpoint-part files) is _publish_staged, and every byte read is
+# _read_raw_bytes. All of them go through the Hadoop FileSystem, so each
+# log file has the same scheme support (viewfs://, hdfs://, ...).
+
+
+def _read_raw_bytes(spark: SparkSession, path: str) -> bytes:
+    """Raw file bytes via the Hadoop FileSystem. py4j copies Python
+    bytearrays INTO the JVM, so stream.read(buf) can't hand data back —
+    drain JVM-side (commons-io ships with Hadoop)."""
+    fs, hpath, jvm = _hadoop_fs(spark, path)
+    stream = fs.open(hpath)
+    try:
+        return bytes(jvm.org.apache.commons.io.IOUtils.toByteArray(stream))
+    finally:
+        stream.close()
+
+
+def _write_bytes(fs, hpath, payload: bytes, overwrite: bool = False) -> None:
+    """Create ``hpath`` (parent dirs included) holding ``payload``."""
+    stream = fs.create(hpath, overwrite)
+    try:
+        stream.write(payload)
+    finally:
+        stream.close()
+
+
+def _publish_log_file(fs, jvm, final: str, payload: bytes, replace: bool) -> bool:
+    """Atomic log publish: write ``payload`` to ``_delta_log/.tmp-<uuid>``
+    and rename it to ``final``, so a reader listing the log never opens a
+    partly written file. The temp name has no ``.json``/``.parquet``
+    suffix: one left by a crash never matches a log-file pattern.
+
+    When ``final`` already exists, ``replace`` overwrites it (a
+    checkpoint of the same version is idempotent); otherwise the temp
+    file is dropped and False says this writer lost (the HDFSLogStore
+    rename-fail-on-existing contract — a racing commit retries at
+    version+1). Returns True once ``final`` holds ``payload``."""
+    path_cls = jvm.org.apache.hadoop.fs.Path
+    tmp = path_cls(f"{final.rsplit('/', 1)[0]}/.tmp-{uuid.uuid4().hex}")
+    dest = path_cls(final)
+    _write_bytes(fs, tmp, payload)
+    # RawLocalFileSystem.rename REPLACES an existing destination (POSIX
+    # renameTo), so fail-on-existing needs an explicit check on file:// —
+    # HDFS rename enforces it natively; Delta's own FileSystemLogStore
+    # does exactly this split.
+    if fs.exists(dest):
+        if not replace:
+            fs.delete(tmp, False)
+            return False
+        fs.delete(dest, False)
+    if fs.rename(tmp, dest):
+        return True
+    fs.delete(tmp, False)
+    return False
+
+
 def _read_parquet_bytes(spark: SparkSession, file: str):
-    """One log parquet file as a pyarrow table, via the Hadoop
-    FileSystem (same scheme support as the JSON commits)."""
+    """One log parquet file as a pyarrow table."""
     import io as _io
 
     import pyarrow.parquet as pq
 
-    fs, hpath, jvm = _hadoop_fs(spark, file)
-    stream = fs.open(hpath)
-    try:
-        raw = bytes(jvm.org.apache.commons.io.IOUtils.toByteArray(stream))
-    finally:
-        stream.close()
-    return pq.read_table(_io.BytesIO(raw))
+    return pq.read_table(_io.BytesIO(_read_raw_bytes(spark, file)))
 
 
 def _checkpoint_files(spark: SparkSession, path: str, version: int) -> list[str]:
@@ -392,16 +445,7 @@ def _tail_plan(
 
 
 def _read_text(spark: SparkSession, path: str) -> str:
-    # py4j copies Python bytearrays INTO the JVM, so stream.read(buf)
-    # can't hand data back — drain JVM-side (commons-io ships with Hadoop)
-    fs, hpath, jvm = _hadoop_fs(spark, path)
-    stream = fs.open(hpath)
-    try:
-        return bytes(
-            jvm.org.apache.commons.io.IOUtils.toByteArray(stream)
-        ).decode()
-    finally:
-        stream.close()
+    return _read_raw_bytes(spark, path).decode()
 
 
 # Immutable-log-text LRU. Version commits and compaction files are
@@ -461,17 +505,6 @@ def _purge_log_text_cache(prefix: str) -> None:
     with _LOG_TEXT_CACHE_LOCK:
         for p in [p for p in _LOG_TEXT_CACHE if p.startswith(prefix)]:
             _log_text_cache_bytes -= len(_LOG_TEXT_CACHE.pop(p))
-
-
-def _read_raw_bytes(spark: SparkSession, path: str) -> bytes:
-    """Raw file bytes via the Hadoop FileSystem (same scheme support as
-    every other log read — foreign DV ``.bin`` storage files)."""
-    fs, hpath, jvm = _hadoop_fs(spark, path)
-    stream = fs.open(hpath)
-    try:
-        return bytes(jvm.org.apache.commons.io.IOUtils.toByteArray(stream))
-    finally:
-        stream.close()
 
 
 def _commit_info(op: str) -> dict:
@@ -553,27 +586,11 @@ def _write_commit(spark: SparkSession, path: str, version: int, actions) -> None
                 a["commitInfo"]["inCommitTimestamp"] = stamped
             break
     fs, _, jvm = _hadoop_fs(spark, path)
-    log = jvm.org.apache.hadoop.fs.Path(_log_dir(path))
-    fs.mkdirs(log)
-    # no .json suffix: a temp file surviving a mid-commit crash must never
-    # match the version-file pattern (or every later log listing would
-    # crash on int-parsing it)
-    tmp = jvm.org.apache.hadoop.fs.Path(
-        f"{_log_dir(path)}/.tmp-{uuid.uuid4().hex}"
-    )
-    final = jvm.org.apache.hadoop.fs.Path(_version_file(path, version))
     payload = "".join(json.dumps(a) + "\n" for a in actions).encode()
-    stream = fs.create(tmp, False)
-    try:
-        stream.write(payload)
-    finally:
-        stream.close()
-    # RawLocalFileSystem.rename REPLACES an existing destination (POSIX
-    # renameTo), so the fail-on-existing contract needs an explicit check
-    # on file:// — HDFS rename enforces it natively; Delta's own
-    # FileSystemLogStore does exactly this split.
-    if fs.exists(final) or not fs.rename(tmp, final):
-        fs.delete(tmp, False)
+    # the temp file's create makes _delta_log on the table's first commit
+    if not _publish_log_file(
+        fs, jvm, _version_file(path, version), payload, replace=False
+    ):
         raise RuntimeError(
             f"delta commit conflict: version {version} already exists at {path}"
         )
@@ -735,160 +752,6 @@ def delta_enable_v2_checkpoints(spark: SparkSession, path: str) -> int:
     return version
 
 
-def _checkpoint_v2(
-    spark: SparkSession, path: str, target: int, part_files: int
-) -> int:
-    """V2 checkpoint writer: the add actions become ``part_files``
-    sidecar parquet files under ``_delta_log/_sidecars/`` (written as a
-    Spark job — never a driver row list), then ONE UUID-named top file
-    carries protocol/metaData/txn + checkpointMetadata + the sidecar
-    registry, published last so listing only ever sees whole
-    checkpoints. Requires the table to declare the ``v2Checkpoint``
-    feature (:func:`delta_enable_v2_checkpoints`)."""
-    import io as _io
-
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-    from pyarrow import fs as pafs
-
-    proto, meta, _, txns = _snapshot_state(
-        spark, path, target, include_adds=False
-    )
-    if meta is None:
-        raise ValueError(f"no delta table at {path}")
-    feats = set((proto or {}).get("readerFeatures") or [])
-    if "v2Checkpoint" not in feats:
-        raise ValueError(
-            f"table at {path} does not declare the v2Checkpoint feature; "
-            "run delta_enable_v2_checkpoints first (a v2 checkpoint on an "
-            "un-upgraded table would break readers that only know the "
-            "classic layout)"
-        )
-    adds_df = delta_snapshot_adds_df(spark, path, target)
-    cols = [f.name for f in _add_spark_schema().fields]
-    staging = f"{_log_dir(path)}/.ckpt-staging-{uuid.uuid4().hex}"
-    (
-        adds_df.select(F.struct(*[F.col(c) for c in cols]).alias("add"))
-        .repartition(part_files)
-        .write.mode("overwrite")
-        .parquet(staging)
-    )
-    fs, staging_path, jvm = _hadoop_fs(spark, staging)
-    staged = sorted(
-        s.getPath().getName()
-        for s in fs.listStatus(staging_path)
-        if s.getPath().getName().endswith(".parquet")
-    )
-    n_adds = sum(_footer_num_rows(spark, f"{staging}/{s}") for s in staged)
-    side_dir = f"{_log_dir(path)}/{_SIDECAR_DIR}"
-    fs.mkdirs(jvm.org.apache.hadoop.fs.Path(side_dir))
-    sidecars: list[dict] = []
-    for name in staged:
-        sc_name = f"{uuid.uuid4().hex}.parquet"
-        src = jvm.org.apache.hadoop.fs.Path(f"{staging}/{name}")
-        size = fs.getFileStatus(src).getLen()
-        dst = jvm.org.apache.hadoop.fs.Path(f"{side_dir}/{sc_name}")
-        if not fs.rename(src, dst):
-            raise RuntimeError(
-                f"failed to publish checkpoint sidecar at {path}"
-            )
-        sidecars.append(
-            {
-                "path": sc_name,
-                "sizeInBytes": int(size),
-                "modificationTime": int(time.time() * 1000),
-            }
-        )
-    fs.delete(staging_path, True)
-    base = _checkpoint_arrow_schema()
-    schema = pa.schema(
-        list(base)
-        + [
-            pa.field(
-                "checkpointMetadata",
-                pa.struct([("version", pa.int64())]),
-            ),
-            pa.field(
-                "sidecar",
-                pa.struct(
-                    [
-                        ("path", pa.string()),
-                        ("sizeInBytes", pa.int64()),
-                        ("modificationTime", pa.int64()),
-                    ]
-                ),
-            ),
-        ]
-    )
-    blank = {
-        "protocol": None,
-        "metaData": None,
-        "add": None,
-        "txn": None,
-        "checkpointMetadata": None,
-        "sidecar": None,
-    }
-    rows: list[dict] = [
-        blank | {"checkpointMetadata": {"version": target}},
-        blank | {"protocol": dict(proto or _PROTOCOL)},
-        blank
-        | {
-            "metaData": _maps_to_items(meta, ("configuration",))
-            | {
-                "format": _maps_to_items(meta.get("format", {}), ("options",))
-            }
-        },
-    ]
-    for app_id, v in sorted(txns.items()):
-        rows.append(blank | {"txn": {"appId": app_id, "version": v}})
-    for dom, cfg in sorted(delta_domain_metadata(spark, path, target).items()):
-        rows.append(
-            blank
-            | {
-                "domainMetadata": {
-                    "domain": dom,
-                    "configuration": cfg,
-                    "removed": False,
-                }
-            }
-        )
-    for sc in sidecars:
-        rows.append(blank | {"sidecar": sc})
-    buf = _io.BytesIO()
-    pq.write_table(pa.Table.from_pylist(rows, schema=schema), buf)
-    tmp = jvm.org.apache.hadoop.fs.Path(
-        f"{_log_dir(path)}/.tmp-ckpt-{uuid.uuid4().hex}"
-    )
-    stream = fs.create(tmp, False)
-    try:
-        stream.write(buf.getvalue())
-    finally:
-        stream.close()
-    top = jvm.org.apache.hadoop.fs.Path(
-        f"{_log_dir(path)}/{target:020d}.checkpoint.{uuid.uuid4().hex}.parquet"
-    )
-    if not fs.rename(tmp, top):
-        fs.delete(tmp, False)
-        raise RuntimeError(f"failed to publish checkpoint {target} at {path}")
-    pointer = jvm.org.apache.hadoop.fs.Path(
-        f"{_log_dir(path)}/_last_checkpoint"
-    )
-    stream = fs.create(pointer, True)
-    try:
-        stream.write(
-            json.dumps(
-                {
-                    "version": target,
-                    "size": n_adds + len(rows),
-                    "sidecars": len(sidecars),
-                }
-            ).encode()
-        )
-    finally:
-        stream.close()
-    return target
-
-
 def delta_checkpoint(
     spark: SparkSession,
     path: str,
@@ -900,16 +763,32 @@ def delta_checkpoint(
     """Write a protocol-conformant parquet checkpoint of the snapshot at
     ``version`` (latest if None) and re-point ``_last_checkpoint``.
     Returns the checkpointed version. Pure metadata — no data files are
-    touched. Default path is driver-written (snapshot state is O(live
-    files), the same driver-side object every fold already builds —
-    right up to ~10^5 adds). ``distributed=True`` writes the protocol's
-    MULTI-PART checkpoint (``<v>.checkpoint.<part>.<parts>.parquet``)
-    instead: the add actions are reconstructed and sharded across
-    ``part_files`` parquet parts as a Spark job
-    (:func:`delta_snapshot_adds_df`), with only the metadata-sized
-    actions (protocol/metaData/txn) passing through the driver as part
-    1 — at 10^6 live files neither the write nor later folds ever build
-    a driver-side row list."""
+    touched. Three layouts share one set of metadata-sized actions
+    (protocol/metaData/txn/domainMetadata):
+
+    - the default classic single file, driver-written (snapshot state is
+      O(live files), the same driver-side object every fold already
+      builds — right up to ~10^5 adds);
+    - ``distributed=True``: the protocol's MULTI-PART checkpoint
+      (``<v>.checkpoint.<part>.<parts>.parquet``). The add actions are
+      reconstructed and sharded across ``part_files`` parquet parts 2..N
+      as a Spark job (:func:`delta_snapshot_adds_df`); the metadata
+      actions are part 1, published LAST so the part set only becomes
+      complete — and thus listable as a fold base — once every part is
+      in place. At 10^6 live files neither the write nor later folds
+      ever build a driver-side row list;
+    - ``format="v2"``: the same Spark job writes the adds as sidecar
+      files under ``_delta_log/_sidecars/``, then ONE UUID-named top
+      file carries the metadata actions + checkpointMetadata + the
+      sidecar registry, published last so listing only ever sees whole
+      checkpoints. Requires the table to declare the ``v2Checkpoint``
+      feature (:func:`delta_enable_v2_checkpoints`).
+
+    The pointer's ``size`` counts the action rows across the files; for
+    the sharded layouts the add count comes from the parts' footers —
+    O(parts) metadata reads, never a driver row scan."""
+    import io as _io
+
     import pyarrow as pa
     import pyarrow.parquet as pq
 
@@ -917,237 +796,148 @@ def delta_checkpoint(
     if not versions:
         raise ValueError(f"no delta table at {path}")
     target = versions[-1] if version is None else version
-    if format == "v2":
-        return _checkpoint_v2(spark, path, target, part_files)
-    if format != "classic":
+    if format not in ("classic", "v2"):
         raise ValueError(f"unknown checkpoint format {format!r}")
-    if distributed:
-        return _checkpoint_distributed(spark, path, target, part_files)
-    proto, meta, live, txns = _snapshot_state(spark, path, target)
-    domains = delta_domain_metadata(spark, path, target)
-    schema = _checkpoint_arrow_schema()
-    rows = [
-        # propagate the TABLE's protocol action (falling back to ours for
-        # tables we created) — a checkpoint must restate the log, not
-        # downgrade a foreign table's declared requirements
+    sharded = distributed or format == "v2"
+    proto, meta, live, txns = _snapshot_state(
+        spark, path, target, include_adds=not sharded
+    )
+    if meta is None:
+        raise ValueError(f"no delta table at {path}")
+    if format == "v2" and "v2Checkpoint" not in (
+        (proto or {}).get("readerFeatures") or []
+    ):
+        raise ValueError(
+            f"table at {path} does not declare the v2Checkpoint feature; "
+            "run delta_enable_v2_checkpoints first (a v2 checkpoint on an "
+            "un-upgraded table would break readers that only know the "
+            "classic layout)"
+        )
+    # absent keys become nulls under the explicit schema. The TABLE's
+    # protocol action is propagated (falling back to ours for tables we
+    # created) — a checkpoint must restate the log, not downgrade a
+    # foreign table's declared requirements; live domains are restated
+    # (removed tombstones never reach a complete snapshot)
+    rows: list[dict] = [
+        {"protocol": dict(proto or _PROTOCOL)},
         {
-            "protocol": dict(proto or _PROTOCOL),
-            "metaData": None,
-            "add": None,
-            "txn": None,
-        },
-        {
-            "protocol": None,
             "metaData": _maps_to_items(meta, ("configuration",))
-            | {
-                "format": _maps_to_items(
-                    meta.get("format", {}), ("options",)
-                )
-            },
-            "add": None,
-            "txn": None,
+            | {"format": _maps_to_items(meta.get("format", {}), ("options",))}
         },
     ]
-    for app_id, v in sorted(txns.items()):
-        rows.append(
-            {
-                "protocol": None,
-                "metaData": None,
-                "add": None,
-                "txn": {"appId": app_id, "version": v},
-            }
+    rows += [
+        {"txn": {"appId": app_id, "version": v}}
+        for app_id, v in sorted(txns.items())
+    ]
+    rows += [
+        {"domainMetadata": {"domain": d, "configuration": c, "removed": False}}
+        for d, c in sorted(delta_domain_metadata(spark, path, target).items())
+    ]
+    fs, _, jvm = _hadoop_fs(spark, path)
+    log = _log_dir(path)
+    schema = _checkpoint_arrow_schema()
+    pointer: dict = {}
+    n_adds = 0
+    if not sharded:
+        rows += [
+            {"add": _maps_to_items(add, ("partitionValues", "tags"))}
+            for _, add in sorted(live.items())
+        ]
+        final = _checkpoint_file(path, target)
+    else:
+        cols = [f.name for f in _add_spark_schema().fields]
+        writer = (
+            delta_snapshot_adds_df(spark, path, target)
+            .select(F.struct(*[F.col(c) for c in cols]).alias("add"))
+            .repartition(part_files)
+            .write.mode("overwrite")
         )
-    # live domains restated (removed tombstones never reach a complete
-    # snapshot); absent dict keys become nulls under the explicit schema
-    for dom in sorted(domains):
-        rows.append(
-            {
-                "domainMetadata": {
-                    "domain": dom,
-                    "configuration": domains[dom],
-                    "removed": False,
+        if format == "v2":
+            root = f"{log}/{_SIDECAR_DIR}"
+
+            def names(staged: list[str]) -> list[str]:
+                return [f"{uuid.uuid4().hex}.parquet" for _ in staged]
+
+        else:
+            root = log
+
+            def names(staged: list[str]) -> list[str]:
+                # clear stale parts from any earlier (possibly aborted)
+                # rewrite of this version — mixed part sets must not pool
+                # in the listing
+                for st in fs.listStatus(jvm.org.apache.hadoop.fs.Path(log)):
+                    m = _CKPT_PART_RE.match(st.getPath().getName())
+                    if m and int(m.group(1)) == target:
+                        fs.delete(st.getPath(), False)
+                n = len(staged) + 1
+                return [
+                    _checkpoint_part_file(path, target, i, n).rsplit("/", 1)[1]
+                    for i in range(2, n + 1)
+                ]
+
+        published = _publish_staged(
+            fs, jvm, writer, f"{log}/.ckpt-staging-{uuid.uuid4().hex}",
+            root, names, stats_cols=[],
+        )
+        n_adds = sum(stats["numRecords"] for _, _, stats in published)
+        if format == "v2":
+            schema = pa.schema(
+                list(schema)
+                + [
+                    pa.field(
+                        "checkpointMetadata",
+                        pa.struct([("version", pa.int64())]),
+                    ),
+                    pa.field(
+                        "sidecar",
+                        pa.struct(
+                            [
+                                ("path", pa.string()),
+                                ("sizeInBytes", pa.int64()),
+                                ("modificationTime", pa.int64()),
+                            ]
+                        ),
+                    ),
+                ]
+            )
+            now = int(time.time() * 1000)
+            rows = [{"checkpointMetadata": {"version": target}}] + rows
+            rows += [
+                {
+                    "sidecar": {
+                        "path": name,
+                        "sizeInBytes": size,
+                        "modificationTime": now,
+                    }
                 }
-            }
-        )
-    for _, add in sorted(live.items()):
-        rows.append(
-            {
-                "protocol": None,
-                "metaData": None,
-                "add": _maps_to_items(add, ("partitionValues", "tags")),
-                "txn": None,
-            }
-        )
-    table = pa.Table.from_pylist(rows, schema=schema)
+                for name, size, _ in published
+            ]
+            final = f"{log}/{target:020d}.checkpoint.{uuid.uuid4().hex}.parquet"
+            pointer = {"sidecars": len(published)}
+        else:
+            n_parts = len(published) + 1
+            final = _checkpoint_part_file(path, target, 1, n_parts)
+            pointer = {"parts": n_parts}
     # Serialize driver-side and publish through the SAME Hadoop FileSystem
     # every other log write uses — pyarrow's FileSystem.from_uri cannot
-    # resolve schemes like viewfs:// that the JVM conf maps, and the
-    # checkpoint must not be the one log file with a narrower scheme
-    # support than the commits themselves. Checkpoints are metadata-sized
-    # (O(live files) rows), so one in-memory parquet buffer is fine.
-    import io as _io
-
+    # resolve schemes like viewfs:// that the JVM conf maps. The file is
+    # metadata-sized (O(live files) rows at most), so one in-memory
+    # parquet buffer is fine.
     buf = _io.BytesIO()
-    pq.write_table(table, buf)
-    fs, _, jvm = _hadoop_fs(spark, path)
-    # write to a dot-prefixed temp name (invisible to _list_checkpoints'
-    # suffix/isdigit filter) and rename into place, mirroring
-    # _write_commit's publish step — a concurrent reader listing the log
-    # dir must never open a partially-written checkpoint footer.
-    tmp = jvm.org.apache.hadoop.fs.Path(
-        f"{_log_dir(path)}/.tmp-ckpt-{uuid.uuid4().hex}"
-    )
-    final = jvm.org.apache.hadoop.fs.Path(_checkpoint_file(path, target))
-    stream = fs.create(tmp, False)
-    try:
-        stream.write(buf.getvalue())
-    finally:
-        stream.close()
-    # unlike commits, re-checkpointing the same version is idempotent —
-    # replace any existing file rather than failing the race
-    if fs.exists(final):
-        fs.delete(final, False)
-    if not fs.rename(tmp, final):
-        fs.delete(tmp, False)
+    pq.write_table(pa.Table.from_pylist(rows, schema=schema), buf)
+    if not _publish_log_file(fs, jvm, final, buf.getvalue(), replace=True):
         raise RuntimeError(f"failed to publish checkpoint {target} at {path}")
     # _last_checkpoint is a mutable pointer (the one log file the protocol
     # overwrites in place); crash between checkpoint and pointer is safe —
     # readers fall back to the previous pointer or a directory listing.
-    pointer = jvm.org.apache.hadoop.fs.Path(f"{_log_dir(path)}/_last_checkpoint")
-    stream = fs.create(pointer, True)
-    try:
-        stream.write(json.dumps({"version": target, "size": len(rows)}).encode())
-    finally:
-        stream.close()
-    return target
-
-
-def _checkpoint_distributed(
-    spark: SparkSession, path: str, target: int, part_files: int
-) -> int:
-    """Multi-part checkpoint written as a Spark job: adds sharded into
-    parquet parts 2..N by :func:`delta_snapshot_adds_df`, metadata
-    actions driver-written as part 1 LAST (the part set only becomes
-    complete — and thus listable as a fold base — once every part is
-    in place), then the ``_last_checkpoint`` pointer. Row count for the
-    pointer comes from the staged parts' footers — O(parts) metadata
-    reads, never a driver row scan."""
-    import io as _io
-
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-    from pyarrow import fs as pafs
-
-    proto, meta, _, txns = _snapshot_state(
-        spark, path, target, include_adds=False
+    _write_bytes(
+        fs,
+        jvm.org.apache.hadoop.fs.Path(f"{log}/_last_checkpoint"),
+        json.dumps(
+            {"version": target, "size": n_adds + len(rows), **pointer}
+        ).encode(),
+        overwrite=True,
     )
-    if meta is None:
-        raise ValueError(f"no delta table at {path}")
-    meta_rows: list[dict] = [
-        {
-            "protocol": dict(proto or _PROTOCOL),
-            "metaData": None,
-            "add": None,
-            "txn": None,
-        },
-        {
-            "protocol": None,
-            "metaData": _maps_to_items(meta, ("configuration",))
-            | {
-                "format": _maps_to_items(meta.get("format", {}), ("options",))
-            },
-            "add": None,
-            "txn": None,
-        },
-    ]
-    for app_id, v in sorted(txns.items()):
-        meta_rows.append(
-            {
-                "protocol": None,
-                "metaData": None,
-                "add": None,
-                "txn": {"appId": app_id, "version": v},
-            }
-        )
-    for dom, cfg in sorted(delta_domain_metadata(spark, path, target).items()):
-        meta_rows.append(
-            {
-                "domainMetadata": {
-                    "domain": dom,
-                    "configuration": cfg,
-                    "removed": False,
-                }
-            }
-        )
-    adds_df = delta_snapshot_adds_df(spark, path, target)
-    cols = [f.name for f in _add_spark_schema().fields]
-    staging = f"{_log_dir(path)}/.ckpt-staging-{uuid.uuid4().hex}"
-    (
-        adds_df.select(F.struct(*[F.col(c) for c in cols]).alias("add"))
-        .repartition(part_files)
-        .write.mode("overwrite")
-        .parquet(staging)
-    )
-    fs, staging_path, jvm = _hadoop_fs(spark, staging)
-    staged = sorted(
-        s.getPath().getName()
-        for s in fs.listStatus(staging_path)
-        if s.getPath().getName().endswith(".parquet")
-    )
-    n_parts = len(staged) + 1
-    n_adds = sum(_footer_num_rows(spark, f"{staging}/{s}") for s in staged)
-    # clear stale parts from any earlier (possibly aborted) rewrite of
-    # this version — mixed part sets must not pool in the listing
-    for st in fs.listStatus(jvm.org.apache.hadoop.fs.Path(_log_dir(path))):
-        m = _CKPT_PART_RE.match(st.getPath().getName())
-        if m and int(m.group(1)) == target:
-            fs.delete(st.getPath(), False)
-    for i, name in enumerate(staged, start=2):
-        dst = jvm.org.apache.hadoop.fs.Path(
-            _checkpoint_part_file(path, target, i, n_parts)
-        )
-        if not fs.rename(
-            jvm.org.apache.hadoop.fs.Path(f"{staging}/{name}"), dst
-        ):
-            raise RuntimeError(
-                f"failed to publish checkpoint part {i} at {path}"
-            )
-    fs.delete(staging_path, True)
-    buf = _io.BytesIO()
-    pq.write_table(
-        pa.Table.from_pylist(meta_rows, schema=_checkpoint_arrow_schema()),
-        buf,
-    )
-    tmp = jvm.org.apache.hadoop.fs.Path(
-        f"{_log_dir(path)}/.tmp-ckpt-{uuid.uuid4().hex}"
-    )
-    stream = fs.create(tmp, False)
-    try:
-        stream.write(buf.getvalue())
-    finally:
-        stream.close()
-    final = jvm.org.apache.hadoop.fs.Path(
-        _checkpoint_part_file(path, target, 1, n_parts)
-    )
-    if not fs.rename(tmp, final):
-        fs.delete(tmp, False)
-        raise RuntimeError(f"failed to publish checkpoint {target} at {path}")
-    pointer = jvm.org.apache.hadoop.fs.Path(
-        f"{_log_dir(path)}/_last_checkpoint"
-    )
-    stream = fs.create(pointer, True)
-    try:
-        stream.write(
-            json.dumps(
-                {
-                    "version": target,
-                    "size": n_adds + len(meta_rows),
-                    "parts": n_parts,
-                }
-            ).encode()
-        )
-    finally:
-        stream.close()
     return target
 
 
@@ -1174,12 +964,7 @@ def _read_checkpoint(
         files = files[:1]
     pieces = []
     for f in files:
-        fs, hpath, jvm = _hadoop_fs(spark, f)
-        stream = fs.open(hpath)
-        try:
-            raw = bytes(jvm.org.apache.commons.io.IOUtils.toByteArray(stream))
-        finally:
-            stream.close()
+        raw = _read_raw_bytes(spark, f)
         cols = ["protocol", "metaData", "txn"] if meta_only else None
         if cols:
             # a checkpoint legitimately omits columns for action types
@@ -1764,29 +1549,77 @@ def _file_stats_jvm(jvm, conf, jpath, stats_cols: list[str]) -> dict:
     }
 
 
-def _footer_num_rows(spark: SparkSession, uri: str) -> int:
-    """Row count from one parquet footer — pyarrow when the scheme
-    resolves, parquet-hadoop through the JVM Hadoop FS otherwise
-    (viewfs://, kerberized hdfs://). Metadata-only either way."""
-    import pyarrow.parquet as pq
+def _footer_reader(jvm, root: str, conf):
+    """Footer reader for the parquet files under ``root`` — the one
+    place that picks the route: pyarrow when it resolves the scheme,
+    else parquet-hadoop through the JVM Hadoop FS (viewfs://, kerberized
+    hdfs:// with no libhdfs). ``conf`` is a zero-argument callable
+    returning the Hadoop Configuration; only the JVM route calls it.
+    Returns ``read(rel, stats_cols, jpath=None) -> stats`` — ``jpath``
+    is the file's Hadoop Path when the caller already holds one."""
     from pyarrow import fs as pafs
 
     try:
-        pa_fs, pa_root = pafs.FileSystem.from_uri(uri)
+        pa_fs, pa_root = pafs.FileSystem.from_uri(root)
     except Exception:
-        _, jpath, jvm = _hadoop_fs(spark, uri)
-        reader = jvm.org.apache.parquet.hadoop.ParquetFileReader.open(
-            jvm.org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
-                jpath, spark._jsc.hadoopConfiguration()  # noqa: SLF001
-            )
-        )
-        try:
-            return sum(
-                b.getRowCount() for b in reader.getFooter().getBlocks()
-            )
-        finally:
-            reader.close()
-    return pq.read_metadata(pa_root, filesystem=pa_fs).num_rows
+        hconf = conf()
+
+        def read(rel, stats_cols, jpath=None):
+            if jpath is None:
+                jpath = jvm.org.apache.hadoop.fs.Path(f"{root}/{rel}")
+            return _file_stats_jvm(jvm, hconf, jpath, stats_cols)
+
+        return read
+    return lambda rel, stats_cols, jpath=None: _file_stats(
+        pa_fs, pa_root, rel, stats_cols
+    )
+
+
+def _publish_staged(
+    fs, jvm, writer, staging: str, root: str, names, stats_cols=None
+) -> list[tuple[str, int, dict | None]]:
+    """Staged-parquet publish. ``writer`` (a DataFrameWriter) writes
+    into the hidden dir ``staging``; its parquet files are listed once,
+    sorted by their path under ``staging``, and each is moved to
+    ``root/<name>``, where ``names(staged_rels)`` gives the names in the
+    same order. With ``stats_cols`` (a list, possibly empty) each
+    published file's footer stats are read. The staging dir is deleted
+    on every exit, so a failed write, move or footer read never leaves
+    it behind. Returns ``(name, size, stats)`` per file, sorted."""
+    path_cls = jvm.org.apache.hadoop.fs.Path
+    staging_path = path_cls(staging)
+    try:
+        writer.parquet(staging)
+        # URI-relativize against the FS's own qualified form:
+        # string-splitting on the caller's raw path breaks when Hadoop
+        # qualifies it differently (file:///tmp/t → file:/tmp/t,
+        # hdfs://nn/t → hdfs://nn:8020/t)
+        base_uri = fs.makeQualified(staging_path).toUri()
+        staged = []
+        it = fs.listFiles(staging_path, True)
+        while it.hasNext():
+            status = it.next()
+            src = status.getPath()
+            rel = base_uri.relativize(src.toUri()).getPath()
+            if rel.endswith(".parquet"):
+                staged.append((rel, src, int(status.getLen())))
+        staged.sort(key=lambda s: s[0])
+        dests = names([rel for rel, _, _ in staged])
+        for d in sorted({name.rpartition("/")[0] for name in dests}):
+            fs.mkdirs(path_cls(f"{root}/{d}" if d else root))
+        read = None
+        if stats_cols is not None:
+            read = _footer_reader(jvm, root, fs.getConf)
+        out = []
+        for (_, src, size), name in zip(staged, dests):
+            dest = path_cls(f"{root}/{name}")
+            if not fs.rename(src, dest):
+                raise RuntimeError(f"failed to publish {root}/{name}")
+            stats = None if read is None else read(name, stats_cols, dest)
+            out.append((name, size, stats))
+        return out
+    finally:
+        fs.delete(staging_path, True)
 
 
 def _stage_data_files(
@@ -1800,79 +1633,52 @@ def _stage_data_files(
     ``col=value/`` subdirs and each add carries its ``partitionValues``
     (partition columns live ONLY in metadata, exactly Delta's layout —
     that is what makes partition pruning a log-fold, not a file-listing)."""
-    spark = df.sparkSession
-    staging = f"{path}/.staging-{uuid.uuid4().hex}"
+    from urllib.parse import unquote
+
+    fs, _, jvm = _hadoop_fs(df.sparkSession, path)
     writer = df.write.mode("overwrite")
     if partition_by:
         writer = writer.partitionBy(*partition_by)
-    writer.parquet(staging)
-    fs, staging_path, jvm = _hadoop_fs(spark, staging)
-    adds = []
+
+    def names(staged: list[str]) -> list[str]:
+        out = []
+        for rel in staged:
+            rel_dir = rel.rpartition("/")[0]
+            unique = f"part-{uuid.uuid4().hex}.parquet"
+            out.append(f"{rel_dir}/{unique}" if rel_dir else unique)
+        return out
+
     # numRecords is recorded for EVERY file (footer-only read), matching
     # delta-spark — COUNT(*) and incremental-pipeline ledgers then fold
-    # from the log instead of rescanning data; min/max only for stats_cols.
-    # pyarrow footer reads are the fast path, but pyarrow cannot resolve
-    # JVM-only schemes (viewfs://, hdfs:// without libhdfs) — those fall
-    # back to parquet-hadoop through the Hadoop FS handle we already hold.
-    from pyarrow import fs as pafs
-
-    try:
-        pa_fs, pa_root = pafs.FileSystem.from_uri(path)
-    except Exception:
-        pa_fs = pa_root = None
-    # URI-relativize against the FS's own qualified form: string-splitting
-    # on the caller's raw path breaks when Hadoop qualifies it differently
-    # (file:///tmp/t → file:/tmp/t, hdfs://nn/t → hdfs://nn:8020/t)
-    base_uri = fs.makeQualified(staging_path).toUri()
-    it = fs.listFiles(staging_path, True)
-    while it.hasNext():
-        status = it.next()
-        name = status.getPath().getName()
-        if not name.endswith(".parquet"):
-            continue
-        rel_all = base_uri.relativize(status.getPath().toUri()).getPath()
-        rel_dir = rel_all[: -len(name)].strip("/")
+    # from the log instead of rescanning data; min/max only for stats_cols
+    published = _publish_staged(
+        fs, jvm, writer, f"{path}/.staging-{uuid.uuid4().hex}", path,
+        names, stats_cols or [],
+    )
+    adds = []
+    for rel, size, stats in published:
         part_values = {}
-        for seg in rel_dir.split("/"):
+        for seg in rel.split("/")[:-1]:
             if "=" in seg:
                 k, v = seg.split("=", 1)
                 # Spark hive-escapes dir segments (%XX) and spells null as
                 # __HIVE_DEFAULT_PARTITION__; the Delta protocol stores the
                 # UNESCAPED value (null for missing) — a real delta-spark
                 # reader reconstructs values from the log, not the dirs
-                from urllib.parse import unquote
-
                 part_values[k] = (
                     None if v == "__HIVE_DEFAULT_PARTITION__" else unquote(v)
                 )
-        unique = f"part-{uuid.uuid4().hex}.parquet"
-        rel = f"{rel_dir}/{unique}" if rel_dir else unique
-        dest = jvm.org.apache.hadoop.fs.Path(f"{path}/{rel}")
-        fs.mkdirs(dest.getParent())
-        if not fs.rename(status.getPath(), dest):
-            fs.delete(staging_path, True)
-            raise RuntimeError(f"failed to publish data file {rel}")
         add = {
             "path": rel,
             "partitionValues": part_values,
-            "size": int(status.getLen()),
+            "size": size,
             "modificationTime": int(time.time() * 1000),
             "dataChange": True,
+            # Delta stores per-file stats as a JSON *string* field;
+            # default=str keeps date/timestamp/Decimal stats serializable
+            "stats": json.dumps(stats, default=str),
         }
-        # Delta stores per-file stats as a JSON *string* field;
-        # default=str keeps date/timestamp/Decimal stats serializable
-        if pa_fs is not None:
-            stats = _file_stats(pa_fs, pa_root, rel, stats_cols or [])
-        else:
-            stats = _file_stats_jvm(
-                jvm,
-                spark._jsc.hadoopConfiguration(),  # noqa: SLF001
-                dest,
-                stats_cols or [],
-            )
-        add["stats"] = json.dumps(stats, default=str)
         adds.append({"add": add})
-    fs.delete(staging_path, True)
     return adds
 
 
@@ -2945,6 +2751,7 @@ def _rt_assign(
     if not _rt_enabled(meta):
         return None
     wm = start = int((meta.get("configuration") or {}).get(_RT_WM_KEY, "0"))
+    read = None
     for item in adds:
         add = item.get("add")
         if add is None or add.get("baseRowId") is not None:
@@ -2952,7 +2759,13 @@ def _rt_assign(
         stats = json.loads(add["stats"]) if add.get("stats") else {}
         n = stats.get("numRecords")
         if n is None:
-            n = _footer_num_rows(spark, f"{path}/{add['path']}")
+            if read is None:
+                read = _footer_reader(
+                    spark._jvm,  # noqa: SLF001
+                    path,
+                    spark._jsc.hadoopConfiguration,  # noqa: SLF001
+                )
+            n = read(add["path"], [])["numRecords"]
             stats["numRecords"] = int(n)
             add["stats"] = json.dumps(stats, default=str)
         add["baseRowId"] = wm
@@ -3314,11 +3127,8 @@ def _snapshot_crc_payload(
 def _write_crc(spark: SparkSession, path: str, version: int, payload: dict) -> None:
     fs, _, jvm = _hadoop_fs(spark, path)
     hp = jvm.org.apache.hadoop.fs.Path(_crc_file(path, version))
-    stream = fs.create(hp, True)  # crc files are overwritable by contract
-    try:
-        stream.write((json.dumps(payload) + "\n").encode())
-    finally:
-        stream.close()
+    # crc files are overwritable by contract
+    _write_bytes(fs, hp, (json.dumps(payload) + "\n").encode(), overwrite=True)
 
 
 def delta_emit_checksums(spark: SparkSession, path: str) -> int:
@@ -3471,15 +3281,7 @@ def delta_domain_metadata(
         # domain appears at most once (it holds the reconciled state),
         # so part order can't change the fold.
         for f in _checkpoint_files(spark, path, ck):
-            fs, hpath, jvm = _hadoop_fs(spark, f)
-            stream = fs.open(hpath)
-            try:
-                raw = bytes(
-                    jvm.org.apache.commons.io.IOUtils.toByteArray(stream)
-                )
-            finally:
-                stream.close()
-            buf = _io.BytesIO(raw)
+            buf = _io.BytesIO(_read_raw_bytes(spark, f))
             if "domainMetadata" not in pq.read_schema(buf).names:
                 continue
             buf.seek(0)
@@ -4540,13 +4342,12 @@ def delta_generate_manifest(spark: SparkSession, path: str) -> list[str]:
             + (f"/{subdir}" if subdir else "")
             + "/manifest"
         )
-        dest = jvm.org.apache.hadoop.fs.Path(f"{path}/{rel}")
-        fs.mkdirs(dest.getParent())
-        stream = fs.create(dest, True)  # regenerate-in-place semantics
-        try:
-            stream.write(("\n".join(sorted(uris)) + "\n").encode())
-        finally:
-            stream.close()
+        _write_bytes(
+            fs,
+            jvm.org.apache.hadoop.fs.Path(f"{path}/{rel}"),
+            ("\n".join(sorted(uris)) + "\n").encode(),
+            overwrite=True,  # regenerate-in-place semantics
+        )
         out.append(rel)
     return sorted(out)
 
@@ -5157,22 +4958,13 @@ def delta_compact_log(
     actions += [doms[d] for d in sorted(doms)]
     actions += [latest[p] for p in sorted(latest)]
     fs, _, jvm = _hadoop_fs(spark, path)
-    tmp = jvm.org.apache.hadoop.fs.Path(
-        f"{_log_dir(path)}/.tmp-{uuid.uuid4().hex}"
-    )
-    final_str = _compacted_file(path, start, end)
-    final = jvm.org.apache.hadoop.fs.Path(final_str)
+    final = _compacted_file(path, start, end)
     payload = "".join(json.dumps(a) + "\n" for a in actions).encode()
-    stream = fs.create(tmp, False)
-    try:
-        stream.write(payload)
-    finally:
-        stream.close()
-    if fs.exists(final) or not fs.rename(tmp, final):
-        # an identical compaction of the same immutable range already
-        # landed (racing maintenance job) — not a conflict
-        fs.delete(tmp, False)
-    return final_str
+    # losing the publish means an identical compaction of the same
+    # immutable range already landed (racing maintenance job) — not a
+    # conflict
+    _publish_log_file(fs, jvm, final, payload, replace=False)
+    return final
 
 
 def delta_cleanup_log(spark: SparkSession, path: str) -> list[int]:
@@ -5675,35 +5467,28 @@ def _stage_change_files(df: DataFrame, path: str) -> list[dict]:
     actions gives CDF readers an O(changes) read: they open ONLY these
     files, never the rewritten data files. Change files are written flat
     (partition values live in the rows, not the directory layout)."""
-    spark = df.sparkSession
-    staging = f"{path}/.staging-cdc-{uuid.uuid4().hex}"
-    df.write.mode("overwrite").parquet(staging)
-    fs, staging_path, jvm = _hadoop_fs(spark, staging)
-    cdcs = []
-    it = fs.listFiles(staging_path, True)
-    while it.hasNext():
-        status = it.next()
-        name = status.getPath().getName()
-        if not name.endswith(".parquet"):
-            continue
-        rel = f"_change_data/cdc-{uuid.uuid4().hex}.parquet"
-        dest = jvm.org.apache.hadoop.fs.Path(f"{path}/{rel}")
-        fs.mkdirs(dest.getParent())
-        if not fs.rename(status.getPath(), dest):
-            fs.delete(staging_path, True)
-            raise RuntimeError(f"failed to publish change file {rel}")
-        cdcs.append(
-            {
-                "cdc": {
-                    "path": rel,
-                    "partitionValues": {},
-                    "size": int(status.getLen()),
-                    "dataChange": False,
-                }
+    fs, _, jvm = _hadoop_fs(df.sparkSession, path)
+    published = _publish_staged(
+        fs,
+        jvm,
+        df.write.mode("overwrite"),
+        f"{path}/.staging-cdc-{uuid.uuid4().hex}",
+        path,
+        lambda staged: [
+            f"_change_data/cdc-{uuid.uuid4().hex}.parquet" for _ in staged
+        ],
+    )
+    return [
+        {
+            "cdc": {
+                "path": rel,
+                "partitionValues": {},
+                "size": size,
+                "dataChange": False,
             }
-        )
-    fs.delete(staging_path, True)
-    return cdcs
+        }
+        for rel, size, _ in published
+    ]
 
 
 def delta_read_cdf(
@@ -6649,11 +6434,7 @@ def _dv_mask_and_commit(
         fs, hpath, _ = _hadoop_fs(
             spark, f"{path}/deletion_vector_{u}.bin"
         )
-        stream = fs.create(hpath, False)
-        try:
-            stream.write(blob)
-        finally:
-            stream.close()
+        _write_bytes(fs, hpath, blob)
         descriptors = {
             b: {
                 "storageType": "u",

@@ -26,6 +26,7 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
+from bench import warmup
 from lakesail_hdfs_deltalake_guide_spark.registry import get_registry
 from lakesail_hdfs_deltalake_guide_spark.session import build_session
 
@@ -42,23 +43,7 @@ def main() -> None:
     reg = get_registry()
     names = args.names or [n for n, q in reg.defs.items() if "bench" in q.tags]
 
-    # bench-identical warmup (JIT + footer caches)
-    spark.range(1_000_000).selectExpr("sum(id) as s").collect()
-    warm = spark.range(100_000).selectExpr(
-        "id",
-        "md5(cast(id as string)) as h",
-        "transform(sequence(0, 15), s -> "
-        " xxhash64(concat(md5(cast(id % 977 as string)), cast(s as string)))) as sig",
-    )
-    warm.selectExpr(
-        "aggregate(sig, cast(0 as bigint), (a, x) -> a ^ x) as s", "h"
-    ).join(warm.selectExpr("h", "id as rid"), "h").write.format("noop").mode(
-        "overwrite"
-    ).save()
-    import glob
-
-    for pq in sorted(glob.glob(os.path.join(args.sf_dir, "*.parquet"))):
-        spark.read.parquet(pq).count()
+    warmup(spark, args.sf_dir)
 
     tracker = spark.sparkContext.statusTracker()
     print(f"{'query':42s} {'best_sec':>9s} {'jobs':>5s}")

@@ -7,6 +7,7 @@ import glob
 import json
 import tempfile
 
+import pytest
 from pyspark.sql import functions as F
 
 from lakesail_hdfs_deltalake_guide_spark.sources.delta_log import (
@@ -3840,3 +3841,98 @@ def test_drop_feature_truncate_at_cadence_checkpoint_version(spark):
     )
     assert v == 11
     assert delta_read(spark, path).count() == 786
+
+
+@pytest.mark.parametrize("op", ["append", "distributed", "v2"])
+def test_failed_footer_read_leaves_no_staging_dir(spark, monkeypatch, op):
+    """A footer read that raises mid-publish propagates, commits nothing
+    and leaves no staging dir behind — neither ``.staging-*`` in the
+    table dir nor ``.ckpt-staging-*`` in ``_delta_log``, which VACUUM
+    skips and log cleanup never lists, so a leak there is permanent."""
+    from lakesail_hdfs_deltalake_guide_spark.sources import delta_log as dl
+
+    p = tempfile.mkdtemp(prefix="ls_stage_leak_")
+    df = spark.range(0, 40).select(F.col("id").alias("k"))
+    dl.delta_write(df.repartition(2), p)
+    dl.delta_enable_v2_checkpoints(spark, p)
+    before = dl._list_versions(spark, p)
+
+    def boom(*_args, **_kwargs):
+        raise OSError("footer read failed")
+
+    monkeypatch.setattr(dl, "_file_stats", boom)
+    monkeypatch.setattr(dl, "_file_stats_jvm", boom)
+    with pytest.raises(OSError, match="footer read failed"):
+        if op == "append":
+            dl.delta_write(df.repartition(3), p, mode="append")
+        elif op == "distributed":
+            dl.delta_checkpoint(spark, p, distributed=True, part_files=3)
+        else:
+            dl.delta_checkpoint(spark, p, format="v2", part_files=3)
+    monkeypatch.undo()
+    left = glob.glob(f"{p}/.*staging-*") + glob.glob(
+        f"{p}/_delta_log/.*staging-*"
+    )
+    assert not left, left
+    assert dl._list_versions(spark, p) == before
+
+
+@pytest.mark.parametrize(
+    "layout",
+    [{}, {"distributed": True}, {"format": "v2"}],
+    ids=["classic", "distributed", "v2"],
+)
+def test_checkpoint_layouts_restate_the_snapshot(spark, layout):
+    """Every checkpoint layout restates the same snapshot: after the
+    checkpoint and log cleanup (so only the checkpoint is left to fold),
+    the driver fold and the domain fold equal the ones taken from the
+    JSON log (up to null DV fields), and ``_last_checkpoint.size`` is the exact number of action
+    rows across the checkpoint's files (the distributed-read gate reads
+    it)."""
+    import pyarrow.parquet as pq
+
+    from lakesail_hdfs_deltalake_guide_spark.sources import delta_log as dl
+
+    def frame(lo, hi):
+        return spark.range(lo, hi).select(
+            F.col("id").alias("k"),
+            (F.col("id") % 9).alias("v"),
+            (F.col("id") % 3).cast("string").alias("p"),
+        )
+
+    p = tempfile.mkdtemp(prefix="ls_ckpt_layout_")
+    dl.delta_write(
+        frame(0, 300).repartition(3), p, partition_by=["p"], stats_cols=["k"]
+    )
+    dl.delta_write(frame(300, 360), p, mode="append", txn=("layout_app", 5))
+    dl.delta_set_domain_metadata(spark, p, "d1", "one")
+    dl.delta_set_domain_metadata(spark, p, "d2", "two")
+    dl.delta_optimize_zorder(spark, p, ["k", "v"], target_files=2)
+    dl.delta_delete_dv(spark, p, "k % 13 = 0")
+    dl.delta_enable_v2_checkpoints(spark, p)
+    expected = dl._snapshot_state(spark, p)
+    domains = dl.delta_domain_metadata(spark, p)
+    live = expected[2]
+    assert any(a.get("deletionVector") for a in live.values())
+    assert any(a.get("tags") for a in live.values())
+    assert expected[3] == {"layout_app": 5}
+    assert domains == {"d1": "one", "d2": "two"}
+
+    def no_nulls(x):
+        # the checkpoint schema gives every DV descriptor the protocol's
+        # full field set; a JSON add leaves the null ones out
+        if isinstance(x, dict):
+            return {k: no_nulls(v) for k, v in x.items() if v is not None}
+        if isinstance(x, tuple):
+            return tuple(no_nulls(v) for v in x)
+        return x
+
+    v = dl.delta_checkpoint(spark, p, part_files=3, **layout)
+    assert dl.delta_cleanup_log(spark, p) == list(range(v))
+    assert no_nulls(dl._snapshot_state(spark, p)) == no_nulls(expected)
+    assert dl.delta_domain_metadata(spark, p) == domains
+    lc = json.loads(open(f"{p}/_delta_log/_last_checkpoint").read())
+    files = dl._checkpoint_files(spark, p, v)
+    assert len(files) == (1 if not layout else 4)
+    assert lc["version"] == v
+    assert lc["size"] == sum(pq.read_metadata(f).num_rows for f in files)

@@ -533,16 +533,23 @@ def test_curation_incremental_equals_batch(spark, sf_smoke):
     assert batch == incr3
 
 
+@pytest.mark.parametrize(
+    "pipeline, prefix",
+    [
+        ("pipeline_curation_incremental", "ls_cur_incr_"),
+        ("pipeline_incremental_dedup", "ls_dedup_state_"),
+        ("pipeline_incremental_minhash", "ls_minhash_state_"),
+    ],
+    ids=["curation", "dedup", "minhash"],
+)
 def test_curation_incremental_removes_its_temp_root(
-    spark, sf_smoke, tmp_path, monkeypatch
+    spark, sf_smoke, tmp_path, monkeypatch, pipeline, prefix
 ):
-    """The bronze and state tables live under one temp root, which the
-    query removes once the ledger rows are in Python."""
+    """The incremental pipelines keep their Delta tables under one temp
+    root, which the query removes once the ledger rows are in Python."""
     import tempfile
 
-    from lakesail_hdfs_deltalake_guide_spark.pipelines import (
-        pipeline_curation_incremental,
-    )
+    from lakesail_hdfs_deltalake_guide_spark import pipelines
 
     made = []
     mkdtemp = tempfile.mkdtemp
@@ -553,9 +560,9 @@ def test_curation_incremental_removes_its_temp_root(
 
     monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
     monkeypatch.setattr(tempfile, "mkdtemp", spy)
-    pipeline_curation_incremental(spark, sf_smoke).collect()
-    assert any("ls_cur_incr_" in p for p in made)
-    assert not list(tmp_path.glob("ls_cur_incr_*"))
+    getattr(pipelines, pipeline)(spark, sf_smoke).collect()
+    assert any(prefix in p for p in made)
+    assert not list(tmp_path.glob(f"{prefix}*"))
 
 
 def test_sq_perdim_recall_and_reconstruction(spark, sf_smoke):
