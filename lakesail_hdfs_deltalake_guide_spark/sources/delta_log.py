@@ -596,6 +596,69 @@ def _write_commit(spark: SparkSession, path: str, version: int, actions) -> None
         )
 
 
+def _commit(
+    spark: SparkSession,
+    path: str,
+    read_version: int | None,
+    actions: list[dict],
+    rebase=None,
+    max_retries: int = 3,
+) -> int:
+    """The optimistic transaction every commit of this module runs
+    (Delta's OptimisticTransaction): commit ``actions``, derived from the
+    snapshot at ``read_version``, at exactly ``read_version + 1`` —
+    version 0 when ``read_version`` is None (table creation). The
+    commitInfo records ``readVersion`` (delta-spark's field; absent on
+    creation); a retry of the same actions keeps the version they were
+    built from, re-planned actions carry their own.
+
+    A lost race (the version already exists) applies the op's conflict
+    rule. ``rebase=None`` aborts with DeltaConcurrentModification;
+    otherwise ``rebase()`` checks the winning commits and returns
+    ``(seen, actions)`` — retry ``actions`` at ``seen + 1`` — or raises
+    DeltaConcurrentModification itself. After ``max_retries`` lost races
+    the conflict propagates. A landed commit at a CHECKPOINT_INTERVAL
+    multiple gets its cadence checkpoint."""
+    version = 0 if read_version is None else read_version + 1
+    for attempt in range(max_retries + 1):
+        if not any("commitInfo" in a for a in actions):
+            actions = [_commit_info("WRITE")] + actions
+        info = next(a["commitInfo"] for a in actions if "commitInfo" in a)
+        if version > 0:
+            info.setdefault("readVersion", version - 1)
+        try:
+            _write_commit(spark, path, version, actions)
+            break
+        except RuntimeError:
+            if rebase is None:
+                raise DeltaConcurrentModification(
+                    f"a concurrent commit landed during {info['operation']} "
+                    f"on {path}; re-run against the new snapshot"
+                ) from None
+            if attempt == max_retries:
+                raise
+            seen, actions = rebase()
+            version = seen + 1
+    if version > 0 and version % CHECKPOINT_INTERVAL == 0:
+        _auto_checkpoint(spark, path, version)
+    return version
+
+
+def _removes(files, data_change: bool = True) -> list[dict]:
+    """``remove`` actions retiring ``files`` (in the given order)."""
+    now = int(time.time() * 1000)
+    return [
+        {
+            "remove": {
+                "path": f,
+                "deletionTimestamp": now,
+                "dataChange": data_change,
+            }
+        }
+        for f in files
+    ]
+
+
 def _checkpoint_arrow_schema():
     """Checkpoint parquet schema per the public Delta protocol (one action
     per row; struct columns for protocol/metaData/add) — a delta-spark
@@ -720,17 +783,16 @@ def delta_enable_v2_checkpoints(spark: SparkSession, path: str) -> int:
     it creates) are deliberately NOT claimed, so foreign writers don't
     assume enforcement that isn't there. Returns the upgrade commit's
     version."""
-    proto, meta, _, _ = _snapshot_state(spark, path)
+    read_version, proto, meta, _, _ = _snapshot_at(spark, path)
     if meta is None:
         raise ValueError(f"no delta table at {path}")
     proto = proto or dict(_PROTOCOL)
     reader = set(proto.get("readerFeatures") or [])
     writer = set(proto.get("writerFeatures") or [])
     if "v2Checkpoint" in reader and "v2Checkpoint" in writer:
-        return _list_versions(spark, path)[-1]
+        return read_version
     reader.add("v2Checkpoint")
     writer |= {"v2Checkpoint", "checkConstraints"}
-    version = _list_versions(spark, path)[-1] + 1
     actions = [
         _commit_info("UPGRADE PROTOCOL"),
         {
@@ -742,14 +804,7 @@ def delta_enable_v2_checkpoints(spark: SparkSession, path: str) -> int:
             }
         },
     ]
-    try:
-        _write_commit(spark, path, version, actions)
-    except RuntimeError:
-        raise DeltaConcurrentModification(
-            f"a concurrent commit landed during the protocol upgrade of "
-            f"{path}; re-run against the new snapshot"
-        ) from None
-    return version
+    return _commit(spark, path, read_version, actions)
 
 
 def delta_checkpoint(
@@ -1104,9 +1159,21 @@ def _snapshot_state(
     returns an empty live dict and never decodes the checkpoint's add
     column — callers pair it with :func:`delta_snapshot_adds_df` for the
     distributed fold, keeping the driver O(metadata), not O(live files)."""
+    return _snapshot_at(spark, path, version, include_adds)[1:]
+
+
+def _snapshot_at(
+    spark: SparkSession,
+    path: str,
+    version: int | None = None,
+    include_adds: bool = True,
+) -> tuple[int | None, dict | None, dict | None, dict[str, dict], dict[str, int]]:
+    """:func:`_snapshot_state` led by the version the fold resolved
+    (None when there is no table) — the read version a writer hands to
+    :func:`_commit`, so its commit lands at exactly that version + 1."""
     target, ck, start = _fold_range(spark, path, version)
     if target is None:
-        return None, None, {}, {}
+        return None, None, None, {}, {}
     proto: dict | None = None
     meta: dict | None = None
     live: dict[str, dict] = {}
@@ -1146,7 +1213,7 @@ def _snapshot_state(
                 proto = action["protocol"]
     _check_reader_version(path, proto)
     _check_type_widening(path, proto, meta)
-    return proto, meta, live, txns
+    return target, proto, meta, live, txns
 
 
 # ---------------------------------------------------------------------------
@@ -2250,34 +2317,22 @@ def _physical_scan(
     return scan.select(*cols)
 
 
-def _commit_metadata_change(
-    spark: SparkSession, path: str, mutate, max_retries: int = 3
-) -> int:
+def _commit_metadata_change(spark: SparkSession, path: str, mutate) -> int:
     """Commit a metaData-only change produced by ``mutate(meta) ->
     new_meta`` with OCC retry (re-resolving the current metaData on a
     lost race, so a racing evolution or rename is rebased, not
     clobbered)."""
-    for attempt in range(max_retries + 1):
-        _, meta, _, _ = _snapshot_state(spark, path)
+
+    def plan() -> tuple[int, list[dict]]:
+        read_version, _, meta, _, _ = _snapshot_at(spark, path)
         if meta is None:
             raise ValueError(f"no delta table at {path}")
-        new_meta = mutate(meta)
-        version = _list_versions(spark, path)[-1] + 1
-        try:
-            _write_commit(
-                spark,
-                path,
-                version,
-                [_commit_info("ALTER TABLE"), {"metaData": new_meta}],
-            )
-        except RuntimeError:
-            if attempt == max_retries:
-                raise
-            continue
-        if version % CHECKPOINT_INTERVAL == 0:
-            _auto_checkpoint(spark, path, version)
-        return version
-    raise AssertionError("unreachable")
+        return read_version, [
+            _commit_info("ALTER TABLE"),
+            {"metaData": mutate(meta)},
+        ]
+
+    return _commit(spark, path, *plan(), rebase=plan)
 
 
 def _check_column_not_referenced(meta: dict, col: str, verb: str) -> None:
@@ -2369,21 +2424,21 @@ def _plan_commit(
     identity_columns: dict | None = None,
     column_defaults: dict | None = None,
     invariants: dict | None = None,
-) -> tuple[int, list[dict], DataFrame, dict, list[str]]:
-    """One optimistic-transaction attempt: resolve the target version
-    against the CURRENT log state and build the commit's non-add actions
-    (protocol/metaData/schema-evolution/removes). Returns (version,
-    actions, conformed df in LOGICAL names, effective metaData, the
-    table's inherited min/max stats surface — PHYSICAL column names the
-    existing live adds carry, empty at creation). Re-run on every retry
-    so a lost race re-validates against the winner's committed
-    state."""
+) -> tuple[int | None, list[dict], DataFrame, dict, list[str]]:
+    """One optimistic-transaction attempt: fold the CURRENT snapshot and
+    build the commit's non-add actions from it
+    (protocol/metaData/schema-evolution/removes). Returns (read version,
+    None at creation; actions; conformed df in LOGICAL names; effective
+    metaData; the table's inherited min/max stats surface — PHYSICAL
+    column names the existing live adds carry, empty at creation).
+    Re-run on every retry so a lost race re-validates against the
+    winner's committed state."""
     from pyspark.sql.types import StructType
 
-    versions = _list_versions(spark, path)
-    version = (versions[-1] + 1) if versions else 0
+    read_version, proto, meta, live, _ = _snapshot_at(spark, path)
+    version = 0 if read_version is None else read_version + 1
     actions: list[dict] = []
-    if version == 0:
+    if read_version is None:
         conf = dict(configuration or {})
         overlap = set(column_defaults or ()) & (
             set(generated_columns or ()) | set(identity_columns or ())
@@ -2518,8 +2573,7 @@ def _plan_commit(
         # constraints/invariants supplied at creation bind the very
         # first batch (new_meta carries both configuration and schema)
         _enforce_constraints(df, new_meta)
-        return version, actions, df, new_meta, []
-    proto, meta, live, _ = _snapshot_state(spark, path)
+        return None, actions, df, new_meta, []
     # writer half of protocol gating: appending to (or overwriting) a
     # table that demands a newer writer would corrupt invariants we do
     # not implement (generated columns, identity columns, ...) — refuse.
@@ -2667,21 +2721,12 @@ def _plan_commit(
                 f"table at {path} is append-only (delta.appendOnly="
                 "true); overwrite would retract committed rows"
             )
-        for f in sorted(live):
-            actions.append(
-                {
-                    "remove": {
-                        "path": f,
-                        "deletionTimestamp": int(time.time() * 1000),
-                        "dataChange": True,
-                    }
-                }
-            )
+        actions += _removes(sorted(live))
     # writer-v3 enforcement: the batch must satisfy every table CHECK
     # constraint before any file is staged (re-runs on OCC retry, so a
     # constraint added by a racing commit is honored too)
     _enforce_constraints(df, meta)
-    return version, actions, df, meta, _live_stats_cols(live.values())
+    return read_version, actions, df, meta, _live_stats_cols(live.values())
 
 
 def delta_last_txn(spark: SparkSession, path: str, app_id: str) -> int | None:
@@ -2854,19 +2899,23 @@ def delta_write(
     skips batches it already landed — Delta's txnAppId/txnVersion
     streaming-sink mechanism."""
     spark = df.sparkSession
-    version, actions, conformed, eff_meta, inherited_stats = _plan_commit(
-        spark,
-        df,
-        path,
-        mode,
-        partition_by,
-        merge_schema,
-        configuration,
-        generated_columns,
-        identity_columns,
-        column_defaults,
-        invariants,
-    )
+
+    def plan():
+        return _plan_commit(
+            spark,
+            df,
+            path,
+            mode,
+            partition_by,
+            merge_schema,
+            configuration,
+            generated_columns,
+            identity_columns,
+            column_defaults,
+            invariants,
+        )
+
+    read_version, actions, conformed, eff_meta, inherited_stats = plan()
     if partition_by is None and eff_meta.get("partitionColumns"):
         # _plan_commit inherited the existing table's layout; staging
         # and retry re-plans must use the same effective spec
@@ -2913,50 +2962,29 @@ def delta_write(
     # wins the fold (it is built from eff_meta, so nothing is lost)
     rt_action = _rt_assign(spark, path, eff_meta, adds)
     rt_actions = [rt_action] if rt_action else []
-    for attempt in range(max_retries + 1):
-        try:
-            _write_commit(
-                spark, path, version, txn_action + actions + rt_actions + adds
-            )
-            break
-        except RuntimeError:
-            if attempt == max_retries:
-                raise
-            if version == 0:
-                # table-creation race: the staged files were written
-                # under THIS writer's metaData (its column-mapping
-                # physical names, its generated/identity specs) — they
-                # are not valid under the winner's table; re-running
-                # re-stages against the committed state
-                raise DeltaConcurrentModification(
-                    f"table creation race at {path}: another writer "
-                    "created the table first; re-run the write"
-                ) from None
-            if _identity_columns(eff_meta) or rt_action is not None:
-                # the staged files hold ids (identity values / row-id
-                # ranges) allocated under the LOST snapshot's watermark;
-                # a racing allocating write may have claimed them —
-                # blind retry would mint duplicates
-                raise DeltaConcurrentModification(
-                    f"id-allocating write to {path} lost the commit "
-                    "race; re-run to allocate above the winner's "
-                    "watermark"
-                ) from None
-            version, actions, _, _, _ = _plan_commit(
-                spark,
-                df,
-                path,
-                mode,
-                partition_by,
-                merge_schema,
-                configuration,
-                generated_columns,
-                identity_columns,
-                column_defaults,
-                invariants,
-            )
-    if version > 0 and version % CHECKPOINT_INTERVAL == 0:
-        _auto_checkpoint(spark, path, version)
+
+    def replan() -> tuple[int, list[dict]]:
+        seen, replanned, _, _, _ = plan()
+        return seen, txn_action + replanned + rt_actions + adds
+
+    version = _commit(
+        spark,
+        path,
+        read_version,
+        txn_action + actions + rt_actions + adds,
+        # a creation commit's staged files were written under THIS
+        # writer's metaData (its column-mapping physical names, its
+        # generated/identity specs) and are not valid under the winner's
+        # table; staged identity values / row-id ranges were allocated
+        # under the LOST snapshot's watermark, which a racing allocating
+        # write may have claimed — these abort for the caller to re-run
+        rebase=None
+        if read_version is None
+        or _identity_columns(eff_meta)
+        or rt_action is not None
+        else replan,
+        max_retries=max_retries,
+    )
     _post_commit_auto_compact(spark, path, eff_meta)
     return version
 
@@ -3054,9 +3082,11 @@ def _version_at_timestamp(spark: SparkSession, path: str, ts: int) -> int:
 
 
 def delta_history(spark: SparkSession, path: str) -> list[dict]:
-    """DESCRIBE HISTORY: newest-first [(version, timestamp, operation)]
-    from each retained commit's commitInfo (cleaned commits are absent —
-    history follows log retention, exactly delta-spark's behavior)."""
+    """DESCRIBE HISTORY: newest-first [(version, timestamp, operation,
+    readVersion)] from each retained commit's commitInfo (cleaned commits
+    are absent — history follows log retention, exactly delta-spark's
+    behavior). ``readVersion`` is the snapshot the commit acted on (None
+    for table creation and for commits that did not record it)."""
     versions = _list_versions(spark, path)
     if not versions:
         raise ValueError(f"no delta table at {path}")
@@ -3074,6 +3104,7 @@ def delta_history(spark: SparkSession, path: str) -> list[dict]:
                 "version": v,
                 "timestamp": info.get("timestamp"),
                 "operation": info.get("operation"),
+                "readVersion": info.get("readVersion"),
             }
         )
     return out
@@ -3319,13 +3350,14 @@ def delta_enable_in_commit_timestamps(spark: SparkSession, path: str) -> int:
     from here on); this engine's monotonicity guarantee
     (``max(now, prev+1)``) already satisfies the feature's ordering
     requirement. Returns the enablement commit version; idempotent."""
-    proto, meta, _, _ = _snapshot_state(spark, path, include_adds=False)
+    read_version, proto, meta, _, _ = _snapshot_at(
+        spark, path, include_adds=False
+    )
     if meta is None:
         raise ValueError(f"no delta table at {path}")
     wf = set((proto or {}).get("writerFeatures") or ())
     if _ICT_FEATURE in wf:
-        return _list_versions(spark, path)[-1]
-    version = _list_versions(spark, path)[-1] + 1
+        return read_version
     rf = set((proto or {}).get("readerFeatures") or ())
     new_proto = {
         "minReaderVersion": int(
@@ -3338,30 +3370,29 @@ def delta_enable_in_commit_timestamps(spark: SparkSession, path: str) -> int:
         new_proto["readerFeatures"] = sorted(rf)
     conf = dict(meta.get("configuration") or {})
     conf["delta.enableInCommitTimestamps"] = "true"
-    conf["delta.inCommitTimestampEnablementVersion"] = str(version)
+    conf["delta.inCommitTimestampEnablementVersion"] = str(read_version + 1)
     actions = [
         _commit_info("UPGRADE PROTOCOL"),
         {"protocol": new_proto},
         {"metaData": {**meta, "configuration": conf}},
     ]
-    try:
-        _write_commit(spark, path, version, actions)
-    except RuntimeError:
-        raise DeltaConcurrentModification(
-            f"a concurrent commit landed during the ICT enablement of "
-            f"{path}; re-run against the new snapshot"
-        ) from None
-    return version
+    return _commit(spark, path, read_version, actions)
 
 
 def _commit_domain_action(
     spark: SparkSession, path: str, dm: dict, op: str
 ) -> int:
-    proto, meta, _, _ = _snapshot_state(
+    read_version, proto, meta, _, _ = _snapshot_at(
         spark, path, include_adds=False
     )
     if meta is None:
         raise ValueError(f"no delta table at {path}")
+    # removing an absent domain is refused loudly — a silent no-op here
+    # would hide a caller racing its own earlier removal
+    if dm["removed"] and dm["domain"] not in delta_domain_metadata(
+        spark, path, read_version
+    ):
+        raise ValueError(f"domain {dm['domain']!r} not present at {path}")
     actions: list[dict] = [_commit_info(op)]
     wf = set((proto or {}).get("writerFeatures") or ())
     if _DOMAIN_FEATURE not in wf:
@@ -3379,17 +3410,7 @@ def _commit_domain_action(
             new_proto["readerFeatures"] = sorted(rf)
         actions.append({"protocol": new_proto})
     actions.append({"domainMetadata": dm})
-    version = _list_versions(spark, path)[-1] + 1
-    try:
-        _write_commit(spark, path, version, actions)
-    except RuntimeError:
-        raise DeltaConcurrentModification(
-            f"a concurrent commit landed during {op} on {path}; "
-            "re-run against the new snapshot"
-        ) from None
-    if version % CHECKPOINT_INTERVAL == 0:
-        _auto_checkpoint(spark, path, version)
-    return version
+    return _commit(spark, path, read_version, actions)
 
 
 def delta_set_domain_metadata(
@@ -3413,15 +3434,12 @@ def delta_remove_domain_metadata(
 ) -> int:
     """REMOVE a metadata domain: commits a removed=true tombstone (the
     reconciliation artifact later folds retract on). Removing an absent
-    domain is refused loudly — a silent no-op here would hide a caller
-    racing its own earlier removal."""
+    domain is refused."""
     if domain.startswith(_SYSTEM_DOMAIN_PREFIX):
         raise ValueError(
             f"domain {domain!r} is system-controlled "
             f"({_SYSTEM_DOMAIN_PREFIX}* is reserved for table features)"
         )
-    if domain not in delta_domain_metadata(spark, path):
-        raise ValueError(f"domain {domain!r} not present at {path}")
     dm = {"domain": domain, "configuration": None, "removed": True}
     return _commit_domain_action(spark, path, dm, "REMOVE DOMAIN METADATA")
 
@@ -3654,14 +3672,12 @@ def delta_optimize(
     tables keep their hive layout and partitionValues through the
     rewrite (a compaction that drops them silently breaks every later
     partition-pruned read)."""
-    versions = _list_versions(spark, path)
-    if not versions:
-        raise ValueError(f"no delta table at {path}")
-    # pin ONE snapshot for both the rewrite source and the remove list —
+    # ONE snapshot for both the rewrite source and the remove list —
     # resolving them at different times would let a concurrent append's
     # file land in the removes without its rows in the rewrite
-    snap = versions[-1]
-    _, meta, live, _ = _snapshot_state(spark, path, snap)
+    snap, _, meta, live, _ = _snapshot_at(spark, path)
+    if snap is None:
+        raise ValueError(f"no delta table at {path}")
     part_cols = meta.get("partitionColumns") or None
     if where is not None and partition_filter:
         raise ValueError(
@@ -3696,18 +3712,7 @@ def delta_optimize(
         spark, path, meta, live, sorted(scope), with_row_ids=rt
     )
     compacted = current.coalesce(target_files)
-    version = snap + 1
-    actions: list[dict] = [_commit_info("OPTIMIZE")]
-    for f in sorted(scope):
-        actions.append(
-            {
-                "remove": {
-                    "path": f,
-                    "deletionTimestamp": int(time.time() * 1000),
-                    "dataChange": False,
-                }
-            }
-        )
+    actions = [_commit_info("OPTIMIZE")] + _removes(sorted(scope), False)
     adds = _stage_data_files(
         _to_physical(compacted, meta),
         path,
@@ -3719,17 +3724,7 @@ def delta_optimize(
     rt_action = _rt_assign(spark, path, meta, adds)
     if rt_action is not None:
         actions.append(rt_action)
-    actions.extend(adds)
-    try:
-        _write_commit(spark, path, version, actions)
-    except RuntimeError:
-        raise DeltaConcurrentModification(
-            f"a concurrent commit landed during OPTIMIZE of {path}; "
-            "re-run against the new snapshot"
-        ) from None
-    if version % CHECKPOINT_INTERVAL == 0:
-        _auto_checkpoint(spark, path, version)
-    return version
+    return _commit(spark, path, snap, actions + adds)
 
 
 _OPT_WRITE_KEY = "delta.autoOptimize.optimizeWrite"
@@ -3754,10 +3749,9 @@ def delta_optimize_small(
     keep stable ids. Returns the committed version, or None when below
     the threshold (no commit — the no-op must be free, it runs after
     every write)."""
-    versions = _list_versions(spark, path)
-    if not versions:
+    snap, _, meta, live, _ = _snapshot_at(spark, path)
+    if snap is None:
         raise ValueError(f"no delta table at {path}")
-    _, meta, live, _ = _snapshot_state(spark, path, versions[-1])
     small = sorted(
         f
         for f, a in live.items()
@@ -3786,6 +3780,7 @@ def delta_optimize_small(
     return _commit_rewrite(
         spark,
         path,
+        snap,
         small,
         adds,
         extra_actions=[_commit_info("auto-OPTIMIZE")]
@@ -3870,8 +3865,7 @@ def delta_clone(
             }
         add["dataChange"] = True
         actions.append({"add": add})
-    _write_commit(spark, dst, 0, actions)
-    return 0
+    return _commit(spark, dst, None, actions)
 
 
 def delta_deep_clone(
@@ -4002,8 +3996,7 @@ def delta_deep_clone(
                 }
         add["dataChange"] = True
         actions.append({"add": add})
-    _write_commit(spark, dst, 0, actions)
-    return 0
+    return _commit(spark, dst, None, actions)
 
 
 def delta_optimize_zorder(
@@ -4069,11 +4062,9 @@ def delta_optimize_zorder(
         )
     if bits is None:
         bits = min(16, 62 // len(cols))
-    versions0 = _list_versions(spark, path)
-    if not versions0:
+    snap, _, meta, live, _ = _snapshot_at(spark, path)
+    if snap is None:
         raise ValueError(f"no delta table at {path}")
-    snap = versions0[-1]
-    _, meta, live, _ = _snapshot_state(spark, path, snap)
     zcube_spec = (
         json.dumps(list(cols))
         if curve == "morton"
@@ -4133,22 +4124,11 @@ def delta_optimize_zorder(
         .sortWithinPartitions("__z")
         .drop("__z")
     )
-    version = snap + 1
-    actions: list[dict] = [
+    actions = [
         _commit_info(
             "OPTIMIZE ZORDER" if curve == "morton" else "OPTIMIZE HILBERT"
         )
-    ]
-    for f in sorted(rewrite):
-        actions.append(
-            {
-                "remove": {
-                    "path": f,
-                    "deletionTimestamp": int(time.time() * 1000),
-                    "dataChange": False,
-                }
-            }
-        )
+    ] + _removes(sorted(rewrite), False)
     pm = {l: p for p, l in _cm_pairs(meta)}
     adds = _stage_data_files(
         _to_physical(clustered, meta),
@@ -4168,17 +4148,7 @@ def delta_optimize_zorder(
     rt_action = _rt_assign(spark, path, meta, adds)
     if rt_action is not None:
         actions.append(rt_action)
-    actions.extend(adds)
-    try:
-        _write_commit(spark, path, version, actions)
-    except RuntimeError:
-        raise DeltaConcurrentModification(
-            f"a concurrent commit landed during OPTIMIZE ZORDER of "
-            f"{path}; re-run against the new snapshot"
-        ) from None
-    if version % CHECKPOINT_INTERVAL == 0:
-        _auto_checkpoint(spark, path, version)
-    return version
+    return _commit(spark, path, snap, actions + adds)
 
 
 # --- Liquid-clustering-style CLUSTER BY -------------------------------------
@@ -4218,7 +4188,7 @@ def delta_cluster_by(
     until the next maintenance OPTIMIZE. Hive-partitioned tables are
     refused (clustering and directory partitioning are mutually
     exclusive, as in delta-spark)."""
-    proto, meta, _, _ = _snapshot_state(spark, path)
+    read_version, proto, meta, _, _ = _snapshot_at(spark, path)
     if meta is None:
         raise ValueError(f"no delta table at {path}")
     if cols:
@@ -4256,17 +4226,7 @@ def delta_cluster_by(
             new_proto["readerFeatures"] = sorted(rf)
         actions.append({"protocol": new_proto})
     actions.append({"metaData": {**meta, "configuration": conf}})
-    version = _list_versions(spark, path)[-1] + 1
-    try:
-        _write_commit(spark, path, version, actions)
-    except RuntimeError:
-        raise DeltaConcurrentModification(
-            f"a concurrent commit landed during CLUSTER BY on {path}; "
-            "re-run against the new snapshot"
-        ) from None
-    if version % CHECKPOINT_INTERVAL == 0:
-        _auto_checkpoint(spark, path, version)
-    return version
+    return _commit(spark, path, read_version, actions)
 
 
 def delta_optimize_clustered(
@@ -5065,8 +5025,7 @@ def delta_restore(
     _, meta_t, live_t, _ = _snapshot_state(spark, path, version)
     if meta_t is None:
         raise ValueError(f"no delta snapshot at version {version} of {path}")
-    _, meta_c, live_c, _ = _snapshot_state(spark, path)
-    new_version = _list_versions(spark, path)[-1] + 1
+    read_version, _, meta_c, live_c, _ = _snapshot_at(spark, path)
     fs, _, jvm = _hadoop_fs(spark, path)
     # an add must be (re-)committed when its path is not live OR its
     # action differs (a deletion-vector delete re-adds the same path;
@@ -5100,23 +5059,16 @@ def delta_restore(
     actions: list[dict] = [_commit_info("RESTORE")]
     if meta_c != meta_t:
         actions.append({"metaData": meta_t})
-    now = int(time.time() * 1000)
     retract = sorted(set(live_c) - set(live_t))
     if retract and _append_only(meta_c):
         raise ValueError(
             f"table at {path} is append-only (delta.appendOnly=true); "
             "RESTORE would retract committed rows"
         )
-    for f in retract:
-        actions.append(
-            {"remove": {"path": f, "deletionTimestamp": now, "dataChange": True}}
-        )
+    actions += _removes(retract)
     for f in readd:
         actions.append({"add": {**live_t[f], "dataChange": True}})
-    _write_commit(spark, path, new_version, actions)
-    if new_version % CHECKPOINT_INTERVAL == 0:
-        _auto_checkpoint(spark, path, new_version)
-    return new_version
+    return _commit(spark, path, read_version, actions)
 
 
 # ---------------------------------------------------------------------------
@@ -5146,15 +5098,16 @@ class DeltaConcurrentModification(RuntimeError):
 
 def _snapshot_scan_with_file(
     spark: SparkSession, path: str
-) -> tuple[DataFrame, dict[str, str], dict, dict[str, dict]]:
-    """Latest-snapshot scan carrying ``__ls_file`` (the add-action's
-    relative path for each row) + (basename→rel map, metaData, live).
+) -> tuple[int, DataFrame, dict[str, str], dict, dict[str, dict]]:
+    """(read version, latest-snapshot scan carrying ``__ls_file`` (the
+    add-action's relative path for each row), basename→rel map,
+    metaData, live).
     The per-row file identity is Spark's ``_metadata.file_path`` hidden
     column — evaluated scan-side, no shuffle, no UDF; we reduce it to
     the unique basename (data files are ``part-{uuid}.parquet``) so the
     mapping back to log-relative paths is a tiny broadcast-free
     driver-side dict lookup applied only to the DISTINCT affected set."""
-    _, meta, live, _ = _snapshot_state(spark, path)
+    read_version, _, meta, live, _ = _snapshot_at(spark, path)
     if meta is None:
         raise ValueError(f"no delta table at {path}")
     base_map = {f.rsplit("/", 1)[-1]: f for f in live}
@@ -5162,7 +5115,7 @@ def _snapshot_scan_with_file(
         empty = spark.createDataFrame([], _logical_schema(meta)).withColumn(
             "__ls_file", F.lit(None).cast("string")
         )
-        return empty, base_map, meta, live
+        return read_version, empty, base_map, meta, live
     scan = _physical_scan(spark, path, meta, sorted(live), with_position=True)
     # rows a deletion vector masks are logically gone: DML predicates
     # must never see (or resurrect) them
@@ -5171,7 +5124,7 @@ def _snapshot_scan_with_file(
         *[l for _, l in _cm_pairs(meta)],
         F.col("__dv_file").alias("__ls_file"),
     )
-    return scan, base_map, meta, live
+    return read_version, scan, base_map, meta, live
 
 
 def _read_affected_files(
@@ -5216,22 +5169,23 @@ def _coerce_predicate(predicate) -> "F.Column":
 def _commit_rewrite(
     spark: SparkSession,
     path: str,
+    read_version: int,
     affected: list[str],
     adds: list[dict],
     extra_actions: list[dict] | None = None,
-    max_retries: int = 3,
     expected: dict[str, dict] | None = None,
     identity_guard: bool = False,
     meta: dict | None = None,
     layout_only: bool = False,
 ) -> int:
     """Publish a copy-on-write commit (removes for ``affected`` + staged
-    ``adds``). On a lost OCC race the removes are re-validated against
-    the winner's snapshot: if every affected file is still live the
-    commit retries at the next version (the staged files are reused
-    verbatim, Delta's OptimisticTransaction behavior); if any was
-    removed/rewritten, raises DeltaConcurrentModification — committing
-    would apply the DML to rows that no longer exist.
+    ``adds``) derived from the snapshot at ``read_version``. On a lost
+    OCC race the removes are re-validated against the winner's snapshot:
+    if every affected file is still live the commit retries at the next
+    version (the staged files are reused verbatim, Delta's
+    OptimisticTransaction behavior); if any was removed/rewritten,
+    raises DeltaConcurrentModification — committing would apply the DML
+    to rows that no longer exist.
 
     ``expected`` ({file: add-action snapshot}) tightens the re-validation
     from path-liveness to action-equality. Copy-on-write DML doesn't need
@@ -5239,6 +5193,11 @@ def _commit_rewrite(
     deletion-vector update RE-ADDS the same path — a racing DV commit
     leaves the file live while changing its descriptor, and committing
     over it would silently drop the winner's deletions.
+
+    ``identity_guard`` marks staged files holding allocated ids (identity
+    values / row-id ranges) minted under the read snapshot's watermark:
+    a lost race aborts, since retrying could duplicate ids the winner
+    already claimed.
 
     ``layout_only`` marks a rewrite whose SNAPSHOT rows are unchanged
     (REORG PURGE): removes are stamped ``dataChange: false`` so
@@ -5249,58 +5208,41 @@ def _commit_rewrite(
             f"table at {path} is append-only (delta.appendOnly=true); "
             "this operation would remove or rewrite committed rows"
         )
-    now = int(time.time() * 1000)
-    removes = [
-        {
-            "remove": {
-                "path": f,
-                "deletionTimestamp": now,
-                "dataChange": not layout_only,
-            }
-        }
-        for f in sorted(affected)
-    ]
-    actions = (extra_actions or []) + removes + adds
-    version = _list_versions(spark, path)[-1] + 1
-    for attempt in range(max_retries + 1):
-        try:
-            _write_commit(spark, path, version, actions)
-            break
-        except RuntimeError:
-            if identity_guard:
-                # the staged files hold allocated ids (identity values /
-                # row-id ranges) minted under the lost snapshot's
-                # watermark — retrying could duplicate ids the winner
-                # already claimed
+    actions = (
+        (extra_actions or [])
+        + _removes(sorted(affected), not layout_only)
+        + adds
+    )
+
+    def revalidate() -> tuple[int, list[dict]]:
+        seen, _, _, live_now, _ = _snapshot_at(spark, path)
+        gone = [f for f in affected if f not in live_now]
+        if gone:
+            raise DeltaConcurrentModification(
+                f"files read by this DML were removed by a concurrent "
+                f"commit to {path}: {gone[:3]}"
+            )
+        if expected is not None:
+            changed = [
+                f
+                for f in affected
+                if f in expected and live_now[f] != expected[f]
+            ]
+            if changed:
                 raise DeltaConcurrentModification(
-                    f"id-allocating commit to {path} lost the race; "
-                    "re-run to allocate above the winner's watermark"
-                ) from None
-            if attempt == max_retries:
-                raise
-            _, _, live_now, _ = _snapshot_state(spark, path)
-            gone = [f for f in affected if f not in live_now]
-            if gone:
-                raise DeltaConcurrentModification(
-                    f"files read by this DML were removed by a concurrent "
-                    f"commit to {path}: {gone[:3]}"
-                ) from None
-            if expected is not None:
-                changed = [
-                    f
-                    for f in affected
-                    if f in expected and live_now[f] != expected[f]
-                ]
-                if changed:
-                    raise DeltaConcurrentModification(
-                        f"files read by this DML were modified (e.g. a "
-                        f"deletion-vector update) by a concurrent commit "
-                        f"to {path}: {changed[:3]}"
-                    ) from None
-            version = _list_versions(spark, path)[-1] + 1
-    if version % CHECKPOINT_INTERVAL == 0:
-        _auto_checkpoint(spark, path, version)
-    return version
+                    f"files read by this DML were modified (e.g. a "
+                    f"deletion-vector update) by a concurrent commit "
+                    f"to {path}: {changed[:3]}"
+                )
+        return seen, actions
+
+    return _commit(
+        spark,
+        path,
+        read_version,
+        actions,
+        rebase=None if identity_guard else revalidate,
+    )
 
 
 # ---------------------------------------------------------------------------
@@ -5395,10 +5337,10 @@ def delta_add_constraint(
     writers must enforce checks. Our own writer gate accepts 3 because
     this module enforces them; foreign writers that don't will refuse
     the table, which is the protocol working as designed."""
-    proto, meta, _, _ = _snapshot_state(spark, path)
+    read_version, proto, meta, _, _ = _snapshot_at(spark, path)
     if meta is None:
         raise ValueError(f"no delta table at {path}")
-    current = delta_read(spark, path)
+    current = delta_read(spark, path, version=read_version)
     _enforce_constraints(
         current,
         {"configuration": {_CONSTRAINT_PREFIX + name: expr}},
@@ -5408,7 +5350,6 @@ def delta_add_constraint(
         **meta.get("configuration", {}),
         _CONSTRAINT_PREFIX + name: expr,
     }
-    version = _list_versions(spark, path)[-1] + 1
     actions: list[dict] = []
     if int((proto or _PROTOCOL).get("minWriterVersion", 2)) < 3:
         actions.append(
@@ -5422,15 +5363,12 @@ def delta_add_constraint(
             }
         )
     actions.append({"metaData": new_meta})
-    _write_commit(spark, path, version, actions)
-    if version % CHECKPOINT_INTERVAL == 0:
-        _auto_checkpoint(spark, path, version)
-    return version
+    return _commit(spark, path, read_version, actions)
 
 
 def delta_drop_constraint(spark: SparkSession, path: str, name: str) -> int:
     """ALTER TABLE DROP CONSTRAINT: metaData update removing the key."""
-    _, meta, _, _ = _snapshot_state(spark, path)
+    read_version, _, meta, _, _ = _snapshot_at(spark, path)
     if meta is None:
         raise ValueError(f"no delta table at {path}")
     key = _CONSTRAINT_PREFIX + name
@@ -5440,11 +5378,7 @@ def delta_drop_constraint(spark: SparkSession, path: str, name: str) -> int:
     new_meta["configuration"] = {
         k: v for k, v in meta["configuration"].items() if k != key
     }
-    version = _list_versions(spark, path)[-1] + 1
-    _write_commit(spark, path, version, [{"metaData": new_meta}])
-    if version % CHECKPOINT_INTERVAL == 0:
-        _auto_checkpoint(spark, path, version)
-    return version
+    return _commit(spark, path, read_version, [{"metaData": new_meta}])
 
 
 def _cdf_enabled(meta: dict | None) -> bool:
@@ -5593,13 +5527,15 @@ def delta_delete(spark: SparkSession, path: str, predicate) -> int:
     all match simply gets a remove. Files without matches are untouched.
     Returns the committed version (current version if nothing matched)."""
     pred = _coerce_predicate(predicate)
-    scan, base_map, meta, _live = _snapshot_scan_with_file(spark, path)
+    read_version, scan, base_map, meta, _live = _snapshot_scan_with_file(
+        spark, path
+    )
     hit_names = [
         r[0]
         for r in scan.where(pred).select("__ls_file").distinct().collect()
     ]
     if not hit_names:
-        return _list_versions(spark, path)[-1]
+        return read_version
     affected = [base_map[b] for b in hit_names]
     rt = _rt_enabled(meta)
     sub = _read_affected_files(
@@ -5628,6 +5564,7 @@ def delta_delete(spark: SparkSession, path: str, predicate) -> int:
     return _commit_rewrite(
         spark,
         path,
+        read_version,
         affected,
         adds,
         extra_actions=[_commit_info("DELETE")]
@@ -5675,7 +5612,9 @@ def delta_replace_where(
     nothing — pure remove + append, the classic backfill fast path.
     """
     pred = _coerce_predicate(predicate)
-    scan, base_map, meta, _live = _snapshot_scan_with_file(spark, path)
+    read_version, scan, base_map, meta, _live = _snapshot_scan_with_file(
+        spark, path
+    )
     from pyspark.sql.types import StructType
 
     schema = StructType.fromJson(json.loads(meta["schemaString"]))
@@ -5774,6 +5713,7 @@ def delta_replace_where(
     return _commit_rewrite(
         spark,
         path,
+        read_version,
         affected,
         adds,
         # id_action first: rt_action was built from the id-advanced
@@ -5804,7 +5744,9 @@ def delta_update(
         col: (F.expr(e) if isinstance(e, str) else e)
         for col, e in assignments.items()
     }
-    scan, base_map, meta, _live = _snapshot_scan_with_file(spark, path)
+    read_version, scan, base_map, meta, _live = _snapshot_scan_with_file(
+        spark, path
+    )
     unknown = set(exprs) - {c for c in scan.columns if c != "__ls_file"}
     if unknown:
         raise ValueError(f"UPDATE of unknown columns: {sorted(unknown)}")
@@ -5825,7 +5767,7 @@ def delta_update(
         for r in scan.where(pred).select("__ls_file").distinct().collect()
     ]
     if not hit_names:
-        return _list_versions(spark, path)[-1]
+        return read_version
     affected = [base_map[b] for b in hit_names]
     from pyspark.sql.types import StructType
 
@@ -5881,6 +5823,7 @@ def delta_update(
     return _commit_rewrite(
         spark,
         path,
+        read_version,
         affected,
         adds,
         extra_actions=[_commit_info("UPDATE")]
@@ -5967,7 +5910,9 @@ def delta_merge(
             "MERGE source has duplicate rows per key — each target row "
             "must match at most one source row"
         )
-    scan, base_map, meta, _live = _snapshot_scan_with_file(spark, path)
+    read_version, scan, base_map, meta, _live = _snapshot_scan_with_file(
+        spark, path
+    )
     from pyspark.sql.types import StructType
 
     schema = StructType.fromJson(json.loads(meta["schemaString"]))
@@ -6131,7 +6076,7 @@ def delta_merge(
             inserts = inserts.select(*tcols, *([_RT_COL] if rt else []))
         pieces.append(inserts)
     if not pieces:
-        return _list_versions(spark, path)[-1]
+        return read_version
     out = pieces[0]
     for p in pieces[1:]:
         out = out.unionByName(p)
@@ -6185,6 +6130,7 @@ def delta_merge(
     return _commit_rewrite(
         spark,
         path,
+        read_version,
         affected,
         adds,
         # rt_action is built from the id_action-advanced meta, so
@@ -6330,6 +6276,7 @@ def _dv_protocol_upgrade(proto: dict | None) -> dict | None:
 def _dv_mask_and_commit(
     spark: SparkSession,
     path: str,
+    read_version: int,
     proto: dict | None,
     meta: dict,
     live: dict[str, dict],
@@ -6358,7 +6305,6 @@ def _dv_mask_and_commit(
     encode collects the merged positions driver-side (O(deleted rows),
     the same bound as the foreign decode path); tables with huge delete
     masses should keep the native layout or OPTIMIZE the DVs away."""
-    versions = _list_versions(spark, path)
     # materialize the hit positions once (executor-local): the affected-
     # file listing, the DV merge, the cardinality agg and the DV write
     # all consume them, and the snapshot scan must run exactly once
@@ -6369,7 +6315,7 @@ def _dv_mask_and_commit(
         r["file"] for r in new_rows.select("file").distinct().collect()
     ]
     if not hit_files:
-        return versions[-1]
+        return read_version
     # merge with the affected files' existing DV rows (restricted to the
     # exact live (unit, file) descriptor pairs, as in _dv_anti_filter)
     prior = [
@@ -6490,6 +6436,7 @@ def _dv_mask_and_commit(
     return _commit_rewrite(
         spark,
         path,
+        read_version,
         sorted(affected),
         adds_out + list(extra_adds or []),
         extra_actions=extra,
@@ -6523,11 +6470,11 @@ def delta_delete_dv(
     scan), checkpoints (descriptor round-trips through the checkpoint
     schema), RESTORE, and OPTIMIZE (materializes DVs away)."""
     pred = _coerce_predicate(predicate)
-    proto, meta, live, _ = _snapshot_state(spark, path)
+    read_version, proto, meta, live, _ = _snapshot_at(spark, path)
     if meta is None:
         raise ValueError(f"no delta table at {path}")
     if not live:
-        return _list_versions(spark, path)[-1]
+        return read_version
     base_map = {f.rsplit("/", 1)[-1]: f for f in live}
     scan = _physical_scan(spark, path, meta, sorted(live), with_position=True)
     scan = _dv_anti_filter(spark, path, scan, list(live.items()))
@@ -6538,7 +6485,8 @@ def delta_delete_dv(
             "_change_type", F.lit("delete")
         )
     return _dv_mask_and_commit(
-        spark, path, proto, meta, live, base_map, hits, "DELETE",
+        spark, path, read_version, proto, meta, live, base_map, hits,
+        "DELETE",
         cdf_df=cdf_df, wire_format=wire_format,
     )
 
@@ -6563,11 +6511,11 @@ def delta_update_dv(
         col: (F.expr(e) if isinstance(e, str) else e)
         for col, e in assignments.items()
     }
-    proto, meta, live, _ = _snapshot_state(spark, path)
+    read_version, proto, meta, live, _ = _snapshot_at(spark, path)
     if meta is None:
         raise ValueError(f"no delta table at {path}")
     if not live:
-        return _list_versions(spark, path)[-1]
+        return read_version
     logical = _logical_schema(meta)
     unknown = set(exprs) - {f.name for f in logical.fields}
     if unknown:
@@ -6625,7 +6573,8 @@ def delta_update_dv(
         )
         cdf_df = pre.unionByName(post)
     return _dv_mask_and_commit(
-        spark, path, proto, meta, live, base_map, hits, "UPDATE",
+        spark, path, read_version, proto, meta, live, base_map, hits,
+        "UPDATE",
         extra_adds=extra_adds, cdf_df=cdf_df,
         extra_actions=[rt_action] if rt_action else None,
         guard=rt_action is not None, wire_format=wire_format,
@@ -6648,14 +6597,12 @@ def delta_reorg_purge(spark: SparkSession, path: str) -> int:
     the rewrite (materialized into the replacement files, same as
     OPTIMIZE). Returns the committed version (current version when no
     live file carries a DV — a no-op writes no commit)."""
-    versions = _list_versions(spark, path)
-    if not versions:
+    read_version, _, meta, live, _ = _snapshot_at(spark, path)
+    if read_version is None:
         raise ValueError(f"no delta table at {path}")
-    snap = versions[-1]
-    _, meta, live, _ = _snapshot_state(spark, path, snap)
     affected = sorted(f for f, a in live.items() if a.get("deletionVector"))
     if not affected:
-        return snap
+        return read_version
     rt = _rt_enabled(meta)
     survivors = _read_affected_files(
         spark, path, meta, live, affected, with_row_ids=rt
@@ -6672,6 +6619,7 @@ def delta_reorg_purge(spark: SparkSession, path: str) -> int:
     return _commit_rewrite(
         spark,
         path,
+        read_version,
         affected,
         adds,
         extra_actions=[_commit_info("REORG PURGE")]
@@ -6727,7 +6675,7 @@ def delta_drop_feature(
     any constraint / generation expression / identity spec still in the
     schema. The feature-enabling configuration key (e.g.
     ``delta.enableTypeWidening``) is cleared in the same commit."""
-    proto, meta, live, _ = _snapshot_state(spark, path)
+    read_version, proto, meta, live, _ = _snapshot_at(spark, path)
     if meta is None:
         raise ValueError(f"no delta table at {path}")
     if feature not in _DROPPABLE_FEATURES:
@@ -6788,11 +6736,10 @@ def delta_drop_feature(
             )
     # --- history gate --------------------------------------------------
     if truncate_history:
-        # checkpoint the CURRENT snapshot (whose live set passed the gate
+        # checkpoint the READ snapshot (whose live set passed the gate
         # above) and expire everything below it: time travel into the
         # feature-using range now raises instead of needing the feature
-        current = _list_versions(spark, path)[-1]
-        delta_checkpoint(spark, path, current)
+        delta_checkpoint(spark, path, read_version)
         delta_cleanup_log(spark, path)
     if feature == "deletionVectors":
         # any retained commit or checkpoint that still resolves a
@@ -6854,17 +6801,7 @@ def delta_drop_feature(
     if key and key in conf:
         conf.pop(key)
         actions.append({"metaData": {**meta, "configuration": conf}})
-    version = _list_versions(spark, path)[-1] + 1
-    try:
-        _write_commit(spark, path, version, actions)
-    except RuntimeError:
-        raise DeltaConcurrentModification(
-            f"a concurrent commit landed during DROP FEATURE on {path}; "
-            "re-run against the new snapshot"
-        ) from None
-    if version % CHECKPOINT_INTERVAL == 0:
-        _auto_checkpoint(spark, path, version)
-    return version
+    return _commit(spark, path, read_version, actions)
 
 
 # ---------------------------------------------------------------------------
@@ -8013,8 +7950,7 @@ def delta_convert_parquet(
         },
         *adds,
     ]
-    _write_commit(spark, path, 0, actions)
-    return 0
+    return _commit(spark, path, None, actions)
 
 
 def delta_native_dv_wire_roundtrip(
@@ -8276,10 +8212,12 @@ def delta_fsck(
         import shutil
         import tempfile
 
-        _, meta, _, _ = _snapshot_state(spark, path, include_adds=False)
+        read_version, _, meta, _, _ = _snapshot_at(
+            spark, path, include_adds=False
+        )
         if meta is None:
             raise ValueError(f"no delta table at {path}")
-        live_df = delta_snapshot_adds_df(spark, path).select(
+        live_df = delta_snapshot_adds_df(spark, path, read_version).select(
             "path", "partitionValues"
         )
         if where is not None:
@@ -8348,7 +8286,7 @@ def delta_fsck(
         finally:
             shutil.rmtree(tmp, ignore_errors=True)
     else:
-        _, meta, live, _ = _snapshot_state(spark, path)
+        read_version, _, meta, live, _ = _snapshot_at(spark, path)
         if meta is None:
             raise ValueError(f"no delta table at {path}")
         if where is not None:
@@ -8388,19 +8326,9 @@ def delta_fsck(
             missing.append(f)
     if dry_run or not missing:
         return missing
-    now = int(time.time() * 1000)
-    actions: list[dict] = [_commit_info("FSCK")] + [
-        {
-            "remove": {
-                "path": f,
-                "deletionTimestamp": now,
-                "dataChange": True,
-            }
-        }
-        for f in missing
-    ]
-    version = _list_versions(spark, path)[-1] + 1
-    _write_commit(spark, path, version, actions)
+    _commit(
+        spark, path, read_version, [_commit_info("FSCK")] + _removes(missing)
+    )
     return missing
 
 

@@ -53,28 +53,51 @@ from pyspark.sql.datasource import (
 
 from ..querydef import QueryDef
 
-# Spark DDL atom → pyarrow type factory, for typed-null columns when a
-# file predates a schema evolution (kept to the types the fixtures use;
-# anything else fails loudly rather than miscasting)
-_ARROW_TYPES = {
-    "long": "int64",
-    "bigint": "int64",
-    "integer": "int32",
-    "int": "int32",
-    "double": "float64",
-    "string": "string",
-    "boolean": "bool",
-}
-
 
 class _AddFilePartition(InputPartition):
     def __init__(
-        self, abs_path: str, columns: list[tuple[str, str, str]]
+        self,
+        abs_path: str,
+        columns: list[tuple],
+        partition_values: dict | None = None,
     ) -> None:
         self.abs_path = abs_path
-        # [(logical name, spark_ddl_type, on-file physical name)] in
+        # [(logical name, Spark DataType, on-file physical name)] in
         # schema order — physical == logical except under column mapping
         self.columns = columns
+        # the add's partitionValues (physical keys, string values): hive
+        # partition columns live in the directory, not in the file
+        self.partition_values = partition_values or {}
+
+
+def _read_logical(partition: _AddFilePartition):
+    """The partition's file as a pyarrow table of the declared LOGICAL
+    columns, in schema order: file columns by physical name (column
+    mapping); partition columns from the add's partitionValues, cast to
+    the column type as the batch reader's partition discovery does;
+    evolution-added columns a pre-evolution file lacks as typed nulls.
+    None for the empty placeholder partition."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+    from pyarrow import fs as pafs
+    from pyspark.sql.pandas.types import to_arrow_type
+
+    if not partition.abs_path:
+        return None
+    fsys, p = pafs.FileSystem.from_uri(partition.abs_path)
+    table = pq.read_table(p, filesystem=fsys)
+    arrays = []
+    for _, dtype, phys in partition.columns:
+        if phys in table.column_names:
+            arrays.append(table[phys].combine_chunks())
+            continue
+        value = partition.partition_values.get(phys)
+        arrays.append(
+            pa.array([value] * len(table), pa.string()).cast(
+                to_arrow_type(dtype)
+            )
+        )
+    return pa.table(dict(zip([n for n, _, _ in partition.columns], arrays)))
 
 
 _STREAM_READER_FEATURES = frozenset({"deletionVectors", "columnMapping"})
@@ -184,21 +207,20 @@ def _resolve_meta_proto(path: str) -> tuple[dict, dict | None]:
     return meta, proto
 
 
-def _resolve_fields(meta: dict) -> list[tuple[str, str, str]]:
-    """[(logical, ddl type, physical)] honoring columnMapping mode=name
-    (physical == logical otherwise)."""
+def _resolve_fields(meta: dict) -> list[tuple]:
+    """[(logical, Spark DataType, physical)] honoring columnMapping
+    mode=name (physical == logical otherwise)."""
+    from pyspark.sql.types import StructType
+
     mode = str(
         (meta.get("configuration") or {}).get("delta.columnMapping.mode", "")
     ).lower()
-    fields = json.loads(meta["schemaString"])["fields"]
     out = []
-    for f in fields:
-        phys = f["name"]
+    for f in StructType.fromJson(json.loads(meta["schemaString"])).fields:
+        phys = f.name
         if mode == "name":
-            phys = (f.get("metadata") or {}).get(
-                "delta.columnMapping.physicalName", f["name"]
-            )
-        out.append((f["name"], f["type"], phys))
+            phys = f.metadata.get("delta.columnMapping.physicalName", f.name)
+        out.append((f.name, f.dataType, phys))
     return out
 
 
@@ -293,7 +315,11 @@ class DeltaLogStreamReader(DataSourceStreamReader):
                     "(set skipChangeCommits=true to skip such commits)"
                 )
             parts.extend(
-                _AddFilePartition(_file_uri(self.path, a["path"]), self.fields)
+                _AddFilePartition(
+                    _file_uri(self.path, a["path"]),
+                    self.fields,
+                    a.get("partitionValues"),
+                )
                 for a in adds
             )
         # a range of pure layout/skipped commits still needs ≥1 (empty)
@@ -301,34 +327,8 @@ class DeltaLogStreamReader(DataSourceStreamReader):
         return parts or [_AddFilePartition("", self.fields)]
 
     def read(self, partition: _AddFilePartition):
-        import pyarrow as pa
-        import pyarrow.parquet as pq
-        from pyarrow import fs as pafs
-
-        if not partition.abs_path:
-            return iter(())
-        fsys, p = pafs.FileSystem.from_uri(partition.abs_path)
-        table = pq.read_table(p, filesystem=fsys)
-        # conform to the declared schema: files hold PHYSICAL names
-        # (column mapping), output is logical; evolution-added columns
-        # a pre-evolution file lacks become typed nulls, order pinned
-        arrays = []
-        for name, ddl, phys in partition.columns:
-            if phys in table.column_names:
-                arrays.append(table[phys].combine_chunks())
-            else:
-                if ddl not in _ARROW_TYPES:
-                    raise ValueError(
-                        f"cannot synthesize nulls for evolved column "
-                        f"{name} of type {ddl}"
-                    )
-                arrays.append(
-                    pa.nulls(len(table), getattr(pa, _ARROW_TYPES[ddl])())
-                )
-        out = pa.table(
-            dict(zip([n for n, _, _ in partition.columns], arrays))
-        )
-        return iter(out.to_batches())
+        table = _read_logical(partition)
+        return iter(()) if table is None else iter(table.to_batches())
 
     def commit(self, end: dict) -> None:
         pass  # the log IS the ledger; nothing external to acknowledge
@@ -351,23 +351,23 @@ class DeltaLogStreamSource(DataSource):
         meta, proto = _resolve_meta_proto(path)
         _check_streamable(path, proto)
         return ", ".join(
-            f"{n} {t}" for n, t, _ in _resolve_fields(meta)
+            f"{n} {t.simpleString()}" for n, t, _ in _resolve_fields(meta)
         )
 
     def streamReader(self, schema):
         return DeltaLogStreamReader(self.options, None)
 
 
-class _CdfFilePartition(InputPartition):
+class _CdfFilePartition(_AddFilePartition):
     def __init__(
         self,
         abs_path: str,
-        columns: list[tuple[str, str, str]],
+        columns: list[tuple],
         version: int,
         ctype: str | None,
+        partition_values: dict | None = None,
     ) -> None:
-        self.abs_path = abs_path
-        self.columns = columns
+        super().__init__(abs_path, columns, partition_values)
         self.version = version
         self.ctype = ctype  # None → the cdc file carries _change_type
 
@@ -401,6 +401,8 @@ class DeltaCdfStreamReader(DataSourceStreamReader):
         return {"version": versions[-1]}
 
     def partitions(self, start: dict, end: dict):
+        from pyspark.sql.types import StringType
+
         lo, hi = int(start["version"]), int(end["version"])
         available = set(_list_log_versions(self.log_dir))
         want = set(range(lo + 1, hi + 1))
@@ -411,9 +413,12 @@ class DeltaCdfStreamReader(DataSourceStreamReader):
                 f"{sorted(want - available)} were removed by log cleanup"
             )
         parts: list[_CdfFilePartition] = []
-        # cdc files are staged from LOGICAL-name frames; data files hold
-        # physical names — each partition carries the right lookup names
-        cdc_cols = [(n, t, n) for n, t, _ in self.fields]
+        # cdc files are staged from LOGICAL-name frames and carry their
+        # own _change_type; data files hold physical names — each
+        # partition carries the right lookup names
+        cdc_cols = [(n, t, n) for n, t, _ in self.fields] + [
+            ("_change_type", StringType(), "_change_type")
+        ]
         for v in sorted(want):
             actions = _read_commit(self.log_dir, v)
             for a in actions:
@@ -449,6 +454,7 @@ class DeltaCdfStreamReader(DataSourceStreamReader):
                         self.fields,
                         v,
                         "insert",
+                        a.get("partitionValues"),
                     )
                     for a in adds
                 )
@@ -456,40 +462,19 @@ class DeltaCdfStreamReader(DataSourceStreamReader):
 
     def read(self, partition: _CdfFilePartition):
         import pyarrow as pa
-        import pyarrow.parquet as pq
-        from pyarrow import fs as pafs
 
-        if not partition.abs_path:
+        table = _read_logical(partition)
+        if table is None:
             return iter(())
-        fsys, p = pafs.FileSystem.from_uri(partition.abs_path)
-        table = pq.read_table(p, filesystem=fsys)
-        arrays = []
-        names = []
-        for name, ddl, phys in partition.columns:
-            names.append(name)
-            if phys in table.column_names:
-                arrays.append(table[phys].combine_chunks())
-            else:
-                if ddl not in _ARROW_TYPES:
-                    raise ValueError(
-                        f"cannot synthesize nulls for evolved column "
-                        f"{name} of type {ddl}"
-                    )
-                arrays.append(
-                    pa.nulls(len(table), getattr(pa, _ARROW_TYPES[ddl])())
-                )
-        names.append("_change_type")
-        if partition.ctype is None:
-            arrays.append(table["_change_type"].combine_chunks())
-        else:
-            arrays.append(
-                pa.array([partition.ctype] * len(table), pa.string())
+        n = len(table)
+        if partition.ctype is not None:
+            table = table.append_column(
+                "_change_type", pa.array([partition.ctype] * n, pa.string())
             )
-        names.append("_commit_version")
-        arrays.append(
-            pa.array([partition.version] * len(table), pa.int64())
+        table = table.append_column(
+            "_commit_version", pa.array([partition.version] * n, pa.int64())
         )
-        return iter(pa.table(dict(zip(names, arrays))).to_batches())
+        return iter(table.to_batches())
 
     def commit(self, end: dict) -> None:
         pass
@@ -508,7 +493,9 @@ class DeltaCdfStreamSource(DataSource):
             raise ValueError("delta_native_cdf_stream requires option 'path'")
         meta, proto = _resolve_meta_proto(path)
         _check_streamable(path, proto)
-        cols = ", ".join(f"{n} {t}" for n, t, _ in _resolve_fields(meta))
+        cols = ", ".join(
+            f"{n} {t.simpleString()}" for n, t, _ in _resolve_fields(meta)
+        )
         return cols + ", _change_type string, _commit_version long"
 
     def streamReader(self, schema):

@@ -52,3 +52,29 @@ def sf_smoke() -> str:
 @pytest.fixture(scope="session")
 def sf_oracle() -> str:
     return SF_ORACLE
+
+
+@pytest.fixture
+def arm_read_race(monkeypatch):
+    """``arm(winner)`` lands ``winner(path)`` right after the next Delta
+    snapshot fold — an op's read — and before the op stages or commits
+    anything; the fold still returns the version the op read. Returns a
+    dict whose ``fired`` flag records that the winner ran."""
+    from lakesail_hdfs_deltalake_guide_spark.sources import delta_log
+
+    real = delta_log._fold_range
+
+    def arm(winner) -> dict:
+        state = {"fired": False}
+
+        def fold_then_race(spark_, path_, version=None):
+            out = real(spark_, path_, version)
+            monkeypatch.setattr(delta_log, "_fold_range", real)
+            state["fired"] = True
+            winner(path_)
+            return out
+
+        monkeypatch.setattr(delta_log, "_fold_range", fold_then_race)
+        return state
+
+    return arm

@@ -1868,6 +1868,8 @@ def test_history_and_timestamp_travel(spark, sf_smoke):
         "WRITE",
         "WRITE",
     ]
+    # each commit names the snapshot it acted on; creation has none
+    assert [h["readVersion"] for h in hist] == [2, 1, 0, None]
     stamps = [h["timestamp"] for h in reversed(hist)]
     assert all(isinstance(t, int) for t in stamps)
     assert stamps == sorted(stamps) and len(set(stamps)) == 4, "monotonic"
@@ -2267,6 +2269,152 @@ def test_optimize_aborts_on_concurrent_append(spark, monkeypatch):
     assert sorted(r["id"] for r in delta_read(spark, path).collect()) == list(
         range(60)
     )
+
+
+def _read_race_cases():
+    from lakesail_hdfs_deltalake_guide_spark.sources import delta_log as dl
+
+    def rows(spark, data):
+        return spark.createDataFrame(data, "k long, v long")
+
+    def update_all(spark, p):
+        dl.delta_update(spark, p, "true", {"v": F.col("v") + 100})
+
+    def dv_delete(spark, p):
+        dl.delta_delete_dv(spark, p, "k % 3 = 0")
+
+    def append(v):
+        return lambda spark, p: delta_write(
+            rows(spark, [(10, v)]), p, mode="append"
+        )
+
+    def add_v_check(spark, p):
+        dl.delta_add_constraint(spark, p, "v_nonneg", "v >= 0")
+
+    def lose_a_file(spark, p):
+        import os
+
+        os.remove(f"{p}/{dl.delta_live_files(spark, p)[0]}")
+
+    # name: (setup, winner, op)
+    return {
+        "delete": (
+            None, update_all,
+            lambda s, p: dl.delta_delete(s, p, "k % 2 = 0"),
+        ),
+        "update": (
+            None, update_all,
+            lambda s, p: dl.delta_update(
+                s, p, "k % 2 = 0", {"v": F.col("v") * 10}
+            ),
+        ),
+        "merge": (
+            None, update_all,
+            lambda s, p: dl.delta_merge(
+                s, p, rows(s, [(0, 500), (11, 511)]), on=["k"]
+            ),
+        ),
+        "replace_where": (
+            None, update_all,
+            lambda s, p: dl.delta_replace_where(
+                s, p, "k < 4", rows(s, [(0, 900), (1, 901)])
+            ),
+        ),
+        "delete_dv": (
+            None, dv_delete,
+            lambda s, p: dl.delta_delete_dv(s, p, "k % 2 = 0"),
+        ),
+        "update_dv": (
+            None, dv_delete,
+            lambda s, p: dl.delta_update_dv(
+                s, p, "k % 2 = 0", {"v": F.col("v") * 10}
+            ),
+        ),
+        "reorg_purge": (
+            lambda s, p: dl.delta_delete_dv(s, p, "k % 2 = 0"),
+            dv_delete,
+            dl.delta_reorg_purge,
+        ),
+        "optimize": (None, append(10), dl.delta_optimize),
+        "add_constraint": (None, append(-1), add_v_check),
+        "drop_constraint": (
+            add_v_check, append(10),
+            lambda s, p: dl.delta_drop_constraint(s, p, "v_nonneg"),
+        ),
+        "rename_column": (
+            None, update_all,
+            lambda s, p: dl.delta_rename_column(s, p, "v", "w"),
+        ),
+        "fsck": (lose_a_file, append(10), dl.delta_fsck),
+    }
+
+
+@pytest.mark.parametrize("case", list(_read_race_cases()))
+def test_commit_checks_commits_landed_after_its_read(
+    spark, arm_read_race, case
+):
+    """A competing commit that lands between an op's snapshot read and
+    its commit: the op either aborts with DeltaConcurrentModification
+    (the table is then exactly the winner's result) or commits, and the
+    table equals a serial run of the winner followed by the op — never
+    a duplicated key or a resurrected row the winner deleted."""
+    import shutil
+
+    from lakesail_hdfs_deltalake_guide_spark.sources import delta_log as dl
+
+    setup, winner, op = _read_race_cases()[case]
+    base = tempfile.mkdtemp(prefix=f"ls_readrace_{case}_")
+    delta_write(
+        spark.createDataFrame(
+            [(i, i) for i in range(10)], "k long, v long"
+        ).repartition(5),
+        base,
+        stats_cols=["k"],
+        configuration={"delta.columnMapping.mode": "name"}
+        if case == "rename_column"
+        else None,
+    )
+    if setup is not None:
+        setup(spark, base)
+    serial, alone = base + "_serial", base + "_alone"
+    shutil.copytree(base, serial)
+    shutil.copytree(base, alone)
+
+    def state(p):
+        if dl.delta_fsck(spark, p, dry_run=True):
+            # a table that lost a data file reads only once repaired:
+            # compare a repaired copy
+            shutil.copytree(p, p + "_repaired")
+            p += "_repaired"
+            dl.delta_fsck(spark, p)
+        df = delta_read(spark, p)
+        got = sorted(tuple(r) for r in df.collect())
+        cons = dl._table_constraints(dl.delta_metadata(spark, p))
+        return df.columns, got, cons
+
+    winner(spark, alone)
+    winner(spark, serial)
+    try:
+        op(spark, serial)
+        serial_committed = True
+    except ValueError:  # the op refuses the winner's table
+        serial_committed = False
+
+    raced = arm_read_race(lambda p: winner(spark, p))
+    try:
+        op(spark, base)
+        committed = True
+    except dl.DeltaConcurrentModification:
+        committed = False
+    assert raced["fired"]
+    cols, got, cons = state(base)
+    keys = [r[0] for r in got]
+    assert len(keys) == len(set(keys)), f"duplicated keys: {got}"
+    if committed:
+        assert serial_committed, "committed what a serial run refuses"
+        assert (cols, got, cons) == state(serial)
+    else:
+        assert (cols, got, cons) == state(alone)
 
 
 def _rt_table(spark, prefix="ls_rt_"):

@@ -269,3 +269,66 @@ def test_stream_reads_column_mapped_and_cloned_tables(spark):
         spark.readStream.format("delta_native_stream").option(
             "path", bad
         ).load()
+
+
+def test_streams_fill_partition_values_and_evolved_dates(spark):
+    """Both streaming sources conform files the way the batch readers
+    do: hive partition columns come from each add's partitionValues,
+    typed like the schema (not NULL), and a ``date`` column added by
+    schema evolution reads back as typed nulls in older files."""
+    from lakesail_hdfs_deltalake_guide_spark.sources.delta_log import (
+        delta_read,
+        delta_read_cdf,
+    )
+
+    register_delta_stream_source(spark)
+    table = tempfile.mkdtemp(prefix="ls_ds_part_")
+    df = spark.range(12).select(
+        F.col("id"), (F.col("id") % 3).cast("int").alias("p")
+    )
+    delta_write(
+        df,
+        table,
+        partition_by=["p"],
+        configuration={"delta.enableChangeDataFeed": "true"},
+    )
+    evolved = spark.range(12, 16).select(
+        F.col("id"),
+        (F.col("id") % 3).cast("int").alias("p"),
+        F.date_add(F.lit("2024-01-01").cast("date"), F.col("id").cast("int"))
+        .alias("d"),
+    )
+    delta_write(evolved, table, mode="append", merge_schema=True)
+
+    out = tempfile.mkdtemp(prefix="ls_ds_part_out_")
+    _drain(spark, table, out, tempfile.mkdtemp(prefix="ls_ds_part_ck_"))
+    got = spark.read.parquet(out)
+    assert got.columns == ["id", "p", "d"]
+    assert dict(got.dtypes) == {"id": "bigint", "p": "int", "d": "date"}
+    assert sorted(map(tuple, got.collect())) == sorted(
+        map(tuple, delta_read(spark, table).collect())
+    )
+
+    cdf_out = tempfile.mkdtemp(prefix="ls_ds_part_cdf_out_")
+    q = (
+        spark.readStream.format("delta_native_cdf_stream")
+        .option("path", table)
+        .option("startingVersion", "0")
+        .load()
+        .writeStream.foreachBatch(
+            lambda b, _id: b.write.mode("append").parquet(cdf_out)
+        )
+        .trigger(availableNow=True)
+        .option(
+            "checkpointLocation", tempfile.mkdtemp(prefix="ls_ds_part_cdf_ck_")
+        )
+        .start()
+    )
+    q.awaitTermination()
+    cols = ["id", "p", "d", "_change_type", "_commit_version"]
+    streamed = spark.read.parquet(cdf_out).select(*cols)
+    batch = delta_read_cdf(spark, table, 0).select(*cols)
+    assert sorted(map(tuple, streamed.collect())) == sorted(
+        map(tuple, batch.collect())
+    )
+    assert streamed.where("p IS NULL").count() == 0

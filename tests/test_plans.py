@@ -327,7 +327,7 @@ def test_dml_candidate_scan_pushes_predicate(spark, sf_smoke):
     )
     path = tempfile.mkdtemp(prefix="ls_plan_dml_")
     delta_write(o.repartition(4), path)
-    scan, _, _, _ = _snapshot_scan_with_file(spark, path)
+    _, scan, _, _, _ = _snapshot_scan_with_file(spark, path)
     phase1 = scan.where(F.col("o_totalprice") > 100000.0).select("__ls_file")
     assert has_pushed_filter(phase1, "o_totalprice")
 
@@ -348,7 +348,7 @@ def test_merge_discovery_prunes_to_key_columns(spark, sf_smoke):
     )
     path = tempfile.mkdtemp(prefix="ls_plan_mrg_")
     delta_write(c.repartition(4), path)
-    scan, _, _, _ = _snapshot_scan_with_file(spark, path)
+    _, scan, _, _, _ = _snapshot_scan_with_file(spark, path)
     src = c.select("c_custkey").where(F.col("c_custkey") % 3 == 0)
     phase1 = (
         scan.select("c_custkey", "__ls_file")
