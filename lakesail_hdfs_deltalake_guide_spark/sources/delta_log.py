@@ -30,8 +30,10 @@ so ``file://`` and ``hdfs://`` behave identically.
 
 from __future__ import annotations
 
+import functools
 import json
 import re as _re
+import threading
 import time
 import uuid
 
@@ -507,10 +509,26 @@ def _purge_log_text_cache(prefix: str) -> None:
             _log_text_cache_bytes -= len(_LOG_TEXT_CACHE.pop(p))
 
 
-def _commit_info(op: str) -> dict:
+def _commit_info(op: str, metrics: dict | None = None) -> dict:
     """A ``commitInfo`` payload for ``_write_commit`` to stamp (the
-    timestamp is filled at write time so retries re-stamp)."""
-    return {"commitInfo": {"operation": op}}
+    timestamp is filled at write time so retries re-stamp).
+    ``metrics`` become delta-spark's ``operationMetrics`` map (string
+    values, as delta-spark writes them)."""
+    info: dict = {"operation": op}
+    if metrics is not None:
+        info["operationMetrics"] = {k: str(v) for k, v in metrics.items()}
+    return {"commitInfo": info}
+
+
+def _elapsed_ms(t0: float) -> int:
+    """``executionTimeMs`` of an op that started at ``perf_counter() == t0``."""
+    return int((time.perf_counter() - t0) * 1000)
+
+
+def _num_records(adds: list[dict]) -> int:
+    """Rows in staged ``add`` actions, from the ``numRecords`` stat every
+    staged file carries."""
+    return sum(json.loads(a["add"]["stats"])["numRecords"] for a in adds)
 
 
 def _commit_timestamp(spark: SparkSession, path: str, version: int) -> int | None:
@@ -2100,7 +2118,7 @@ def _allocate_identity(
             f"identity columns {present} are GENERATED ALWAYS — remove "
             "them from the batch; the engine allocates the values"
         )
-    df = df.localCheckpoint()  # pin partition ids for both passes
+    df = _checkpoint(df)  # pin partition ids for both passes
     tagged = df.withColumn("__id_pid", F.spark_partition_id())
     counts = sorted(
         (r["__id_pid"], r["n"])
@@ -3083,10 +3101,13 @@ def _version_at_timestamp(spark: SparkSession, path: str, ts: int) -> int:
 
 def delta_history(spark: SparkSession, path: str) -> list[dict]:
     """DESCRIBE HISTORY: newest-first [(version, timestamp, operation,
-    readVersion)] from each retained commit's commitInfo (cleaned commits
-    are absent — history follows log retention, exactly delta-spark's
-    behavior). ``readVersion`` is the snapshot the commit acted on (None
-    for table creation and for commits that did not record it)."""
+    readVersion, operationMetrics)] from each retained commit's
+    commitInfo (cleaned commits are absent — history follows log
+    retention, exactly delta-spark's behavior). ``readVersion`` is the
+    snapshot the commit acted on (None for table creation and for
+    commits that did not record it); ``operationMetrics`` is the
+    commit's delta-spark-named metrics map (None when it carries
+    none)."""
     versions = _list_versions(spark, path)
     if not versions:
         raise ValueError(f"no delta table at {path}")
@@ -3105,6 +3126,7 @@ def delta_history(spark: SparkSession, path: str) -> list[dict]:
                 "timestamp": info.get("timestamp"),
                 "operation": info.get("operation"),
                 "readVersion": info.get("readVersion"),
+                "operationMetrics": info.get("operationMetrics"),
             }
         )
     return out
@@ -3524,23 +3546,7 @@ def delta_read(
                 if a.get("partitionValues", {}).get(g) is None
                 or glo <= a["partitionValues"][g] <= ghi
             ]
-        # per-file stats are keyed by PHYSICAL column names on mapped
-        # tables; callers filter in logical names
-        pm = {l: p for p, l in _cm_pairs(meta)}
-
-        def _overlaps(a: dict) -> bool:
-            stats = a.get("stats")
-            if not stats:
-                return True  # no stats → cannot skip
-            st = json.loads(stats)
-            for col, (lo, hi) in range_filter.items():
-                mn = st.get("minValues", {}).get(pm.get(col, col))
-                mx = st.get("maxValues", {}).get(pm.get(col, col))
-                if mn is not None and mx is not None and (mn > hi or mx < lo):
-                    return False
-            return True
-
-        adds = [(f, a) for f, a in adds if _overlaps(a)]
+        adds = _stats_skip(adds, meta, range_filter)
     if row_ids and not _rt_enabled(meta):
         raise ValueError(
             f"row_ids read of {path}: table does not enable "
@@ -5096,12 +5102,269 @@ class DeltaConcurrentModification(RuntimeError):
     Callers re-run the whole DML call against the new snapshot."""
 
 
+# ---------------------------------------------------------------------------
+# DML file skipping: every DML op scans only the live files whose per-file
+# min/max stats can hold a row it changes (Delta's data skipping, applied
+# to the write path as delta-spark does).
+
+# Integral Spark types by byte width — the only columns DML skips on.
+# Spark orders NaN above every float value but parquet min/max omit NaN,
+# so a float column's stats cannot bound even ``x > 5``.
+_INTEGRAL_WIDTH = {"byte": 1, "short": 2, "integer": 4, "long": 8}
+# a comparison read with its operands swapped (``5 < k`` is ``k > 5``)
+_FLIPPED = {
+    "EqualTo": "EqualTo",
+    "EqualNullSafe": "EqualNullSafe",
+    "GreaterThan": "LessThan",
+    "GreaterThanOrEqual": "LessThanOrEqual",
+    "LessThan": "GreaterThan",
+    "LessThanOrEqual": "GreaterThanOrEqual",
+}
+
+
+def _stats_skip(adds, meta: dict, bounds: dict[str, tuple]) -> list:
+    """The one stats-skipping rule, for reads and DML: the (file, add)
+    pairs whose min/max stats may intersect every ``bounds`` entry
+    ({logical column: (lo, hi)}, inclusive, None = open end). Stats are
+    keyed by PHYSICAL names on column-mapped tables. A file without
+    stats, or without both stats of a column, is kept."""
+    if not bounds:
+        return list(adds)
+    pm = {l: p for p, l in _cm_pairs(meta)}
+
+    def overlaps(a: dict) -> bool:
+        if not a.get("stats"):
+            return True
+        st = json.loads(a["stats"])
+        for col, (lo, hi) in bounds.items():
+            mn = st.get("minValues", {}).get(pm.get(col, col))
+            mx = st.get("maxValues", {}).get(pm.get(col, col))
+            if mn is None or mx is None:
+                continue
+            if (hi is not None and mn > hi) or (lo is not None and mx < lo):
+                return False
+        return True
+
+    return [(f, a) for f, a in adds if overlaps(a)]
+
+
+def _jkind(e) -> str:
+    return e.getClass().getSimpleName()
+
+
+def _jchildren(e) -> list:
+    ch = e.children()
+    return [ch.apply(i) for i in range(ch.size())]
+
+
+def _unwrap_widening(e):
+    """Catalyst expression ``e`` under its integral-widening casts, or
+    None when that is not an integral expression."""
+    while _jkind(e) == "Cast":
+        src = _INTEGRAL_WIDTH.get(e.child().dataType().typeName())
+        dst = _INTEGRAL_WIDTH.get(e.dataType().typeName())
+        if src is None or dst is None or dst < src:
+            return None
+        e = e.child()
+    return e if e.dataType().typeName() in _INTEGRAL_WIDTH else None
+
+
+def _bound_column(e, common) -> str | None:
+    """The integral column ``e`` reads (``common`` stands in for a
+    BETWEEN's shared-operand reference), or None."""
+    e = _unwrap_widening(e)
+    if e is not None and common is not None and _jkind(e) == "CommonExpressionRef":
+        e = _unwrap_widening(common)
+    return e.name() if e is not None and _jkind(e) == "AttributeReference" else None
+
+
+def _bound_constant(e) -> int | None:
+    """The non-NULL integral constant ``e`` is, or None."""
+    e = _unwrap_widening(e)
+    if e is None or _jkind(e) != "Literal" or e.value() is None:
+        return None
+    return int(e.value())
+
+
+def _conjuncts(e, common=None) -> list[tuple]:
+    """Top-level AND conjuncts of ``e`` as (conjunct, BETWEEN operand).
+    Spark 4 analyzes ``k BETWEEN a AND b`` as
+    ``Between(With(And(ref >= a, ref <= b), def(k)))``."""
+    kind = _jkind(e)
+    if kind == "And":
+        return _conjuncts(e.left(), common) + _conjuncts(e.right(), common)
+    if kind == "Between":
+        return _conjuncts(_jchildren(e)[0], common)
+    if kind == "With":
+        body, *defs = _jchildren(e)
+        if len(defs) == 1:
+            return _conjuncts(body, _jchildren(defs[0])[0])
+    return [(e, common)]
+
+
+def _conjunct_bound(e, common) -> tuple | None:
+    """(column, lo, hi) that one conjunct implies, or None."""
+    kind = _jkind(e)
+    if kind == "In":
+        value, *items = _jchildren(e)
+        col = _bound_column(value, common)
+        consts = [_bound_constant(i) for i in items]
+        if col is None or not consts or None in consts:
+            return None
+        return col, min(consts), max(consts)
+    if kind not in _FLIPPED:
+        return None
+    left, right = _jchildren(e)
+    col, c = _bound_column(left, common), _bound_constant(right)
+    if col is None:
+        col, c = _bound_column(right, common), _bound_constant(left)
+        kind = _FLIPPED[kind]
+    if col is None or c is None:
+        return None
+    lo, hi = {
+        "EqualTo": (c, c),
+        "EqualNullSafe": (c, c),
+        "GreaterThan": (c + 1, None),
+        "GreaterThanOrEqual": (c, None),
+        "LessThan": (None, c - 1),
+        "LessThanOrEqual": (None, c),
+    }[kind]
+    return col, lo, hi
+
+
+def _predicate_bounds(spark: SparkSession, meta: dict, predicate) -> dict:
+    """Inclusive bounds {logical column: (lo, hi)} (None = open) that
+    every row matching the DML ``predicate`` satisfies, for
+    :func:`_stats_skip`. Read off the top-level AND conjuncts of the
+    ANALYZED predicate — resolved against an empty frame of the logical
+    schema (no job; Spark's own coercions decide what a comparison
+    means): ``col ⋚ constant`` either way round, BETWEEN and
+    ``IN (constants)``, on integral columns, through widening casts. Any
+    other conjunct or a NULL constant adds no bound; a predicate that
+    does not resolve here adds none (the DML scan raises its error)."""
+    from pyspark.errors import AnalysisException
+
+    pred = F.expr(predicate) if isinstance(predicate, str) else predicate
+    try:
+        plan = (
+            spark.createDataFrame([], _logical_schema(meta))
+            .where(pred)
+            ._jdf.queryExecution()
+            .analyzed()
+        )
+    except AnalysisException:
+        return {}  # the DML scan raises it
+    if _jkind(plan) != "Filter":
+        return {}
+    bounds: dict[str, tuple] = {}
+    for conj, common in _conjuncts(plan.condition()):
+        got = _conjunct_bound(conj, common)
+        if got is None:
+            continue
+        col, lo, hi = got
+        plo, phi = bounds.get(col, (None, None))
+        bounds[col] = (
+            lo if plo is None else plo if lo is None else max(lo, plo),
+            hi if phi is None else phi if hi is None else min(hi, phi),
+        )
+    return bounds
+
+
+def _merge_key_bounds(
+    src: DataFrame, meta: dict, live: dict[str, dict], on: list[str]
+) -> dict | None:
+    """MERGE's skipping bounds: the source's min/max of each integral
+    ``on`` key that live files carry stats for — one aggregate, which
+    also materializes a lazy source checkpoint. None when some key has
+    no non-NULL source value: then no target row can match."""
+    stated = set(_live_stats_cols(live.values()))
+    pm = {l: p for p, l in _cm_pairs(meta)}
+    tgt = {f.name: f.dataType.typeName() for f in _logical_schema(meta).fields}
+    keys = [
+        k
+        for k in on
+        if pm[k] in stated
+        and tgt[k] in _INTEGRAL_WIDTH
+        and src.schema[k].dataType.typeName() in _INTEGRAL_WIDTH
+    ]
+    if not keys:
+        return {}
+    row = src.agg(
+        *[F.min(k).alias(f"lo{i}") for i, k in enumerate(keys)],
+        *[F.max(k).alias(f"hi{i}") for i, k in enumerate(keys)],
+    ).first()
+    if any(row[f"lo{i}"] is None for i in range(len(keys))):
+        return None
+    return {k: (row[f"lo{i}"], row[f"hi{i}"]) for i, k in enumerate(keys)}
+
+
+def _pruned_scan(
+    spark: SparkSession,
+    path: str,
+    meta: dict,
+    live: dict[str, dict],
+    bounds: dict,
+    with_row_col: bool = False,
+) -> DataFrame | None:
+    """The DML scan: logical columns plus ``__dv_file``/``__dv_row``
+    positions over the live files ``bounds`` cannot skip, with their
+    deletion vectors applied — rows a DV masks are logically gone, and
+    DML must never see (or resurrect) them. None when every file is
+    skipped."""
+    adds = _stats_skip(sorted(live.items()), meta, bounds)
+    if not adds:
+        return None
+    scan = _physical_scan(
+        spark,
+        path,
+        meta,
+        [f for f, _ in adds],
+        with_position=True,
+        with_row_col=with_row_col,
+    )
+    return _dv_anti_filter(spark, path, scan, adds)
+
+
+# the checkpoints of the DML op running on this thread
+_OWNED = threading.local()
+
+
+def _checkpoint(df: DataFrame, eager: bool = True) -> DataFrame:
+    """``df.localCheckpoint(eager)``, released when the enclosing
+    :func:`_releases_checkpoints` op returns (kept otherwise)."""
+    cp = df.localCheckpoint(eager=eager)
+    held = getattr(_OWNED, "held", None)
+    if held is not None:
+        held.append(cp)
+    return cp
+
+
+def _releases_checkpoints(fn):
+    """Make DML op ``fn`` unpersist the local checkpoints it takes
+    through :func:`_checkpoint` when it returns or raises — it has
+    committed or failed by then, so nothing reads them again."""
+
+    @functools.wraps(fn)
+    def op(*args, **kwargs):
+        outer = getattr(_OWNED, "held", None)
+        _OWNED.held = []
+        try:
+            return fn(*args, **kwargs)
+        finally:
+            for cp in _OWNED.held:
+                cp._jdf.queryExecution().analyzed().rdd().unpersist(False)
+            _OWNED.held = outer
+
+    return op
+
+
 def _snapshot_scan_with_file(
-    spark: SparkSession, path: str
+    spark: SparkSession, path: str, predicate=None
 ) -> tuple[int, DataFrame, dict[str, str], dict, dict[str, dict]]:
     """(read version, latest-snapshot scan carrying ``__ls_file`` (the
     add-action's relative path for each row), basename→rel map,
-    metaData, live).
+    metaData, live). With a DML ``predicate`` the scan covers only the
+    files its stats bounds cannot skip (``live`` stays the whole set).
     The per-row file identity is Spark's ``_metadata.file_path`` hidden
     column — evaluated scan-side, no shuffle, no UDF; we reduce it to
     the unique basename (data files are ``part-{uuid}.parquet``) so the
@@ -5111,15 +5374,13 @@ def _snapshot_scan_with_file(
     if meta is None:
         raise ValueError(f"no delta table at {path}")
     base_map = {f.rsplit("/", 1)[-1]: f for f in live}
-    if not live:
+    bounds = {} if predicate is None else _predicate_bounds(spark, meta, predicate)
+    scan = _pruned_scan(spark, path, meta, live, bounds)
+    if scan is None:
         empty = spark.createDataFrame([], _logical_schema(meta)).withColumn(
             "__ls_file", F.lit(None).cast("string")
         )
         return read_version, empty, base_map, meta, live
-    scan = _physical_scan(spark, path, meta, sorted(live), with_position=True)
-    # rows a deletion vector masks are logically gone: DML predicates
-    # must never see (or resurrect) them
-    scan = _dv_anti_filter(spark, path, scan, list(live.items()))
     scan = scan.select(
         *[l for _, l in _cm_pairs(meta)],
         F.col("__dv_file").alias("__ls_file"),
@@ -5526,9 +5787,10 @@ def delta_delete(spark: SparkSession, path: str, predicate) -> int:
     commit pairs their removes with the survivor adds. A file whose rows
     all match simply gets a remove. Files without matches are untouched.
     Returns the committed version (current version if nothing matched)."""
+    t0 = time.perf_counter()
     pred = _coerce_predicate(predicate)
     read_version, scan, base_map, meta, _live = _snapshot_scan_with_file(
-        spark, path
+        spark, path, predicate
     )
     hit_names = [
         r[0]
@@ -5561,13 +5823,32 @@ def delta_delete(spark: SparkSession, path: str, predicate) -> int:
         if _cdf_enabled(meta)
         else []
     )
+    copied = _num_records(adds)
+    metrics = {
+        "numRemovedFiles": len(affected),
+        "numAddedFiles": len(adds),
+        "numCopiedRows": copied,
+        "numAddedChangeFiles": len(cdc),
+    }
+    # the removed files' live rows, when every one records numRecords
+    stats = [json.loads(_live[f].get("stats") or "{}") or {} for f in affected]
+    if all("numRecords" in st for st in stats):
+        metrics["numDeletedRows"] = (
+            sum(st["numRecords"] for st in stats)
+            - sum(
+                int((_live[f].get("deletionVector") or {}).get("cardinality", 0))
+                for f in affected
+            )
+            - copied
+        )
+    metrics["executionTimeMs"] = _elapsed_ms(t0)
     return _commit_rewrite(
         spark,
         path,
         read_version,
         affected,
         adds,
-        extra_actions=[_commit_info("DELETE")]
+        extra_actions=[_commit_info("DELETE", metrics)]
         + ([rt_action] if rt_action else [])
         + cdc,
         identity_guard=rt_action is not None,
@@ -5579,6 +5860,7 @@ def delta_delete(spark: SparkSession, path: str, predicate) -> int:
     )
 
 
+@_releases_checkpoints
 def delta_replace_where(
     spark: SparkSession, path: str, predicate, df: DataFrame
 ) -> int:
@@ -5613,7 +5895,7 @@ def delta_replace_where(
     """
     pred = _coerce_predicate(predicate)
     read_version, scan, base_map, meta, _live = _snapshot_scan_with_file(
-        spark, path
+        spark, path, predicate
     )
     from pyspark.sql.types import StructType
 
@@ -5644,7 +5926,7 @@ def delta_replace_where(
             meta = id_action["metaData"]
         incoming = incoming.select(*tcols)
     # three consumers (region check, staging, change feed), one compute
-    incoming = incoming.localCheckpoint(eager=False)
+    incoming = _checkpoint(incoming, eager=False)
     # "outside" = predicate not TRUE — ~NULL is NULL and would slip the
     # where(), letting NULL-predicate rows commit outside the declared
     # region (and a re-run's scan.where(pred) could never remove them,
@@ -5739,13 +6021,14 @@ def delta_update(
     row count is invariant under UPDATE), with matching rows transformed.
     All assignments are applied simultaneously from the preimage (SQL
     UPDATE semantics — ``SET a = b, b = a`` swaps)."""
+    t0 = time.perf_counter()
     pred = _coerce_predicate(predicate)
     exprs = {
         col: (F.expr(e) if isinstance(e, str) else e)
         for col, e in assignments.items()
     }
     read_version, scan, base_map, meta, _live = _snapshot_scan_with_file(
-        spark, path
+        spark, path, predicate
     )
     unknown = set(exprs) - {c for c in scan.columns if c != "__ls_file"}
     if unknown:
@@ -5826,7 +6109,17 @@ def delta_update(
         read_version,
         affected,
         adds,
-        extra_actions=[_commit_info("UPDATE")]
+        extra_actions=[
+            _commit_info(
+                "UPDATE",
+                {
+                    "numRemovedFiles": len(affected),
+                    "numAddedFiles": len(adds),
+                    "numAddedChangeFiles": len(cdc),
+                    "executionTimeMs": _elapsed_ms(t0),
+                },
+            )
+        ]
         + ([rt_action] if rt_action else [])
         + cdc,
         identity_guard=rt_action is not None,
@@ -5835,6 +6128,7 @@ def delta_update(
     )
 
 
+@_releases_checkpoints
 def delta_merge(
     spark: SparkSession,
     path: str,
@@ -5879,40 +6173,32 @@ def delta_merge(
     (consult :func:`delta_last_txn` before re-applying a batch), same
     contract as ``delta_write``'s txn.
 
-    Phase 1 (distributed): join the snapshot scan's key+file projection
-    to the source keys — the distinct matched-file set is the only thing
-    collected. Phase 2: re-read ONLY matched files, left-join the source
-    and overwrite ``update_cols`` (default: every non-key column the
-    source carries) on matched rows; unmatched-in-target source rows are
-    appended as inserts, conformed to the table schema (missing columns
-    → typed nulls). One commit carries removes + rewritten adds + insert
-    adds — the upsert is atomic.
+    Phase 1, the touched-file pass (distributed): the source's per-key
+    row counts, left-joined to the (keys, file) scan of the live files
+    whose key stats overlap the source's key range, yield the matched
+    files and the ambiguity check in one job — only file names and a
+    duplicate flag are collected. Phase 2: re-read ONLY matched files,
+    left-join the source and overwrite ``update_cols`` (default: every
+    non-key column the source carries) on matched rows; source rows
+    whose key no matched file holds are appended as inserts (a target
+    row with a source key lives in a matched file by definition),
+    conformed to the table schema (missing columns → typed nulls). One
+    commit carries removes + rewritten adds + insert adds — the upsert
+    is atomic.
 
     Ambiguity check (delta-spark raises the same way): a source with
     duplicate keys would update one target row twice nondeterministically
     — rejected before any file is staged."""
     if not on:
         raise ValueError("merge requires at least one key column")
-    # materialize the source ONCE, before validation: the dup check is
-    # an action, and running it against the raw plan executed the whole
-    # source subtree (for streaming upserts: a python-source read + the
-    # fold) a second time before the checkpoint's first consumer
-    src = source.localCheckpoint(eager=True)  # dup check + 3 consumers
-    dup = (
-        src.groupBy(*on)
-        .agg(F.count(F.lit(1)).alias("__n"))
-        .where(F.col("__n") > 1)
-        .limit(1)
-        .count()
-    )
-    if dup:
-        raise ValueError(
-            "MERGE source has duplicate rows per key — each target row "
-            "must match at most one source row"
-        )
-    read_version, scan, base_map, meta, _live = _snapshot_scan_with_file(
-        spark, path
-    )
+    t0 = time.perf_counter()
+    # one computation of the source feeds the key bounds, the touched-
+    # file pass, the rewrite and the inserts (for streaming upserts: a
+    # python-source read + the fold); its first action materializes it
+    src = _checkpoint(source, eager=False)
+    read_version, _, meta, _live, _ = _snapshot_at(spark, path)
+    if meta is None:
+        raise ValueError(f"no delta table at {path}")
     from pyspark.sql.types import StructType
 
     schema = StructType.fromJson(json.loads(meta["schemaString"]))
@@ -5964,15 +6250,30 @@ def delta_merge(
             f"cannot MERGE-update identity columns "
             f"{sorted(set(upd) & set(identity))}"
         )
-    hit_names = [
-        r[0]
-        for r in scan.select(*on, "__ls_file")
-        .join(src.select(*on).distinct(), on=on, how="left_semi")
-        .select("__ls_file")
+    bounds = _merge_key_bounds(src, meta, _live, on)
+    scan = None if bounds is None else _pruned_scan(spark, path, meta, _live, bounds)
+    keyed = src.groupBy(*on).agg(F.count(F.lit(1)).alias("__n"))
+    if scan is None:
+        keyed = keyed.withColumn("__ls_file", F.lit(None).cast("string"))
+    else:
+        keyed = keyed.join(
+            scan.select(*on, F.col("__dv_file").alias("__ls_file")),
+            on=on,
+            how="left",
+        )
+    touched = (
+        keyed.where((F.col("__n") > 1) | F.col("__ls_file").isNotNull())
+        .select("__ls_file", (F.col("__n") > 1).alias("__dup"))
         .distinct()
         .collect()
-    ]
-    affected = [base_map[b] for b in hit_names]
+    )
+    if any(r["__dup"] for r in touched):
+        raise ValueError(
+            "MERGE source has duplicate rows per key — each target row "
+            "must match at most one source row"
+        )
+    base_map = {f.rsplit("/", 1)[-1]: f for f in _live}
+    affected = sorted({base_map[r["__ls_file"]] for r in touched if r["__ls_file"]})
     rt = _rt_enabled(meta)
     pieces: list[DataFrame] = []
     if affected:
@@ -6025,8 +6326,10 @@ def delta_merge(
             .withColumn(
                 "__upd", F.col("__matched") & ~del_pred & upd_pred
             )
-            .localCheckpoint(eager=False)  # survivors + 3 CDC consumers
         )
+        if _cdf_enabled(meta):
+            # the survivors and the three change-image consumers
+            flagged = _checkpoint(flagged, eager=False)
         merged_all = flagged.select(
             *[
                 F.when(
@@ -6050,8 +6353,11 @@ def delta_merge(
         pieces.append(merged)
     id_action = None
     if insert_unmatched:
-        target_keys = scan.select(*on).distinct()
-        inserts = src.join(target_keys, on=on, how="left_anti").select(
+        inserts = (
+            src.join(sub.select(*on), on=on, how="left_anti")
+            if affected
+            else src
+        ).select(
             *[
                 F.col(c).cast(schema[c].dataType).alias(c)
                 if c in src.columns
@@ -6136,7 +6442,22 @@ def delta_merge(
         # rt_action is built from the id_action-advanced meta, so
         # ordering it AFTER id_action keeps the fold's last-metaData-
         # wins semantics consistent for both watermarks
-        extra_actions=[_commit_info("MERGE")]
+        extra_actions=[
+            _commit_info(
+                "MERGE",
+                {
+                    "numTargetFilesAdded": len(adds),
+                    "numTargetFilesRemoved": len(affected),
+                    "numTargetBytesAdded": sum(a["add"]["size"] for a in adds),
+                    "numTargetBytesRemoved": sum(
+                        int(_live[f].get("size", 0)) for f in affected
+                    ),
+                    "numOutputRows": _num_records(adds),
+                    "numTargetChangeFilesAdded": len(cdc),
+                    "executionTimeMs": _elapsed_ms(t0),
+                },
+            )
+        ]
         + ([{"txn": {"appId": txn[0], "version": int(txn[1])}}] if txn else [])
         # evolution first: id/rt metaData actions were built FROM the
         # evolved meta, so last-metaData-wins stays consistent
@@ -6211,18 +6532,8 @@ def _dv_anti_filter(
         return df
     parts = []
     if native_pairs:
-        dv_units = sorted({p for _, p in native_pairs})
-        valid = [f"{p.rsplit('/', 1)[-1]}||{b}" for b, p in native_pairs]
         parts.append(
-            spark.read.parquet(*[_data_uri(path, u) for u in dv_units])
-            .withColumn(
-                "__dv_unit",
-                F.element_at(F.split(F.col("_metadata.file_path"), "/"), -2),
-            )
-            .where(
-                F.concat_ws("||", F.col("__dv_unit"), F.col("file")).isin(valid)
-            )
-            .select(
+            _native_dv_rows(spark, path, native_pairs).select(
                 F.col("file").alias("__del_file"),
                 F.col("row_index").alias("__del_row"),
             )
@@ -6241,6 +6552,29 @@ def _dv_anti_filter(
         (df["__dv_file"] == dv["__del_file"])
         & (df["__dv_row"] == dv["__del_row"]),
         "left_anti",
+    )
+
+
+def _native_dv_rows(
+    spark: SparkSession, path: str, pairs: list[tuple[str, str]]
+) -> DataFrame:
+    """The (file, row_index) rows of NATIVE DV storage units for exactly
+    the (data-file basename, unit path) ``pairs`` live descriptors name —
+    entries for files whose DV was superseded by a later merge, or that
+    were rewritten since, can never leak in. Read with the units'
+    declared schema: no schema-inference job."""
+    valid = [f"{u.rsplit('/', 1)[-1]}||{b}" for b, u in pairs]
+    return (
+        spark.read.schema("file string, row_index long")
+        .parquet(*[_data_uri(path, u) for u in sorted({u for _, u in pairs})])
+        .where(
+            F.concat_ws(
+                "||",
+                F.element_at(F.split(F.col("_metadata.file_path"), "/"), -2),
+                F.col("file"),
+            ).isin(valid)
+        )
+        .select("file", "row_index")
     )
 
 
@@ -6280,9 +6614,9 @@ def _dv_mask_and_commit(
     proto: dict | None,
     meta: dict,
     live: dict[str, dict],
-    base_map: dict[str, str],
     hits: DataFrame,
     op: str,
+    t0: float,
     extra_adds: list[dict] | None = None,
     cdf_df: DataFrame | None = None,
     extra_actions: list[dict] | None = None,
@@ -6296,6 +6630,12 @@ def _dv_mask_and_commit(
     with ``extra_adds`` (an UPDATE's replacement rows) and the CDF
     images. OCC re-validation is action-equality (``expected``).
 
+    ``hits`` is the caller's checkpoint of the matched rows (carrying
+    ``__dv_file``/``__dv_row``, DVs already applied): one
+    ``groupBy(file).count()`` over it gives both the hit files and each
+    file's new cardinality — the prior descriptor's ``cardinality`` plus
+    the new hits, the two sets being disjoint.
+
     ``wire_format``: "native" (default) stores the DV as a parquet row
     set under ``_deletion_vectors/`` — the distributed-anti-join layout;
     "standard" emits the PROTOCOL.md wire format (one
@@ -6305,54 +6645,46 @@ def _dv_mask_and_commit(
     encode collects the merged positions driver-side (O(deleted rows),
     the same bound as the foreign decode path); tables with huge delete
     masses should keep the native layout or OPTIMIZE the DVs away."""
-    # materialize the hit positions once (executor-local): the affected-
-    # file listing, the DV merge, the cardinality agg and the DV write
-    # all consume them, and the snapshot scan must run exactly once
     new_rows = hits.select(
         F.col("__dv_file").alias("file"), F.col("__dv_row").alias("row_index")
-    ).localCheckpoint()
-    hit_files = [
-        r["file"] for r in new_rows.select("file").distinct().collect()
-    ]
-    if not hit_files:
+    )
+    new_card = {
+        r["file"]: r["n"]
+        for r in new_rows.groupBy("file")
+        .agg(F.count(F.lit(1)).alias("n"))
+        .collect()
+    }
+    if not new_card:
         return read_version
-    # merge with the affected files' existing DV rows (restricted to the
-    # exact live (unit, file) descriptor pairs, as in _dv_anti_filter)
-    prior = [
-        (b, live[base_map[b]]["deletionVector"])
-        for b in hit_files
+    base_map = {f.rsplit("/", 1)[-1]: f for f in live}
+    prior = {
+        b: live[base_map[b]]["deletionVector"]
+        for b in new_card
         if live[base_map[b]].get("deletionVector")
-    ]
+    }
+    card = {
+        b: n + int(prior[b]["cardinality"]) if b in prior else n
+        for b, n in new_card.items()
+    }
+    # merge with the affected files' existing DV rows
     merged = new_rows
-    native_prior = [
-        (b, d) for b, d in prior if _DV_DIR in (d.get("pathOrInlineDv") or "")
-    ]
-    foreign_prior = [(b, d) for b, d in prior if (b, d) not in native_prior]
+    native_prior = {
+        b: d["pathOrInlineDv"]
+        for b, d in prior.items()
+        if _DV_DIR in (d.get("pathOrInlineDv") or "")
+    }
     if native_prior:
-        units = sorted({d["pathOrInlineDv"] for _, d in native_prior})
-        valid = [
-            f"{d['pathOrInlineDv'].rsplit('/', 1)[-1]}||{b}"
-            for b, d in native_prior
-        ]
-        old = (
-            spark.read.parquet(*[_data_uri(path, u) for u in units])
-            .withColumn(
-                "__dv_unit",
-                F.element_at(F.split(F.col("_metadata.file_path"), "/"), -2),
-            )
-            .where(
-                F.concat_ws("||", F.col("__dv_unit"), F.col("file")).isin(valid)
-            )
-            .select("file", "row_index")
+        merged = merged.unionByName(
+            _native_dv_rows(spark, path, list(native_prior.items()))
         )
-        merged = merged.unionByName(old)
+    foreign_prior = {b: d for b, d in prior.items() if b not in native_prior}
     if foreign_prior:
         # prior descriptors in the protocol wire format (a foreign table
         # we now write to, or our own standard-format commits)
         from .dv_codec import decode_descriptor_rows
 
         rows: list[tuple[str, int]] = []
-        for b, d in foreign_prior:
+        for b, d in foreign_prior.items():
             rows.extend(
                 (b, r)
                 for r in decode_descriptor_rows(
@@ -6371,7 +6703,6 @@ def _dv_mask_and_commit(
         by_file: dict[str, set[int]] = {}
         for r in merged.collect():  # O(deleted rows) — see docstring
             by_file.setdefault(r["file"], set()).add(int(r["row_index"]))
-        card = {b: len(v) for b, v in by_file.items()}
         bitmaps = {
             b: roaring_array_encode(sorted(v)) for b, v in by_file.items()
         }
@@ -6393,19 +6724,13 @@ def _dv_mask_and_commit(
             for i, b in enumerate(sorted(bitmaps))
         }
     elif wire_format == "native":
-        card = {
-            r["file"]: r["n"]
-            for r in merged.groupBy("file")
-            .agg(F.count(F.lit(1)).alias("n"))
-            .collect()
-        }
         dv_rel = f"{_DV_DIR}/dv-{uuid.uuid4().hex}"
         merged.write.parquet(f"{path}/{dv_rel}")
         descriptors = {
             b: {
                 "storageType": "u",
                 "pathOrInlineDv": dv_rel,
-                "cardinality": int(card[b]),
+                "cardinality": card[b],
             }
             for b in card
         }
@@ -6426,37 +6751,51 @@ def _dv_mask_and_commit(
         new_add["deletionVector"] = descriptors[b]
         new_add["dataChange"] = True
         adds_out.append({"add": new_add})
-    extra: list[dict] = [_commit_info(op)]
+    readded = {a["add"]["path"].rsplit("/", 1)[-1] for a in adds_out}
+    cdc = _stage_change_files(cdf_df, path) if cdf_df is not None else []
+    hit_rows = "numDeletedRows" if op == "DELETE" else "numUpdatedRows"
+    metrics = {
+        "numRemovedFiles": len(card) - len(readded),
+        "numAddedFiles": len(extra_adds or []),
+        hit_rows: sum(new_card.values()),
+        "numCopiedRows": 0,
+        "numDeletionVectorsAdded": len(readded - set(prior)),
+        "numDeletionVectorsUpdated": len(readded & set(prior)),
+        "numDeletionVectorsRemoved": len(set(prior) - readded),
+        "numAddedChangeFiles": len(cdc),
+        "executionTimeMs": _elapsed_ms(t0),
+    }
+    extra: list[dict] = [_commit_info(op, metrics)]
     upgrade = _dv_protocol_upgrade(proto)
     if upgrade is not None:
         extra.append(upgrade)
     extra += list(extra_actions or [])
-    if cdf_df is not None:
-        extra += _stage_change_files(cdf_df, path)
     return _commit_rewrite(
         spark,
         path,
         read_version,
         sorted(affected),
         adds_out + list(extra_adds or []),
-        extra_actions=extra,
+        extra_actions=extra + cdc,
         expected={f: live[f] for f in affected},
         identity_guard=guard,
         meta=meta,
     )
 
 
+@_releases_checkpoints
 def delta_delete_dv(
     spark: SparkSession, path: str, predicate, wire_format: str = "native"
 ) -> int:
     """``DELETE FROM t WHERE predicate`` via deletion vectors
     (merge-on-read), the delta-spark DV write path.
 
-    Plan: ONE snapshot scan (existing DVs applied, so re-deletes and CDF
-    images never resurrect already-deleted rows) evaluates the predicate
-    and emits (file basename, row position) hit pairs; hits are unioned
-    with the affected files' prior DV rows (descriptor merge — per-file
-    DVs are monotone) and written distributed as this commit's single DV
+    Plan: ONE scan of the files the predicate's stats bounds cannot skip
+    (existing DVs applied, so re-deletes and CDF images never resurrect
+    already-deleted rows) evaluates the predicate and checkpoints the
+    (file basename, row position) hit pairs; hits are unioned with the
+    affected files' prior DV rows (descriptor merge — per-file DVs are
+    monotone) and written distributed as this commit's single DV
     storage unit. The commit then re-adds each partially-affected file
     with the new descriptor (remove+add of the SAME path — no data file
     is read or rewritten) and plain-removes files whose DV now covers
@@ -6467,30 +6806,36 @@ def delta_delete_dv(
     Composes with OCC retry (action-equality re-validation via
     ``expected`` — a racing DV update on the same file aborts rather
     than dropping its deletions), CDF (delete images from the same
-    scan), checkpoints (descriptor round-trips through the checkpoint
-    schema), RESTORE, and OPTIMIZE (materializes DVs away)."""
+    checkpoint), checkpoints (descriptor round-trips through the
+    checkpoint schema), RESTORE, and OPTIMIZE (materializes DVs away)."""
+    t0 = time.perf_counter()
     pred = _coerce_predicate(predicate)
     read_version, proto, meta, live, _ = _snapshot_at(spark, path)
     if meta is None:
         raise ValueError(f"no delta table at {path}")
-    if not live:
+    scan = _pruned_scan(
+        spark, path, meta, live, _predicate_bounds(spark, meta, predicate)
+    )
+    if scan is None:
         return read_version
-    base_map = {f.rsplit("/", 1)[-1]: f for f in live}
-    scan = _physical_scan(spark, path, meta, sorted(live), with_position=True)
-    scan = _dv_anti_filter(spark, path, scan, list(live.items()))
-    hits = scan.where(pred)
-    cdf_df = None
-    if _cdf_enabled(meta):
-        cdf_df = hits.select(*[l for _, l in _cm_pairs(meta)]).withColumn(
-            "_change_type", F.lit("delete")
-        )
+    images = [l for _, l in _cm_pairs(meta)] if _cdf_enabled(meta) else []
+    # one computation of the hits feeds the mask aggregate, the DV write
+    # and the change images
+    hits = _checkpoint(
+        scan.where(pred).select(*images, "__dv_file", "__dv_row"), eager=False
+    )
+    cdf_df = (
+        hits.select(*images).withColumn("_change_type", F.lit("delete"))
+        if images
+        else None
+    )
     return _dv_mask_and_commit(
-        spark, path, read_version, proto, meta, live, base_map, hits,
-        "DELETE",
+        spark, path, read_version, proto, meta, live, hits, "DELETE", t0,
         cdf_df=cdf_df, wire_format=wire_format,
     )
 
 
+@_releases_checkpoints
 def delta_update_dv(
     spark: SparkSession,
     path: str,
@@ -6506,6 +6851,7 @@ def delta_update_dv(
     touched file. Assignments follow delta_update semantics (applied
     simultaneously from the preimage, generated columns recomputed,
     identity/generated assignment refused, constraints enforced)."""
+    t0 = time.perf_counter()
     pred = _coerce_predicate(predicate)
     exprs = {
         col: (F.expr(e) if isinstance(e, str) else e)
@@ -6527,20 +6873,20 @@ def delta_update_dv(
         raise ValueError(
             f"cannot UPDATE generated/identity columns {sorted(blocked)}"
         )
-    base_map = {f.rsplit("/", 1)[-1]: f for f in live}
     rt = _rt_enabled(meta)
-    scan = _physical_scan(
+    scan = _pruned_scan(
         spark,
         path,
         meta,
-        sorted(live),
-        with_position=True,
+        live,
+        _predicate_bounds(spark, meta, predicate),
         with_row_col=rt,
     )
-    scan = _dv_anti_filter(spark, path, scan, list(live.items()))
+    if scan is None:
+        return read_version
     # one materialization feeds the DV mask, the replacement staging,
     # and the CDF images
-    hits = scan.where(pred).localCheckpoint()
+    hits = _checkpoint(scan.where(pred))
     # row-tracked tables: the replacement rows are the SAME logical rows
     # — materialize their current ids so the masked positions' identity
     # migrates to the appended post-image files
@@ -6573,8 +6919,7 @@ def delta_update_dv(
         )
         cdf_df = pre.unionByName(post)
     return _dv_mask_and_commit(
-        spark, path, read_version, proto, meta, live, base_map, hits,
-        "UPDATE",
+        spark, path, read_version, proto, meta, live, hits, "UPDATE", t0,
         extra_adds=extra_adds, cdf_df=cdf_df,
         extra_actions=[rt_action] if rt_action else None,
         guard=rt_action is not None, wire_format=wire_format,

@@ -4084,3 +4084,321 @@ def test_checkpoint_layouts_restate_the_snapshot(spark, layout):
     assert len(files) == (1 if not layout else 4)
     assert lc["version"] == v
     assert lc["size"] == sum(pq.read_metadata(f).num_rows for f in files)
+
+
+# --- DML file skipping -------------------------------------------------------
+# Every DML op scans only the files whose min/max stats can hold a row it
+# changes. Each case runs the op on a stats-carrying table and on a copy
+# whose adds carry no stats (nothing can be skipped there): the tables and
+# the op's change images must come out the same.
+
+
+def _skip_rows(spark, start: int, end: int, parts: int = 1):
+    return spark.range(start, end, 1, parts).select(
+        F.col("id").alias("k"),
+        (F.col("id") % 10).alias("v"),
+        (F.col("id") / 4).alias("x"),
+    )
+
+
+def _skip_table(spark, configuration=None, stats_cols=("k",)) -> str:
+    """Five files of k = 0-19, 20-39, ..., 80-99, with CDF on."""
+    path = tempfile.mkdtemp(prefix="ls_dl_skip_")
+    delta_write(
+        _skip_rows(spark, 0, 100, 5),
+        path,
+        stats_cols=list(stats_cols) or None,
+        configuration={"delta.enableChangeDataFeed": "true", **(configuration or {})},
+    )
+    return path
+
+
+def _without_stats(path: str) -> str:
+    """A copy of the table at ``path`` whose adds carry no stats."""
+    import os
+    import shutil
+
+    dst = tempfile.mkdtemp(prefix="ls_dl_nostats_")
+    shutil.copytree(path, dst, dirs_exist_ok=True)
+    for f in glob.glob(f"{dst}/_delta_log/.*.crc"):
+        os.remove(f)  # Hadoop's checksum of the log file rewritten below
+    for f in glob.glob(f"{dst}/_delta_log/*.json"):
+        actions = [json.loads(line) for line in open(f)]
+        for a in actions:
+            if "add" in a:
+                a["add"].pop("stats", None)
+        with open(f, "w") as out:
+            out.writelines(json.dumps(a) + "\n" for a in actions)
+    return dst
+
+
+def _rows(df) -> list[str]:
+    # repr: NaN == NaN, where tuple comparison says NaN != NaN
+    return sorted(repr(tuple(r)) for r in df.collect())
+
+
+def _assert_same_outcome(spark, path: str, op) -> None:
+    """``op(path)`` on the table and on its stats-free copy: same rows,
+    and the same change images when the op committed."""
+    from lakesail_hdfs_deltalake_guide_spark.sources.delta_log import (
+        delta_read_cdf,
+    )
+
+    bare = _without_stats(path)
+    v_skip, v_bare = op(path), op(bare)
+    assert v_skip == v_bare
+    assert _rows(delta_read(spark, path)) == _rows(delta_read(spark, bare))
+    if v_skip > 0:
+        assert _rows(delta_read_cdf(spark, path, v_skip, v_skip)) == _rows(
+            delta_read_cdf(spark, bare, v_skip, v_skip)
+        )
+
+
+def _predicate_op(name: str, pred):
+    from lakesail_hdfs_deltalake_guide_spark.sources import delta_log as dl
+
+    def op(spark, p):
+        if name == "delete":
+            return dl.delta_delete(spark, p, pred)
+        if name == "delete_dv":
+            return dl.delta_delete_dv(spark, p, pred)
+        if name == "update":
+            return dl.delta_update(spark, p, pred, {"v": "v + 100"})
+        return dl.delta_update_dv(spark, p, pred, {"v": "v + 100"})
+
+    return op
+
+
+_SKIP_PREDICATES = {
+    "or": "k < 5 or k > 95",
+    "mod": "k % 7 = 0",
+    "reversed": "50 < k and 60 >= k",
+    "null_const": "k > null",
+    "between_in": "k between 10 and 30 and k in (12, 17, 29, 300)",
+    # a Column needs the session: built when the test runs
+    "column_between": lambda: F.col("k").between(41, 58),
+}
+
+
+def _skip_predicate(shape: str):
+    pred = _SKIP_PREDICATES[shape]
+    return pred() if callable(pred) else pred
+
+
+@pytest.mark.parametrize("shape", sorted(_SKIP_PREDICATES))
+@pytest.mark.parametrize("name", ["delete", "delete_dv", "update", "update_dv"])
+def test_dml_skipping_matches_unskipped_predicates(spark, name, shape):
+    op = _predicate_op(name, _skip_predicate(shape))
+    _assert_same_outcome(spark, _skip_table(spark), lambda p: op(spark, p))
+
+
+def test_dml_skipping_bounds_of_predicates(spark):
+    """The bounds each predicate shape implies (integral columns only;
+    OR, ``%``, float columns and NULL constants add none)."""
+    from lakesail_hdfs_deltalake_guide_spark.sources import delta_log as dl
+
+    meta = dl.delta_metadata(spark, _skip_table(spark))
+    got = {
+        s: dl._predicate_bounds(spark, meta, _skip_predicate(s))
+        for s in _SKIP_PREDICATES
+    }
+    assert got == {
+        "or": {},
+        "mod": {},
+        "reversed": {"k": (51, 60)},
+        "null_const": {},
+        "between_in": {"k": (12, 30)},
+        "column_between": {"k": (41, 58)},
+    }
+    assert dl._predicate_bounds(spark, meta, "x > 5 and k <=> 7") == {"k": (7, 7)}
+    assert dl._predicate_bounds(spark, meta, "no_such_column > 1") == {}
+
+
+def test_dml_skipping_keeps_files_without_stats(spark):
+    """Files appended without min/max stats are always scanned."""
+    from lakesail_hdfs_deltalake_guide_spark.sources.delta_log import (
+        delta_delete_dv,
+    )
+
+    path = _skip_table(spark)
+    delta_write(_skip_rows(spark, 100, 130), path, mode="append")
+    _assert_same_outcome(
+        spark, path, lambda p: delta_delete_dv(spark, p, "k between 90 and 120")
+    )
+    assert delta_read(spark, path).where("k between 90 and 120").count() == 0
+
+
+@pytest.mark.parametrize("name", ["delete", "delete_dv", "update_dv"])
+def test_dml_skipping_on_column_mapped_table(spark, name):
+    op = _predicate_op(name, "k >= 20 and k < 35")
+    path = _skip_table(spark, {"delta.columnMapping.mode": "name"})
+    _assert_same_outcome(spark, path, lambda p: op(spark, p))
+
+
+@pytest.mark.parametrize("name", ["delete", "delete_dv"])
+def test_dml_skipping_never_prunes_nan_floats(spark, name):
+    """Spark orders NaN above every value, parquet min/max omit NaN:
+    ``x > 5`` must still delete the NaN rows."""
+    path = tempfile.mkdtemp(prefix="ls_dl_skip_nan_")
+    df = spark.createDataFrame(
+        [(i, float("nan") if i % 10 == 0 else float(i % 5)) for i in range(50)],
+        "k long, x double",
+    )
+    delta_write(
+        df.repartitionByRange(5, "k"),
+        path,
+        stats_cols=["k", "x"],
+        configuration={"delta.enableChangeDataFeed": "true"},
+    )
+    op = _predicate_op(name, "x > 5")
+    _assert_same_outcome(spark, path, lambda p: op(spark, p))
+    assert delta_read(spark, path).count() == 45
+
+
+def test_merge_skipping_outside_target_scans_no_file(spark, monkeypatch):
+    """Source keys beyond every file's stats: zero files scanned, the
+    MERGE is a pure insert."""
+    from lakesail_hdfs_deltalake_guide_spark.sources import delta_log as dl
+
+    path = _skip_table(spark)
+    src = spark.createDataFrame(
+        [(k, -1, 0.5) for k in range(1000, 1050)], "k long, v long, x double"
+    )
+    scanned: dict[str, list] = {}
+    real = dl._physical_scan
+
+    def spy(spark_, path_, meta, files, **kw):
+        scanned.setdefault(path_, []).extend(files)
+        return real(spark_, path_, meta, files, **kw)
+
+    def merge(p):
+        monkeypatch.setattr(dl, "_physical_scan", spy)
+        try:
+            return dl.delta_merge(spark, p, src, on=["k"])
+        finally:
+            monkeypatch.setattr(dl, "_physical_scan", real)
+
+    _assert_same_outcome(spark, path, merge)
+    assert path not in scanned
+    assert len(scanned.popitem()[1]) == 5  # the stats-free copy scans all
+    assert delta_read(spark, path).count() == 150
+    metrics = dl.delta_history(spark, path)[0]["operationMetrics"]
+    assert metrics["numTargetFilesRemoved"] == "0"
+    assert metrics["numOutputRows"] == "50"
+
+
+@pytest.mark.parametrize("keys", ["some_null", "all_null"])
+def test_merge_skipping_with_null_source_keys(spark, keys):
+    """A NULL key matches nothing and inserts as a new row."""
+    from lakesail_hdfs_deltalake_guide_spark.sources.delta_log import (
+        delta_merge,
+    )
+
+    rows = [(None, -1, 0.5)]
+    if keys == "some_null":
+        rows += [(k, -3, 0.5) for k in (3, 61, 500)]
+    src = spark.createDataFrame(rows, "k long, v long, x double")
+    path = _skip_table(spark)
+    _assert_same_outcome(spark, path, lambda p: delta_merge(spark, p, src, on=["k"]))
+    assert delta_read(spark, path).where("k is null").count() == 1
+
+
+@pytest.mark.parametrize("name", ["delete", "delete_dv"])
+def test_dml_skipping_with_append_racing_into_range(spark, arm_read_race, name):
+    """An append that lands inside the skipped-to range after the op's
+    read commits alongside it, exactly as without skipping."""
+    op = _predicate_op(name, "k between 40 and 59")
+    race = _skip_rows(spark, 45, 60).where("k % 5 = 0")
+
+    def raced_op(p):
+        arm_read_race(lambda q: delta_write(race, q, mode="append", stats_cols=["k"]))
+        return op(spark, p)
+
+    path = _skip_table(spark)
+    _assert_same_outcome(spark, path, raced_op)
+    assert delta_read(spark, path).where("k between 40 and 59").count() == 3
+
+
+def test_dml_releases_its_checkpoints(spark):
+    """MERGE and the deletion-vector ops leave no persisted RDD behind,
+    whether they commit or raise."""
+    from lakesail_hdfs_deltalake_guide_spark.sources import delta_log as dl
+
+    jsc = spark.sparkContext._jsc  # noqa: SLF001
+    path = _skip_table(spark)
+    src = spark.createDataFrame(
+        [(k, -1, 0.5) for k in range(90, 110)], "k long, v long, x double"
+    )
+    dup = src.unionByName(src)
+    ops = [
+        lambda: dl.delta_merge(spark, path, src, on=["k"]),
+        lambda: dl.delta_delete_dv(spark, path, "k between 10 and 20"),
+        lambda: dl.delta_update_dv(spark, path, "k between 30 and 35", {"v": "0"}),
+    ]
+    for op in ops:
+        before = jsc.getPersistentRDDs().size()
+        op()
+        assert jsc.getPersistentRDDs().size() == before
+    before = jsc.getPersistentRDDs().size()
+    with pytest.raises(ValueError, match="duplicate"):
+        dl.delta_merge(spark, path, dup, on=["k"])
+    assert jsc.getPersistentRDDs().size() == before
+
+
+def test_dml_commits_carry_operation_metrics(spark):
+    """MERGE, DELETE, UPDATE and their deletion-vector forms stamp
+    delta-spark-named operationMetrics; DESCRIBE HISTORY returns them."""
+    from lakesail_hdfs_deltalake_guide_spark.sources import delta_log as dl
+
+    path = _skip_table(spark)  # 5 files of 20 rows: k 0-19, 20-39, ...
+    src = spark.createDataFrame(
+        [(k, -1, 0.5) for k in range(95, 105)], "k long, v long, x double"
+    )
+    dl.delta_merge(spark, path, src, on=["k"])  # v1: file 80-99 + 5 inserts
+    dl.delta_delete(spark, path, "k < 5")  # v2
+    dl.delta_update(spark, path, "k = 25", {"v": "0"})  # v3
+    dl.delta_delete_dv(spark, path, "k between 40 and 44")  # v4
+    dl.delta_update_dv(spark, path, "k between 60 and 79", {"v": "1"})  # v5
+    hist = {h["version"]: h for h in dl.delta_history(spark, path)}
+    assert hist[0]["operationMetrics"] is None
+
+    def m(v):
+        got = dict(hist[v]["operationMetrics"])
+        assert int(got.pop("executionTimeMs")) >= 0
+        # every op wrote change files; how many follows Spark's partitioning
+        change_files = "numTargetChangeFilesAdded" if v == 1 else "numAddedChangeFiles"
+        assert int(got.pop(change_files)) > 0
+        return got
+
+    assert hist[1]["operation"] == "MERGE"
+    merge = m(1)
+    for key in ("numTargetBytesAdded", "numTargetBytesRemoved", "numTargetFilesAdded"):
+        assert int(merge.pop(key)) > 0
+    assert merge == {"numTargetFilesRemoved": "1", "numOutputRows": "25"}
+    assert m(2) == {
+        "numRemovedFiles": "1",
+        "numAddedFiles": "1",
+        "numCopiedRows": "15",
+        "numDeletedRows": "5",
+    }
+    assert m(3) == {"numRemovedFiles": "1", "numAddedFiles": "1"}
+    dv_common = {
+        "numCopiedRows": "0",
+        "numDeletionVectorsUpdated": "0",
+        "numDeletionVectorsRemoved": "0",
+    }
+    assert m(4) == {
+        **dv_common,
+        "numRemovedFiles": "0",
+        "numAddedFiles": "0",
+        "numDeletedRows": "5",
+        "numDeletionVectorsAdded": "1",
+    }
+    # the whole 60-79 file is masked: a plain remove, no descriptor
+    assert m(5) == {
+        **dv_common,
+        "numRemovedFiles": "1",
+        "numAddedFiles": "1",
+        "numUpdatedRows": "20",
+        "numDeletionVectorsAdded": "0",
+    }

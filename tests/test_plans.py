@@ -361,6 +361,65 @@ def test_merge_discovery_prunes_to_key_columns(spark, sf_smoke):
     assert not {"c_name", "c_acctbal", "c_mktsegment"} & cols, cols
 
 
+def test_dml_reads_only_unskippable_files_in_few_jobs(spark):
+    """Warm MERGE of 1000 rows and a 0.5 % deletion-vector delete on a
+    40-file table with key stats scan only the files those stats cannot
+    skip: each op runs in a handful of Spark jobs, none of them the
+    parallel file listing ``spark.read.parquet`` starts above 32 paths.
+    The MERGE source is built from pandas through Arrow, as in the
+    ``delta_rw`` benchmark, so the planner knows its size."""
+    import tempfile
+    import uuid
+
+    import pandas as pd
+
+    from lakesail_hdfs_deltalake_guide_spark.sources.delta_log import (
+        delta_delete_dv,
+        delta_merge,
+        delta_write,
+    )
+
+    sc = spark.sparkContext
+    store = sc._jsc.sc().statusStore()  # noqa: SLF001
+
+    def jobs(op) -> tuple[list, int]:
+        """(names of the jobs ``op()`` starts, how many list files)."""
+        group = f"plan-dml-{uuid.uuid4().hex}"
+        sc.setJobGroup(group, "dml")
+        try:
+            op()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        ids = sc.statusTracker().getJobIdsForGroup(group)
+        listing = [
+            j
+            for j in ids
+            if "Listing leaf files" in str(store.job(j).description())
+        ]
+        return [store.job(j).name() for j in sorted(ids)], len(listing)
+
+    path = tempfile.mkdtemp(prefix="ls_plan_dml_jobs_")
+    table = spark.range(0, 40_000, 1, 40).select(
+        F.col("id").alias("k"), (F.col("id") % 1000).alias("v")
+    )
+    delta_write(table, path, stats_cols=["k"])
+
+    def merge(lo: int):
+        keys = range(lo, lo + 1000)
+        src = spark.createDataFrame(pd.DataFrame({"k": keys, "v": -1}))
+        return lambda: delta_merge(spark, path, src, on=["k"])
+
+    def delete_dv(lo: int, hi: int):
+        return lambda: delta_delete_dv(spark, path, F.col("k").between(lo, hi))
+
+    jobs(merge(39_500))  # warm-up: half updates, half inserts
+    names, listing = jobs(merge(40_100))
+    assert len(names) <= 9 and listing == 0, "\n".join(names)
+    jobs(delete_dv(1_000, 1_099))  # gives the next delete a prior DV
+    names, listing = jobs(delete_dv(1_050, 1_249))
+    assert len(names) <= 5 and listing == 0, "\n".join(names)
+
+
 def test_domain_filter_aggregates_before_global_window(spark, sf_smoke):
     """clean_domain_filter's corpus pass is ONE exchange (groupBy on the
     canonical domain); the global-total window runs on the per-domain
