@@ -431,8 +431,20 @@ def minhash_candidate_pairs(corpus: DataFrame) -> DataFrame:
         "doc_id",
         F.explode(band_keys(F.col("sig"), NUM_BANDS, ROWS_PER_BAND)).alias("band"),
     ).select("doc_id", "band.band_id", "band.band_hash")
-    left = bands.alias("a")
-    right = bands.alias("b")
+    return _lsh_verify(bands, bands, sigs, sigs)
+
+
+def _lsh_verify(
+    bands_a: DataFrame, bands_b: DataFrame, sigs_a: DataFrame, sigs_b: DataFrame
+) -> DataFrame:
+    """(doc_a, doc_b, est_jaccard) for every pair sharing a band key, doc_a
+    from ``bands_a`` below doc_b from ``bands_b`` (rows of doc_id, band_id,
+    band_hash); the estimate compares their signatures from ``sigs_a`` and
+    ``sigs_b`` (doc_id, sig). A self-join passes the same frames twice; the
+    incremental curation pipeline passes history ∪ increment as the a side
+    and the increment alone as the b side."""
+    left = bands_a.alias("a")
+    right = bands_b.alias("b")
     pairs = (
         left.join(
             right,
@@ -446,8 +458,8 @@ def minhash_candidate_pairs(corpus: DataFrame) -> DataFrame:
     )
     # Verify candidates with the MinHash-estimated Jaccard (sketch-only).
     return (
-        pairs.join(sigs.withColumnRenamed("doc_id", "doc_a").withColumnRenamed("sig", "sig_a"), "doc_a")
-        .join(sigs.withColumnRenamed("doc_id", "doc_b").withColumnRenamed("sig", "sig_b"), "doc_b")
+        pairs.join(sigs_a.withColumnRenamed("doc_id", "doc_a").withColumnRenamed("sig", "sig_a"), "doc_a")
+        .join(sigs_b.withColumnRenamed("doc_id", "doc_b").withColumnRenamed("sig", "sig_b"), "doc_b")
         .select(
             "doc_a",
             "doc_b",
@@ -864,6 +876,41 @@ _SQL_8GRAMS = (
 
 # --- X1c: n-gram-level benchmark decontamination -----------------------------
 CONTAM_K = 13
+CURATION_BENCH_DOCS = 20  # doc_id < 20 = held-out benchmark stand-in
+
+
+def _contam_grams(docs: DataFrame) -> DataFrame:
+    """(doc_id, gram): the distinct token 13-grams of each doc of at
+    least 13 tokens."""
+    toks = F.split(F.col("text"), " ")
+    grams = F.transform(
+        F.sequence(F.lit(0), F.size(toks) - CONTAM_K),
+        lambda i: F.array_join(F.slice(toks, i + 1, CONTAM_K), " "),
+    )
+    return docs.where(F.size(toks) >= CONTAM_K).select(
+        "doc_id", F.explode(F.array_distinct(grams)).alias("gram")
+    )
+
+
+def _bench_grams(docs: DataFrame) -> DataFrame:
+    """The benchmark gram set: the 13-grams of the docs below
+    CURATION_BENCH_DOCS."""
+    return (
+        _contam_grams(docs.where(F.col("doc_id") < CURATION_BENCH_DOCS))
+        .select("gram")
+        .distinct()
+    )
+
+
+def _contaminated_ids(bench: DataFrame, docs: DataFrame) -> DataFrame:
+    """Doc ids of ``docs`` sharing any 13-gram with the ``bench`` gram
+    set (broadcast semi-join)."""
+    return (
+        _contam_grams(docs)
+        .join(F.broadcast(bench), "gram", "left_semi")
+        .select("doc_id")
+        .distinct()
+    )
 
 
 def dedup_ngram_contamination(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -877,29 +924,12 @@ def dedup_ngram_contamination(spark: SparkSession, sf_dir: str) -> DataFrame:
     partition."""
     # gram explosion is the CPU-heavy pass; spread the under-split fixture
     d = _sketch_parallel(load_table(spark, sf_dir, "documents"))
-    toks = F.split(F.col("text"), " ")
-    grams = F.transform(
-        F.sequence(F.lit(0), F.size(toks) - CONTAM_K),
-        lambda i: F.array_join(F.slice(toks, i + 1, CONTAM_K), " "),
-    )
-    long_enough = F.size(toks) >= CONTAM_K
-    bench = (
-        d.where((F.col("doc_id") < 20) & long_enough)
-        .select(F.explode(F.array_distinct(grams)).alias("gram"))
-        .distinct()
-    )
-    train_grams = d.where((F.col("doc_id") >= 20) & long_enough).select(
-        "doc_id", F.explode(F.array_distinct(grams)).alias("gram")
-    )
-    contaminated = (
-        train_grams.join(F.broadcast(bench), "gram", "left_semi")
-        .select("doc_id")
-        .distinct()
-        .withColumn("hit", F.lit(1))
+    train = d.where(F.col("doc_id") >= CURATION_BENCH_DOCS)
+    contaminated = _contaminated_ids(_bench_grams(d), train).withColumn(
+        "hit", F.lit(1)
     )
     return (
-        d.where(F.col("doc_id") >= 20)
-        .select("doc_id", "lang")
+        train.select("doc_id", "lang")
         .join(contaminated, "doc_id", "left")
         .groupBy("lang")
         .agg(

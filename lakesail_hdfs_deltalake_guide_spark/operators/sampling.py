@@ -217,39 +217,47 @@ def sample_temperature_mix(spark: SparkSession, sf_dir: str) -> DataFrame:
     per_source_topk)."""
     d = load_table(spark, sf_dir, "documents")
     per_src = d.groupBy("source").agg(F.count(F.lit(1)).alias("n_docs"))
-    w = per_src.select(
-        "source",
-        "n_docs",
-        F.floor(F.sqrt(F.col("n_docs"))).cast("long").alias("weight"),
-    )
-    B = MIX_TEMP_BUDGET
-    x = w.select(
+    return _temperature_alloc(per_src, F.lit(MIX_TEMP_BUDGET)).select(
         "source",
         "n_docs",
         "weight",
-        F.expr("weight * 1000000 div sum(weight) over ()").alias("share_ppm"),
-        F.expr(f"weight * {B} div sum(weight) over ()").alias("base"),
-        F.expr(f"(weight * {B}) % sum(weight) over ()").alias("rem"),
+        "share_ppm",
+        F.col("alloc").cast("long").alias("alloc_docs"),
+    ).orderBy("source")
+
+
+def _temperature_alloc(per_src: DataFrame, budget: Column) -> DataFrame:
+    """``per_src`` (one row per ``source`` with its ``n_docs``) plus the
+    T=2 weight ``weight = isqrt(n_docs)``, its ``share_ppm``, and
+    ``alloc``: the Hamilton apportionment of ``budget`` documents over
+    the weights, ties on (remainder desc, source). ``budget`` may be a
+    window over ``per_src``, such as a share of its total."""
+    x = per_src.select(
+        "*",
+        F.floor(F.sqrt(F.col("n_docs"))).cast("long").alias("weight"),
+        budget.alias("budget"),
     )
-    r = x.select(
+    y = x.select(
+        "*",
+        F.expr("weight * 1000000 div sum(weight) over ()").alias("share_ppm"),
+        F.expr("weight * budget div sum(weight) over ()").alias("base"),
+        F.expr("(weight * budget) % sum(weight) over ()").alias("rem"),
+    )
+    r = y.select(
         "*",
         F.expr("row_number() over (order by rem desc, source)").alias("rk"),
-        F.expr(f"{B} - sum(base) over ()").alias("deficit"),
+        F.expr("budget - sum(base) over ()").alias("deficit"),
     )
-    return (
-        r.select(
-            "source",
-            "n_docs",
-            "weight",
-            "share_ppm",
-            (
-                F.col("base")
-                + F.when(F.col("rk") <= F.col("deficit"), F.lit(1)).otherwise(
-                    F.lit(0)
-                )
-            ).cast("long").alias("alloc_docs"),
-        )
-        .orderBy("source")
+    return r.select(
+        *per_src.columns,
+        "weight",
+        "share_ppm",
+        (
+            F.col("base")
+            + F.when(F.col("rk") <= F.col("deficit"), F.lit(1)).otherwise(
+                F.lit(0)
+            )
+        ).alias("alloc"),
     )
 
 

@@ -27,12 +27,12 @@ from lakesail_hdfs_deltalake_guide_spark.operators.cleaning import (
 )
 from lakesail_hdfs_deltalake_guide_spark.operators.dedup import (
     CONTAM_K,
+    CURATION_BENCH_DOCS,
     NUM_BANDS,
     NUM_PERM,
     ROWS_PER_BAND,
 )
 from lakesail_hdfs_deltalake_guide_spark.pipelines import (
-    CURATION_BENCH_DOCS,
     CURATION_MIX_DEN,
     CURATION_MIX_NUM,
     CURATION_SHINGLE_K,
@@ -262,7 +262,9 @@ def _interleave(grams: list[list[str]], fillers: list[str]) -> str:
 def test_quality_gate_matches_reference_on_edge_cases(spark):
     """The per-row stage-1 predicate against the sequential reference on
     documents built to sit on one side of each rule's edge."""
-    from lakesail_hdfs_deltalake_guide_spark.pipelines import _curation_quality_ids
+    from pyspark.sql import functions as F
+
+    from lakesail_hdfs_deltalake_guide_spark.pipelines import _curation_quality_ok
 
     pos = _tokens_by_sign(1, 40)
     neg = _tokens_by_sign(-1, 12)
@@ -302,5 +304,6 @@ def test_quality_gate_matches_reference_on_edge_cases(spark):
         [(i, docs[n][0]) for i, n in enumerate(names)],
         "doc_id long, text string",
     )
-    got = {names[r["doc_id"]] for r in _curation_quality_ids(frame).collect()}
+    passed = frame.where(_curation_quality_ok(F.col("text")))
+    got = {names[r["doc_id"]] for r in passed.collect()}
     assert got == {n for n in names if docs[n][1]}

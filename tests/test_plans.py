@@ -420,6 +420,55 @@ def test_dml_reads_only_unskippable_files_in_few_jobs(spark):
     assert len(names) <= 5 and listing == 0, "\n".join(names)
 
 
+def test_curation_pipelines_run_few_jobs_and_release_checkpoints(
+    spark, sf_smoke, monkeypatch
+):
+    """One call of each curation pipeline runs in few Spark jobs; the
+    batch capstone is one pass of the incremental pipeline's stages, so
+    it takes at most five local checkpoints; and neither leaves an RDD
+    of its own persisted, since its ledger rows are driver-side values.
+    Earlier tests' leftovers may be cleaned during the call, so the
+    check compares RDD ids, not counts."""
+    import uuid
+
+    from pyspark.sql import DataFrame
+
+    from lakesail_hdfs_deltalake_guide_spark.pipelines import (
+        pipeline_curation_e2e,
+        pipeline_curation_incremental,
+    )
+
+    sc = spark.sparkContext
+
+    def persisted() -> set[int]:
+        return set(sc._jsc.getPersistentRDDs().keySet())  # noqa: SLF001
+
+    checkpoints = []
+    local_checkpoint = DataFrame.localCheckpoint
+
+    def counted(df, *args, **kwargs):
+        checkpoints.append(1)
+        return local_checkpoint(df, *args, **kwargs)
+
+    monkeypatch.setattr(DataFrame, "localCheckpoint", counted)
+
+    def jobs(pipeline) -> int:
+        """How many jobs one call of ``pipeline`` starts."""
+        group = f"plan-curation-{uuid.uuid4().hex}"
+        before = persisted()
+        sc.setJobGroup(group, "curation")
+        try:
+            pipeline(spark, sf_smoke).collect()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        assert not persisted() - before, pipeline.__name__
+        return len(sc.statusTracker().getJobIdsForGroup(group))
+
+    assert jobs(pipeline_curation_e2e) <= 26
+    assert len(checkpoints) <= 5
+    assert jobs(pipeline_curation_incremental) <= 61
+
+
 def test_domain_filter_aggregates_before_global_window(spark, sf_smoke):
     """clean_domain_filter's corpus pass is ONE exchange (groupBy on the
     canonical domain); the global-total window runs on the per-domain
@@ -732,7 +781,6 @@ GLOBAL_WINDOW_BOUNDED_DOMAIN = {
     "stats_theil_sen": "median over the C(12,2) month-pair slopes",
     "clean_t_closeness_audit": "EMD over the bounded quasi-class grid",
     "graph_association_rules": "rank over support-thresholded rule set",
-    "pipeline_curation_e2e": "rank over the bounded funnel summary",
     # 10-row decile tables (the decile CUT itself is the distributed
     # exact_ntile from operators/ranks.py — only the cumsum over the
     # ten resulting rows is a global window)
@@ -825,8 +873,8 @@ def test_curation_gate_is_per_row_and_band_scan_reads_band_keys(
     from lakesail_hdfs_deltalake_guide_spark.pipelines import (
         _curation_band_keys,
         _curation_band_rows,
-        _curation_quality_ids,
-        _curation_sigs,
+        _curation_quality_ok,
+        _curation_sig,
     )
     from lakesail_hdfs_deltalake_guide_spark.sources.delta_log import (
         delta_read,
@@ -834,12 +882,13 @@ def test_curation_gate_is_per_row_and_band_scan_reads_band_keys(
     )
 
     docs = load_table(spark, sf_smoke, "documents")
-    assert shuffle_count(_curation_quality_ids(docs)) == 0
+    gate = docs.where(_curation_quality_ok(F.col("text"))).select("doc_id")
+    assert shuffle_count(gate) == 0
     state = str(tmp_path / "state_sigs")
     delta_write(
-        _curation_sigs(docs.where(F.col("doc_id") < 40)).withColumn(
-            "bands", _curation_band_keys()
-        ),
+        docs.where(F.col("doc_id") < 40)
+        .select("doc_id", _curation_sig().alias("sig"))
+        .withColumn("bands", _curation_band_keys()),
         state,
     )
     band_side = _curation_band_rows(delta_read(spark, state))

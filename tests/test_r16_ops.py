@@ -47,8 +47,9 @@ def test_curation_sig_state_persists_band_keys(spark, sf_smoke):
         ROWS_PER_BAND,
     )
     from lakesail_hdfs_deltalake_guide_spark.pipelines import (
-        _curation_bands,
-        _curation_sigs,
+        _curation_band_keys,
+        _curation_band_rows,
+        _curation_sig,
     )
     from lakesail_hdfs_deltalake_guide_spark.tables import load_table
 
@@ -57,7 +58,7 @@ def test_curation_sig_state_persists_band_keys(spark, sf_smoke):
         .where(F.col("doc_id") < 60)
         .select("doc_id", "text")
     )
-    sigs = _curation_sigs(docs)
+    sigs = docs.select("doc_id", _curation_sig().alias("sig"))
     stored = (
         sigs.withColumn(
             "bands", band_keys(F.col("sig"), NUM_BANDS, ROWS_PER_BAND)
@@ -65,6 +66,8 @@ def test_curation_sig_state_persists_band_keys(spark, sf_smoke):
         .select("doc_id", F.explode("bands").alias("band"))
         .select("doc_id", "band.band_id", "band.band_hash")
     )
-    recomputed = _curation_bands(sigs)
+    recomputed = _curation_band_rows(
+        sigs.withColumn("bands", _curation_band_keys())
+    )
     assert stored.exceptAll(recomputed).count() == 0
     assert recomputed.exceptAll(stored).count() == 0
