@@ -20,6 +20,7 @@ batches no-ops.
 
 from __future__ import annotations
 
+import functools
 import tempfile
 from typing import Callable
 
@@ -1051,15 +1052,29 @@ def _curation_band_rows(df: DataFrame) -> DataFrame:
     )
 
 
+@functools.cache
+def _curation_exprs(remote: bool) -> tuple[Column, Column, Column]:
+    """The pass's quality-gate, signature and band-key Columns, built on
+    first use and kept for the process: building them takes hundreds of
+    py4j round trips and the trees never change. ``remote`` (Spark
+    Connect mode) keys the cache, since a classic Column wraps a JVM
+    object that a Connect session cannot use."""
+    return (
+        _curation_quality_ok(F.col("text")),
+        _curation_sig(),
+        _curation_band_keys(),
+    )
+
+
 def _curation_inputs(
     spark: SparkSession, sf_dir: str
 ) -> tuple[DataFrame, DataFrame, tuple[Column, Column, Column]]:
     """(corpus, bench, exprs): the pipeline corpus — (doc_id, source,
     text, n_tokens) of the docs at or above CURATION_BENCH_DOCS, spread
     over the cores — the checkpointed benchmark gram set of the docs
-    below it, and the pass's quality-gate, signature and band-key
-    Columns. The Columns are built once per query and shared by every
-    increment: building them takes hundreds of py4j round trips."""
+    below it, and the pass's Columns from :func:`_curation_exprs`."""
+    from pyspark.sql.utils import is_remote
+
     from .operators.dedup import _bench_grams
     from .tables import load_table, spread_compute
 
@@ -1072,12 +1087,7 @@ def _curation_inputs(
         "text",
         F.size(F.split("text", " ")).cast("long").alias("n_tokens"),
     )
-    exprs = (
-        _curation_quality_ok(F.col("text")),
-        _curation_sig(),
-        _curation_band_keys(),
-    )
-    return corpus, _checkpoint(_bench_grams(d)), exprs
+    return corpus, _checkpoint(_bench_grams(d)), _curation_exprs(is_remote())
 
 
 def _curation_pass(

@@ -3678,13 +3678,13 @@ def delta_optimize(
     tables keep their hive layout and partitionValues through the
     rewrite (a compaction that drops them silently breaks every later
     partition-pruned read)."""
+    t0 = time.perf_counter()
     # ONE snapshot for both the rewrite source and the remove list —
     # resolving them at different times would let a concurrent append's
     # file land in the removes without its rows in the rewrite
     snap, _, meta, live, _ = _snapshot_at(spark, path)
     if snap is None:
         raise ValueError(f"no delta table at {path}")
-    part_cols = meta.get("partitionColumns") or None
     if where is not None and partition_filter:
         raise ValueError(
             "pass either partition_filter (equality dict) or where "
@@ -3693,7 +3693,7 @@ def delta_optimize(
     if where is not None:
         scope = _scope_partition_predicate(spark, meta, live, where)
     elif partition_filter:
-        unknown = set(partition_filter) - set(part_cols or ())
+        unknown = set(partition_filter) - set(meta.get("partitionColumns") or ())
         if unknown:
             raise ValueError(
                 f"OPTIMIZE scope names non-partition columns: "
@@ -3711,26 +3711,13 @@ def delta_optimize(
         scope = dict(live)
     if not scope:
         return snap  # nothing in scope: no-op, no commit
-    rt = _rt_enabled(meta)
     # row-tracked tables compact WITH their stable ids and materialize
     # them into the compacted files — OPTIMIZE must not renumber rows
-    current = _read_affected_files(
-        spark, path, meta, live, sorted(scope), with_row_ids=rt
+    current = _read_affected_files(spark, path, meta, live, sorted(scope))
+    return _rewrite(
+        spark, path, "OPTIMIZE", snap, meta, live, sorted(scope),
+        current.coalesce(target_files), t0=t0, layout=True, abort=True,
     )
-    compacted = current.coalesce(target_files)
-    actions = [_commit_info("OPTIMIZE")] + _removes(sorted(scope), False)
-    adds = _stage_data_files(
-        _to_physical(compacted, meta),
-        path,
-        part_cols,
-        stats_cols=_live_stats_cols(scope.values()) or None,
-    )
-    for a in adds:
-        a["add"]["dataChange"] = False
-    rt_action = _rt_assign(spark, path, meta, adds)
-    if rt_action is not None:
-        actions.append(rt_action)
-    return _commit(spark, path, snap, actions + adds)
 
 
 _OPT_WRITE_KEY = "delta.autoOptimize.optimizeWrite"
@@ -3755,6 +3742,7 @@ def delta_optimize_small(
     keep stable ids. Returns the committed version, or None when below
     the threshold (no commit — the no-op must be free, it runs after
     every write)."""
+    t0 = time.perf_counter()
     snap, _, meta, live, _ = _snapshot_at(spark, path)
     if snap is None:
         raise ValueError(f"no delta table at {path}")
@@ -3765,36 +3753,14 @@ def delta_optimize_small(
     )
     if len(small) < min_num_files:
         return None
-    rt = _rt_enabled(meta)
-    rows = _read_affected_files(spark, path, meta, live, small, with_row_ids=rt)
+    rows = _read_affected_files(spark, path, meta, live, small)
     part_cols = meta.get("partitionColumns") or None
-    staged = _to_physical(rows, meta)
     # one output file per partition dir (the compaction target); for an
     # unpartitioned table that is exactly one file
-    staged = staged.coalesce(1) if not part_cols else staged.repartition(
-        *part_cols
-    )
-    adds = _stage_data_files(
-        staged,
-        path,
-        part_cols,
-        stats_cols=_live_stats_cols(live[f] for f in small) or None,
-    )
-    for a in adds:
-        a["add"]["dataChange"] = False
-    rt_action = _rt_assign(spark, path, meta, adds)
-    return _commit_rewrite(
-        spark,
-        path,
-        snap,
-        small,
-        adds,
-        extra_actions=[_commit_info("auto-OPTIMIZE")]
-        + ([rt_action] if rt_action else []),
-        expected={f: live[f] for f in small},
-        identity_guard=rt_action is not None,
-        meta=meta,
-        layout_only=True,
+    rows = rows.repartition(*part_cols) if part_cols else rows.coalesce(1)
+    return _rewrite(
+        spark, path, "auto-OPTIMIZE", snap, meta, live, small, rows,
+        t0=t0, layout=True,
     )
 
 
@@ -4066,6 +4032,7 @@ def delta_optimize_zorder(
             else "zorder needs at least 2 columns (one-column clustering "
             "is plain range layout — use CLUSTER BY or compaction)"
         )
+    t0 = time.perf_counter()
     if bits is None:
         bits = min(16, 62 // len(cols))
     snap, _, meta, live, _ = _snapshot_at(spark, path)
@@ -4087,10 +4054,7 @@ def delta_optimize_zorder(
             return snap  # fully clustered — nothing to commit
     else:
         rewrite = dict(live)
-    rt = _rt_enabled(meta)
-    current = _read_affected_files(
-        spark, path, meta, live, sorted(rewrite), with_row_ids=rt
-    )
+    current = _read_affected_files(spark, path, meta, live, sorted(rewrite))
     # normalize each key to the full bit range before interleaving —
     # raw keys of different magnitudes would let the wider key's high
     # bits dominate every z prefix and the narrow key would never
@@ -4130,31 +4094,24 @@ def delta_optimize_zorder(
         .sortWithinPartitions("__z")
         .drop("__z")
     )
-    actions = [
-        _commit_info(
-            "OPTIMIZE ZORDER" if curve == "morton" else "OPTIMIZE HILBERT"
-        )
-    ] + _removes(sorted(rewrite), False)
-    pm = {l: p for p, l in _cm_pairs(meta)}
-    adds = _stage_data_files(
-        _to_physical(clustered, meta),
+    # the table's stats surface plus the clustering keys: per-file
+    # rectangles in every listed dimension, and range skipping on the
+    # columns the table already had stats for
+    return _rewrite(
+        spark,
         path,
-        # hive layout survives the rewrite: a ZORDER that drops
-        # partitionValues silently breaks later partition-pruned reads
-        meta.get("partitionColumns") or None,
-        stats_cols=[pm.get(c, c) for c in cols],
+        "OPTIMIZE ZORDER" if curve == "morton" else "OPTIMIZE HILBERT",
+        snap,
+        meta,
+        live,
+        sorted(rewrite),
+        clustered,
+        t0=t0,
+        layout=True,
+        abort=True,
+        cluster_cols=cols,
+        tags={"ZCUBE_ID": uuid.uuid4().hex, "ZCUBE_ZORDER_BY": zcube_spec},
     )
-    cube_id = uuid.uuid4().hex
-    for a in adds:
-        a["add"]["dataChange"] = False
-        a["add"]["tags"] = {
-            "ZCUBE_ID": cube_id,
-            "ZCUBE_ZORDER_BY": zcube_spec,
-        }
-    rt_action = _rt_assign(spark, path, meta, adds)
-    if rt_action is not None:
-        actions.append(rt_action)
-    return _commit(spark, path, snap, actions + adds)
 
 
 # --- Liquid-clustering-style CLUSTER BY -------------------------------------
@@ -5358,34 +5315,22 @@ def _releases_checkpoints(fn):
     return op
 
 
-def _snapshot_scan_with_file(
-    spark: SparkSession, path: str, predicate=None
-) -> tuple[int, DataFrame, dict[str, str], dict, dict[str, dict]]:
-    """(read version, latest-snapshot scan carrying ``__ls_file`` (the
-    add-action's relative path for each row), basename→rel map,
-    metaData, live). With a DML ``predicate`` the scan covers only the
-    files its stats bounds cannot skip (``live`` stays the whole set).
-    The per-row file identity is Spark's ``_metadata.file_path`` hidden
-    column — evaluated scan-side, no shuffle, no UDF; we reduce it to
-    the unique basename (data files are ``part-{uuid}.parquet``) so the
-    mapping back to log-relative paths is a tiny broadcast-free
-    driver-side dict lookup applied only to the DISTINCT affected set."""
-    read_version, _, meta, live, _ = _snapshot_at(spark, path)
-    if meta is None:
-        raise ValueError(f"no delta table at {path}")
-    base_map = {f.rsplit("/", 1)[-1]: f for f in live}
-    bounds = {} if predicate is None else _predicate_bounds(spark, meta, predicate)
-    scan = _pruned_scan(spark, path, meta, live, bounds)
-    if scan is None:
-        empty = spark.createDataFrame([], _logical_schema(meta)).withColumn(
-            "__ls_file", F.lit(None).cast("string")
-        )
-        return read_version, empty, base_map, meta, live
-    scan = scan.select(
-        *[l for _, l in _cm_pairs(meta)],
-        F.col("__dv_file").alias("__ls_file"),
+def _touched_files(
+    spark: SparkSession, path: str, meta: dict, live: dict[str, dict], predicate
+) -> list[str]:
+    """The live files holding a row that DML ``predicate`` matches: the
+    pruned scan of the files its stats bounds cannot skip, reduced to
+    the DISTINCT ``__dv_file`` basenames (data files are
+    ``part-{uuid}.parquet``; the driver receives file names only) and
+    mapped back to their log paths."""
+    scan = _pruned_scan(
+        spark, path, meta, live, _predicate_bounds(spark, meta, predicate)
     )
-    return read_version, scan, base_map, meta, live
+    if scan is None:
+        return []
+    base_map = {f.rsplit("/", 1)[-1]: f for f in live}
+    hits = scan.where(_coerce_predicate(predicate)).select("__dv_file")
+    return [base_map[r[0]] for r in hits.distinct().collect()]
 
 
 def _read_affected_files(
@@ -5394,15 +5339,15 @@ def _read_affected_files(
     meta: dict,
     live: dict[str, dict],
     files,
-    with_row_ids: bool = False,
 ) -> DataFrame:
     """Read exactly ``files`` of the snapshot with the snapshot schema,
     deletion vectors applied — the copy-on-write rewrite source. A CoW
     rewrite of a DV-carrying file materializes the DV (the rewritten
     file needs no descriptor); without this filter the rewrite would
-    RESURRECT merge-on-read-deleted rows. ``with_row_ids`` (row-tracked
-    tables) appends each row's stable ``_row_id`` so the rewrite can
-    materialize it into the replacement files."""
+    RESURRECT merge-on-read-deleted rows. Row-tracked tables get each
+    row's stable ``_row_id`` appended, so the rewrite materializes it
+    into the replacement files."""
+    with_row_ids = _rt_enabled(meta)
     subset = [(f, live[f]) for f in files]
     has_dv = any(a.get("deletionVector") for _, a in subset)
     scan = _physical_scan(
@@ -5427,74 +5372,124 @@ def _coerce_predicate(predicate) -> "F.Column":
     return F.coalesce(pred, F.lit(False))
 
 
-def _commit_rewrite(
+def _rewrite(
     spark: SparkSession,
     path: str,
+    op: str,
     read_version: int,
-    affected: list[str],
-    adds: list[dict],
+    meta: dict,
+    live: dict[str, dict],
+    removed: list[str],
+    rows: DataFrame | None,
+    *,
+    t0: float | None = None,
+    metrics=None,
+    changes=None,
     extra_actions: list[dict] | None = None,
-    expected: dict[str, dict] | None = None,
-    identity_guard: bool = False,
-    meta: dict | None = None,
-    layout_only: bool = False,
+    kept: list[dict] | None = None,
+    abort: bool = False,
+    layout: bool = False,
+    cluster_cols: list[str] | None = None,
+    tags: dict | None = None,
 ) -> int:
-    """Publish a copy-on-write commit (removes for ``affected`` + staged
-    ``adds``) derived from the snapshot at ``read_version``. On a lost
-    OCC race the removes are re-validated against the winner's snapshot:
-    if every affected file is still live the commit retries at the next
-    version (the staged files are reused verbatim, Delta's
-    OptimisticTransaction behavior); if any was removed/rewritten,
-    raises DeltaConcurrentModification — committing would apply the DML
-    to rows that no longer exist.
+    """The one way an op replaces live files: commit removes for
+    ``removed`` (files of the snapshot ``live`` read at ``read_version``),
+    the re-adds ``kept`` (a deletion-vector op's live files with a new
+    descriptor) and ``rows`` (logical columns, plus ``_row_id`` on
+    row-tracked tables) staged as new files, in one version.
 
-    ``expected`` ({file: add-action snapshot}) tightens the re-validation
-    from path-liveness to action-equality. Copy-on-write DML doesn't need
-    it (any concurrent rewrite retires the old uuid path), but a
-    deletion-vector update RE-ADDS the same path — a racing DV commit
-    leaves the file live while changing its descriptor, and committing
-    over it would silently drop the winner's deletions.
+    Staging writes the physical columns in the table's hive layout and
+    stamps min/max stats on the table's live stats surface plus
+    ``cluster_cols`` (a Z-order's keys), so no rewrite narrows what range
+    reads can skip. Row-tracked tables get fresh baseRowId ranges on the
+    staged files and the watermark advance in the commit, after
+    ``extra_actions`` (txn, schema evolution, identity watermark), whose
+    metaData it is built from. ``tags`` go on every staged add. When the
+    table records CDF, ``changes()`` gives the op's change images as
+    (frame, ``_change_type``) pairs, staged as the commit's cdc files.
 
-    ``identity_guard`` marks staged files holding allocated ids (identity
-    values / row-id ranges) minted under the read snapshot's watermark:
-    a lost race aborts, since retrying could duplicate ids the winner
-    already claimed.
+    ``layout`` marks a rewrite that leaves the snapshot's rows as they
+    were (OPTIMIZE, Z-order, auto-compaction, REORG PURGE): its adds and
+    removes say ``dataChange: false``, so streaming readers skip it, the
+    append-only guard does not apply, and its commitInfo carries
+    delta-spark's file and byte counts. Other ops name their own metrics
+    with ``metrics(adds, cdc)`` (None: no metrics); both get
+    ``executionTimeMs`` since ``t0``.
 
-    ``layout_only`` marks a rewrite whose SNAPSHOT rows are unchanged
-    (REORG PURGE): removes are stamped ``dataChange: false`` so
-    streaming readers skip the commit, and the append-only guard does
-    not apply — no logical row is retracted."""
-    if affected and not layout_only and _append_only(meta):
+    A lost race applies the op's conflict rule. With ``abort`` (OPTIMIZE,
+    Z-order, staged identity values), or staged row ids the winner may
+    have claimed, it raises DeltaConcurrentModification. Otherwise the
+    removed files are re-validated against the winner's snapshot: if
+    each is still live with the same add action, the same actions retry
+    at the next version (the staged files are reused verbatim, Delta's
+    OptimisticTransaction behavior); if not, it raises — committing
+    would apply the op to rows that no longer exist, or, when a racing
+    deletion-vector commit re-added a path with a new descriptor, drop
+    the winner's deletions."""
+    if removed and not layout and _append_only(meta):
         raise ValueError(
             f"table at {path} is append-only (delta.appendOnly=true); "
             "this operation would remove or rewrite committed rows"
         )
+    adds: list[dict] = []
+    rt_action = None
+    if rows is not None:
+        pm = {l: p for p, l in _cm_pairs(meta)}
+        surface = set(_live_stats_cols(live.values()))
+        surface |= {pm.get(c, c) for c in cluster_cols or ()}
+        adds = _stage_data_files(
+            _to_physical(rows, meta),
+            path,
+            meta.get("partitionColumns") or None,
+            stats_cols=sorted(surface),
+        )
+        for a in adds:
+            a["add"]["dataChange"] = not layout
+            if tags:
+                a["add"]["tags"] = dict(tags)
+        rt_action = _rt_assign(spark, path, meta, adds)
+    cdc = (
+        _stage_change_files(changes(), path)
+        if changes is not None and _cdf_enabled(meta)
+        else []
+    )
+    info = None
+    if layout:
+        info = {
+            "numRemovedFiles": len(removed),
+            "numAddedFiles": len(adds),
+            "numRemovedBytes": sum(int(live[f].get("size", 0)) for f in removed),
+            "numAddedBytes": sum(a["add"]["size"] for a in adds),
+        }
+    elif metrics is not None:
+        info = metrics(adds, cdc)
+    if info is not None:
+        info["executionTimeMs"] = _elapsed_ms(t0)
     actions = (
-        (extra_actions or [])
-        + _removes(sorted(affected), not layout_only)
+        [_commit_info(op, info)]
+        + list(extra_actions or [])
+        + ([rt_action] if rt_action else [])
+        + cdc
+        + _removes(sorted(removed), not layout)
+        + list(kept or [])
         + adds
     )
 
     def revalidate() -> tuple[int, list[dict]]:
         seen, _, _, live_now, _ = _snapshot_at(spark, path)
-        gone = [f for f in affected if f not in live_now]
+        gone = [f for f in removed if f not in live_now]
         if gone:
             raise DeltaConcurrentModification(
                 f"files read by this DML were removed by a concurrent "
                 f"commit to {path}: {gone[:3]}"
             )
-        if expected is not None:
-            changed = [
-                f
-                for f in affected
-                if f in expected and live_now[f] != expected[f]
-            ]
-            if changed:
-                raise DeltaConcurrentModification(
-                    f"files read by this DML were modified (e.g. a "
-                    f"deletion-vector update) by a concurrent commit "
-                    f"to {path}: {changed[:3]}"
-                )
+        changed = [f for f in removed if live_now[f] != live[f]]
+        if changed:
+            raise DeltaConcurrentModification(
+                f"files read by this DML were modified (e.g. a "
+                f"deletion-vector update) by a concurrent commit "
+                f"to {path}: {changed[:3]}"
+            )
         return seen, actions
 
     return _commit(
@@ -5502,7 +5497,7 @@ def _commit_rewrite(
         path,
         read_version,
         actions,
-        rebase=None if identity_guard else revalidate,
+        rebase=None if abort or rt_action is not None else revalidate,
     )
 
 
@@ -5655,13 +5650,18 @@ def _cdf_enabled(meta: dict | None) -> bool:
     )
 
 
-def _stage_change_files(df: DataFrame, path: str) -> list[dict]:
-    """Write change rows (data columns + ``_change_type``) as parquet
-    under ``_change_data/`` and return the commit's ``cdc`` actions —
-    the protocol's change-data-file route. A commit that carries cdc
-    actions gives CDF readers an O(changes) read: they open ONLY these
-    files, never the rewritten data files. Change files are written flat
-    (partition values live in the rows, not the directory layout)."""
+def _stage_change_files(images, path: str) -> list[dict]:
+    """Write an op's change images — (frame of logical columns,
+    ``_change_type``) pairs — as parquet under ``_change_data/`` and
+    return the commit's ``cdc`` actions, the protocol's change-data-file
+    route. A commit that carries cdc actions gives CDF readers an
+    O(changes) read: they open ONLY these files, never the rewritten
+    data files. Change files are written flat (partition values live in
+    the rows, not the directory layout)."""
+    df = None
+    for frame, kind in images:
+        image = frame.drop(_RT_COL).withColumn("_change_type", F.lit(kind))
+        df = image if df is None else df.unionByName(image)
     fs, _, jvm = _hadoop_fs(df.sparkSession, path)
     published = _publish_staged(
         fs,
@@ -5789,74 +5789,41 @@ def delta_delete(spark: SparkSession, path: str, predicate) -> int:
     Returns the committed version (current version if nothing matched)."""
     t0 = time.perf_counter()
     pred = _coerce_predicate(predicate)
-    read_version, scan, base_map, meta, _live = _snapshot_scan_with_file(
-        spark, path, predicate
-    )
-    hit_names = [
-        r[0]
-        for r in scan.where(pred).select("__ls_file").distinct().collect()
-    ]
-    if not hit_names:
+    read_version, _, meta, live, _ = _snapshot_at(spark, path)
+    if meta is None:
+        raise ValueError(f"no delta table at {path}")
+    affected = _touched_files(spark, path, meta, live, predicate)
+    if not affected:
         return read_version
-    affected = [base_map[b] for b in hit_names]
-    rt = _rt_enabled(meta)
-    sub = _read_affected_files(
-        spark, path, meta, _live, affected, with_row_ids=rt
-    )
-    survivors = sub.where(~pred)
-    adds = _stage_data_files(
-        _to_physical(survivors, meta),
-        path,
-        meta.get("partitionColumns") or None,
-        stats_cols=_live_stats_cols(_live.values()) or None,
-    )
+    sub = _read_affected_files(spark, path, meta, live, affected)
+
+    def metrics(adds: list[dict], cdc: list[dict]) -> dict:
+        copied = _num_records(adds)
+        out = {
+            "numRemovedFiles": len(affected),
+            "numAddedFiles": len(adds),
+            "numCopiedRows": copied,
+            "numAddedChangeFiles": len(cdc),
+        }
+        # the removed files' live rows, when every one records numRecords
+        stats = [json.loads(live[f].get("stats") or "{}") or {} for f in affected]
+        if all("numRecords" in st for st in stats):
+            out["numDeletedRows"] = (
+                sum(st["numRecords"] for st in stats)
+                - sum(
+                    int((live[f].get("deletionVector") or {}).get("cardinality", 0))
+                    for f in affected
+                )
+                - copied
+            )
+        return out
+
     # survivors carry their materialized _row_id; fresh base ranges are
     # still stamped (never reused), matching delta-spark's rewrite shape
-    rt_action = _rt_assign(spark, path, meta, adds)
-    cdc = (
-        _stage_change_files(
-            sub.where(pred)
-            .drop(_RT_COL)
-            .withColumn("_change_type", F.lit("delete")),
-            path,
-        )
-        if _cdf_enabled(meta)
-        else []
-    )
-    copied = _num_records(adds)
-    metrics = {
-        "numRemovedFiles": len(affected),
-        "numAddedFiles": len(adds),
-        "numCopiedRows": copied,
-        "numAddedChangeFiles": len(cdc),
-    }
-    # the removed files' live rows, when every one records numRecords
-    stats = [json.loads(_live[f].get("stats") or "{}") or {} for f in affected]
-    if all("numRecords" in st for st in stats):
-        metrics["numDeletedRows"] = (
-            sum(st["numRecords"] for st in stats)
-            - sum(
-                int((_live[f].get("deletionVector") or {}).get("cardinality", 0))
-                for f in affected
-            )
-            - copied
-        )
-    metrics["executionTimeMs"] = _elapsed_ms(t0)
-    return _commit_rewrite(
-        spark,
-        path,
-        read_version,
-        affected,
-        adds,
-        extra_actions=[_commit_info("DELETE", metrics)]
-        + ([rt_action] if rt_action else [])
-        + cdc,
-        identity_guard=rt_action is not None,
-        # action-equality: a racing DV commit keeps the path live while
-        # changing its descriptor; committing over it would resurrect
-        # the DV-deleted rows this rewrite never saw
-        expected={f: _live[f] for f in affected},
-        meta=meta,
+    return _rewrite(
+        spark, path, "DELETE", read_version, meta, live, affected,
+        sub.where(~pred), t0=t0, metrics=metrics,
+        changes=lambda: [(sub.where(pred), "delete")],
     )
 
 
@@ -5894,9 +5861,9 @@ def delta_replace_where(
     nothing — pure remove + append, the classic backfill fast path.
     """
     pred = _coerce_predicate(predicate)
-    read_version, scan, base_map, meta, _live = _snapshot_scan_with_file(
-        spark, path, predicate
-    )
+    read_version, _, meta, live, _ = _snapshot_at(spark, path)
+    if meta is None:
+        raise ValueError(f"no delta table at {path}")
     from pyspark.sql.types import StructType
 
     schema = StructType.fromJson(json.loads(meta["schemaString"]))
@@ -5943,70 +5910,26 @@ def delta_replace_where(
             f"replaceWhere({predicate!r}): incoming rows fall outside "
             "the replacement predicate — nothing was committed"
         )
-    hit_names = [
-        r[0]
-        for r in scan.where(pred).select("__ls_file").distinct().collect()
-    ]
-    affected = [base_map[b] for b in hit_names]
-    rt = _rt_enabled(meta)
-    sub = None
-    pieces: list[DataFrame] = []
-    if affected:
-        sub = _read_affected_files(
-            spark, path, meta, _live, affected, with_row_ids=rt
-        )
-        # remainder keeps its materialized _row_id through the rewrite
-        pieces.append(sub.where(~pred))
+    affected = _touched_files(spark, path, meta, live, predicate)
     new_rows = incoming
-    if rt:
+    if _rt_enabled(meta):
         # fresh region rows have no prior identity: null defers to the
         # staged file's fresh baseRowId + position
         new_rows = new_rows.withColumn(_RT_COL, F.lit(None).cast("long"))
-    pieces.append(new_rows)
-    out = pieces[0]
-    for p in pieces[1:]:
-        out = out.unionByName(p)
+    sub = _read_affected_files(spark, path, meta, live, affected) if affected else None
+    # the remainder keeps its materialized _row_id through the rewrite
+    out = new_rows if sub is None else sub.where(~pred).unionByName(new_rows)
     _enforce_constraints(out, meta)
-    adds = _stage_data_files(
-        _to_physical(out, meta),
-        path,
-        meta.get("partitionColumns") or None,
-        stats_cols=_live_stats_cols(_live.values()) or None,
-    )
-    rt_action = _rt_assign(spark, path, meta, adds)
-    if rt_action is not None:
-        meta = rt_action["metaData"]
-    cdc: list[dict] = []
-    if _cdf_enabled(meta):
-        changes: list[DataFrame] = []
-        if affected:
-            changes.append(
-                sub.drop(_RT_COL)
-                .where(pred)
-                .withColumn("_change_type", F.lit("delete"))
-            )
-        changes.append(
-            incoming.withColumn("_change_type", F.lit("insert"))
-        )
-        feed = changes[0]
-        for c in changes[1:]:
-            feed = feed.unionByName(c)
-        cdc = _stage_change_files(feed, path)
-    return _commit_rewrite(
-        spark,
-        path,
-        read_version,
-        affected,
-        adds,
-        # id_action first: rt_action was built from the id-advanced
-        # meta, keeping the fold's last-metaData-wins consistent
-        extra_actions=[_commit_info("WRITE (replaceWhere)")]
-        + ([id_action] if id_action else [])
-        + ([rt_action] if rt_action else [])
-        + cdc,
-        expected={f: _live[f] for f in affected},
-        identity_guard=id_action is not None or rt_action is not None,
-        meta=meta,
+
+    def changes() -> list:
+        deleted = [] if sub is None else [(sub.where(pred), "delete")]
+        return deleted + [(incoming, "insert")]
+
+    return _rewrite(
+        spark, path, "WRITE (replaceWhere)", read_version, meta, live,
+        affected, out, changes=changes,
+        extra_actions=[id_action] if id_action else None,
+        abort=id_action is not None,
     )
 
 
@@ -6027,10 +5950,13 @@ def delta_update(
         col: (F.expr(e) if isinstance(e, str) else e)
         for col, e in assignments.items()
     }
-    read_version, scan, base_map, meta, _live = _snapshot_scan_with_file(
-        spark, path, predicate
-    )
-    unknown = set(exprs) - {c for c in scan.columns if c != "__ls_file"}
+    read_version, _, meta, live, _ = _snapshot_at(spark, path)
+    if meta is None:
+        raise ValueError(f"no delta table at {path}")
+    from pyspark.sql.types import StructType
+
+    schema = StructType.fromJson(json.loads(meta["schemaString"]))
+    unknown = set(exprs) - {f.name for f in schema.fields}
     if unknown:
         raise ValueError(f"UPDATE of unknown columns: {sorted(unknown)}")
     gen_assigned = set(exprs) & set(_generated_columns(meta))
@@ -6045,20 +5971,11 @@ def delta_update(
             f"cannot UPDATE identity columns {sorted(id_assigned)}; "
             "their values are engine-allocated"
         )
-    hit_names = [
-        r[0]
-        for r in scan.where(pred).select("__ls_file").distinct().collect()
-    ]
-    if not hit_names:
+    affected = _touched_files(spark, path, meta, live, predicate)
+    if not affected:
         return read_version
-    affected = [base_map[b] for b in hit_names]
-    from pyspark.sql.types import StructType
-
-    schema = StructType.fromJson(json.loads(meta["schemaString"]))
     rt = _rt_enabled(meta)
-    sub = _read_affected_files(
-        spark, path, meta, _live, affected, with_row_ids=rt
-    )
+    sub = _read_affected_files(spark, path, meta, live, affected)
     # one simultaneous select from the preimage; casts pin each updated
     # column to its declared type so UPDATE can never widen the schema.
     # Row-tracked tables carry each row's _row_id through the rewrite —
@@ -6077,54 +5994,29 @@ def delta_update(
     # generated columns follow their dependencies' post-image values
     updated = _recompute_generated(updated, meta)
     _enforce_constraints(updated, meta)
-    adds = _stage_data_files(
-        _to_physical(updated, meta),
-        path,
-        meta.get("partitionColumns") or None,
-        stats_cols=_live_stats_cols(_live.values()) or None,
-    )
-    rt_action = _rt_assign(spark, path, meta, adds)
-    cdc: list[dict] = []
-    if _cdf_enabled(meta):
-        pre = (
-            sub.where(pred)
-            .drop(_RT_COL)
-            .withColumn("_change_type", F.lit("update_preimage"))
+
+    def changes() -> list:
+        post = sub.where(pred).select(
+            *[
+                exprs[f.name].cast(f.dataType).alias(f.name)
+                if f.name in exprs
+                else F.col(f.name)
+                for f in schema.fields
+            ]
         )
-        post = _recompute_generated(
-            sub.where(pred).select(
-                *[
-                    exprs[f.name].cast(f.dataType).alias(f.name)
-                    if f.name in exprs
-                    else F.col(f.name)
-                    for f in schema.fields
-                ]
-            ),
-            meta,
-        ).withColumn("_change_type", F.lit("update_postimage"))
-        cdc = _stage_change_files(pre.unionByName(post), path)
-    return _commit_rewrite(
-        spark,
-        path,
-        read_version,
-        affected,
-        adds,
-        extra_actions=[
-            _commit_info(
-                "UPDATE",
-                {
-                    "numRemovedFiles": len(affected),
-                    "numAddedFiles": len(adds),
-                    "numAddedChangeFiles": len(cdc),
-                    "executionTimeMs": _elapsed_ms(t0),
-                },
-            )
+        return [
+            (sub.where(pred), "update_preimage"),
+            (_recompute_generated(post, meta), "update_postimage"),
         ]
-        + ([rt_action] if rt_action else [])
-        + cdc,
-        identity_guard=rt_action is not None,
-        expected={f: _live[f] for f in affected},
-        meta=meta,
+
+    return _rewrite(
+        spark, path, "UPDATE", read_version, meta, live, affected, updated,
+        t0=t0, changes=changes,
+        metrics=lambda adds, cdc: {
+            "numRemovedFiles": len(affected),
+            "numAddedFiles": len(adds),
+            "numAddedChangeFiles": len(cdc),
+        },
     )
 
 
@@ -6277,9 +6169,7 @@ def delta_merge(
     rt = _rt_enabled(meta)
     pieces: list[DataFrame] = []
     if affected:
-        sub = _read_affected_files(
-            spark, path, meta, _live, affected, with_row_ids=rt
-        )
+        sub = _read_affected_files(spark, path, meta, _live, affected)
         # explicit match flag, not COALESCE: a matched source row that
         # carries NULL in an update column must write that NULL
         src_upd = src.select(
@@ -6383,94 +6273,55 @@ def delta_merge(
         pieces.append(inserts)
     if not pieces:
         return read_version
-    out = pieces[0]
-    for p in pieces[1:]:
-        out = out.unionByName(p)
+    out = functools.reduce(DataFrame.unionByName, pieces)
     _enforce_constraints(out, meta)
-    adds = _stage_data_files(
-        _to_physical(out, meta),
-        path,
-        meta.get("partitionColumns") or None,
-        stats_cols=_live_stats_cols(_live.values()) or None,
-    )
-    rt_action = _rt_assign(spark, path, meta, adds)
-    if rt_action is not None:
-        meta = rt_action["metaData"]
-    cdc: list[dict] = []
-    if _cdf_enabled(meta):
-        changes: list[DataFrame] = []
+
+    def changes() -> list:
+        images = []
         if affected:
             # pre-images from the flagged frame (pre-update values,
             # conformed to the evolved schema when needed)
             pre_all = flagged.select(
                 *[_old(c).alias(c) for c in tcols], "__del", "__upd"
             )
-            changes.append(
-                pre_all.where("__del")
-                .drop("__del", "__upd")
-                .withColumn("_change_type", F.lit("delete"))
-            )
-            changes.append(
-                pre_all.where("__upd")
-                .drop("__del", "__upd")
-                .withColumn("_change_type", F.lit("update_preimage"))
-            )
-            changes.append(
-                _recompute_generated(
-                    merged_all.where("__upd").drop(
-                        "__del", "__upd", _RT_COL
-                    ),
-                    meta,
-                ).withColumn("_change_type", F.lit("update_postimage"))
-            )
+            post = merged_all.where("__upd").drop("__del", "__upd", _RT_COL)
+            images += [
+                (pre_all.where("__del").drop("__del", "__upd"), "delete"),
+                (pre_all.where("__upd").drop("__del", "__upd"), "update_preimage"),
+                (_recompute_generated(post, meta), "update_postimage"),
+            ]
         if insert_unmatched:
-            changes.append(
-                inserts.drop(_RT_COL).withColumn(
-                    "_change_type", F.lit("insert")
-                )
-            )
-        feed = changes[0]
-        for c in changes[1:]:
-            feed = feed.unionByName(c)
-        cdc = _stage_change_files(feed, path)
-    return _commit_rewrite(
-        spark,
-        path,
-        read_version,
-        affected,
-        adds,
-        # rt_action is built from the id_action-advanced meta, so
-        # ordering it AFTER id_action keeps the fold's last-metaData-
-        # wins semantics consistent for both watermarks
+            images.append((inserts, "insert"))
+        return images
+
+    return _rewrite(
+        spark, path, "MERGE", read_version, meta, _live, affected, out,
+        t0=t0, changes=changes,
+        metrics=lambda adds, cdc: {
+            "numTargetFilesAdded": len(adds),
+            "numTargetFilesRemoved": len(affected),
+            "numTargetBytesAdded": sum(a["add"]["size"] for a in adds),
+            "numTargetBytesRemoved": sum(
+                int(_live[f].get("size", 0)) for f in affected
+            ),
+            "numOutputRows": _num_records(adds),
+            "numTargetChangeFilesAdded": len(cdc),
+        },
+        # evolution first: the id and row-id watermarks are built FROM
+        # the evolved meta, so last-metaData-wins stays consistent
         extra_actions=[
-            _commit_info(
-                "MERGE",
-                {
-                    "numTargetFilesAdded": len(adds),
-                    "numTargetFilesRemoved": len(affected),
-                    "numTargetBytesAdded": sum(a["add"]["size"] for a in adds),
-                    "numTargetBytesRemoved": sum(
-                        int(_live[f].get("size", 0)) for f in affected
-                    ),
-                    "numOutputRows": _num_records(adds),
-                    "numTargetChangeFilesAdded": len(cdc),
-                    "executionTimeMs": _elapsed_ms(t0),
-                },
+            a
+            for a in (
+                {"txn": {"appId": txn[0], "version": int(txn[1])}} if txn else None,
+                evo_action,
+                id_action,
             )
-        ]
-        + ([{"txn": {"appId": txn[0], "version": int(txn[1])}}] if txn else [])
-        # evolution first: id/rt metaData actions were built FROM the
-        # evolved meta, so last-metaData-wins stays consistent
-        + ([evo_action] if evo_action else [])
-        + ([id_action] if id_action else [])
-        + ([rt_action] if rt_action else [])
-        + cdc,
-        expected={f: _live[f] for f in affected},
+            if a is not None
+        ],
         # staged insert files hold ids allocated under THIS snapshot's
         # watermark; a lost race may have claimed them — abort, never
         # blind-retry (mirrors delta_write's identity guard)
-        identity_guard=id_action is not None or rt_action is not None,
-        meta=meta,
+        abort=id_action is not None,
     )
 
 
@@ -6617,18 +6468,16 @@ def _dv_mask_and_commit(
     hits: DataFrame,
     op: str,
     t0: float,
-    extra_adds: list[dict] | None = None,
-    cdf_df: DataFrame | None = None,
-    extra_actions: list[dict] | None = None,
-    guard: bool = False,
+    changes,
+    rows: DataFrame | None = None,
     wire_format: str = "native",
 ) -> int:
     """Shared merge-on-read commit core: mask ``hits``' (file, row
     position) pairs behind a fresh DV storage unit (merged with the
     affected files' prior DVs), re-add partially-masked files with the
-    new descriptor, plain-remove fully-masked files, and commit together
-    with ``extra_adds`` (an UPDATE's replacement rows) and the CDF
-    images. OCC re-validation is action-equality (``expected``).
+    new descriptor, plain-remove fully-masked files, and commit them
+    through :func:`_rewrite` with ``rows`` (an UPDATE's replacement
+    rows) and the ``changes`` images.
 
     ``hits`` is the caller's checkpoint of the matched rows (carrying
     ``__dv_file``/``__dv_row``, DVs already applied): one
@@ -6683,18 +6532,18 @@ def _dv_mask_and_commit(
         # we now write to, or our own standard-format commits)
         from .dv_codec import decode_descriptor_rows
 
-        rows: list[tuple[str, int]] = []
+        decoded: list[tuple[str, int]] = []
         for b, d in foreign_prior.items():
-            rows.extend(
+            decoded.extend(
                 (b, r)
                 for r in decode_descriptor_rows(
                     d,
                     lambda rel: _read_raw_bytes(spark, _data_uri(path, rel)),
                 )
             )
-        if rows:
+        if decoded:
             merged = merged.unionByName(
-                spark.createDataFrame(rows, "file string, row_index long")
+                spark.createDataFrame(decoded, "file string, row_index long")
             )
     descriptors: dict[str, dict]
     if wire_format == "standard":
@@ -6752,34 +6601,22 @@ def _dv_mask_and_commit(
         new_add["dataChange"] = True
         adds_out.append({"add": new_add})
     readded = {a["add"]["path"].rsplit("/", 1)[-1] for a in adds_out}
-    cdc = _stage_change_files(cdf_df, path) if cdf_df is not None else []
     hit_rows = "numDeletedRows" if op == "DELETE" else "numUpdatedRows"
-    metrics = {
-        "numRemovedFiles": len(card) - len(readded),
-        "numAddedFiles": len(extra_adds or []),
-        hit_rows: sum(new_card.values()),
-        "numCopiedRows": 0,
-        "numDeletionVectorsAdded": len(readded - set(prior)),
-        "numDeletionVectorsUpdated": len(readded & set(prior)),
-        "numDeletionVectorsRemoved": len(set(prior) - readded),
-        "numAddedChangeFiles": len(cdc),
-        "executionTimeMs": _elapsed_ms(t0),
-    }
-    extra: list[dict] = [_commit_info(op, metrics)]
     upgrade = _dv_protocol_upgrade(proto)
-    if upgrade is not None:
-        extra.append(upgrade)
-    extra += list(extra_actions or [])
-    return _commit_rewrite(
-        spark,
-        path,
-        read_version,
-        sorted(affected),
-        adds_out + list(extra_adds or []),
-        extra_actions=extra + cdc,
-        expected={f: live[f] for f in affected},
-        identity_guard=guard,
-        meta=meta,
+    return _rewrite(
+        spark, path, op, read_version, meta, live, affected, rows,
+        t0=t0, changes=changes, kept=adds_out,
+        extra_actions=[upgrade] if upgrade is not None else None,
+        metrics=lambda adds, cdc: {
+            "numRemovedFiles": len(card) - len(readded),
+            "numAddedFiles": len(adds),
+            hit_rows: sum(new_card.values()),
+            "numCopiedRows": 0,
+            "numDeletionVectorsAdded": len(readded - set(prior)),
+            "numDeletionVectorsUpdated": len(readded & set(prior)),
+            "numDeletionVectorsRemoved": len(set(prior) - readded),
+            "numAddedChangeFiles": len(cdc),
+        },
     )
 
 
@@ -6824,14 +6661,9 @@ def delta_delete_dv(
     hits = _checkpoint(
         scan.where(pred).select(*images, "__dv_file", "__dv_row"), eager=False
     )
-    cdf_df = (
-        hits.select(*images).withColumn("_change_type", F.lit("delete"))
-        if images
-        else None
-    )
     return _dv_mask_and_commit(
         spark, path, read_version, proto, meta, live, hits, "DELETE", t0,
-        cdf_df=cdf_df, wire_format=wire_format,
+        lambda: [(hits.select(*images), "delete")], wire_format=wire_format,
     )
 
 
@@ -6902,27 +6734,14 @@ def delta_update_dv(
     )
     updated = _recompute_generated(updated, meta)
     _enforce_constraints(updated, meta)
-    extra_adds = _stage_data_files(
-        _to_physical(updated, meta),
-        path,
-        meta.get("partitionColumns") or None,
-        stats_cols=_live_stats_cols(live.values()) or None,
-    )
-    rt_action = _rt_assign(spark, path, meta, extra_adds)
-    cdf_df = None
-    if _cdf_enabled(meta):
-        pre = hits.select(*[l for _, l in _cm_pairs(meta)]).withColumn(
-            "_change_type", F.lit("update_preimage")
-        )
-        post = updated.drop(_RT_COL).withColumn(
-            "_change_type", F.lit("update_postimage")
-        )
-        cdf_df = pre.unionByName(post)
+    pre = [f.name for f in logical.fields]
     return _dv_mask_and_commit(
         spark, path, read_version, proto, meta, live, hits, "UPDATE", t0,
-        extra_adds=extra_adds, cdf_df=cdf_df,
-        extra_actions=[rt_action] if rt_action else None,
-        guard=rt_action is not None, wire_format=wire_format,
+        lambda: [
+            (hits.select(*pre), "update_preimage"),
+            (updated, "update_postimage"),
+        ],
+        rows=updated, wire_format=wire_format,
     )
 
 
@@ -6942,40 +6761,19 @@ def delta_reorg_purge(spark: SparkSession, path: str) -> int:
     the rewrite (materialized into the replacement files, same as
     OPTIMIZE). Returns the committed version (current version when no
     live file carries a DV — a no-op writes no commit)."""
+    t0 = time.perf_counter()
     read_version, _, meta, live, _ = _snapshot_at(spark, path)
     if read_version is None:
         raise ValueError(f"no delta table at {path}")
     affected = sorted(f for f, a in live.items() if a.get("deletionVector"))
     if not affected:
         return read_version
-    rt = _rt_enabled(meta)
-    survivors = _read_affected_files(
-        spark, path, meta, live, affected, with_row_ids=rt
-    )
-    adds = _stage_data_files(
-        _to_physical(survivors, meta),
-        path,
-        meta.get("partitionColumns") or None,
-        stats_cols=_live_stats_cols(live.values()) or None,
-    )
-    for a in adds:
-        a["add"]["dataChange"] = False
-    rt_action = _rt_assign(spark, path, meta, adds)
-    return _commit_rewrite(
-        spark,
-        path,
-        read_version,
-        affected,
-        adds,
-        extra_actions=[_commit_info("REORG PURGE")]
-        + ([rt_action] if rt_action else []),
-        # action-equality: a racing DV delete on an affected file would
-        # add deletions this rewrite's survivors never dropped —
-        # committing over it would resurrect them
-        expected={f: live[f] for f in affected},
-        identity_guard=rt_action is not None,
-        meta=meta,
-        layout_only=True,
+    # action-equality re-validation: a racing DV delete on an affected
+    # file would add deletions this rewrite's survivors never dropped
+    return _rewrite(
+        spark, path, "REORG PURGE", read_version, meta, live, affected,
+        _read_affected_files(spark, path, meta, live, affected),
+        t0=t0, layout=True,
     )
 
 

@@ -4402,3 +4402,153 @@ def test_dml_commits_carry_operation_metrics(spark):
         "numUpdatedRows": "20",
         "numDeletionVectorsAdded": "0",
     }
+
+
+
+def test_layout_commits_carry_operation_metrics(spark):
+    """OPTIMIZE, Z-order, auto-compaction and REORG PURGE stamp
+    delta-spark's file and byte counts, taken from the commit's own add
+    and remove actions."""
+    from lakesail_hdfs_deltalake_guide_spark.sources import delta_log as dl
+
+    path = _skip_table(spark)  # 5 files of 20 rows
+    dl.delta_delete_dv(spark, path, "k between 40 and 44")  # v1
+    ops = {
+        2: lambda: dl.delta_reorg_purge(spark, path),
+        3: lambda: dl.delta_optimize_small(spark, path, 10**9, 2),
+        4: lambda: dl.delta_optimize_zorder(spark, path, ["k", "v"], target_files=2),
+        5: lambda: dl.delta_optimize(spark, path),
+    }
+    for v, op in ops.items():
+        sizes = {f: int(a["size"]) for f, a in dl.delta_live_adds(spark, path)}
+        assert op() == v
+        acts = _actions(path, v)
+        adds = [a["add"] for a in acts if "add" in a]
+        gone = [a["remove"]["path"] for a in acts if "remove" in a]
+        got = dict(dl.delta_history(spark, path)[0]["operationMetrics"])
+        assert int(got.pop("executionTimeMs")) >= 0
+        assert got == {
+            "numRemovedFiles": str(len(gone)),
+            "numAddedFiles": str(len(adds)),
+            "numRemovedBytes": str(sum(sizes[f] for f in gone)),
+            "numAddedBytes": str(sum(a["size"] for a in adds)),
+        }, v
+
+def _commit_shape(path: str, version: int) -> dict:
+    """What a commit did, without its paths, sizes and times: the count
+    of each action kind, each kind's ``dataChange`` values, the stats
+    keys and ``baseRowId`` presence of its adds, and its metric keys."""
+    acts = _actions(path, version)
+    info = next(a["commitInfo"] for a in acts if "commitInfo" in a)
+    kinds = [next(iter(a)) for a in acts]
+    adds = [a["add"] for a in acts if "add" in a]
+    return {
+        "op": info["operation"],
+        "kinds": {k: kinds.count(k) for k in sorted(set(kinds))},
+        "dataChange": {
+            k: sorted({a[k]["dataChange"] for a in acts if k in a})
+            for k in ("add", "remove", "cdc")
+            if k in kinds
+        },
+        "stats": sorted(
+            {tuple(sorted(json.loads(a["stats"])["minValues"])) for a in adds}
+        ),
+        "baseRowId": all("baseRowId" in a for a in adds),
+        "metrics": sorted(info.get("operationMetrics") or {}),
+    }
+
+
+def test_rewrite_commit_shapes(spark):
+    """Every op that replaces data files, plus DV DELETE and DV UPDATE,
+    once each on a table with CDF and row tracking: each commit's
+    action kinds and counts, ``dataChange`` flags, add stats keys,
+    ``baseRowId`` stamping and metric keys."""
+    from lakesail_hdfs_deltalake_guide_spark.sources import delta_log as dl
+
+    path = _skip_table(spark, {"delta.enableRowTracking": "true"})
+    region = _skip_rows(spark, 40, 45).withColumn("v", F.lit(7).cast("long"))
+    src = _skip_rows(spark, 95, 105).withColumn("v", F.lit(-1).cast("long"))
+    ops = [
+        lambda: dl.delta_delete(spark, path, "k < 5"),
+        lambda: dl.delta_update(spark, path, "k = 25", {"v": "0"}),
+        lambda: dl.delta_replace_where(spark, path, "k >= 40 AND k < 45", region),
+        lambda: dl.delta_merge(spark, path, src, on=["k"]),
+        lambda: dl.delta_delete_dv(spark, path, "k between 60 and 62"),
+        lambda: dl.delta_update_dv(spark, path, "k between 70 and 72", {"v": "1"}),
+        lambda: dl.delta_reorg_purge(spark, path),
+        lambda: dl.delta_optimize_small(spark, path, 10**9, 2),
+        lambda: dl.delta_optimize(spark, path, target_files=2),
+        lambda: dl.delta_optimize_zorder(spark, path, ["v", "x"], target_files=2),
+    ]
+    for v, op in enumerate(ops, start=1):
+        assert op() == v
+    data = {"add": [True], "remove": [True], "cdc": [False]}
+    layout = {"add": [False], "remove": [False]}
+    files = ["executionTimeMs", "numAddedBytes", "numAddedFiles"]
+    files += ["numRemovedBytes", "numRemovedFiles"]
+    cow = ["executionTimeMs", "numAddedChangeFiles", "numAddedFiles", "numRemovedFiles"]
+    dv = sorted(
+        cow
+        + ["numCopiedRows", "numDeletionVectorsAdded"]
+        + ["numDeletionVectorsRemoved", "numDeletionVectorsUpdated"]
+    )
+
+    def shape(op, kinds, data_change, metrics, stats=(("k",),)):
+        kinds = {"commitInfo": 1, **kinds}
+        return {
+            "op": op,
+            "kinds": dict(sorted(kinds.items())),
+            "dataChange": data_change,
+            "stats": list(stats),
+            "baseRowId": True,
+            "metrics": sorted(metrics),
+        }
+
+    expected = [
+        shape(
+            "DELETE",
+            {"add": 1, "cdc": 1, "metaData": 1, "remove": 1},
+            data,
+            cow + ["numCopiedRows", "numDeletedRows"],
+        ),
+        shape("UPDATE", {"add": 1, "cdc": 2, "metaData": 1, "remove": 1}, data, cow),
+        shape(
+            "WRITE (replaceWhere)",
+            {"add": 2, "cdc": 2, "metaData": 1, "remove": 1},
+            data,
+            [],
+        ),
+        shape(
+            "MERGE",
+            {"add": 2, "cdc": 4, "metaData": 1, "remove": 1},
+            data,
+            ["executionTimeMs", "numOutputRows", "numTargetChangeFilesAdded"]
+            + ["numTargetBytesAdded", "numTargetBytesRemoved"]
+            + ["numTargetFilesAdded", "numTargetFilesRemoved"],
+        ),
+        shape(
+            "DELETE",
+            {"add": 1, "cdc": 1, "protocol": 1, "remove": 1},
+            data,
+            dv + ["numDeletedRows"],
+        ),
+        shape(
+            "UPDATE",
+            {"add": 2, "cdc": 2, "metaData": 1, "remove": 1},
+            data,
+            dv + ["numUpdatedRows"],
+        ),
+        shape("REORG PURGE", {"add": 1, "metaData": 1, "remove": 1}, layout, files),
+        shape("auto-OPTIMIZE", {"add": 1, "metaData": 1, "remove": 8}, layout, files),
+        shape("OPTIMIZE", {"add": 1, "metaData": 1, "remove": 1}, layout, files),
+        # the table's stats surface plus the clustering keys
+        shape(
+            "OPTIMIZE ZORDER",
+            {"add": 2, "metaData": 1, "remove": 1},
+            layout,
+            files,
+            stats=[("k", "v", "x")],
+        ),
+    ]
+    for v, want in enumerate(expected, start=1):
+        assert _commit_shape(path, v) == want, v

@@ -318,7 +318,8 @@ def test_dml_candidate_scan_pushes_predicate(spark, sf_smoke):
     import tempfile
 
     from lakesail_hdfs_deltalake_guide_spark.sources.delta_log import (
-        _snapshot_scan_with_file,
+        _pruned_scan,
+        _snapshot_at,
         delta_write,
     )
 
@@ -327,8 +328,9 @@ def test_dml_candidate_scan_pushes_predicate(spark, sf_smoke):
     )
     path = tempfile.mkdtemp(prefix="ls_plan_dml_")
     delta_write(o.repartition(4), path)
-    _, scan, _, _, _ = _snapshot_scan_with_file(spark, path)
-    phase1 = scan.where(F.col("o_totalprice") > 100000.0).select("__ls_file")
+    _, _, meta, live, _ = _snapshot_at(spark, path)
+    scan = _pruned_scan(spark, path, meta, live, {})
+    phase1 = scan.where(F.col("o_totalprice") > 100000.0).select("__dv_file")
     assert has_pushed_filter(phase1, "o_totalprice")
 
 
@@ -339,7 +341,8 @@ def test_merge_discovery_prunes_to_key_columns(spark, sf_smoke):
     import tempfile
 
     from lakesail_hdfs_deltalake_guide_spark.sources.delta_log import (
-        _snapshot_scan_with_file,
+        _pruned_scan,
+        _snapshot_at,
         delta_write,
     )
 
@@ -348,17 +351,51 @@ def test_merge_discovery_prunes_to_key_columns(spark, sf_smoke):
     )
     path = tempfile.mkdtemp(prefix="ls_plan_mrg_")
     delta_write(c.repartition(4), path)
-    _, scan, _, _, _ = _snapshot_scan_with_file(spark, path)
+    _, _, meta, live, _ = _snapshot_at(spark, path)
+    scan = _pruned_scan(spark, path, meta, live, {})
     src = c.select("c_custkey").where(F.col("c_custkey") % 3 == 0)
     phase1 = (
-        scan.select("c_custkey", "__ls_file")
+        scan.select("c_custkey", "__dv_file")
         .join(src.distinct(), on=["c_custkey"], how="left_semi")
-        .select("__ls_file")
+        .select("__dv_file")
         .distinct()
     )
     cols = set(read_schema_columns(phase1))
     assert "c_custkey" in cols
     assert not {"c_name", "c_acctbal", "c_mktsegment"} & cols, cols
+
+
+def _jobs(spark, op) -> tuple[list, int]:
+    """(names of the Spark jobs ``op()`` starts, how many list files)."""
+    import uuid
+
+    sc = spark.sparkContext
+    store = sc._jsc.sc().statusStore()  # noqa: SLF001
+    group = f"plan-dml-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "dml")
+    try:
+        op()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    ids = sc.statusTracker().getJobIdsForGroup(group)
+    listing = [
+        j for j in ids if "Listing leaf files" in str(store.job(j).description())
+    ]
+    return [store.job(j).name() for j in sorted(ids)], len(listing)
+
+
+def _dml_jobs_table(spark) -> str:
+    """A 40-file Delta table of 40k rows with stats on its key ``k``."""
+    import tempfile
+
+    from lakesail_hdfs_deltalake_guide_spark.sources.delta_log import delta_write
+
+    path = tempfile.mkdtemp(prefix="ls_plan_dml_jobs_")
+    table = spark.range(0, 40_000, 1, 40).select(
+        F.col("id").alias("k"), (F.col("id") % 1000).alias("v")
+    )
+    delta_write(table, path, stats_cols=["k"])
+    return path
 
 
 def test_dml_reads_only_unskippable_files_in_few_jobs(spark):
@@ -368,41 +405,14 @@ def test_dml_reads_only_unskippable_files_in_few_jobs(spark):
     parallel file listing ``spark.read.parquet`` starts above 32 paths.
     The MERGE source is built from pandas through Arrow, as in the
     ``delta_rw`` benchmark, so the planner knows its size."""
-    import tempfile
-    import uuid
-
     import pandas as pd
 
     from lakesail_hdfs_deltalake_guide_spark.sources.delta_log import (
         delta_delete_dv,
         delta_merge,
-        delta_write,
     )
 
-    sc = spark.sparkContext
-    store = sc._jsc.sc().statusStore()  # noqa: SLF001
-
-    def jobs(op) -> tuple[list, int]:
-        """(names of the jobs ``op()`` starts, how many list files)."""
-        group = f"plan-dml-{uuid.uuid4().hex}"
-        sc.setJobGroup(group, "dml")
-        try:
-            op()
-        finally:
-            sc.setLocalProperty("spark.jobGroup.id", None)
-        ids = sc.statusTracker().getJobIdsForGroup(group)
-        listing = [
-            j
-            for j in ids
-            if "Listing leaf files" in str(store.job(j).description())
-        ]
-        return [store.job(j).name() for j in sorted(ids)], len(listing)
-
-    path = tempfile.mkdtemp(prefix="ls_plan_dml_jobs_")
-    table = spark.range(0, 40_000, 1, 40).select(
-        F.col("id").alias("k"), (F.col("id") % 1000).alias("v")
-    )
-    delta_write(table, path, stats_cols=["k"])
+    path = _dml_jobs_table(spark)
 
     def merge(lo: int):
         keys = range(lo, lo + 1000)
@@ -412,12 +422,51 @@ def test_dml_reads_only_unskippable_files_in_few_jobs(spark):
     def delete_dv(lo: int, hi: int):
         return lambda: delta_delete_dv(spark, path, F.col("k").between(lo, hi))
 
-    jobs(merge(39_500))  # warm-up: half updates, half inserts
-    names, listing = jobs(merge(40_100))
+    _jobs(spark, merge(39_500))  # warm-up: half updates, half inserts
+    names, listing = _jobs(spark, merge(40_100))
     assert len(names) <= 9 and listing == 0, "\n".join(names)
-    jobs(delete_dv(1_000, 1_099))  # gives the next delete a prior DV
-    names, listing = jobs(delete_dv(1_050, 1_249))
+    _jobs(spark, delete_dv(1_000, 1_099))  # gives the next delete a prior DV
+    names, listing = _jobs(spark, delete_dv(1_050, 1_249))
     assert len(names) <= 5 and listing == 0, "\n".join(names)
+
+
+def test_copy_on_write_ops_run_few_jobs(spark):
+    """Copy-on-write DELETE, UPDATE and replaceWhere of a key range, and
+    OPTIMIZE of the whole table, each run in a fixed handful of Spark
+    jobs on the 40-file table."""
+    from lakesail_hdfs_deltalake_guide_spark.sources.delta_log import (
+        delta_delete,
+        delta_optimize,
+        delta_replace_where,
+        delta_update,
+    )
+
+    path = _dml_jobs_table(spark)
+    region = spark.range(2_000, 2_100).select(
+        F.col("id").alias("k"), F.lit(-2).cast("long").alias("v")
+    )
+    ops = {
+        "delete": lambda: delta_delete(spark, path, F.col("k").between(1_000, 1_099)),
+        "update": lambda: delta_update(
+            spark, path, F.col("k").between(1_500, 1_599), {"v": F.lit(-1)}
+        ),
+        "replace_where": lambda: delta_replace_where(
+            spark, path, F.col("k").between(2_000, 2_099), region
+        ),
+        "optimize": lambda: delta_optimize(spark, path, target_files=2),
+    }
+    # OPTIMIZE reads all 40 files through one spark.read.parquet, whose
+    # path list is over the 32 that start a parallel listing job
+    most = {
+        "delete": (3, 0),
+        "update": (3, 0),
+        "replace_where": (5, 0),
+        "optimize": (2, 1),
+    }
+    for name, op in ops.items():
+        names, listing = _jobs(spark, op)
+        jobs, listings = most[name]
+        assert len(names) <= jobs and listing <= listings, (name, names)
 
 
 def test_curation_pipelines_run_few_jobs_and_release_checkpoints(

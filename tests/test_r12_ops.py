@@ -1154,6 +1154,39 @@ def test_optimize_restamps_skipping_stats(spark):
     )
 
 
+def test_zorder_keeps_table_stats_surface(spark):
+    """Z-order stamps the table's stats surface plus its clustering
+    keys: a table with stats on ``k`` clustered on ``v, x`` keeps range
+    skipping on ``k``."""
+    import json as _json
+
+    from lakesail_hdfs_deltalake_guide_spark.sources.delta_log import (
+        delta_live_adds,
+        delta_optimize_zorder,
+        delta_read,
+        delta_write,
+    )
+
+    p = tempfile.mkdtemp(prefix="ls_z_stats_")
+    delta_write(
+        spark.range(0, 400, 1, 4).select(
+            F.col("id").alias("k"),
+            (F.col("id") / 100).cast("long").alias("v"),
+            (F.col("id") / 2).alias("x"),
+        ),
+        p,
+        stats_cols=["k"],
+    )
+    delta_optimize_zorder(spark, p, ["v", "x"], target_files=4)
+    adds = delta_live_adds(spark, p)
+    assert all(
+        {"k", "v", "x"} <= set(_json.loads(a["stats"])["minValues"])
+        for _, a in adds
+    )
+    read = delta_read(spark, p, range_filter={"k": (0, 10)})
+    assert read.select(F.input_file_name()).distinct().count() < len(adds)
+
+
 def test_dml_rewrites_restamp_skipping_stats(spark):
     """Every copy-on-write rewrite path (DELETE, UPDATE, MERGE,
     REPLACE WHERE, DV-update post-image, REORG PURGE) must carry the
