@@ -636,9 +636,20 @@ def _commit(
     ``(seen, actions)`` — retry ``actions`` at ``seen + 1`` — or raises
     DeltaConcurrentModification itself. After ``max_retries`` lost races
     the conflict propagates. A landed commit at a CHECKPOINT_INTERVAL
-    multiple gets its cadence checkpoint."""
+    multiple gets its cadence checkpoint.
+
+    The protocol allows one ``metaData`` action per version. Every writer
+    builds each metaData of a commit from the one before it (creation or
+    schema evolution, then the identity watermark, then the row-id
+    watermark), so only the last one is committed."""
     version = 0 if read_version is None else read_version + 1
     for attempt in range(max_retries + 1):
+        last_meta = max(
+            (i for i, a in enumerate(actions) if "metaData" in a), default=None
+        )
+        actions = [
+            a for i, a in enumerate(actions) if "metaData" not in a or i == last_meta
+        ]
         if not any("commitInfo" in a for a in actions):
             actions = [_commit_info("WRITE")] + actions
         info = next(a["commitInfo"] for a in actions if "commitInfo" in a)
@@ -2430,6 +2441,118 @@ def delta_drop_column(spark: SparkSession, path: str, col: str) -> int:
     return _commit_metadata_change(spark, path, mutate)
 
 
+def _evolve(meta: dict, merged, version: int) -> dict:
+    """The metaData of table ``meta`` evolved to schema ``merged`` (a
+    :func:`_merge_schemas` result) by the commit at ``version`` —
+    ``meta`` itself when ``merged`` changes nothing. Existing fields keep
+    their schema metadata (column-mapping ids and physical names,
+    generation expressions); a widened field appends its hop to
+    ``delta.typeWidening.previousTypes``, where a foreign reader (and
+    this engine's own read gate) looks for the widening history; on
+    column-mapped tables only NEW fields mint a fresh id and physical
+    name, and ``maxColumnId`` follows."""
+    existing = _logical_schema(meta)
+    if merged == existing:
+        return meta
+    old_md = {
+        f["name"]: f.get("metadata") or {}
+        for f in json.loads(meta["schemaString"])["fields"]
+    }
+    old_types = {f.name: f.dataType for f in existing.fields}
+    merged_json = json.loads(merged.json())
+    for f, field in zip(merged.fields, merged_json["fields"]):
+        if f.name not in old_md:
+            continue
+        field["metadata"] = old_md[f.name]
+        frm = old_types[f.name]
+        if frm != f.dataType:
+            hop = {
+                "fromType": frm.typeName(),
+                "toType": f.dataType.typeName(),
+                "tableVersion": version,
+            }
+            prior = list(old_md[f.name].get(_TW_PREV_KEY) or [])
+            field["metadata"] = {**old_md[f.name], _TW_PREV_KEY: prior + [hop]}
+    new_meta = dict(meta)
+    if _cm_enabled(meta):
+        conf = dict(meta.get("configuration", {}))
+        merged_json, max_id = _cm_assign(
+            merged_json, int(conf.get(_CM_MAXID_KEY, "0"))
+        )
+        conf[_CM_MAXID_KEY] = str(max_id)
+        new_meta["configuration"] = conf
+    new_meta["schemaString"] = json.dumps(merged_json)
+    return new_meta
+
+
+def _conform(
+    df: DataFrame, meta: dict, version: int, merge_schema: bool = False
+) -> tuple[DataFrame, dict]:
+    """The write rule: turn batch ``df`` into rows of the table ``meta``
+    describes, in LOGICAL names and table column order, for the commit
+    at ``version``. Returns (conformed rows, the commit's metaData —
+    ``meta`` itself when the write changes none).
+
+    Generated columns are filled or verified, omitted DEFAULT columns
+    filled and identity blocks allocated (a supplied identity value is
+    refused) BEFORE the schema check, so a batch that correctly omits
+    them is not a mismatch. A batch that is only stricter on nullability
+    passes; any other difference is refused unless ``merge_schema``
+    (delta-spark's mergeSchema) evolves the table. The rows must then
+    satisfy every CHECK constraint and column invariant."""
+    df = _apply_generated(df, meta)
+    df = _apply_defaults(df, meta)
+    df, id_action = _allocate_identity(df, meta)
+    if id_action is not None:
+        meta = id_action["metaData"]
+    # row tracking reserves _row_id on every write: a merge_schema batch
+    # carrying it would evolve it into the logical schema and collide
+    # with the read path's injected physical column, bricking every
+    # row-ids read and DML
+    if _rt_enabled(meta) and _RT_COL in df.columns:
+        raise ValueError(
+            f"row tracking reserves the physical column name {_RT_COL}; "
+            "rename the batch column"
+        )
+    existing = _logical_schema(meta)
+    if _nullability_conforms(df.schema, existing):
+        # delta-spark accepts a STRICTER batch (non-nullable column into
+        # a nullable table column) without schema evolution — only the
+        # nullability marks differ, so conform the batch to the table
+        # (Spark's to() keeps the batch's tighter non-null marks; the
+        # staged parquet simply contains no nulls in those columns)
+        if df.schema != existing:
+            df = df.to(existing)
+    elif not merge_schema:
+        raise ValueError(
+            "schema mismatch on write (pass merge_schema=True to "
+            "evolve the table schema, delta-spark's mergeSchema)"
+        )
+    else:
+        merged = _merge_schemas(
+            existing, df.schema, allow_widening=_tw_enabled(meta)
+        )
+        # conform df to the merged shape: evolution-added columns the
+        # incoming batch lacks become typed nulls, column order fixed;
+        # the cast is what upcasts a narrower-typed batch into a
+        # widened table column (a no-op everywhere else — any unsafe
+        # type change was already rejected by the merge)
+        df = df.select(
+            *[
+                F.col(f.name).cast(f.dataType).alias(f.name)
+                if f.name in df.columns
+                else F.lit(None).cast(f.dataType).alias(f.name)
+                for f in merged.fields
+            ]
+        )
+        meta = _evolve(meta, merged, version)
+    # writer-v3 enforcement: the batch must satisfy every table CHECK
+    # constraint before any file is staged (re-runs on OCC retry, so a
+    # constraint added by a racing commit is honored too)
+    _enforce_constraints(df, meta)
+    return df, meta
+
+
 def _plan_commit(
     spark: SparkSession,
     df: DataFrame,
@@ -2442,17 +2565,14 @@ def _plan_commit(
     identity_columns: dict | None = None,
     column_defaults: dict | None = None,
     invariants: dict | None = None,
-) -> tuple[int | None, list[dict], DataFrame, dict, list[str]]:
+) -> tuple[int | None, list[dict], DataFrame, dict, list[dict]]:
     """One optimistic-transaction attempt: fold the CURRENT snapshot and
-    build the commit's non-add actions from it
-    (protocol/metaData/schema-evolution/removes). Returns (read version,
-    None at creation; actions; conformed df in LOGICAL names; effective
-    metaData; the table's inherited min/max stats surface — PHYSICAL
-    column names the existing live adds carry, empty at creation).
-    Re-run on every retry so a lost race re-validates against the
-    winner's committed state."""
-    from pyspark.sql.types import StructType
-
+    build the commit's non-add actions from it (protocol, metaData,
+    overwrite's removes), conforming ``df`` by :func:`_conform`. Returns
+    (read version, None at creation; actions; conformed df in LOGICAL
+    names; effective metaData; the snapshot's live add actions). Re-run
+    on every retry so a lost race re-validates against the winner's
+    committed state."""
     read_version, proto, meta, live, _ = _snapshot_at(spark, path)
     version = 0 if read_version is None else read_version + 1
     actions: list[dict] = []
@@ -2550,11 +2670,6 @@ def _plan_commit(
         if column_defaults:
             writer_feats.append("allowColumnDefaults")
         if str(conf.get(_RT_ENABLE_KEY, "")).lower() == "true":
-            if any(f["name"] == _RT_COL for f in schema_json["fields"]):
-                raise ValueError(
-                    f"row tracking reserves the physical column name "
-                    f"{_RT_COL}; rename the batch column"
-                )
             writer_feats.append("lakesailRowTracking")
         if str(conf.get(_TW_ENABLE_KEY, "")).lower() == "true":
             # readers must know to upcast pre-widening files, so the
@@ -2581,16 +2696,10 @@ def _plan_commit(
             "configuration": conf,
             "createdTime": int(time.time() * 1000),
         }
-        df, id_action = _allocate_identity(df, new_meta)
-        if id_action is not None:
-            new_meta = id_action["metaData"]  # watermark advanced
-        actions.append({"protocol": proto_action})
-        actions.append({"metaData": new_meta})
-        df = _apply_generated(df, new_meta)
-        df = _apply_defaults(df, new_meta)
         # constraints/invariants supplied at creation bind the very
         # first batch (new_meta carries both configuration and schema)
-        _enforce_constraints(df, new_meta)
+        df, new_meta = _conform(df, new_meta, version)
+        actions = [{"protocol": proto_action}, {"metaData": new_meta}]
         return None, actions, df, new_meta, []
     # writer half of protocol gating: appending to (or overwriting) a
     # table that demands a newer writer would corrupt invariants we do
@@ -2615,7 +2724,6 @@ def _plan_commit(
                     f"{_MAX_WRITER_IMPLEMENTED} plus writer features "
                     f"{sorted(_WRITER_FEATURES_IMPLEMENTED)}"
                 )
-    meta = meta or {}
     # a commit whose layout contradicts metaData.partitionColumns
     # would be protocol-corrupt (adds with wrong partitionValues,
     # mixed directory layouts) — reject it loudly
@@ -2630,109 +2738,10 @@ def _plan_commit(
             f"partition_by {partition_by or []} does not match the "
             f"table's declared partitionColumns {declared}"
         )
-    # the creation-time reservation must hold on EVERY later append: a
-    # merge_schema batch carrying a _row_id column would evolve it into
-    # the logical schema and collide with the row-tracking read path's
-    # injected physical column, bricking every row-ids read and DML
-    if _rt_enabled(meta) and _RT_COL in df.columns:
-        raise ValueError(
-            f"row tracking reserves the physical column name {_RT_COL}; "
-            "rename the batch column"
-        )
-    # fill-or-verify generated columns, fill omitted DEFAULT columns,
-    # and allocate identity blocks BEFORE schema validation, so a batch
-    # that (correctly) omits them is not a schema mismatch
-    if meta.get("schemaString"):
-        df = _apply_generated(df, meta)
-        df = _apply_defaults(df, meta)
-        df, id_action = _allocate_identity(df, meta)
-        if id_action is not None:
-            actions.append(id_action)
-            meta = id_action["metaData"]
-    existing = _logical_schema(meta)
-    if df.schema != existing and _nullability_conforms(df.schema, existing):
-        # delta-spark accepts a STRICTER batch (non-nullable column into
-        # a nullable table column) without schema evolution — only the
-        # nullability marks differ, so conform the batch to the table.
-        # Spark's to() keeps the batch's tighter non-null marks, so the
-        # schemas may still differ afterwards — the second check below
-        # re-tests conformance rather than raw equality (the staged
-        # parquet simply contains no nulls in those columns).
-        df = df.to(existing)
-    if df.schema != existing and not _nullability_conforms(
-        df.schema, existing
-    ):
-        if not merge_schema:
-            raise ValueError(
-                "schema mismatch on write (pass merge_schema=True to "
-                "evolve the table schema, delta-spark's mergeSchema)"
-            )
-        merged = _merge_schemas(
-            existing, df.schema, allow_widening=_tw_enabled(meta)
-        )
-        # conform df to the merged shape: evolution-added columns the
-        # incoming batch lacks become typed nulls, column order fixed;
-        # the cast is what upcasts a narrower-typed batch into a
-        # widened table column (a no-op everywhere else — any unsafe
-        # type change was already rejected by the merge)
-        df = df.select(
-            *[
-                F.col(f.name).cast(f.dataType).alias(f.name)
-                if f.name in df.columns
-                else F.lit(None).cast(f.dataType).alias(f.name)
-                for f in merged.fields
-            ]
-        )
-        if merged != existing:
-            new_meta = dict(meta)
-            merged_json = json.loads(merged.json())
-            # evolution must preserve existing fields' schema metadata
-            # (column-mapping ids/physical names, generation expressions)
-            old_md = {
-                f["name"]: f.get("metadata") or {}
-                for f in json.loads(meta["schemaString"])["fields"]
-            }
-            # protocol interop: widened fields append their hop to
-            # delta.typeWidening.previousTypes, exactly where a foreign
-            # reader (and this engine's own read gate) looks for the
-            # widening history
-            old_types = {f.name: f.dataType for f in existing.fields}
-            widened_md = {}
-            for f in merged.fields:
-                frm = old_types.get(f.name)
-                if frm is not None and frm != f.dataType:
-                    prior = list(old_md.get(f.name, {}).get(_TW_PREV_KEY) or [])
-                    prior.append(
-                        {
-                            "fromType": frm.typeName(),
-                            "toType": f.dataType.typeName(),
-                            "tableVersion": version,
-                        }
-                    )
-                    widened_md[f.name] = {
-                        **old_md.get(f.name, {}),
-                        _TW_PREV_KEY: prior,
-                    }
-            merged_json["fields"] = [
-                {**f, "metadata": widened_md.get(f["name"], old_md[f["name"]])}
-                if f["name"] in old_md
-                else f
-                for f in merged_json["fields"]
-            ]
-            if _cm_enabled(meta):
-                # only NEW fields mint fresh (id, physicalName)
-                merged_json, max_id = _cm_assign(
-                    merged_json,
-                    int(
-                        meta.get("configuration", {}).get(_CM_MAXID_KEY, "0")
-                    ),
-                )
-                new_conf = dict(new_meta.get("configuration", {}))
-                new_conf[_CM_MAXID_KEY] = str(max_id)
-                new_meta["configuration"] = new_conf
-            new_meta["schemaString"] = json.dumps(merged_json)
-            actions.append({"metaData": new_meta})
-            meta = new_meta
+    df, new_meta = _conform(df, meta, version, merge_schema)
+    if new_meta is not meta:
+        actions.append({"metaData": new_meta})
+        meta = new_meta
     if mode == "overwrite":
         if live and _append_only(meta):
             raise ValueError(
@@ -2740,11 +2749,7 @@ def _plan_commit(
                 "true); overwrite would retract committed rows"
             )
         actions += _removes(sorted(live))
-    # writer-v3 enforcement: the batch must satisfy every table CHECK
-    # constraint before any file is staged (re-runs on OCC retry, so a
-    # constraint added by a racing commit is honored too)
-    _enforce_constraints(df, meta)
-    return read_version, actions, df, meta, _live_stats_cols(live.values())
+    return read_version, actions, df, meta, list(live.values())
 
 
 def delta_last_txn(spark: SparkSession, path: str, app_id: str) -> int | None:
@@ -2799,40 +2804,17 @@ def _rt_enabled(meta: dict | None) -> bool:
     )
 
 
-def _rt_assign(
-    spark: SparkSession, path: str, meta: dict, adds: list[dict]
-) -> dict | None:
-    """Stamp fresh ``baseRowId`` ranges onto this commit's NEW adds and
-    return the metaData action advancing the row-id high watermark
-    (None when nothing was allocated). An add that already carries a
-    baseRowId — a DV commit re-adding a live path, a shallow clone's
-    copied action — keeps its existing range: re-minting would change
-    ids the protocol promises are stable. Record counts come from the
-    staged files' parquet footers (driver-side, metadata-only, the same
-    pyarrow route as ``_file_stats``) and ride the ``stats`` JSON as
-    ``numRecords`` exactly where delta-spark keeps them."""
+def _rt_assign(meta: dict, adds: list[dict]) -> dict | None:
+    """Stamp fresh ``baseRowId`` ranges onto freshly staged ``adds`` (each
+    records ``numRecords`` in its stats, where delta-spark keeps it) and
+    return the metaData action advancing the row-id high watermark (None
+    when nothing was allocated)."""
     if not _rt_enabled(meta):
         return None
     wm = start = int((meta.get("configuration") or {}).get(_RT_WM_KEY, "0"))
-    read = None
-    for item in adds:
-        add = item.get("add")
-        if add is None or add.get("baseRowId") is not None:
-            continue
-        stats = json.loads(add["stats"]) if add.get("stats") else {}
-        n = stats.get("numRecords")
-        if n is None:
-            if read is None:
-                read = _footer_reader(
-                    spark._jvm,  # noqa: SLF001
-                    path,
-                    spark._jsc.hadoopConfiguration,  # noqa: SLF001
-                )
-            n = read(add["path"], [])["numRecords"]
-            stats["numRecords"] = int(n)
-            add["stats"] = json.dumps(stats, default=str)
-        add["baseRowId"] = wm
-        wm += int(n)
+    for a in adds:
+        a["add"]["baseRowId"] = wm
+        wm += json.loads(a["add"]["stats"])["numRecords"]
     if wm == start:
         return None
     new_meta = dict(meta)
@@ -2865,6 +2847,42 @@ def _rt_attach(spark: SparkSession, scan: DataFrame, adds) -> DataFrame:
             F.col("__rt_mat"), F.col("__rt_base") + F.col("__dv_row")
         ),
     ).drop("__rt_file", "__rt_base", "__rt_mat")
+
+
+def _stage(
+    path: str,
+    meta: dict,
+    rows: DataFrame,
+    live_adds,
+    stats_cols=(),
+    *,
+    data_change: bool = True,
+    tags: dict | None = None,
+) -> tuple[list[dict], dict | None]:
+    """Stage conformed ``rows`` (LOGICAL columns, plus ``_row_id`` on
+    row-tracked tables) as new data files of the table ``meta``
+    describes; returns (their ``add`` actions, the metaData action
+    advancing the row-id watermark — None unless the table tracks row
+    ids).
+
+    Files hold the PHYSICAL columns in the table's hive layout, keyed by
+    physical partition names. Min/max stats cover the stats surface of
+    ``live_adds`` (the snapshot's live files) plus ``stats_cols`` (a
+    write's stats columns, a Z-order's keys), so no write narrows what
+    range reads can skip. Each add says ``dataChange: data_change`` and
+    carries ``tags``; row-tracked tables get fresh baseRowId ranges."""
+    pm = {l: p for p, l in _cm_pairs(meta)}
+    surface = set(_live_stats_cols(live_adds))
+    surface |= {pm.get(c, c) for c in stats_cols}
+    parts = [pm.get(c, c) for c in meta.get("partitionColumns") or ()]
+    adds = _stage_data_files(
+        _to_physical(rows, meta), path, parts or None, sorted(surface)
+    )
+    for a in adds:
+        a["add"]["dataChange"] = data_change
+        if tags:
+            a["add"]["tags"] = dict(tags)
+    return adds, _rt_assign(meta, adds)
 
 
 def delta_write(
@@ -2916,6 +2934,7 @@ def delta_write(
     at-least-once delivery, job restart) checks ``delta_last_txn`` and
     skips batches it already landed — Delta's txnAppId/txnVersion
     streaming-sink mechanism."""
+    t0 = time.perf_counter()
     spark = df.sparkSession
 
     def plan():
@@ -2933,34 +2952,14 @@ def delta_write(
             invariants,
         )
 
-    read_version, actions, conformed, eff_meta, inherited_stats = plan()
+    read_version, actions, conformed, eff_meta, live = plan()
     if partition_by is None and eff_meta.get("partitionColumns"):
-        # _plan_commit inherited the existing table's layout; staging
-        # and retry re-plans must use the same effective spec
+        # _plan_commit inherited the existing table's layout; retry
+        # re-plans must use the same effective spec
         partition_by = list(eff_meta["partitionColumns"])
     txn_action = (
         [{"txn": {"appId": txn[0], "version": int(txn[1])}}] if txn else []
     )
-    # mapped tables: files hold PHYSICAL names; stats keys, hive
-    # partition dirs, and add.partitionValues keys follow (the golden
-    # foreign-fixture append caught logical names leaking into staging)
-    staged_stats = stats_cols
-    staged_partition_by = partition_by
-    if _cm_enabled(eff_meta):
-        pm = {l: p for p, l in _cm_pairs(eff_meta)}
-        staged_stats = (
-            [pm.get(c, c) for c in stats_cols] if stats_cols else None
-        )
-        staged_partition_by = (
-            [pm.get(c, c) for c in partition_by] if partition_by else None
-        )
-    if staged_stats is None and inherited_stats:
-        # a caller-less append to a stats-carrying table keeps the
-        # table's established skipping surface (delta-spark stamps
-        # stats on every write; losing them file-by-file silently
-        # erodes range pruning) — inherited keys are already physical
-        staged_stats = inherited_stats
-    staged_df = _to_physical(conformed, eff_meta)
     if (
         str(
             (eff_meta.get("configuration") or {}).get(_OPT_WRITE_KEY, "")
@@ -2973,23 +2972,29 @@ def delta_write(
         # exactly delta-spark's optimized-write shuffle. Partitioned
         # tables rebalance ON the partition columns so each hive dir gets
         # right-sized files instead of one shard per task.
-        staged_df = staged_df.hint("rebalance", *(staged_partition_by or []))
-    adds = _stage_data_files(staged_df, path, staged_partition_by, staged_stats)
-    # row tracking: fresh baseRowId ranges + watermark metaData, ordered
-    # AFTER any creation/evolution metaData so the advanced watermark
-    # wins the fold (it is built from eff_meta, so nothing is lost)
-    rt_action = _rt_assign(spark, path, eff_meta, adds)
+        conformed = conformed.hint("rebalance", *(partition_by or []))
+    adds, rt_action = _stage(path, eff_meta, conformed, live, stats_cols or ())
     rt_actions = [rt_action] if rt_action else []
+    metrics = {
+        "numFiles": len(adds),
+        "numOutputRows": _num_records(adds),
+        "numOutputBytes": sum(a["add"]["size"] for a in adds),
+        "executionTimeMs": _elapsed_ms(t0),
+    }
+
+    def commit_actions(planned: list[dict]) -> list[dict]:
+        info = _commit_info("WRITE", metrics)
+        return [info] + txn_action + planned + rt_actions + adds
 
     def replan() -> tuple[int, list[dict]]:
         seen, replanned, _, _, _ = plan()
-        return seen, txn_action + replanned + rt_actions + adds
+        return seen, commit_actions(replanned)
 
     version = _commit(
         spark,
         path,
         read_version,
-        txn_action + actions + rt_actions + adds,
+        commit_actions(actions),
         # a creation commit's staged files were written under THIS
         # writer's metaData (its column-mapping physical names, its
         # generated/identity specs) and are not valid under the winner's
@@ -5398,15 +5403,13 @@ def _rewrite(
     descriptor) and ``rows`` (logical columns, plus ``_row_id`` on
     row-tracked tables) staged as new files, in one version.
 
-    Staging writes the physical columns in the table's hive layout and
-    stamps min/max stats on the table's live stats surface plus
-    ``cluster_cols`` (a Z-order's keys), so no rewrite narrows what range
-    reads can skip. Row-tracked tables get fresh baseRowId ranges on the
-    staged files and the watermark advance in the commit, after
-    ``extra_actions`` (txn, schema evolution, identity watermark), whose
-    metaData it is built from. ``tags`` go on every staged add. When the
-    table records CDF, ``changes()`` gives the op's change images as
-    (frame, ``_change_type``) pairs, staged as the commit's cdc files.
+    ``rows`` are staged by :func:`_stage` with ``cluster_cols`` (a
+    Z-order's keys) added to the stats surface and ``tags`` on every add.
+    Row-tracked tables commit the row-id watermark advance after
+    ``extra_actions`` (txn, the op's metaData), whose metaData it is
+    built from. When the table records CDF, ``changes()`` gives the op's
+    change images as (frame, ``_change_type``) pairs, staged as the
+    commit's cdc files.
 
     ``layout`` marks a rewrite that leaves the snapshot's rows as they
     were (OPTIMIZE, Z-order, auto-compaction, REORG PURGE): its adds and
@@ -5434,20 +5437,10 @@ def _rewrite(
     adds: list[dict] = []
     rt_action = None
     if rows is not None:
-        pm = {l: p for p, l in _cm_pairs(meta)}
-        surface = set(_live_stats_cols(live.values()))
-        surface |= {pm.get(c, c) for c in cluster_cols or ()}
-        adds = _stage_data_files(
-            _to_physical(rows, meta),
-            path,
-            meta.get("partitionColumns") or None,
-            stats_cols=sorted(surface),
+        adds, rt_action = _stage(
+            path, meta, rows, live.values(), cluster_cols or (),
+            data_change=not layout, tags=tags,
         )
-        for a in adds:
-            a["add"]["dataChange"] = not layout
-            if tags:
-                a["add"]["tags"] = dict(tags)
-        rt_action = _rt_assign(spark, path, meta, adds)
     cdc = (
         _stage_change_files(changes(), path)
         if changes is not None and _cdf_enabled(meta)
@@ -5840,7 +5833,7 @@ def delta_replace_where(
 
     Atomic region swap, one commit:
 
-    1. every conformed incoming row must satisfy the predicate — a row
+    1. every incoming row must satisfy the predicate — a row
        that does not (or where it is NULL) would land OUTSIDE the
        declared replacement region; delta-spark refuses
        (DeltaAnalysisException), so do we, with nothing staged or
@@ -5849,9 +5842,9 @@ def delta_replace_where(
        match get plain removes, partially-matching files are rewritten
        keeping their non-matching remainder (NULL-predicate rows are
        remainder, SQL three-valued logic);
-    3. the incoming rows are conformed to the table schema (typed
-       casts, column DEFAULTs, generated columns recomputed, identity
-       allocated above the watermark, CHECK constraints enforced) and
+    3. the incoming rows follow the rule an append follows
+       (:func:`_conform` without schema evolution: a batch an append
+       refuses is refused here, before anything is staged) and are
        staged; removes + remainder + new data publish in ONE version —
        a reader sees the old region or the new one, never a mix.
 
@@ -5860,38 +5853,12 @@ def delta_replace_where(
     are re-read. A partition-aligned predicate therefore rewrites
     nothing — pure remove + append, the classic backfill fast path.
     """
+    t0 = time.perf_counter()
     pred = _coerce_predicate(predicate)
-    read_version, _, meta, live, _ = _snapshot_at(spark, path)
-    if meta is None:
+    read_version, _, snap_meta, live, _ = _snapshot_at(spark, path)
+    if snap_meta is None:
         raise ValueError(f"no delta table at {path}")
-    from pyspark.sql.types import StructType
-
-    schema = StructType.fromJson(json.loads(meta["schemaString"]))
-    tcols = [f.name for f in schema.fields]
-    identity = _identity_columns(meta)
-    bad_id = sorted(set(df.columns) & set(identity))
-    if bad_id:
-        raise ValueError(
-            f"cannot supply identity columns {bad_id} in a replaceWhere "
-            "write — ids are table-allocated"
-        )
-    incoming = _apply_defaults(df, meta)
-    incoming = incoming.select(
-        *[
-            F.col(c).cast(schema[c].dataType).alias(c)
-            if c in incoming.columns
-            else F.lit(None).cast(schema[c].dataType).alias(c)
-            for c in tcols
-            if c not in identity
-        ]
-    )
-    incoming = _recompute_generated(incoming, meta)
-    id_action = None
-    if identity:
-        incoming, id_action = _allocate_identity(incoming, meta)
-        if id_action is not None:
-            meta = id_action["metaData"]
-        incoming = incoming.select(*tcols)
+    incoming, meta = _conform(df, snap_meta, read_version + 1)
     # three consumers (region check, staging, change feed), one compute
     incoming = _checkpoint(incoming, eager=False)
     # "outside" = predicate not TRUE — ~NULL is NULL and would slip the
@@ -5919,7 +5886,6 @@ def delta_replace_where(
     sub = _read_affected_files(spark, path, meta, live, affected) if affected else None
     # the remainder keeps its materialized _row_id through the rewrite
     out = new_rows if sub is None else sub.where(~pred).unionByName(new_rows)
-    _enforce_constraints(out, meta)
 
     def changes() -> list:
         deleted = [] if sub is None else [(sub.where(pred), "delete")]
@@ -5927,9 +5893,18 @@ def delta_replace_where(
 
     return _rewrite(
         spark, path, "WRITE (replaceWhere)", read_version, meta, live,
-        affected, out, changes=changes,
-        extra_actions=[id_action] if id_action else None,
-        abort=id_action is not None,
+        affected, out, t0=t0, changes=changes,
+        metrics=lambda adds, cdc: {
+            "numFiles": len(adds),
+            "numOutputRows": _num_records(adds),
+            "numOutputBytes": sum(a["add"]["size"] for a in adds),
+            "numRemovedFiles": len(affected),
+            "numRemovedBytes": sum(int(live[f].get("size", 0)) for f in affected),
+        },
+        # the conformed batch's metaData carries the identity watermark
+        # of the values staged under it: abort on a lost race
+        extra_actions=None if meta is snap_meta else [{"metaData": meta}],
+        abort=meta is not snap_meta,
     )
 
 
@@ -6091,9 +6066,7 @@ def delta_merge(
     read_version, _, meta, _live, _ = _snapshot_at(spark, path)
     if meta is None:
         raise ValueError(f"no delta table at {path}")
-    from pyspark.sql.types import StructType
-
-    schema = StructType.fromJson(json.loads(meta["schemaString"]))
+    schema = _logical_schema(meta)
     tcols = [f.name for f in schema.fields]
     missing = [k for k in on if k not in tcols or k not in source.columns]
     if missing:
@@ -6103,33 +6076,13 @@ def delta_merge(
         f.name not in tcols for f in source.schema.fields
     ):
         # append-only evolution: _merge_schemas keeps existing fields
-        # (order, types — conflicts raise) and appends the new ones
-        # nullable; existing fields keep their schema metadata
-        merged_schema = _merge_schemas(schema, source.schema)
-        merged_json = json.loads(merged_schema.json())
-        old_md = {
-            f["name"]: f.get("metadata") or {}
-            for f in json.loads(meta["schemaString"])["fields"]
-        }
-        merged_json["fields"] = [
-            {**f, "metadata": old_md[f["name"]]}
-            if f["name"] in old_md
-            else f
-            for f in merged_json["fields"]
-        ]
-        new_meta = dict(meta)
-        if _cm_enabled(meta):
-            merged_json, max_id = _cm_assign(
-                merged_json,
-                int(meta.get("configuration", {}).get(_CM_MAXID_KEY, "0")),
-            )
-            conf = dict(new_meta.get("configuration", {}))
-            conf[_CM_MAXID_KEY] = str(max_id)
-            new_meta["configuration"] = conf
-        new_meta["schemaString"] = json.dumps(merged_json)
-        evo_action = {"metaData": new_meta}
-        meta = new_meta
-        schema = merged_schema
+        # (order, types — conflicts raise, MERGE never widens) and
+        # appends the new ones nullable
+        meta = _evolve(
+            meta, _merge_schemas(schema, source.schema), read_version + 1
+        )
+        evo_action = {"metaData": meta}
+        schema = _logical_schema(meta)
         tcols = [f.name for f in schema.fields]
     identity = _identity_columns(meta)
     upd = update_cols or [

@@ -54,6 +54,38 @@ def sf_oracle() -> str:
     return SF_ORACLE
 
 
+@pytest.fixture(scope="session")
+def registry_pass(spark, sf_smoke) -> dict:
+    """Every registry query built ONCE at ``sf_smoke`` for the two
+    registry-wide contracts, so each eager pipeline runs once:
+    ``{name: (build_error, run_error, undeclared global windows)}``.
+    The window lint reads the built frame's analyzed plan; the smoke
+    then needs non-empty columns and ``limit(5).collect()`` to run. An
+    error is recorded per query, not raised, so one broken query hides
+    neither the other queries nor the other contract."""
+    from lakesail_hdfs_deltalake_guide_spark.plans.inspect import (
+        undeclared_global_windows,
+    )
+    from lakesail_hdfs_deltalake_guide_spark.registry import get_registry
+
+    out = {}
+    for name, fn in get_registry().queries().items():
+        try:
+            df = fn(spark, sf_smoke)
+            windows = undeclared_global_windows(df)
+        except Exception as exc:  # noqa: BLE001 — reported by both tests
+            out[name] = (f"{type(exc).__name__}: {exc}", None, [])
+            continue
+        run_error = None if df.columns else "no columns"
+        if run_error is None:
+            try:
+                df.limit(5).collect()
+            except Exception as exc:  # noqa: BLE001 — reported by the smoke
+                run_error = f"{type(exc).__name__}: {exc}"
+        out[name] = (None, run_error, windows)
+    return out
+
+
 @pytest.fixture
 def arm_read_race(monkeypatch):
     """``arm(winner)`` lands ``winner(path)`` right after the next Delta

@@ -4360,7 +4360,10 @@ def test_dml_commits_carry_operation_metrics(spark):
     dl.delta_delete_dv(spark, path, "k between 40 and 44")  # v4
     dl.delta_update_dv(spark, path, "k between 60 and 79", {"v": "1"})  # v5
     hist = {h["version"]: h for h in dl.delta_history(spark, path)}
-    assert hist[0]["operationMetrics"] is None
+    write = dict(hist[0]["operationMetrics"])
+    assert int(write.pop("executionTimeMs")) >= 0
+    assert int(write.pop("numOutputBytes")) > 0
+    assert write == {"numFiles": "5", "numOutputRows": "100"}
 
     def m(v):
         got = dict(hist[v]["operationMetrics"])
@@ -4459,10 +4462,11 @@ def _commit_shape(path: str, version: int) -> dict:
 
 
 def test_rewrite_commit_shapes(spark):
-    """Every op that replaces data files, plus DV DELETE and DV UPDATE,
-    once each on a table with CDF and row tracking: each commit's
-    action kinds and counts, ``dataChange`` flags, add stats keys,
-    ``baseRowId`` stamping and metric keys."""
+    """The creating write and every op that replaces data files, plus DV
+    DELETE and DV UPDATE, once each on a table with CDF and row
+    tracking: each commit's action kinds and counts (one ``metaData`` at
+    most), ``dataChange`` flags, add stats keys, ``baseRowId`` stamping
+    and metric keys."""
     from lakesail_hdfs_deltalake_guide_spark.sources import delta_log as dl
 
     path = _skip_table(spark, {"delta.enableRowTracking": "true"})
@@ -4492,6 +4496,7 @@ def test_rewrite_commit_shapes(spark):
         + ["numCopiedRows", "numDeletionVectorsAdded"]
         + ["numDeletionVectorsRemoved", "numDeletionVectorsUpdated"]
     )
+    write = ["executionTimeMs", "numFiles", "numOutputBytes", "numOutputRows"]
 
     def shape(op, kinds, data_change, metrics, stats=(("k",),)):
         kinds = {"commitInfo": 1, **kinds}
@@ -4505,6 +4510,13 @@ def test_rewrite_commit_shapes(spark):
         }
 
     expected = [
+        # the creation metaData and the row-id watermark are one action
+        shape(
+            "WRITE",
+            {"add": 5, "metaData": 1, "protocol": 1},
+            {"add": [True]},
+            write,
+        ),
         shape(
             "DELETE",
             {"add": 1, "cdc": 1, "metaData": 1, "remove": 1},
@@ -4516,7 +4528,7 @@ def test_rewrite_commit_shapes(spark):
             "WRITE (replaceWhere)",
             {"add": 2, "cdc": 2, "metaData": 1, "remove": 1},
             data,
-            [],
+            write + ["numRemovedBytes", "numRemovedFiles"],
         ),
         shape(
             "MERGE",
@@ -4550,5 +4562,30 @@ def test_rewrite_commit_shapes(spark):
             stats=[("k", "v", "x")],
         ),
     ]
-    for v, want in enumerate(expected, start=1):
+    for v, want in enumerate(expected):
         assert _commit_shape(path, v) == want, v
+
+    # MERGE with schema evolution into a row-tracked identity table: the
+    # evolved schema, the identity watermark and the row-id watermark
+    # travel in one metaData action
+    path = tempfile.mkdtemp(prefix="ls_dl_merge_meta_")
+    delta_write(
+        spark.range(0, 10, 1, 2).select(F.col("id").alias("k")),
+        path,
+        identity_columns={"rid": {"start": 1, "step": 1}},
+        configuration={"delta.enableRowTracking": "true"},
+    )
+    src = spark.range(8, 12, 1, 1).select(F.col("id").alias("k"), F.lit("n").alias("e"))
+    assert dl.delta_merge(spark, path, src, on=["k"], schema_evolution=True) == 1
+    metas = [a["metaData"] for a in _actions(path, 1) if "metaData" in a]
+    assert len(metas) == 1
+    fields = {f["name"]: f for f in json.loads(metas[0]["schemaString"])["fields"]}
+    assert list(fields) == ["k", "rid", "e"]
+    assert fields["rid"]["metadata"]["delta.identity.highWaterMark"] == 12
+    staged = sum(
+        json.loads(a["add"]["stats"])["numRecords"]
+        for a in _actions(path, 1)
+        if "add" in a
+    )
+    wm = metas[0]["configuration"]["delta.rowTracking.rowIdHighWaterMark"]
+    assert wm == str(10 + staged)

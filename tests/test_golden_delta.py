@@ -23,6 +23,7 @@ checkpoint layout (UUID-named top file + ``_sidecars/`` add files +
 
 from __future__ import annotations
 
+import json
 import os
 import shutil
 
@@ -30,12 +31,16 @@ import pytest
 
 from lakesail_hdfs_deltalake_guide_spark.sources.delta_log import (
     _read_checkpoint,
+    delta_delete,
     delta_domain_metadata,
     delta_history,
     delta_last_txn,
     delta_live_adds,
+    delta_merge,
+    delta_optimize,
     delta_read,
     delta_row_count_from_stats,
+    delta_update,
     delta_write,
 )
 
@@ -158,6 +163,38 @@ def test_native_append_onto_foreign_table(spark, tmp_path):
     ) == 517.0
     # prior history still intact
     assert delta_read(spark, dest, version=5).count() == 9
+
+
+def test_native_rewrites_on_foreign_partitioned_table(spark, tmp_path):
+    """DELETE, UPDATE, MERGE and OPTIMIZE on a copy of the column-mapped,
+    partitioned golden table: the rows read back as expected, and every
+    new add keys ``partitionValues`` by the PHYSICAL partition column and
+    lives under a physical-name directory, as the fixture's own adds do."""
+    dest = str(tmp_path / "golden_copy")
+    shutil.copytree(GOLDEN, dest)
+    want = {r["id"]: r.asDict() for r in delta_read(spark, dest).collect()}
+    assert delta_delete(spark, dest, "id = 1") == 6
+    assert delta_update(spark, dest, "id = 2", {"amount": "1.5"}) == 7
+    src = spark.createDataFrame(
+        [(3, "eng", 9.0, "m"), (20, "mkt", 2.0, "n")],
+        "id int, dept string, amount double, note string",
+    )
+    assert delta_merge(spark, dest, src, on=["id"]) == 8
+    assert delta_optimize(spark, dest, target_files=1) == 9
+    del want[1]
+    want[2]["amount"] = 1.5
+    for r in src.collect():
+        want[r["id"]] = r.asDict()
+    got = {r["id"]: r.asDict() for r in delta_read(spark, dest).collect()}
+    assert got == want
+    for v in range(6, 10):
+        with open(os.path.join(dest, "_delta_log", f"{v:020d}.json")) as fh:
+            adds = [a["add"] for a in map(json.loads, fh) if "add" in a]
+        assert adds, v
+        for a in adds:
+            assert list(a["partitionValues"]) == ["col-9e8f7a6b"], v
+            dept = a["partitionValues"]["col-9e8f7a6b"]
+            assert a["path"].startswith(f"col-9e8f7a6b={dept}/"), v
 
 
 # --- golden_delta_v2: the V2-spec (UUID top file + sidecars) layout ---------

@@ -842,17 +842,10 @@ GLOBAL_WINDOW_BOUNDED_DOMAIN = {
 # operators/ranks.py and the round-14 SCALE.md entry.
 
 
-def test_no_undeclared_global_windows_registry_wide(spark, sf_smoke):
-    from lakesail_hdfs_deltalake_guide_spark.plans.inspect import (
-        undeclared_global_windows,
-    )
-    from lakesail_hdfs_deltalake_guide_spark.registry import build_registry
-
-    offenders = {}
-    for name, q in build_registry().defs.items():
-        off = undeclared_global_windows(q.fn(spark, sf_smoke))
-        if off:
-            offenders[name] = off[0]
+def test_no_undeclared_global_windows_registry_wide(registry_pass):
+    unbuilt = {n: e for n, (e, _, _) in registry_pass.items() if e}
+    assert not unbuilt, f"queries the lint could not inspect: {unbuilt}"
+    offenders = {n: w[0] for n, (_, _, w) in registry_pass.items() if w}
     unexpected = sorted(set(offenders) - set(GLOBAL_WINDOW_BOUNDED_DOMAIN))
     stale = sorted(set(GLOBAL_WINDOW_BOUNDED_DOMAIN) - set(offenders))
     assert not unexpected, (

@@ -337,7 +337,7 @@ def test_replace_where_partition_fast_path(spark):
         p,
         "part = 1",
         spark.range(100, 105).select(
-            F.col("id").alias("k"), F.lit(1).alias("part")
+            F.col("id").alias("k"), F.lit(1).cast("long").alias("part")
         ),
     )
     after = _rw_live_paths(spark, p)
@@ -399,7 +399,7 @@ def test_replace_where_cdf_and_empty_batch(spark):
         p,
         "g = 1",
         spark.range(100, 103).select(
-            F.col("id").alias("k"), F.lit(1).alias("g")
+            F.col("id").alias("k"), F.lit(1).cast("long").alias("g")
         ),
     )
     feed = delta_read_cdf(spark, p, v1, v1)
@@ -408,9 +408,7 @@ def test_replace_where_cdf_and_empty_batch(spark):
     assert dels == {k for k in range(20) if k % 2 == 1}
     assert ins == {100, 101, 102}
     # empty batch: pure delete of the region
-    v2 = delta_replace_where(
-        spark, p, "g = 1", spark.createDataFrame([], "k long, g long")
-    )
+    v2 = delta_replace_where(spark, p, "g = 1", base.limit(0))
     assert delta_read(spark, p).where("g = 1").count() == 0
     feed2 = delta_read_cdf(spark, p, v2, v2)
     assert feed2.where("_change_type = 'insert'").count() == 0
@@ -444,13 +442,46 @@ def test_replace_where_identity_allocation(spark):
         )
     high = delta_read(spark, p).agg(F.max("row_id")).collect()[0][0]
     delta_replace_where(
-        spark, p, "g = 0", spark.sql("SELECT 0 AS g UNION ALL SELECT 0")
+        spark,
+        p,
+        "g = 0",
+        spark.sql("SELECT 0L AS g UNION ALL SELECT 0L"),
     )
     back = delta_read(spark, p)
     ids = [r.row_id for r in back.collect()]
     assert len(ids) == len(set(ids)), "identity collision through the swap"
     new_ids = [r.row_id for r in back.where("g = 0").collect()]
     assert len(new_ids) == 2 and min(new_ids) > high
+
+
+def test_replace_where_follows_the_write_rule(spark):
+    """replaceWhere accepts exactly the batches an append accepts: a
+    batch column the table lacks and a generated value that contradicts
+    its expression are refused by both, with nothing committed."""
+    import pytest as _pytest
+
+    from lakesail_hdfs_deltalake_guide_spark.sources.delta_log import (
+        _list_versions,
+        delta_replace_where,
+        delta_write,
+    )
+
+    p = tempfile.mkdtemp(prefix="ls_rw_rule_")
+    delta_write(
+        spark.range(0, 10).select(F.col("id").alias("v")),
+        p,
+        generated_columns={"g": "v * 2"},
+    )
+    extra = spark.range(1, 3).select(F.col("id").alias("v"), F.lit(1).alias("x"))
+    bad_gen = spark.range(1, 3).select(
+        F.col("id").alias("v"), F.lit(999).cast("long").alias("g")
+    )
+    for batch, match in [(extra, "schema mismatch"), (bad_gen, "contradicts")]:
+        with _pytest.raises(ValueError, match=match):
+            delta_write(batch, p, mode="append")
+        with _pytest.raises(ValueError, match=match):
+            delta_replace_where(spark, p, "v < 3", batch)
+        assert _list_versions(spark, p) == [0]
 
 
 def test_secret_entropy_gate(spark, sf_smoke):
@@ -1234,7 +1265,10 @@ def test_dml_rewrites_restamp_skipping_stats(spark):
     )
     assert ok(p), "MERGE rewrite lost stats"
     delta_replace_where(
-        spark, p, "v = 9", spark.createDataFrame([], "k long, v long")
+        spark,
+        p,
+        "v = 9",
+        spark.range(0).select(F.col("id").alias("k"), F.col("id").alias("v")),
     )
     assert ok(p), "REPLACE WHERE rewrite lost stats"
     delta_delete_dv(spark, p, "k % 11 = 0")

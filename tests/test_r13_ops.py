@@ -100,9 +100,8 @@ def test_replace_where_null_predicate_incoming_refused(spark):
     (before the fix ~NULL slipped the check and the row committed
     where a re-run's scan could never remove it)."""
     p = tempfile.mkdtemp(prefix="ls_rw_nullin_")
-    delta_write(
-        spark.sql("SELECT * FROM VALUES (1, 5), (2, 50) AS t(k, v)"), p
-    )
+    # v nullable, so the write rule admits the batch's NULL
+    delta_write(spark.createDataFrame([(1, 5), (2, 50)], "k int, v int"), p)
     with pytest.raises(ValueError, match="outside"):
         delta_replace_where(
             spark,
