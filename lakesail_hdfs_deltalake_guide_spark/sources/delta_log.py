@@ -594,8 +594,9 @@ def _write_commit(spark: SparkSession, path: str, version: int, actions) -> None
     # inCommitTimestamp (the enablement commit writes it because its own
     # protocol action declares the feature), every later commit does too
     ict_on = (prev_info is not None and "inCommitTimestamp" in prev_info) or any(
-        _ICT_FEATURE in ((a.get("protocol") or {}).get("writerFeatures") or [])
+        _ICT_FEATURE in _features(a["protocol"])[1]
         for a in actions
+        if "protocol" in a
     )
     for a in actions:
         if "commitInfo" in a:
@@ -811,29 +812,13 @@ def delta_enable_v2_checkpoints(spark: SparkSession, path: str) -> int:
     not enforce (appendOnly, invariants — never configured on tables
     it creates) are deliberately NOT claimed, so foreign writers don't
     assume enforcement that isn't there. Returns the upgrade commit's
-    version."""
-    read_version, proto, meta, _, _ = _snapshot_at(spark, path)
-    if meta is None:
-        raise ValueError(f"no delta table at {path}")
-    proto = proto or dict(_PROTOCOL)
-    reader = set(proto.get("readerFeatures") or [])
-    writer = set(proto.get("writerFeatures") or [])
-    if "v2Checkpoint" in reader and "v2Checkpoint" in writer:
-        return read_version
-    reader.add("v2Checkpoint")
-    writer |= {"v2Checkpoint", "checkConstraints"}
-    actions = [
-        _commit_info("UPGRADE PROTOCOL"),
-        {
-            "protocol": {
-                "minReaderVersion": 3,
-                "minWriterVersion": 7,
-                "readerFeatures": sorted(reader),
-                "writerFeatures": sorted(writer),
-            }
-        },
-    ]
-    return _commit(spark, path, read_version, actions)
+    version (the read version when already upgraded)."""
+    return _commit_metadata_change(
+        spark,
+        path,
+        "UPGRADE PROTOCOL",
+        lambda _v, proto, meta: [_protocol(proto, meta, add={"v2Checkpoint"})],
+    )
 
 
 def delta_checkpoint(
@@ -888,9 +873,7 @@ def delta_checkpoint(
     )
     if meta is None:
         raise ValueError(f"no delta table at {path}")
-    if format == "v2" and "v2Checkpoint" not in (
-        (proto or {}).get("readerFeatures") or []
-    ):
+    if format == "v2" and "v2Checkpoint" not in _features(proto)[0]:
         raise ValueError(
             f"table at {path} does not declare the v2Checkpoint feature; "
             "run delta_enable_v2_checkpoints first (a v2 checkpoint on an "
@@ -1107,8 +1090,9 @@ def _check_reader_version(path: str, proto: dict | None) -> None:
     whose ``minReaderVersion`` exceeds what it implements MUST refuse —
     silently folding a log whose semantics it does not understand
     (deletion vectors, column mapping, ...) reads WRONG DATA, not
-    degraded data. Writer gating lives in _plan_commit (a pure reader may
-    legitimately read reader-v1 tables that demand a newer writer)."""
+    degraded data. Writer gating is :func:`_check_writer_version` (a
+    pure reader may legitimately read tables that demand a newer
+    writer)."""
     if proto is None:
         return
     found = proto.get("minReaderVersion")
@@ -1140,6 +1124,89 @@ def _check_reader_version(path: str, proto: dict | None) -> None:
         f"version {_PROTOCOL['minReaderVersion']} plus reader features "
         f"{sorted(_READER_FEATURES_IMPLEMENTED)}"
     )
+
+
+def _check_writer_version(path: str, proto: dict | None) -> None:
+    """Writer half of protocol gating, run by the fold every committing
+    op reads (:func:`_snapshot_at`): committing to a table that demands
+    a newer writer would corrupt invariants this module does not
+    implement — refuse. Legacy versions up to 3 (CHECK constraints,
+    enforced by _enforce_constraints) are writable; writer v7 is
+    writable iff every listed writerFeature is implemented."""
+    found = (proto or {}).get("minWriterVersion")
+    if found is None or int(found) <= _MAX_WRITER_IMPLEMENTED:
+        return
+    feats = proto.get("writerFeatures")
+    unknown = set(feats or ()) - _WRITER_FEATURES_IMPLEMENTED
+    if int(found) != 7 or feats is None or unknown:
+        raise ValueError(
+            f"cannot write delta table at {path}: it requires "
+            f"minWriterVersion={found} (features "
+            f"{sorted(unknown) if feats else '<unlisted>'}) but "
+            f"this writer implements version "
+            f"{_MAX_WRITER_IMPLEMENTED} plus writer features "
+            f"{sorted(_WRITER_FEATURES_IMPLEMENTED)}"
+        )
+
+
+def _features(proto: dict | None) -> tuple[set[str], set[str]]:
+    """The (reader, writer) table features the protocol ``proto``
+    requires: the listed ones plus what a legacy version implies —
+    reader v2 is column mapping (on both sides), writer 3..6 enforces
+    CHECK constraints."""
+    proto = proto or _PROTOCOL
+    reader = set(proto.get("readerFeatures") or ())
+    writer = set(proto.get("writerFeatures") or ())
+    if int(proto.get("minReaderVersion", 1)) == 2:
+        reader.add("columnMapping")
+        writer.add("columnMapping")
+    if 3 <= int(proto.get("minWriterVersion", 2)) < 7:
+        writer.add("checkConstraints")
+    return reader, writer
+
+
+def _protocol(
+    proto: dict | None, meta: dict, add=(), drop=()
+) -> dict | None:
+    """The ``protocol`` action a commit must carry when the table at
+    ``proto`` (None: creation), with metaData ``meta``, starts using the
+    features ``add`` and stops using ``drop`` — None when the protocol
+    stays as it is. The one place versions and feature lists are built:
+
+    - every reader feature is a reader-writer feature, listed on both
+      sides;
+    - a table using no feature beyond CHECK constraints keeps the legacy
+      pair: writer 3 when ``meta`` defines constraints, else 2;
+    - otherwise writer 7 lists every writer feature, checkConstraints
+      included (PROTOCOL.md's version-7 rule that every feature the
+      table uses is spelled out); the reader is 1 with no reader
+      feature, stays 2 on a reader-v2 column-mapped table, and is
+      otherwise 3 listing every reader feature."""
+    reader, writer = _features(proto)
+    drop = set(drop)
+    writer = (writer | set(add)) - drop
+    reader = (reader | (writer & _READER_FEATURES_IMPLEMENTED)) - drop
+    if not reader and writer <= {"checkConstraints"}:
+        new = {
+            "minReaderVersion": 1,
+            "minWriterVersion": 3 if _table_constraints(meta) else 2,
+        }
+    else:
+        legacy_cm = reader == {"columnMapping"} and (
+            int((proto or {}).get("minReaderVersion", 1)) == 2
+        )
+        new = {
+            "minReaderVersion": 1 if not reader else 2 if legacy_cm else 3,
+            "minWriterVersion": 7,
+        }
+        if new["minReaderVersion"] == 3:
+            new["readerFeatures"] = sorted(reader)
+        new["writerFeatures"] = sorted((writer | {"checkConstraints"}) - drop)
+    if proto is not None and all(
+        int(new[k]) == int(proto.get(k, _PROTOCOL[k])) for k in _PROTOCOL
+    ) and _features(new) == _features(proto):
+        return None
+    return {"protocol": new}
 
 
 def _fold_range(
@@ -1188,7 +1255,7 @@ def _snapshot_state(
     returns an empty live dict and never decodes the checkpoint's add
     column — callers pair it with :func:`delta_snapshot_adds_df` for the
     distributed fold, keeping the driver O(metadata), not O(live files)."""
-    return _snapshot_at(spark, path, version, include_adds)[1:]
+    return _snapshot_at(spark, path, version, include_adds, write=False)[1:]
 
 
 def _snapshot_at(
@@ -1196,10 +1263,13 @@ def _snapshot_at(
     path: str,
     version: int | None = None,
     include_adds: bool = True,
+    write: bool = True,
 ) -> tuple[int | None, dict | None, dict | None, dict[str, dict], dict[str, int]]:
     """:func:`_snapshot_state` led by the version the fold resolved
     (None when there is no table) — the read version a writer hands to
-    :func:`_commit`, so its commit lands at exactly that version + 1."""
+    :func:`_commit`, so its commit lands at exactly that version + 1.
+    Every committing op reads its snapshot here, so ``write`` applies
+    the writer gate (:func:`_check_writer_version`) to all of them."""
     target, ck, start = _fold_range(spark, path, version)
     if target is None:
         return None, None, None, {}, {}
@@ -1241,6 +1311,8 @@ def _snapshot_at(
             elif "protocol" in action:
                 proto = action["protocol"]
     _check_reader_version(path, proto)
+    if write:
+        _check_writer_version(path, proto)
     _check_type_widening(path, proto, meta)
     return target, proto, meta, live, txns
 
@@ -1821,7 +1893,7 @@ def _check_type_widening(path: str, proto: dict | None, meta: dict | None) -> No
     widening hop must lie strictly within a supported chain."""
     if proto is None or not meta or not meta.get("schemaString"):
         return
-    if "typeWidening" not in (proto.get("readerFeatures") or ()):
+    if "typeWidening" not in _features(proto)[0]:
         return
 
     def _walk(node) -> None:
@@ -2346,22 +2418,31 @@ def _physical_scan(
     return scan.select(*cols)
 
 
-def _commit_metadata_change(spark: SparkSession, path: str, mutate) -> int:
-    """Commit a metaData-only change produced by ``mutate(meta) ->
-    new_meta`` with OCC retry (re-resolving the current metaData on a
-    lost race, so a racing evolution or rename is rebased, not
-    clobbered)."""
+def _commit_metadata_change(
+    spark: SparkSession, path: str, op: str, mutate
+) -> int:
+    """The one commit path of a metadata-only ALTER (no data file added
+    or removed), committed as operation ``op``. ``mutate(read_version,
+    proto, meta)`` validates the snapshot at ``read_version`` and returns
+    the commit's actions (None entries skipped: a :func:`_protocol` that
+    changes nothing); when none remain, nothing is committed and the
+    read version is returned. A lost race re-plans against the winner's
+    snapshot, so a racing change is rebased or re-refused, never
+    clobbered."""
 
     def plan() -> tuple[int, list[dict]]:
-        read_version, _, meta, _, _ = _snapshot_at(spark, path)
+        read_version, proto, meta, _, _ = _snapshot_at(
+            spark, path, include_adds=False
+        )
         if meta is None:
             raise ValueError(f"no delta table at {path}")
-        return read_version, [
-            _commit_info("ALTER TABLE"),
-            {"metaData": mutate(meta)},
-        ]
+        actions = [a for a in mutate(read_version, proto, meta) if a]
+        return read_version, [_commit_info(op)] + actions
 
-    return _commit(spark, path, *plan(), rebase=plan)
+    read_version, actions = plan()
+    if len(actions) == 1:
+        return read_version
+    return _commit(spark, path, read_version, actions, rebase=plan)
 
 
 def _check_column_not_referenced(meta: dict, col: str, verb: str) -> None:
@@ -2394,7 +2475,7 @@ def delta_rename_column(
     only the logical label changes). Zero files touched; every prior
     snapshot time-travels back under its own name."""
 
-    def mutate(meta: dict) -> dict:
+    def mutate(_v, _proto, meta: dict) -> list[dict]:
         if not _cm_enabled(meta):
             raise ValueError(
                 "RENAME COLUMN requires columnMapping (create the table "
@@ -2411,9 +2492,9 @@ def delta_rename_column(
             {**f, "name": new} if f["name"] == old else f
             for f in sj["fields"]
         ]
-        return {**meta, "schemaString": json.dumps(sj)}
+        return [{"metaData": {**meta, "schemaString": json.dumps(sj)}}]
 
-    return _commit_metadata_change(spark, path, mutate)
+    return _commit_metadata_change(spark, path, "RENAME COLUMN", mutate)
 
 
 def delta_drop_column(spark: SparkSession, path: str, col: str) -> int:
@@ -2422,7 +2503,7 @@ def delta_drop_column(spark: SparkSession, path: str, col: str) -> int:
     (readers project it away); a later RESTORE of an older snapshot
     brings the column back intact."""
 
-    def mutate(meta: dict) -> dict:
+    def mutate(_v, _proto, meta: dict) -> list[dict]:
         if not _cm_enabled(meta):
             raise ValueError(
                 "DROP COLUMN requires columnMapping (create the table "
@@ -2436,9 +2517,9 @@ def delta_drop_column(spark: SparkSession, path: str, col: str) -> int:
             raise ValueError("cannot drop the table's only column")
         _check_column_not_referenced(meta, col, "drop")
         sj["fields"] = [f for f in sj["fields"] if f["name"] != col]
-        return {**meta, "schemaString": json.dumps(sj)}
+        return [{"metaData": {**meta, "schemaString": json.dumps(sj)}}]
 
-    return _commit_metadata_change(spark, path, mutate)
+    return _commit_metadata_change(spark, path, "DROP COLUMNS", mutate)
 
 
 def _evolve(meta: dict, merged, version: int) -> dict:
@@ -2573,7 +2654,7 @@ def _plan_commit(
     names; effective metaData; the snapshot's live add actions). Re-run
     on every retry so a lost race re-validates against the winner's
     committed state."""
-    read_version, proto, meta, live, _ = _snapshot_at(spark, path)
+    read_version, _, meta, live, _ = _snapshot_at(spark, path)
     version = 0 if read_version is None else read_version + 1
     actions: list[dict] = []
     if read_version is None:
@@ -2651,9 +2732,15 @@ def _plan_commit(
                     },
                 }
             )
-        reader_feats: list[str] = []
-        writer_feats: list[str] = []
-        if _cm_enabled({"configuration": conf}):
+        on = {
+            "generatedColumns": bool(generated_columns),
+            "identityColumns": bool(identity_columns),
+            "allowColumnDefaults": bool(column_defaults),
+            "lakesailRowTracking": _rt_enabled({"configuration": conf}),
+            "typeWidening": _tw_enabled({"configuration": conf}),
+            "columnMapping": _cm_enabled({"configuration": conf}),
+        }
+        if on["columnMapping"]:
             if partition_by:
                 raise ValueError(
                     "column mapping with partitioned layout is not "
@@ -2661,33 +2748,6 @@ def _plan_commit(
                 )
             schema_json, max_id = _cm_assign(schema_json, 0)
             conf[_CM_MAXID_KEY] = str(max_id)
-            reader_feats.append("columnMapping")
-            writer_feats.append("columnMapping")
-        if generated_columns:
-            writer_feats.append("generatedColumns")
-        if identity_columns:
-            writer_feats.append("identityColumns")
-        if column_defaults:
-            writer_feats.append("allowColumnDefaults")
-        if str(conf.get(_RT_ENABLE_KEY, "")).lower() == "true":
-            writer_feats.append("lakesailRowTracking")
-        if str(conf.get(_TW_ENABLE_KEY, "")).lower() == "true":
-            # readers must know to upcast pre-widening files, so the
-            # feature gates BOTH sides (unlike the writer-only features)
-            reader_feats.append("typeWidening")
-            writer_feats.append("typeWidening")
-        if writer_feats:
-            proto_action = {
-                "minReaderVersion": 3 if reader_feats else 1,
-                "minWriterVersion": 7,
-                "writerFeatures": sorted(
-                    set(writer_feats) | {"checkConstraints"}
-                ),
-            }
-            if reader_feats:
-                proto_action["readerFeatures"] = sorted(reader_feats)
-        else:
-            proto_action = dict(_PROTOCOL)
         new_meta = {
             "id": uuid.uuid4().hex,
             "format": {"provider": "parquet", "options": {}},
@@ -2699,31 +2759,8 @@ def _plan_commit(
         # constraints/invariants supplied at creation bind the very
         # first batch (new_meta carries both configuration and schema)
         df, new_meta = _conform(df, new_meta, version)
-        actions = [{"protocol": proto_action}, {"metaData": new_meta}]
-        return None, actions, df, new_meta, []
-    # writer half of protocol gating: appending to (or overwriting) a
-    # table that demands a newer writer would corrupt invariants we do
-    # not implement (generated columns, identity columns, ...) — refuse.
-    # Version 3 (CHECK constraints) IS implemented (_enforce_constraints),
-    # so tables bumped by delta_add_constraint stay writable here while
-    # non-enforcing writers correctly refuse them.
-    if proto is not None:
-        found = proto.get("minWriterVersion")
-        if found is not None and int(found) > _MAX_WRITER_IMPLEMENTED:
-            # writer v7 = table features: writable iff every listed
-            # writerFeature is implemented (DV tables land here after
-            # their protocol upgrade). Anything else is refused.
-            feats = proto.get("writerFeatures")
-            unknown = set(feats or ()) - _WRITER_FEATURES_IMPLEMENTED
-            if int(found) != 7 or feats is None or unknown:
-                raise ValueError(
-                    f"cannot write delta table at {path}: it requires "
-                    f"minWriterVersion={found} (features "
-                    f"{sorted(unknown) if feats else '<unlisted>'}) but "
-                    f"this writer implements version "
-                    f"{_MAX_WRITER_IMPLEMENTED} plus writer features "
-                    f"{sorted(_WRITER_FEATURES_IMPLEMENTED)}"
-                )
+        protocol = _protocol(None, new_meta, add={f for f in on if on[f]})
+        return None, [protocol, {"metaData": new_meta}], df, new_meta, []
     # a commit whose layout contradicts metaData.partitionColumns
     # would be protocol-corrupt (adds with wrong partitionValues,
     # mixed directory layouts) — reject it loudly
@@ -3377,67 +3414,36 @@ def delta_enable_in_commit_timestamps(spark: SparkSession, path: str) -> int:
     from here on); this engine's monotonicity guarantee
     (``max(now, prev+1)``) already satisfies the feature's ordering
     requirement. Returns the enablement commit version; idempotent."""
-    read_version, proto, meta, _, _ = _snapshot_at(
-        spark, path, include_adds=False
-    )
-    if meta is None:
-        raise ValueError(f"no delta table at {path}")
-    wf = set((proto or {}).get("writerFeatures") or ())
-    if _ICT_FEATURE in wf:
-        return read_version
-    rf = set((proto or {}).get("readerFeatures") or ())
-    new_proto = {
-        "minReaderVersion": int(
-            (proto or _PROTOCOL).get("minReaderVersion", 1)
-        ),
-        "minWriterVersion": 7,
-        "writerFeatures": sorted(wf | {_ICT_FEATURE, "checkConstraints"}),
-    }
-    if rf:
-        new_proto["readerFeatures"] = sorted(rf)
-    conf = dict(meta.get("configuration") or {})
-    conf["delta.enableInCommitTimestamps"] = "true"
-    conf["delta.inCommitTimestampEnablementVersion"] = str(read_version + 1)
-    actions = [
-        _commit_info("UPGRADE PROTOCOL"),
-        {"protocol": new_proto},
-        {"metaData": {**meta, "configuration": conf}},
-    ]
-    return _commit(spark, path, read_version, actions)
+
+    def mutate(read_version: int, proto, meta: dict) -> list:
+        if _ICT_FEATURE in _features(proto)[1]:
+            return []
+        conf = {
+            **(meta.get("configuration") or {}),
+            "delta.enableInCommitTimestamps": "true",
+            "delta.inCommitTimestampEnablementVersion": str(read_version + 1),
+        }
+        return [
+            _protocol(proto, meta, add={_ICT_FEATURE}),
+            {"metaData": {**meta, "configuration": conf}},
+        ]
+
+    return _commit_metadata_change(spark, path, "UPGRADE PROTOCOL", mutate)
 
 
 def _commit_domain_action(
     spark: SparkSession, path: str, dm: dict, op: str
 ) -> int:
-    read_version, proto, meta, _, _ = _snapshot_at(
-        spark, path, include_adds=False
-    )
-    if meta is None:
-        raise ValueError(f"no delta table at {path}")
-    # removing an absent domain is refused loudly — a silent no-op here
-    # would hide a caller racing its own earlier removal
-    if dm["removed"] and dm["domain"] not in delta_domain_metadata(
-        spark, path, read_version
-    ):
-        raise ValueError(f"domain {dm['domain']!r} not present at {path}")
-    actions: list[dict] = [_commit_info(op)]
-    wf = set((proto or {}).get("writerFeatures") or ())
-    if _DOMAIN_FEATURE not in wf:
-        rf = set((proto or {}).get("readerFeatures") or ())
-        new_proto = {
-            "minReaderVersion": int(
-                (proto or _PROTOCOL).get("minReaderVersion", 1)
-            ),
-            "minWriterVersion": 7,
-            "writerFeatures": sorted(
-                wf | {_DOMAIN_FEATURE, "checkConstraints"}
-            ),
-        }
-        if rf:
-            new_proto["readerFeatures"] = sorted(rf)
-        actions.append({"protocol": new_proto})
-    actions.append({"domainMetadata": dm})
-    return _commit(spark, path, read_version, actions)
+    def mutate(read_version: int, proto, meta: dict) -> list:
+        # removing an absent domain is refused loudly — a silent no-op
+        # here would hide a caller racing its own earlier removal
+        if dm["removed"] and dm["domain"] not in delta_domain_metadata(
+            spark, path, read_version
+        ):
+            raise ValueError(f"domain {dm['domain']!r} not present at {path}")
+        return [_protocol(proto, meta, add={_DOMAIN_FEATURE}), {"domainMetadata": dm}]
+
+    return _commit_metadata_change(spark, path, op, mutate)
 
 
 def delta_set_domain_metadata(
@@ -4156,10 +4162,12 @@ def delta_cluster_by(
     until the next maintenance OPTIMIZE. Hive-partitioned tables are
     refused (clustering and directory partitioning are mutually
     exclusive, as in delta-spark)."""
-    read_version, proto, meta, _, _ = _snapshot_at(spark, path)
-    if meta is None:
-        raise ValueError(f"no delta table at {path}")
-    if cols:
+
+    def mutate(_v, proto, meta: dict) -> list:
+        conf = dict(meta.get("configuration") or {})
+        if not cols:
+            conf.pop(_CLUSTER_KEY, None)
+            return [{"metaData": {**meta, "configuration": conf}}]
         if meta.get("partitionColumns"):
             raise ValueError(
                 "CLUSTER BY is incompatible with hive partitioning — "
@@ -4171,30 +4179,13 @@ def delta_cluster_by(
         missing = [c for c in cols if c not in names]
         if missing:
             raise ValueError(f"clustering columns not in schema: {missing}")
-    conf = dict(meta.get("configuration") or {})
-    if cols:
         conf[_CLUSTER_KEY] = json.dumps(list(cols))
-    else:
-        conf.pop(_CLUSTER_KEY, None)
-    actions: list[dict] = [_commit_info("CLUSTER BY")]
-    wf = set((proto or {}).get("writerFeatures") or ())
-    if cols and _CLUSTER_FEATURE not in wf:
-        rf = set((proto or {}).get("readerFeatures") or ())
-        new_proto = {
-            "minReaderVersion": int(
-                (proto or _PROTOCOL).get("minReaderVersion", 1)
-            ),
-            "minWriterVersion": 7,
-            # version-7 rule: every feature the table uses is spelled out
-            "writerFeatures": sorted(
-                wf | {_CLUSTER_FEATURE, "checkConstraints"}
-            ),
-        }
-        if rf:
-            new_proto["readerFeatures"] = sorted(rf)
-        actions.append({"protocol": new_proto})
-    actions.append({"metaData": {**meta, "configuration": conf}})
-    return _commit(spark, path, read_version, actions)
+        return [
+            _protocol(proto, meta, add={_CLUSTER_FEATURE}),
+            {"metaData": {**meta, "configuration": conf}},
+        ]
+
+    return _commit_metadata_change(spark, path, "CLUSTER BY", mutate)
 
 
 def delta_optimize_clustered(
@@ -4583,10 +4574,7 @@ def delta_vacuum(
     proto, meta, _, _ = _snapshot_state(
         spark, path, include_adds=False
     )
-    unknown = (
-        set((proto or {}).get("writerFeatures") or ())
-        - _WRITER_FEATURES_IMPLEMENTED
-    )
+    unknown = _features(proto)[1] - _WRITER_FEATURES_IMPLEMENTED
     if unknown:
         raise ValueError(
             f"refusing to VACUUM {path}: writer features "
@@ -5579,55 +5567,40 @@ def _enforce_constraints(df: DataFrame, meta: dict | None) -> None:
 def delta_add_constraint(
     spark: SparkSession, path: str, name: str, expr: str
 ) -> int:
-    """ALTER TABLE ADD CONSTRAINT: validate the EXISTING snapshot
-    against ``expr`` (a violating table must not gain the constraint),
-    then commit an updated metaData carrying it — and a protocol bump to
-    minWriterVersion 3, exactly how delta-spark marks tables whose
-    writers must enforce checks. Our own writer gate accepts 3 because
-    this module enforces them; foreign writers that don't will refuse
-    the table, which is the protocol working as designed."""
-    read_version, proto, meta, _, _ = _snapshot_at(spark, path)
-    if meta is None:
-        raise ValueError(f"no delta table at {path}")
-    current = delta_read(spark, path, version=read_version)
-    _enforce_constraints(
-        current,
-        {"configuration": {_CONSTRAINT_PREFIX + name: expr}},
-    )
-    new_meta = dict(meta)
-    new_meta["configuration"] = {
-        **meta.get("configuration", {}),
-        _CONSTRAINT_PREFIX + name: expr,
-    }
-    actions: list[dict] = []
-    if int((proto or _PROTOCOL).get("minWriterVersion", 2)) < 3:
-        actions.append(
-            {
-                "protocol": {
-                    "minReaderVersion": int(
-                        (proto or _PROTOCOL).get("minReaderVersion", 1)
-                    ),
-                    "minWriterVersion": 3,
-                }
-            }
+    """ALTER TABLE ADD CONSTRAINT: validate the snapshot the commit
+    reads against ``expr`` (a violating table must not gain the
+    constraint; a lost race re-validates the winner's), then commit an
+    updated metaData carrying it, with the table's constraints declared
+    per :func:`_protocol` — writer 3 on a legacy table, the
+    ``checkConstraints`` feature at writer 7. Our own writer gate
+    accepts both because this module enforces them; foreign writers
+    that don't will refuse the table, which is the protocol working as
+    designed."""
+    key = _CONSTRAINT_PREFIX + name
+
+    def mutate(read_version: int, proto, meta: dict) -> list:
+        _enforce_constraints(
+            delta_read(spark, path, version=read_version),
+            {"configuration": {key: expr}},
         )
-    actions.append({"metaData": new_meta})
-    return _commit(spark, path, read_version, actions)
+        conf = {**meta.get("configuration", {}), key: expr}
+        new_meta = {**meta, "configuration": conf}
+        return [_protocol(proto, new_meta), {"metaData": new_meta}]
+
+    return _commit_metadata_change(spark, path, "ADD CONSTRAINT", mutate)
 
 
 def delta_drop_constraint(spark: SparkSession, path: str, name: str) -> int:
     """ALTER TABLE DROP CONSTRAINT: metaData update removing the key."""
-    read_version, _, meta, _, _ = _snapshot_at(spark, path)
-    if meta is None:
-        raise ValueError(f"no delta table at {path}")
     key = _CONSTRAINT_PREFIX + name
-    if key not in meta.get("configuration", {}):
-        raise ValueError(f"no constraint {name!r} on {path}")
-    new_meta = dict(meta)
-    new_meta["configuration"] = {
-        k: v for k, v in meta["configuration"].items() if k != key
-    }
-    return _commit(spark, path, read_version, [{"metaData": new_meta}])
+
+    def mutate(_v, _proto, meta: dict) -> list:
+        conf = dict(meta.get("configuration", {}))
+        if conf.pop(key, None) is None:
+            raise ValueError(f"no constraint {name!r} on {path}")
+        return [{"metaData": {**meta, "configuration": conf}}]
+
+    return _commit_metadata_change(spark, path, "DROP CONSTRAINT", mutate)
 
 
 def _cdf_enabled(meta: dict | None) -> bool:
@@ -6382,35 +6355,6 @@ def _native_dv_rows(
     )
 
 
-def _dv_protocol_upgrade(proto: dict | None) -> dict | None:
-    """The protocol action a DV-delete commit must carry when the table
-    does not yet declare the deletionVectors table feature (None when it
-    already does). Upgrading a legacy-version table re-expresses its
-    implied writer features explicitly, per PROTOCOL.md's version-7
-    rule that writerFeatures lists EVERY feature the table uses —
-    constraints enforced at v3 stay declared as checkConstraints."""
-    feats = set(proto.get("readerFeatures") or ()) if proto else set()
-    if (
-        proto is not None
-        and int(proto.get("minReaderVersion", 1)) >= 3
-        and "deletionVectors" in feats
-    ):
-        return None
-    rf = sorted(feats | {"deletionVectors"})
-    wf = sorted(
-        set((proto or {}).get("writerFeatures") or ())
-        | {"deletionVectors", "checkConstraints"}
-    )
-    return {
-        "protocol": {
-            "minReaderVersion": 3,
-            "minWriterVersion": 7,
-            "readerFeatures": rf,
-            "writerFeatures": wf,
-        }
-    }
-
-
 def _dv_mask_and_commit(
     spark: SparkSession,
     path: str,
@@ -6555,7 +6499,7 @@ def _dv_mask_and_commit(
         adds_out.append({"add": new_add})
     readded = {a["add"]["path"].rsplit("/", 1)[-1] for a in adds_out}
     hit_rows = "numDeletedRows" if op == "DELETE" else "numUpdatedRows"
-    upgrade = _dv_protocol_upgrade(proto)
+    upgrade = _protocol(proto, meta, add={"deletionVectors"})
     return _rewrite(
         spark, path, op, read_version, meta, live, affected, rows,
         t0=t0, changes=changes, kept=adds_out,
@@ -6771,133 +6715,121 @@ def delta_drop_feature(
     any constraint / generation expression / identity spec still in the
     schema. The feature-enabling configuration key (e.g.
     ``delta.enableTypeWidening``) is cleared in the same commit."""
-    read_version, proto, meta, live, _ = _snapshot_at(spark, path)
-    if meta is None:
-        raise ValueError(f"no delta table at {path}")
     if feature not in _DROPPABLE_FEATURES:
         raise ValueError(
             f"feature {feature!r} cannot be dropped (supported: "
             f"{sorted(_DROPPABLE_FEATURES)})"
         )
-    rf = set((proto or {}).get("readerFeatures") or ())
-    wf = set((proto or {}).get("writerFeatures") or ())
-    if feature not in rf | wf:
-        raise ValueError(
-            f"table at {path} does not declare feature {feature!r}"
-        )
-    # --- live-snapshot "in use" gates ---------------------------------
-    if feature == "deletionVectors":
-        dv_live = [f for f, a in live.items() if a.get("deletionVector")]
-        if dv_live:
+
+    def check_live(read_version: int, proto, meta: dict) -> None:
+        """The feature is declared and the snapshot no longer uses it."""
+        if feature not in set().union(*_features(proto)):
             raise ValueError(
-                f"cannot drop deletionVectors from {path}: "
-                f"{len(dv_live)} live file(s) still carry descriptors; "
-                "run delta_reorg_purge first"
+                f"table at {path} does not declare feature {feature!r}"
             )
-    elif feature == "typeWidening":
-        widened = [
-            f["name"]
-            for f in json.loads(meta["schemaString"])["fields"]
-            if (f.get("metadata") or {}).get(_TW_PREV_KEY)
-        ]
-        if widened:
-            raise ValueError(
-                f"cannot drop typeWidening from {path}: columns "
-                f"{sorted(widened)} record a widening history and their "
-                "pre-widening files need upcast-on-read forever"
-            )
-    elif feature == "checkConstraints":
-        if _table_constraints(meta) or _field_invariants(meta):
-            raise ValueError(
-                f"cannot drop checkConstraints from {path}: constraints "
-                "are still defined; drop them first"
-            )
-    elif feature == "generatedColumns":
-        if _generated_columns(meta):
-            raise ValueError(
-                f"cannot drop generatedColumns from {path}: generation "
-                "expressions are still defined"
-            )
-    elif feature == "identityColumns":
-        if _identity_columns(meta):
-            raise ValueError(
-                f"cannot drop identityColumns from {path}: identity "
-                "specs are still defined"
-            )
-    elif feature == "allowColumnDefaults":
-        if _column_defaults(meta):
-            raise ValueError(
-                f"cannot drop allowColumnDefaults from {path}: column "
-                "defaults are still defined"
-            )
-    # --- history gate --------------------------------------------------
+        if feature == "deletionVectors":
+            live = _snapshot_state(spark, path, read_version)[2]
+            dv_live = [f for f, a in live.items() if a.get("deletionVector")]
+            if dv_live:
+                raise ValueError(
+                    f"cannot drop deletionVectors from {path}: "
+                    f"{len(dv_live)} live file(s) still carry descriptors; "
+                    "run delta_reorg_purge first"
+                )
+        elif feature == "typeWidening":
+            widened = [
+                f["name"]
+                for f in json.loads(meta["schemaString"])["fields"]
+                if (f.get("metadata") or {}).get(_TW_PREV_KEY)
+            ]
+            if widened:
+                raise ValueError(
+                    f"cannot drop typeWidening from {path}: columns "
+                    f"{sorted(widened)} record a widening history and "
+                    "their pre-widening files need upcast-on-read forever"
+                )
+        elif feature == "checkConstraints":
+            if _table_constraints(meta) or _field_invariants(meta):
+                raise ValueError(
+                    f"cannot drop checkConstraints from {path}: "
+                    "constraints are still defined; drop them first"
+                )
+        elif feature == "generatedColumns":
+            if _generated_columns(meta):
+                raise ValueError(
+                    f"cannot drop generatedColumns from {path}: "
+                    "generation expressions are still defined"
+                )
+        elif feature == "identityColumns":
+            if _identity_columns(meta):
+                raise ValueError(
+                    f"cannot drop identityColumns from {path}: identity "
+                    "specs are still defined"
+                )
+        elif feature == "allowColumnDefaults":
+            if _column_defaults(meta):
+                raise ValueError(
+                    f"cannot drop allowColumnDefaults from {path}: "
+                    "column defaults are still defined"
+                )
+
     if truncate_history:
-        # checkpoint the READ snapshot (whose live set passed the gate
-        # above) and expire everything below it: time travel into the
-        # feature-using range now raises instead of needing the feature
+        # checkpoint a snapshot whose live set passes the gates and expire
+        # everything below it: time travel into the feature-using range
+        # now raises instead of needing the feature
+        read_version, proto, meta, _, _ = _snapshot_at(
+            spark, path, include_adds=False
+        )
+        if meta is None:
+            raise ValueError(f"no delta table at {path}")
+        check_live(read_version, proto, meta)
         delta_checkpoint(spark, path, read_version)
         delta_cleanup_log(spark, path)
-    if feature == "deletionVectors":
-        # any retained commit or checkpoint that still resolves a
-        # DV-carrying snapshot forces readers to implement the feature;
-        # delta-spark runs the same retained-history scan before the
-        # protocol downgrade. O(retained log) driver work — metadata-
-        # sized, and bounded by log retention.
-        used = []
-        for v in _list_versions(spark, path):
-            try:
-                text = _read_log_text_immutable(
-                    spark, _version_file(path, v)
+
+    def mutate(read_version: int, proto, meta: dict) -> list:
+        check_live(read_version, proto, meta)
+        if feature == "deletionVectors":
+            # any retained commit or checkpoint that still resolves a
+            # DV-carrying snapshot forces readers to implement the
+            # feature; delta-spark runs the same retained-history scan
+            # before the protocol downgrade. O(retained log) driver work
+            # — metadata-sized, and bounded by log retention.
+            used = []
+            for v in _list_versions(spark, path):
+                try:
+                    text = _read_log_text_immutable(
+                        spark, _version_file(path, v)
+                    )
+                except Exception:  # noqa: BLE001 — a commit that vanished
+                    # mid-scan was just expired by concurrent cleanup; it
+                    # is no longer retained, so it cannot force the feature
+                    continue
+                if '"deletionVector"' in text:
+                    used.append(v)
+            for c in _list_checkpoints(spark, path):
+                _, _, ck_live, _ = _snapshot_state(spark, path, c)
+                if any(a.get("deletionVector") for a in ck_live.values()):
+                    used.append(c)
+            if used:
+                raise ValueError(
+                    f"cannot drop deletionVectors from {path}: retained "
+                    f"log versions {sorted(set(used))[:5]} still use it; "
+                    "pass truncate_history=True (after delta_reorg_purge) "
+                    "to expire them"
                 )
-            except Exception:  # noqa: BLE001 — a commit that vanished
-                # mid-scan was just expired by concurrent cleanup; it is
-                # no longer retained, so it cannot force the feature
-                continue
-            if '"deletionVector"' in text:
-                used.append(v)
-        for c in _list_checkpoints(spark, path):
-            _, _, ck_live, _ = _snapshot_state(spark, path, c)
-            if any(a.get("deletionVector") for a in ck_live.values()):
-                used.append(c)
-        if used:
-            raise ValueError(
-                f"cannot drop deletionVectors from {path}: retained log "
-                f"versions {sorted(set(used))[:5]} still use it; pass "
-                "truncate_history=True (after delta_reorg_purge) to "
-                "expire them"
-            )
-    # --- protocol downgrade -------------------------------------------
-    rf.discard(feature)
-    wf.discard(feature)
-    if not rf and wf <= {"checkConstraints"}:
-        # legacy downgrade: checkConstraints was only listed because v7
-        # requires every implied feature spelled out — the minimal legacy
-        # pair depends on whether constraints are actually DEFINED
-        new_proto = {
-            "minReaderVersion": 1,
-            "minWriterVersion": 3
-            if (_table_constraints(meta) or _field_invariants(meta))
-            else 2,
-        }
-    else:
-        new_proto = {
-            "minReaderVersion": 3 if rf else 1,
-            "minWriterVersion": 7,
-            "writerFeatures": sorted(wf | {"checkConstraints"}),
-        }
-        if rf:
-            new_proto["readerFeatures"] = sorted(rf)
-    actions: list[dict] = [_commit_info("DROP FEATURE"), {"protocol": new_proto}]
-    enable_keys = {
-        "deletionVectors": "delta.enableDeletionVectors",
-        "typeWidening": _TW_ENABLE_KEY,
-    }
-    key = enable_keys.get(feature)
-    conf = dict(meta.get("configuration") or {})
-    if key and key in conf:
-        conf.pop(key)
-        actions.append({"metaData": {**meta, "configuration": conf}})
-    return _commit(spark, path, read_version, actions)
+        conf = dict(meta.get("configuration") or {})
+        key = {
+            "deletionVectors": "delta.enableDeletionVectors",
+            "typeWidening": _TW_ENABLE_KEY,
+        }.get(feature)
+        return [
+            _protocol(proto, meta, drop={feature}),
+            {"metaData": {**meta, "configuration": conf}}
+            if conf.pop(key, None) is not None
+            else None,
+        ]
+
+    return _commit_metadata_change(spark, path, "DROP FEATURE", mutate)
 
 
 # ---------------------------------------------------------------------------
@@ -7713,7 +7645,7 @@ def delta_native_in_commit_timestamps(
     delta_write(n.where("n_regionkey = 0"), path, mode="append")  # v2
     delta_delete(spark, path, "n_nationkey % 2 = 0")  # v3
     proto, meta, _, _ = _snapshot_state(spark, path, include_adds=False)
-    if _ICT_FEATURE not in (proto.get("writerFeatures") or []):
+    if _ICT_FEATURE not in _features(proto)[1]:
         raise AssertionError("writer feature missing after enablement")
     conf = meta.get("configuration") or {}
     if conf.get("delta.enableInCommitTimestamps") != "true" or int(
@@ -8031,19 +7963,18 @@ def delta_convert_parquet(
         )
     if not adds:
         raise ValueError(f"no parquet files under {path} to convert")
+    meta = {
+        "id": uuid.uuid4().hex,
+        "format": {"provider": "parquet", "options": {}},
+        "schemaString": json.dumps(schema_json),
+        "partitionColumns": list(partition_by or []),
+        "configuration": {},
+        "createdTime": int(time.time() * 1000),
+    }
     actions = [
         _commit_info("CONVERT"),
-        {"protocol": dict(_PROTOCOL)},
-        {
-            "metaData": {
-                "id": uuid.uuid4().hex,
-                "format": {"provider": "parquet", "options": {}},
-                "schemaString": json.dumps(schema_json),
-                "partitionColumns": list(partition_by or []),
-                "configuration": {},
-                "createdTime": int(time.time() * 1000),
-            }
-        },
+        _protocol(None, meta),
+        {"metaData": meta},
         *adds,
     ]
     return _commit(spark, path, None, actions)
@@ -8980,10 +8911,7 @@ def delta_native_reorg_purge(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     delta_drop_feature(spark, path, "deletionVectors", truncate_history=True)
     proto, _, _, _ = _snapshot_state(spark, path)
-    feats = set((proto or {}).get("readerFeatures") or ()) | set(
-        (proto or {}).get("writerFeatures") or ()
-    )
-    assert "deletionVectors" not in feats, (
+    assert "deletionVectors" not in set().union(*_features(proto)), (
         "DROP FEATURE left deletionVectors in the protocol"
     )
     back = delta_read(spark, path)
@@ -9318,10 +9246,7 @@ def delta_describe_detail(spark: SparkSession, path: str) -> dict:
     if meta is None:
         raise ValueError(f"no delta table at {path}")
     proto = proto or _PROTOCOL
-    feats = sorted(
-        set(proto.get("readerFeatures") or ())
-        | set(proto.get("writerFeatures") or ())
-    )
+    feats = sorted(set().union(*_features(proto)))
     return {
         "format": (meta.get("format") or {}).get("provider", "parquet"),
         "id": meta.get("id"),

@@ -2355,9 +2355,10 @@ def test_commit_checks_commits_landed_after_its_read(
 ):
     """A competing commit that lands between an op's snapshot read and
     its commit: the op either aborts with DeltaConcurrentModification
-    (the table is then exactly the winner's result) or commits, and the
-    table equals a serial run of the winner followed by the op — never
-    a duplicated key or a resurrected row the winner deleted."""
+    or, re-planned against the winner, refuses it like a serial run
+    does (the table is then exactly the winner's result), or commits,
+    and the table equals a serial run of the winner followed by the op —
+    never a duplicated key or a resurrected row the winner deleted."""
     import shutil
 
     from lakesail_hdfs_deltalake_guide_spark.sources import delta_log as dl
@@ -2405,6 +2406,11 @@ def test_commit_checks_commits_landed_after_its_read(
         op(spark, base)
         committed = True
     except dl.DeltaConcurrentModification:
+        committed = False
+    except ValueError:
+        # a re-planned metadata ALTER re-validates the winner's table
+        # and refuses it, exactly as a serial run does
+        assert not serial_committed
         committed = False
     assert raced["fired"]
     cols, got, cons = state(base)
@@ -2736,8 +2742,22 @@ def test_row_tracking_feature_name_is_vendor_scoped(spark):
             }
         ],
     )
-    with pytest.raises(ValueError, match="rowTracking"):
-        delta_write(df, pf, mode="append")
+    # every committing op runs the writer gate, and commits nothing
+    dl = delta_log
+    for op in [
+        lambda: delta_write(df, pf, mode="append"),
+        lambda: dl.delta_delete(spark, pf, "k = 1"),
+        lambda: dl.delta_update(spark, pf, "k = 1", {"k": "k + 10"}),
+        lambda: dl.delta_merge(spark, pf, df, on=["k"]),
+        lambda: dl.delta_delete_dv(spark, pf, "k = 1"),
+        lambda: dl.delta_optimize(spark, pf),
+        lambda: dl.delta_restore(spark, pf, 0),
+        lambda: dl.delta_add_constraint(spark, pf, "nonneg", "k >= 0"),
+        lambda: dl.delta_set_domain_metadata(spark, pf, "app.x", "1"),
+    ]:
+        with pytest.raises(ValueError, match="rowTracking"):
+            op()
+        assert dl._list_versions(spark, pf) == [0, 1]
     # but it stays readable (reader path ignores writerFeatures)
     assert delta_read(spark, pf).count() == 6
 
@@ -4589,3 +4609,170 @@ def test_rewrite_commit_shapes(spark):
     )
     wm = metas[0]["configuration"]["delta.rowTracking.rowIdHighWaterMark"]
     assert wm == str(10 + staged)
+
+
+# Table features a table lists on BOTH sides of its protocol
+# (PROTOCOL.md "Table Features": every reader feature is also a writer
+# feature).
+_READER_WRITER_FEATURES = {
+    "deletionVectors",
+    "columnMapping",
+    "typeWidening",
+    "v2Checkpoint",
+    "vacuumProtocolCheck",
+}
+
+
+def assert_protocol_rule(spark, path: str, dropped=()) -> None:
+    """The protocol invariants every commit must keep: a column-mapped
+    table stays at reader >= 2; at reader 3 every reader-writer feature
+    in writerFeatures is in readerFeatures too; a table that defines
+    CHECK constraints declares them (legacy writer 3..6, or the
+    checkConstraints feature at writer 7); a dropped feature is gone."""
+    from lakesail_hdfs_deltalake_guide_spark.sources import delta_log as dl
+
+    proto, meta, _, _ = dl._snapshot_state(spark, path, include_adds=False)
+    reader = set(proto.get("readerFeatures") or ())
+    writer = set(proto.get("writerFeatures") or ())
+    conf = meta.get("configuration") or {}
+    r, w = proto["minReaderVersion"], proto["minWriterVersion"]
+    if conf.get("delta.columnMapping.mode", "none") != "none":
+        assert r >= 2, proto
+    if r == 3:
+        assert writer & _READER_WRITER_FEATURES <= reader, proto
+    if any(k.startswith("delta.constraints.") for k in conf):
+        assert 3 <= w < 7 or (w == 7 and "checkConstraints" in writer), proto
+    assert not set(dropped) & (reader | writer), proto
+
+
+def _contract_tables(spark) -> dict:
+    """Starting tables of the protocol contract, as (path, key column,
+    a column that is neither key nor partition column)."""
+    import os
+
+    fixtures = os.path.join(os.path.dirname(os.path.abspath(__file__)), "fixtures")
+    fresh = tempfile.mkdtemp(prefix="ls_proto_fresh_")
+    df = spark.range(30).select(F.col("id").alias("k"), (F.col("id") * 2).alias("v"))
+    delta_write(df.repartition(3), fresh)
+    constrained = tempfile.mkdtemp(prefix="ls_proto_ck_")
+    delta_write(
+        df.repartition(3),
+        constrained,
+        configuration={"delta.constraints.nonneg": "k >= 0"},
+    )
+    return {
+        "fresh": (fresh, "k", "v"),
+        "constraint": (constrained, "k", "v"),
+        "column_mapped": (_cm_table(spark, "ls_proto_cm_"), "id", "tag"),
+        "golden": (os.path.join(fixtures, "golden_delta"), "id", "note"),
+        "golden_dv": (os.path.join(fixtures, "golden_delta_dv"), "k", "amount"),
+    }
+
+
+# op name -> (run(dl, spark, path, key, col), operations it commits,
+# feature it drops)
+_CONTRACT_OPS = {
+    "dv_delete": (
+        lambda dl, s, p, k, c: dl.delta_delete_dv(s, p, f"{k} % 3 = 0"),
+        ["DELETE"],
+        (),
+    ),
+    "v2_checkpoints": (
+        lambda dl, s, p, k, c: dl.delta_enable_v2_checkpoints(s, p),
+        ["UPGRADE PROTOCOL"],
+        (),
+    ),
+    "ict": (
+        lambda dl, s, p, k, c: dl.delta_enable_in_commit_timestamps(s, p),
+        ["UPGRADE PROTOCOL"],
+        (),
+    ),
+    "domain": (
+        lambda dl, s, p, k, c: dl.delta_set_domain_metadata(s, p, "app.x", "1"),
+        ["SET DOMAIN METADATA"],
+        (),
+    ),
+    "cluster_by": (
+        lambda dl, s, p, k, c: dl.delta_cluster_by(s, p, [k]),
+        ["CLUSTER BY"],
+        (),
+    ),
+    "add_constraint": (
+        lambda dl, s, p, k, c: dl.delta_add_constraint(s, p, "c_ok", f"{k} >= 0"),
+        ["ADD CONSTRAINT"],
+        (),
+    ),
+    "purge_drop_dv": (
+        lambda dl, s, p, k, c: (
+            dl.delta_delete_dv(s, p, f"{k} % 3 = 0"),
+            dl.delta_reorg_purge(s, p),
+            dl.delta_drop_feature(s, p, "deletionVectors", truncate_history=True),
+        ),
+        ["DROP FEATURE"],
+        ("deletionVectors",),
+    ),
+    "drop_unused_constraints": (
+        lambda dl, s, p, k, c: (
+            dl.delta_add_constraint(s, p, "c_ok", f"{k} >= 0"),
+            dl.delta_drop_constraint(s, p, "c_ok"),
+            dl.delta_drop_feature(s, p, "checkConstraints"),
+        ),
+        ["ADD CONSTRAINT", "DROP CONSTRAINT", "DROP FEATURE"],
+        ("checkConstraints",),
+    ),
+    "rename_drop_column": (
+        lambda dl, s, p, k, c: (
+            dl.delta_rename_column(s, p, c, "renamed"),
+            dl.delta_drop_column(s, p, "renamed"),
+        ),
+        ["RENAME COLUMN", "DROP COLUMNS"],
+        (),
+    ),
+}
+
+# (table, op) pairs the op refuses, with the refusal's message
+_CONTRACT_REFUSALS = {
+    ("golden", "cluster_by"): "hive partitioning",
+    ("constraint", "drop_unused_constraints"): "constraints are still defined",
+    ("fresh", "rename_drop_column"): "requires columnMapping",
+    ("constraint", "rename_drop_column"): "requires columnMapping",
+    ("golden_dv", "rename_drop_column"): "requires columnMapping",
+}
+
+
+def test_protocol_contract(spark, tmp_path):
+    """Every protocol-changing op keeps the protocol rule on every kind
+    of starting table (engine-made legacy, constrained and column-mapped
+    tables, and the reader-v2 and DV foreign fixtures), and commits under
+    delta-spark's operation name; a table created with a CHECK
+    constraint in its configuration declares it from version 0."""
+    import shutil
+
+    import pytest
+
+    from lakesail_hdfs_deltalake_guide_spark.sources import delta_log as dl
+
+    for table, (src, key, col) in _contract_tables(spark).items():
+        for op, (run, names, dropped) in _CONTRACT_OPS.items():
+            path = str(tmp_path / f"{table}-{op}")
+            shutil.copytree(src, path)
+            refusal = _CONTRACT_REFUSALS.get((table, op))
+            if refusal is None:
+                run(dl, spark, path, key, col)
+                ops = [h["operation"] for h in dl.delta_history(spark, path)]
+                assert ops[: len(names)][::-1] == names, (table, op, ops)
+            else:
+                with pytest.raises(ValueError, match=refusal):
+                    run(dl, spark, path, key, col)
+                dropped = ()
+            try:
+                assert_protocol_rule(spark, path, dropped)
+            except AssertionError as exc:
+                raise AssertionError(f"{table} / {op}: {exc}") from None
+    path = str(tmp_path / "created_constrained")
+    delta_write(
+        spark.range(5).select(F.col("id").alias("k")),
+        path,
+        configuration={"delta.constraints.nonneg": "k >= 0"},
+    )
+    assert_protocol_rule(spark, path)

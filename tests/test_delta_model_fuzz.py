@@ -17,7 +17,10 @@ DELETE lands between an op's snapshot read and the op's commit. The op
 either aborts with DeltaConcurrentModification or commits; the model
 applies the winner's change, then the op's change as computed on the
 snapshot the op read, only if it committed (WriteSerializable: the two
-touched disjoint files, so their changes commute)."""
+touched disjoint files, so their changes commute).
+
+After every step the table's protocol must also keep the protocol rule
+(``tests/test_delta_log.py::assert_protocol_rule``)."""
 
 from __future__ import annotations
 
@@ -47,6 +50,7 @@ from lakesail_hdfs_deltalake_guide_spark.sources.delta_log import (
     delta_vacuum,
     delta_write,
 )
+from tests.test_delta_log import assert_protocol_rule
 
 
 def _snapshot(spark, path) -> dict[int, int]:
@@ -307,6 +311,7 @@ def test_delta_model_fuzz(spark, arm_read_race, seed):
             f"missing={set(model) - set(got)}, "
             f"wrong={[k for k in got.keys() & model.keys() if got[k] != model[k]][:5]})"
         )
+        assert_protocol_rule(spark, path)
 
     # every recorded version must still time-travel to its model state
     for v, state in history.items():
@@ -441,6 +446,7 @@ def test_delta_model_fuzz_row_tracked(spark, seed):
         history[version] = dict(model)
         got = _snapshot(spark, path)
         assert got == model, f"seed {seed} step {step} op {op}: data diverged"
+        assert_protocol_rule(spark, path)
         ids = _ids(spark, path)
         assert len(set(ids.values())) == len(ids), (
             f"seed {seed} step {step} op {op}: duplicate row ids"
